@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Side-channel from iterative operators to the benchmark's plan
-  * fingerprinting.
+/** Side-channel from `shims.snap` to the benchmark's plan fingerprinting.
   *
   * Problem (judged in round 7): operators that materialize via checkpoint +
   * measured-stats rewrap (ConnectedComponents, BpeTrainer) return a
@@ -12,12 +11,13 @@ import org.apache.spark.sql.DataFrame
   * are completely different, so a regression in the truncated-away input
   * pipeline was invisible to hash-based noise/regression triage.
   *
-  * Fix: the operators `record` the optimized plans of their INPUT pipelines
-  * here just before truncating them; [[Bench]] drains the buffer after each
-  * query's timed runs and folds the normalized evidence into that query's
-  * plan hash. Recording is OFF by default (zero cost outside the bench —
-  * rendering a large optimized plan to text is not free) and the buffer is
-  * bounded per drain by however many inputs one query materializes.
+  * Fix: `shims.snap` `record`s the optimized plan of every pipeline it
+  * materializes, under the snap's tag, just before truncating it;
+  * [[Bench]] drains the buffer after each query's timed runs and folds
+  * the normalized evidence into that query's plan hash. Recording is OFF
+  * by default (zero cost outside the bench — rendering a large optimized
+  * plan to text is not free) and the buffer is bounded per drain by
+  * however many snaps one query runs.
   */
 object PlanEvidence {
 

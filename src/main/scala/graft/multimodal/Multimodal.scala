@@ -717,8 +717,7 @@ object Multimodal {
     // discipline): the vs-store band arm and the within-batch self-join
     // otherwise each re-run the payload decode+hash kernel — the dominant
     // per-call cost of a media probe at any scale
-    val fh = org.apache.spark.sql.graft.shims.realStats(
-      org.apache.spark.sql.graft.shims.snap(newHashes))
+    val fh = org.apache.spark.sql.graft.shims.snap(newHashes, "fingerprint.batch")
     incrementalFingerprintPairsOver(fh, readBandStore(spark, path), maxHamming)
   }
 
@@ -1346,11 +1345,9 @@ object Multimodal {
     // The band self-join and the frame-count aggregate would each recompute
     // frame extraction + per-frame decode — by far the dominant cost (the
     // payload decode IS the query at any scale). Materialize the 16-byte-
-    // per-frame hash table ONCE; realStats installs the measured checkpoint
+    // per-frame hash table ONCE; the snap installs the measured checkpoint
     // size so the joins above it are planned honestly (the q55/q69 idiom).
-    graft.PlanEvidence.record("video.frameHashes", extracted)
-    val frameHashes =
-      org.apache.spark.sql.graft.shims.realStats(extracted.localCheckpoint())
+    val frameHashes = org.apache.spark.sql.graft.shims.snap(extracted, "video.frameHashes")
     val counts = frameHashes
       .groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
       .agg(count(lit(1)).as("nf"))
@@ -1395,8 +1392,7 @@ object Multimodal {
     * alongside so a probe never re-opens a stored payload.
     */
   def persistVideoIndex(media: DataFrame, path: String): Unit = {
-    val fh = org.apache.spark.sql.graft.shims.realStats(
-      videoHashRows(media).localCheckpoint())
+    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(media), "video.index")
     graft.ops.Bucketing.writePartitioned(
       fingerprintBands(fh), s"$path/dhbands", Seq("band"))
     fh.groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
@@ -1409,8 +1405,7 @@ object Multimodal {
     * the batch's (vid, nf) count rows — both append-only.
     */
   def appendToVideoIndex(media: DataFrame, path: String): Unit = {
-    val fh = org.apache.spark.sql.graft.shims.realStats(
-      videoHashRows(media).localCheckpoint())
+    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(media), "video.append")
     fingerprintBands(fh).write
       .mode(org.apache.spark.sql.SaveMode.Append)
       .option("compression", "zstd")
@@ -1493,8 +1488,7 @@ object Multimodal {
       path: String,
       maxHamming: Int,
       minOverlap: Double): DataFrame = {
-    val fh = org.apache.spark.sql.graft.shims.realStats(
-      videoHashRows(newMedia).localCheckpoint())
+    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(newMedia), "video.probe")
     incrementalVideoPairsOver(
       fh, readBandStore(spark, path), readVcounts(spark, path),
       maxHamming, minOverlap)

@@ -109,9 +109,6 @@ object BpeTrainer {
     val caller = docs.sparkSession
     val loop = org.apache.spark.sql.graft.shims.cloneSession(caller)
     loop.conf.set("spark.sql.adaptive.enabled", "false")
-    // the seed checkpoint below truncates the corpus word-count pipeline
-    // out of every later plan — record it for the bench's fingerprint
-    graft.PlanEvidence.record("bpe.docs", docs)
 
     def free(df: DataFrame): Unit =
       org.apache.spark.sql.graft.shims.unpersistCheckpoint(df)
@@ -121,10 +118,9 @@ object BpeTrainer {
     // pass runs under the caller's normal adaptive conf; split(word, "")
     // is per-character — Spark's split never yields trailing empties here
     // because the pattern is empty)
-    var words = org.apache.spark.sql.graft.shims.realStatsIn(loop,
-      wordCounts(docs, textCol)
-        .select(split(col("word"), "").as("syms"), col("cnt"))
-        .transform(d => org.apache.spark.sql.graft.shims.snap(d)))
+    var words = org.apache.spark.sql.graft.shims.snap(
+      wordCounts(docs, textCol).select(split(col("word"), "").as("syms"), col("cnt")),
+      "bpe.docs", into = loop)
     val wordBytes = words.queryExecution.optimizedPlan.stats.sizeInBytes
     val measured = wordBytes < BigInt(1L << 50)
     val loopParts =
@@ -182,10 +178,9 @@ object BpeTrainer {
             // apply the merge and snap LAZILY: the next round's counting
             // job materializes the checkpoint blocks as it scans, so each
             // round costs exactly one blocking action (the collect above)
-            val nextCk = words
+            val nextCk = org.apache.spark.sql.graft.shims.snap(words
               .select(HashExpressions.bpeMergePair(col("syms"), l, r).as("syms"),
-                col("cnt"))
-              .transform(d => org.apache.spark.sql.graft.shims.snap(d, eager = false))
+                col("cnt")), "bpe.round", eager = false)
             val next = org.apache.spark.sql.graft.shims.realStats(nextCk)
             // the superseded table was last read by the job that built
             // `next`'s blocks — but that job is the NEXT round's count, so

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 
 /** Connected components over an undirected edge list, as iterative min-label
   * propagation with pointer chasing — the operator that turns near-dup PAIRS
@@ -41,13 +42,13 @@ import org.apache.spark.sql.functions._
   *     analyzed plan, which grows ~6x per round (the chase references the
   *     round table several times) until plan analysis/rendering OOMs the
   *     driver.
-  * [[snap]] does both halves right: checkpoint to truncate lineage, then
-  * rewrap the materialized RDD in a fresh leaf carrying its MEASURED
+  * `shims.snap` does both halves right: checkpoint to truncate lineage,
+  * then rewrap the materialized RDD in a fresh leaf carrying its MEASURED
   * storage size (shims.realStats) — constant plan size, constant planning
   * cost per round, and truthful join-side estimates at every scale. On a
-  * real cluster set `spark.graft.snap.reliable=true` (shims.snap) to swap
-  * every loop materialization to reliable `checkpoint` — lineage-free
-  * recovery on executor loss, one conf flag, no code change.
+  * real cluster set `spark.graft.snap.reliable=true` to swap every
+  * materialization to reliable `checkpoint` — lineage-free recovery on
+  * executor loss, one conf flag, no code change.
   */
 object ConnectedComponents {
 
@@ -60,30 +61,6 @@ object ConnectedComponents {
     * materialization action per round instead.
     */
   val FreshChaseBroadcastCeiling: Long = 64L << 20
-
-  /** Materialize + truncate lineage + install MEASURED stats (see class
-    * doc): the rewrapped leaf reports its true persisted size, so the next
-    * round's joins broadcast-vs-shuffle exactly as they would over a
-    * parquet scan of the same data — small graphs stay in broadcast-join
-    * latency, huge graphs get honest shuffles. The checkpoint job runs
-    * under the INPUT frame's session (the caller's normal conf — right for
-    * the often-expensive edge derivation); the rewrapped leaf is rooted in
-    * `target` so every later read plans under the loop session's conf.
-    */
-  private def snapIn(
-      target: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
-    // skip the checkpoint when the input is already storage-backed (a
-    // caller-side snap under trivial renames/casts — the contracted-merge
-    // edge frame, the cross-snapshot keyed projections): re-checkpointing
-    // identical rows is one pure-latency blocking action per call, and the
-    // realStats rewrap still finds the persisted ancestor's measured size.
-    // Non-materialized (or non-trivially projected) inputs keep the full
-    // snap — an expensive derivation must never execute once per read.
-    if (org.apache.spark.sql.graft.shims.cheapOverMaterialized(df))
-      org.apache.spark.sql.graft.shims.realStatsIn(target, df)
-    else
-      org.apache.spark.sql.graft.shims.realStatsIn(
-        target, org.apache.spark.sql.graft.shims.snap(df))
 
   /** Labels every node in `nodes` (column `id`) with the minimum id
     * reachable through `edges` (columns `src`, `dst`; undirected, self-loops
@@ -123,20 +100,16 @@ object ConnectedComponents {
     // the loop's shuffle parallelism — nothing global is mutated and
     // nothing needs restoring.
     val caller = nodes.sparkSession
-    val loop = org.apache.spark.sql.graft.shims.cloneSession(caller)
-    // the checkpoints below truncate these (often expensive) input
-    // pipelines out of the final frame's optimizedPlan — record them for
-    // the bench's plan fingerprint so a regression there stays visible
-    graft.PlanEvidence.record("cc.edges", edges)
-    graft.PlanEvidence.record("cc.nodes", nodes)
+    val loop = shims.cloneSession(caller)
     // materialize the DIRECTED edge list BEFORE symmetrizing: the union
     // below references it twice, and without materialization the edge
     // derivation (often an expensive similarity join) would execute twice.
     // (The checkpoint job itself runs under the caller's normal adaptive
-    // conf — only the loop's fixed-shape plans opt out.) The symmetrized
-    // view stays lazy — re-scanning a checkpoint is cheap.
-    val ep = snapIn(loop, edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")))
+    // conf — only the loop's fixed-shape plans, rooted in `loop`, opt out.)
+    // The symmetrized view stays lazy — re-scanning a checkpoint is cheap.
+    val ep = shims.snap(edges
+      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")),
+      "cc.edges", into = loop)
     val sym = ep.union(ep.select(col("v").as("u"), col("u").as("v")))
     // size the loop's shuffles to the MEASURED edge bytes (the same ~64 MB
     // per-partition rule AQE's coalescing applies): a tiny graph gets
@@ -158,15 +131,15 @@ object ConnectedComponents {
     // snapped ONCE: the seed union below and the final output semi-join
     // both read `ids`, and an expensive caller-side node derivation must
     // not pay its cost twice (the edge plan gets the same treatment above)
-    val ids = snapIn(loop, nodes.select(col("id").cast("long").as("id")))
+    val ids = shims.snap(nodes.select(col("id").cast("long").as("id")), "cc.nodes", into = loop)
     // round-1 propagation fused into initialization: one union + aggregate
     // over nodes ∪ edge endpoints IS min(id, min neighbor id) — seeding
     // from the endpoint union (not just `nodes`) is what makes absent
     // endpoints propagate instead of silently splitting components.
     // least() skips the null that edgeless nodes contribute.
-    var labels = snapIn(loop, ids.select(col("id"), lit(null).cast("long").as("v"))
+    var labels = shims.snap(ids.select(col("id"), lit(null).cast("long").as("v"))
       .union(sym.select(col("u").as("id"), col("v")))
-      .groupBy("id").agg(least(col("id"), min(col("v"))).as("lab")))
+      .groupBy("id").agg(least(col("id"), min(col("v"))).as("lab")), "cc.seed", into = loop)
     var round = 0
     var converged = false
     // artifacts superseded LAST round (each round's materialized levels
@@ -180,8 +153,7 @@ object ConnectedComponents {
     // materialized propagation — see the bridge comment in the loop
     var bridges: Option[DataFrame] = None
     def free(df: DataFrame): Unit =
-      org.apache.spark.sql.graft.shims.unpersistCheckpoint(df)
-    var done = false
+      shims.unpersistCheckpoint(df)
     val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     try {
       while (!converged && round < maxIter) {
@@ -240,13 +212,12 @@ object ConnectedComponents {
         // >= m), at which point any pointer chase is the identity.
         // (`own` is null on the bridge/edge branches, so a node outside
         // `labels` can never satisfy lab == own spuriously.)
-        val propCk = prop.select(col("id"), col("lab"), col("own"),
-          (col("lab") =!= col("own")).as("__changed"))
-          .transform(d => org.apache.spark.sql.graft.shims.snap(d, eager = false))
+        val propCk = shims.snap(prop.select(col("id"), col("lab"), col("own"),
+          (col("lab") =!= col("own")).as("__changed")), "cc.prop", eager = false)
         val changed = propCk.filter(col("__changed")).count()
         converged = changed == 0L
         // now that the blocks exist, rewrap with their measured size
-        val propAll = org.apache.spark.sql.graft.shims.realStats(propCk)
+        val propAll = shims.realStats(propCk)
         // next round's bridges: improved nodes forward the new label to
         // the node their old label pointed at (own is null for ids seen
         // only through edge/bridge branches — no bridge from those)
@@ -290,12 +261,12 @@ object ConnectedComponents {
               // chased level instead (one extra action per round, still a
               // net win against the extra rounds it saves)
               val fl = propSized.select(col("id").as("__k"), col("lab").as("__v"))
-              val chasedCk = (1 to chaseSteps).foldLeft(propSized) { (acc, _) =>
-                acc.as("c").join(fl, col("c.lab") === col("__k"), "left")
-                  .select(col("c.id").as("id"),
-                    coalesce(col("__v"), col("c.lab")).as("lab"))
-              }.transform(d => org.apache.spark.sql.graft.shims.snap(d))
-              org.apache.spark.sql.graft.shims.realStats(chasedCk)
+              shims.snap(
+                (1 to chaseSteps).foldLeft(propSized) { (acc, _) =>
+                  acc.as("c").join(fl, col("c.lab") === col("__k"), "left")
+                    .select(col("c.id").as("id"),
+                      coalesce(col("__v"), col("c.lab")).as("lab"))
+                }, "cc.chase")
             }
           }
         // superseded snapshots are dead — drop their checkpoint blocks now
@@ -317,26 +288,24 @@ object ConnectedComponents {
       if (!converged)
         throw new IllegalStateException(
           s"connected components did not converge in $maxIter rounds")
-      done = true
       // restrict the output to the requested nodes: endpoints outside
       // `nodes` were propagation carriers only (both sides are snapped
       // levels, so the semi-join is broadcast-able when `nodes` is small).
-      // The result crosses back into the CALLER's session — downstream
+      // The result is snapped back into the CALLER's session — downstream
       // plans over it use the caller's conf, not the loop's opt-outs.
-      org.apache.spark.sql.graft.shims.realStatsIn(caller,
+      shims.snap(
         labels.join(ids, Seq("id"), "left_semi")
-          .select(col("id"), col("lab").as("component")))
+          .select(col("id"), col("lab").as("component")), "cc.labels", into = caller)
     } finally {
-      // everything except the returned final level is dead on BOTH paths:
-      // the edge checkpoint (usually the largest artifact, O(|E|) rows)
-      // and the last superseded label level. On the failure path the final
-      // labels level and the ids snap are dead too. The loop session needs
-      // no teardown — its conf dies with it and its cached state is shared.
-      // (the final lastProp backs the returned labels level — the same
-      // materialized propagation — so it is only freed on failure)
+      // the returned result is its own snap, so the loop's levels are dead
+      // on BOTH paths: the edge checkpoint (usually the largest, O(|E|)
+      // rows), the last superseded label level and the final level with
+      // its backing propagation. `ids` is left to the ContextCleaner: when
+      // `nodes` was already a snap, it shares the caller's blocks. The
+      // loop session needs no teardown — its conf dies with it and its
+      // cached state is shared.
       prevRound.foreach(free)
-      free(ep)
-      if (!done) { free(labels); lastProp.foreach(free); free(ids) }
+      free(ep); free(labels); lastProp.foreach(free)
     }
   }
 }

@@ -83,8 +83,7 @@ object ShardExport {
     // feeds assignShards' bounded offset collect, the shard-assignment
     // branch and the final address join — unsnapped, each of those
     // actions re-ran the corpus token-cumsum window chain
-    val pd = org.apache.spark.sql.graft.shims.realStats(
-      packedDocs(docs, packTokens).localCheckpoint())
+    val pd = org.apache.spark.sql.graft.shims.snap(packedDocs(docs, packTokens), "shard.packs")
     val packs = pd.groupBy("source", "pack_id").agg(sum("n_toks").as("pack_toks"))
     val assigned = assignShards(packs, epoch, shardTokens)
       .select(col("source"), col("pack_id"), col("shard_id"))
@@ -139,13 +138,12 @@ object ShardExport {
       packTokens: Int,
       shardTokens: Int): DataFrame = {
     val existing = spark.read.parquet(epochDir)
-    // bounded: one row per source / one global max. localCheckpoint
-    // severs the write plan's lazy scan of the very directory it appends
-    // to (the appendToExactIndex pattern — a retried write stage must not
-    // observe its own partial output through this branch).
-    val nextPack = existing.groupBy("source")
-      .agg((max("pack_id") + 1).as("pack_base"))
-      .localCheckpoint()
+    // bounded: one row per source / one global max. The snap severs the
+    // write plan's lazy scan of the very directory it appends to (the
+    // appendToExactIndex pattern — a retried write stage must not observe
+    // its own partial output through this branch).
+    val nextPack = org.apache.spark.sql.graft.shims.snap(existing.groupBy("source")
+      .agg((max("pack_id") + 1).as("pack_base")), "shard.nextPack")
     val shardBase = existing
       .agg(max(col("shard_id").cast("long"))).head.getLong(0) + 1L
     val pd = packedDocs(batch, packTokens)

@@ -640,14 +640,13 @@ object Curation {
       batch: org.apache.spark.sql.DataFrame,
       path: String,
       k: Int = 5): Unit =
-    // eager localCheckpoint (the appendToExactIndex pattern): the anti
-    // join READS the store the write appends to — materialize the
-    // (batch-sized) novel-window set fully before any file lands in the
-    // directory being scanned, so a re-executed/retried write stage can
-    // never observe its own partial output
-    windowStore(batch, k)
-      .join(spark.read.parquet(path), Seq("g"), "left_anti")
-      .localCheckpoint()
+    // eager snap (the appendToExactIndex pattern): the anti join READS
+    // the store the write appends to — materialize the (batch-sized)
+    // novel-window set fully before any file lands in the directory being
+    // scanned, so a re-executed/retried write stage can never observe its
+    // own partial output
+    org.apache.spark.sql.graft.shims.snap(windowStore(batch, k)
+      .join(spark.read.parquet(path), Seq("g"), "left_anti"), "windows.novel")
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .option("compression", "zstd").parquet(path)
 
@@ -799,9 +798,9 @@ object Curation {
       hashed: Boolean = false): org.apache.spark.sql.DataFrame = {
     // materialize the batch's window counts once — they drive BOTH joins
     // and must not recompute between the store read and the swap; the
-    // checkpoint also gives the broadcast gate an exact size
-    val bw = rcStoreOf(batch, k, hashed)
-      .select(col("g"), col("rc").as("dn")).localCheckpoint()
+    // snap's measured size also gives the broadcast gate an exact size
+    val bw = org.apache.spark.sql.graft.shims.snap(rcStoreOf(batch, k, hashed)
+      .select(col("g"), col("rc").as("dn")), "windows.batchCounts")
     val small =
       bw.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
     def hinted(df: org.apache.spark.sql.DataFrame) = if (small) broadcast(df) else df
@@ -2060,11 +2059,10 @@ object Curation {
       // the CC node snap, the minhash edge snap's signature AND shingle
       // branches, and the final disposition join — unsnapped, each of
       // those actions re-ran the repetition-stats kernel over the corpus
-      val staged = org.apache.spark.sql.graft.shims.realStats(train
+      val staged = org.apache.spark.sql.graft.shims.snap(train
         .select(col("doc_id"), col("source"), col("text"), st.as("st"))
         .select(col("doc_id"), col("source"), col("text"),
-          (dupFrac <= 0.6 && topFrac <= 0.08).as("quality_ok"))
-        .localCheckpoint())
+          (dupFrac <= 0.6 && topFrac <= 0.08).as("quality_ok")), "curation.staged")
       val surv = staged.filter(col("quality_ok")).select("doc_id", "text")
       val comps = graft.operators.ConnectedComponents.run(
         surv.select(col("doc_id").as("id")),

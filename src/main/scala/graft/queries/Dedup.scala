@@ -508,22 +508,20 @@ object Dedup {
     * smaller rep set; the disposition joins are id-keyed hash joins.
     */
   def dedupTiers(docs: DataFrame, threshold: Double = 0.7): DataFrame = {
-    import org.apache.spark.sql.graft.{shims => S}
     val fp = docs.select(col("doc_id"), Text.fingerprint(col("text")).as("f"))
     // snap the exact-tier map once (the incrementalRelease lever,
     // Release.scala): withRep feeds the rep-id filter, the near tier's
     // node/edge actions AND the final disposition join — without the snap
     // every one of those actions re-ran the fingerprint aggregate + join
     // (measured ~0.2 s per extra execution at sf0.1, 3-4 executions).
-    // realStats installs the MEASURED size, so the rep-id side of the
+    // the snap installs the MEASURED size, so the rep-id side of the
     // `reps` join below broadcast-plans exactly when it truly fits —
     // which also keeps `reps` on the docs scan's partitioning instead of
     // an AQE-coalesced post-shuffle layout (the minhash kernels above it
     // then run corpus-wide parallel, not on one starved task).
-    val withRep = S.realStats(fp.join(
+    val withRep = org.apache.spark.sql.graft.shims.snap(fp.join(
       fp.groupBy("f").agg(min("doc_id").as("rep")), "f")
-      .select(col("doc_id"), col("rep"))
-      .localCheckpoint())
+      .select(col("doc_id"), col("rep")), "dedup.exactReps")
     val reps = docs.join(
       withRep.filter(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
     val ranked = rankRepresentatives(
@@ -1119,8 +1117,8 @@ object Dedup {
       // snapped for the same reason as [[paragraphDedup]]'s chunk table:
       // the band dump below plus the readback tail's shingle/node/
       // reassembly actions otherwise each re-run the chunk explode
-      val chunks = org.apache.spark.sql.graft.shims.realStats(
-        paragraphChunks(Tables(s, dir, "documents")).localCheckpoint())
+      val chunks = org.apache.spark.sql.graft.shims.snap(
+        paragraphChunks(Tables(s, dir, "documents")), "dedup.paragraphChunks")
       Dedup.synchronized {
         paragraphBands(chunks).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1492,8 +1490,8 @@ object Dedup {
     // the CC node snap and the final reassembly — unsnapped, every one of
     // those actions re-ran the upstream doc chain + the chunk explode.
     // Same O(corpus) materialization class as the CC loop's edge snap.
-    val chunks = org.apache.spark.sql.graft.shims.realStats(
-      paragraphChunks(docs, window, stride).localCheckpoint())
+    val chunks = org.apache.spark.sql.graft.shims.snap(
+      paragraphChunks(docs, window, stride), "dedup.paragraphChunks")
     paragraphDedupOver(chunks, paragraphBands(chunks), threshold)
   }
 
@@ -1907,7 +1905,6 @@ object Dedup {
     * corpus needs. Composes three already-oracled chains verbatim.
     */
   def fullDedupPipeline(docs: DataFrame, threshold: Double = 0.7): DataFrame = {
-    import org.apache.spark.sql.graft.{shims => S}
     // snap the disposition once (the incrementalRelease lever): it feeds
     // the keeper-id filter below, the paragraph tier's whole input chain
     // AND the final join — unsnapped, each of those actions re-executed
@@ -1916,7 +1913,7 @@ object Dedup {
     // (and the chunk/shingle kernels over it) on the docs scan's
     // partitioning instead of a single AQE-coalesced task (measured: the
     // paragraph-tier chunk kernel ran 3.1 s on ONE task at sf0.1).
-    val tiers = S.realStats(dedupTiers(docs, threshold).localCheckpoint())
+    val tiers = org.apache.spark.sql.graft.shims.snap(dedupTiers(docs, threshold), "dedup.tiers")
     val keepers = docs.join(
       tiers.filter(col("tier") === "keep").select("doc_id"), "doc_id")
     val para = paragraphDedup(keepers)

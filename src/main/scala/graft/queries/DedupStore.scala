@@ -166,12 +166,11 @@ object DedupStore {
     // multi-consumer re-execution the contracted-merge edge snap fixed
     // one level up). O(batch) rows of 8-byte hashes, the exact artifact
     // [[appendToBandIndex]] persists for this batch anyway.
-    val hashed = org.apache.spark.sql.graft.shims.realStats(
-      org.apache.spark.sql.graft.shims.snap(newDocs.select(
-        col("doc_id"),
-        HashExpressions.shingleHashSet(Text.tokens(col("text")), k = ShingleK).as("sh"),
-        HashExpressions.shingleMinHash(
-          Text.tokens(col("text")), k = ShingleK, numPerm = NumPerm).as("sig"))))
+    val hashed = org.apache.spark.sql.graft.shims.snap(newDocs.select(
+      col("doc_id"),
+      HashExpressions.shingleHashSet(Text.tokens(col("text")), k = ShingleK).as("sh"),
+      HashExpressions.shingleMinHash(
+        Text.tokens(col("text")), k = ShingleK, numPerm = NumPerm).as("sig")), "store.batchHashes")
     // band values bit-identical to [[minhashBands]]: same shared constants,
     // same lshBands expression — only the signature's source frame differs
     val batchBands = hashed.select(
@@ -301,13 +300,8 @@ object DedupStore {
     // sf0.1: two back-to-back ~13-task-second probe chains in every
     // q110/q112/q169/q192 profile). The checkpoint leaf makes both CC snaps
     // O(edge rows) re-reads.
-    val edgesLazy = repMap.join(hinted(pairs), "existing_id")
-      .select(col("new_id").as("src"), col("rep").as("dst"))
-    // the checkpoint truncates the probe pipeline out of every later plan —
-    // keep it visible to the bench fingerprint (the PlanEvidence contract)
-    graft.PlanEvidence.record("ctm.edges", edgesLazy)
-    val edges = org.apache.spark.sql.graft.shims.realStats(
-      edgesLazy.localCheckpoint())
+    val edges = org.apache.spark.sql.graft.shims.snap(repMap.join(hinted(pairs), "existing_id")
+      .select(col("new_id").as("src"), col("rep").as("dst")), "ctm.edges")
     // the merge graph: batch ids (isolated batch docs must come out as
     // singletons) + every touched representative
     val comps = graft.operators.ConnectedComponents.run(
@@ -494,13 +488,13 @@ object DedupStore {
       newDocs: DataFrame,
       indexPath: String): Unit = {
     val store = spark.read.parquet(s"$indexPath/exact_fp")
-    // eager localCheckpoint: the anti join READS the store the write
-    // appends to — materialize the (batch-sized) novel set fully before
-    // any file lands in the directory being scanned
-    val fresh = newDocs.select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
-      .groupBy("fp").agg(min(col("doc_id")).as("keep_id"))
-      .join(store.select(col("fp")), Seq("fp"), "left_anti")
-      .localCheckpoint()
+    // eager snap: the anti join READS the store the write appends to —
+    // materialize the (batch-sized) novel set fully before any file lands
+    // in the directory being scanned
+    val fresh = org.apache.spark.sql.graft.shims.snap(
+      newDocs.select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
+        .groupBy("fp").agg(min(col("doc_id")).as("keep_id"))
+        .join(store.select(col("fp")), Seq("fp"), "left_anti"), "store.exactNovel")
     fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
       .option("compression", "zstd")
       .parquet(s"$indexPath/exact_fp")
@@ -760,10 +754,9 @@ object DedupStore {
     // feeds the CC node snap, the minhash edge snap's signature AND
     // shingle branches, and the keep-newest join — unsnapped, each of
     // those actions re-derived the whole 3-arm snapshot union.
-    val keyed = org.apache.spark.sql.graft.shims.realStats(withSnapGid(snapshots)
+    val keyed = org.apache.spark.sql.graft.shims.snap(withSnapGid(snapshots)
       .select(col("gid"), col("snap"), col("doc_id"), col("text"),
-        length(col("text")).cast("long").as("n_chars"))
-      .localCheckpoint())
+        length(col("text")).cast("long").as("n_chars")), "snapshot.keyed")
     val u = keyed.select(col("gid").as("doc_id"), col("text"))
     val comps = graft.operators.ConnectedComponents.run(
       u.select(col("doc_id").as("id")),
@@ -1192,11 +1185,10 @@ object DedupStore {
       // snapped like [[crossSnapshotDedup]]'s keyed union: the merge's
       // probe actions and the keep-newest join otherwise each re-derive
       // the 3-arm snapshot union
-      val keyed = org.apache.spark.sql.graft.shims.realStats(
+      val keyed = org.apache.spark.sql.graft.shims.snap(
         withSnapGid(deriveSnapshots(Tables(s, dir, "documents")))
           .select(col("gid"), col("snap"), col("doc_id"), col("text"),
-            length(col("text")).cast("long").as("n_chars"))
-          .localCheckpoint())
+            length(col("text")).cast("long").as("n_chars")), "snapshot.keyed")
       def gidDocs(n: Int) = keyed.filter(col("snap") === n)
         .select(col("gid").as("doc_id"), col("text"), col("n_chars"))
       val path = snapshotStoreFor(
@@ -1230,11 +1222,10 @@ object DedupStore {
       crossSnapshotOracle(withSnap2 = false)) { (s, dir) =>
       val thr = 0.7
       // snapped like the q147 registration's keyed union (same rationale)
-      val keyed = org.apache.spark.sql.graft.shims.realStats(
+      val keyed = org.apache.spark.sql.graft.shims.snap(
         withSnapGid(deriveSnapshots(Tables(s, dir, "documents")))
           .select(col("gid"), col("snap"), col("doc_id"), col("text"),
-            length(col("text")).cast("long").as("n_chars"))
-          .localCheckpoint())
+            length(col("text")).cast("long").as("n_chars")), "snapshot.keyed")
       def gidDocs(n: Int) = keyed.filter(col("snap") === n)
         .select(col("gid").as("doc_id"), col("text"), col("n_chars"))
       val d01 = gidDocs(0).unionByName(gidDocs(1))

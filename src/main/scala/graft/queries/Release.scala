@@ -331,10 +331,9 @@ object Release {
     // cumsum chain (measured 3 executions of the same stage at sf0.1).
     // text is dropped BEFORE the checkpoint: nothing downstream reads it,
     // and materializing corpus text in the snap was pure I/O waste.
-    val pd = org.apache.spark.sql.graft.shims.realStats(graft.ops.ShardExport
+    val pd = org.apache.spark.sql.graft.shims.snap(graft.ops.ShardExport
       .packedDocs(docs.join(keep, Seq("doc_id"), "left_semi"), 512)
-      .drop("text")
-      .localCheckpoint())
+      .drop("text"), "release.packs")
     val packs = pd.groupBy("source", "pack_id")
       .agg(sum("n_toks").as("pack_toks"))
     val asg = graft.ops.ShardExport
@@ -354,21 +353,20 @@ object Release {
     * published address. Factored out so q171's retraction and the q169
     * registration run the SAME absorb (twins cannot drift).
     *
-    * The multi-consumer stages are snapped once via
-    * `shims.realStats(localCheckpoint)` (the ConnectedComponents lever):
-    * the manifest merge feeds both the addition anti-join and the final
-    * keep-flag join, the published pack table feeds its shard
+    * The multi-consumer stages are snapped once via `shims.snap` (the
+    * ConnectedComponents lever): the manifest merge feeds both the
+    * addition anti-join and the final keep-flag join, the published pack
+    * table feeds its shard
     * assignment, the per-source offsets AND the final rows, and the
     * shard assignment feeds the 1-row offset head action and the final
     * join — without the snap, the offset action plus the final plan
     * re-executed the whole dedup+pack+shard chain (measured 2× cost:
-    * 10.5 s → ~6 s at sf0.1). realStats installs the MEASURED size so
+    * 10.5 s → ~6 s at sf0.1). The snap installs the MEASURED size so
     * the downstream broadcast-vs-shuffle choices stay honest.
     */
   def incrementalRelease(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.graft.{shims => S}
       val thr = 0.7
       val docs = Tables(s, dir, "documents")
       val store = docs.filter(col("doc_id") % 5 =!= 0)
@@ -376,9 +374,9 @@ object Release {
       val path = graft.queries.DedupStore.componentIndexFor(store, dir, thr)
       val m0 = s.read.parquet(graft.queries.DedupStore.manifestSubdir(path, thr))
       val keepers0 = m0.filter(col("keep") === 1).select(col("doc_id"))
-      val m1 = S.realStats(
-        graft.queries.DedupStore.incrementalManifest(s, batch, docs, path, thr)
-          .localCheckpoint())
+      val m1 = org.apache.spark.sql.graft.shims.snap(
+        graft.queries.DedupStore.incrementalManifest(s, batch, docs, path, thr),
+        "release.manifest")
       val adds = m1.filter(col("keep") === 1).select(col("doc_id"))
         .join(keepers0, Seq("doc_id"), "left_anti")
       // ONE fused pack/shard pass over published ∪ added keepers (was: two
@@ -397,7 +395,7 @@ object Release {
       val wOff = Window.partitionBy("source", "grp").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       val wSrc = Window.partitionBy("source")
-      val pd = S.realStats(docs.join(ids, Seq("doc_id"))
+      val pd = org.apache.spark.sql.graft.shims.snap(docs.join(ids, Seq("doc_id"))
         .select(col("source"), col("doc_id"), col("grp"),
           size(split(col("text"), " ", -1)).as("n_toks"))
         .withColumn("off", coalesce(sum(col("n_toks")).over(wOff), lit(0)))
@@ -408,8 +406,7 @@ object Release {
           col("n_toks").cast("long").as("n_toks"),
           when(col("grp") === "add",
             col("p0") + coalesce(col("pack_base"), lit(0L)))
-            .otherwise(col("p0")).as("pack_id"))
-        .localCheckpoint())
+            .otherwise(col("p0")).as("pack_id")), "release.incPacks")
       val keyed = pd.groupBy("grp", "source", "pack_id")
         .agg(sum("n_toks").as("pack_toks"))
         .withColumn("skey",
@@ -440,12 +437,12 @@ object Release {
       val wIn = Window.partitionBy("grp", "bucket")
         .orderBy("skey", "source", "pack_id")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val asg = S.realStats(keyed
+      val asg = org.apache.spark.sql.graft.shims.snap(keyed
         .withColumn("goff",
           bucketOff + coalesce(sum(col("pack_toks")).over(wIn), lit(0L)))
         .withColumn("shard0", floor(col("goff") / 2048).cast("long"))
-        .select(col("grp"), col("source"), col("pack_id"), col("shard0"))
-        .localCheckpoint())
+        .select(col("grp"), col("source"), col("pack_id"), col("shard0")),
+        "release.shards")
       // the q120 offset rule: added shards continue after the published
       // max — a 1-row broadcast aggregate over the snapped assignment
       // instead of the old blocking .head action

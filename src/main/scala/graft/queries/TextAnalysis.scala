@@ -762,10 +762,9 @@ object TextAnalysis {
     // count over the whole train split (measured 3 executions of the
     // heaviest stage at sf0.1). Vocabulary-sized, so the snap is tiny and
     // the measured-size leaf keeps the scoring joins broadcast-planned.
-    val cnts = org.apache.spark.sql.graft.shims.realStats(
+    val cnts = org.apache.spark.sql.graft.shims.snap(
       train.select(col("lang"), bigrams)
-        .groupBy("lang", "tok").agg(count(lit(1)).as("n"))
-        .localCheckpoint())
+        .groupBy("lang", "tok").agg(count(lit(1)).as("n")), "langid.counts")
     // model constants: per-class token totals + doc priors, joint vocab
     // size, train doc count — all tiny (|langs| rows / scalars), broadcast
     val classes = cnts.groupBy("lang").agg(sum("n").as("tot"))

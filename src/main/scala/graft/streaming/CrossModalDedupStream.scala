@@ -61,15 +61,14 @@ object CrossModalDedupStream {
           // absorbed by definition (the assignment swaps last)
           val guarded = tombstonePath.fold(batch.toDF())(p =>
             Forget.filterForgotten(s, batch.toDF(), p))
-          val remainder = guarded
+          val remainder = org.apache.spark.sql.graft.shims.snap(guarded
             .join(CrossModal.readAssignment(s, path).select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
+              Seq("doc_id"), "left_anti"), "crossmodal.remainder")
           if (!remainder.isEmpty) {
             // ONE merge plan serves both effects: the batch's family
             // rows (results) and the full updated assignment (store)
-            val merged = CrossModal.incremental(s, remainder, path, src)
-              .localCheckpoint()
+            val merged = org.apache.spark.sql.graft.shims.snap(
+              CrossModal.incremental(s, remainder, path, src), "crossmodal.merged")
             merged.join(broadcast(remainder.select(col("doc_id"))), Seq("doc_id"))
               .select(col("component"), col("doc_id"))
               .write.mode(SaveMode.Overwrite)

@@ -111,13 +111,13 @@ object MediaDedupStream {
           // computed, so forgotten media can never re-enter the index
           val guarded = tombstonePath.fold(batch.toDF())(p =>
             graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
-          // the not-yet-absorbed remainder, pinned once (localCheckpoint)
-          // so the probe and the absorb see the identical row set; the
-          // store side of the anti join stays un-broadcast — it is the
-          // unbounded side, the batch is the small one
-          val remainder = guarded
-            .join(kernel.absorbedIds(s, indexPath), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
+          // the not-yet-absorbed remainder, pinned once (snapped) so the
+          // probe and the absorb see the identical row set; the store side
+          // of the anti join stays un-broadcast — it is the unbounded
+          // side, the batch is the small one
+          val remainder = org.apache.spark.sql.graft.shims.snap(guarded
+            .join(kernel.absorbedIds(s, indexPath), Seq("doc_id"), "left_anti"),
+            "media.remainder")
           if (!remainder.isEmpty) {
             kernel.probe(s, remainder, indexPath)
               .write.mode(SaveMode.Overwrite)

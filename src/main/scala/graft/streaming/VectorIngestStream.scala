@@ -113,8 +113,9 @@ object VectorIngestStream {
               .filterForgotten(s, batch.toDF().withColumnRenamed("vec_id", "doc_id"), p)
               .withColumnRenamed("doc_id", "vec_id"))
           // pinned once so the probe and the absorb see the identical
-          // row set (the MediaDedupStream localCheckpoint rule)
-          val remainder = remainderOf(s, guarded, model, indexPath).localCheckpoint()
+          // row set (the MediaDedupStream snap rule)
+          val remainder = org.apache.spark.sql.graft.shims.snap(
+            remainderOf(s, guarded, model, indexPath), "vector.remainder")
           if (!remainder.isEmpty) {
             // additive-idempotent results write: a PARTIAL-overlap replay
             // (float append partially visible after a crash mid-job-commit)

@@ -14,31 +14,17 @@ object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Rewrap a DataFrame's physical rows in a FRESH leaf plan with default
-    * statistics. `Dataset.localCheckpoint` truncates lineage but carries
-    * the pre-checkpoint plan's `sizeInBytes` into the new leaf — and join
-    * estimation multiplies child sizes, so an ITERATIVE algorithm that
-    * checkpoints every round compounds the estimate geometrically until
-    * Catalyst spends minutes multiplying million-digit BigIntegers (see
-    * [[graft.operators.ConnectedComponents]]). Re-wrapping the checkpointed
-    * RDD through `internalCreateDataFrame` (private[sql]) produces a
-    * LogicalRDD with the session-default size estimate instead — constant
-    * per round, so iterated materialization stays O(1) in planning cost.
-    * Call on an already-materialized (checkpointed) DataFrame; the RDD is
-    * reused, no data is copied or recomputed.
-    */
-  def freshStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    ds.sparkSession.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
-  }
-
   /** Rewrap a MATERIALIZED (checkpointed/persisted) DataFrame in a fresh
-    * leaf carrying its TRUE storage size as the plan statistics. This is
-    * [[freshStats]] upgraded from "default estimate" to "measured bytes":
-    * with default stats every join against a checkpoint leaf plans as a
-    * full shuffle (sort-merge), because default `sizeInBytes` is the
-    * don't-broadcast sentinel — for an iterative operator that's 2+ extra
-    * shuffle stages per round of pure latency. Measured bytes let the
+    * leaf carrying its TRUE storage size as the plan statistics. A bare
+    * `Dataset.localCheckpoint` leaf carries the pre-checkpoint plan's
+    * `sizeInBytes` estimate instead — and join estimation multiplies child
+    * sizes, so an iterative operator that checkpoints every round would
+    * compound that estimate geometrically until Catalyst spends minutes
+    * multiplying million-digit BigIntegers. A default-statistics rewrap
+    * avoids that but plans every join against the leaf as a full shuffle
+    * (sort-merge), because default `sizeInBytes` is the don't-broadcast
+    * sentinel — for an iterative operator that's 2+ extra shuffle stages
+    * per round of pure latency. Measured bytes let the
     * planner make the SAME decision it would make for a parquet scan of
     * this data: broadcast when genuinely small, shuffle when genuinely
     * big — the scale-honest behavior at every SF. Falls back to default
@@ -96,24 +82,39 @@ object shims {
   /** Conf key: when `true`, [[snap]] materializes through RELIABLE
     * `checkpoint` (files under `spark.graft.snap.dir`, lineage-free
     * recovery on executor loss) instead of `localCheckpoint` (executor
-    * blocks — faster, but a lost executor kills the loop). Default false:
-    * local mode has no executor loss to survive, and the driver bench must
-    * keep measuring the localCheckpoint substrate it always measured.
+    * blocks — faster, but a lost executor loses the snapped rows).
+    * Default false: local mode has no executor loss to survive, and
+    * `graft.Bench` must keep measuring the localCheckpoint substrate it
+    * always measured.
     */
   val ReliableSnapKey = "spark.graft.snap.reliable"
 
-  /** Default reliable-checkpoint directory when [[ReliableSnapKey]] is on
-    * and the context has none set. On a real cluster point
+  /** Reliable-checkpoint directory when [[ReliableSnapKey]] is on: [[snap]]
+    * points the context's checkpoint dir under it. On a real cluster point
     * `spark.graft.snap.dir` at durable shared storage.
     */
   val SnapDirKey = "spark.graft.snap.dir"
 
-  /** The snap substrate's materialization primitive: `localCheckpoint` by
-    * default, RELIABLE `checkpoint` when the session sets
-    * [[ReliableSnapKey]] — one flag flips every iterative operator
-    * (ConnectedComponents, BpeTrainer) to lineage-free-recoverable state
-    * without touching call sites. Reliable mode lazily installs a
-    * checkpoint dir from [[SnapDirKey]] (tmpdir fallback for tests).
+  /** The engine's ONE materialization primitive: pin a frame that several
+    * consumers read (or that a write must not re-derive from the directory
+    * it appends to), truncate its lineage, and hand back a leaf carrying
+    * the MEASURED size. In order:
+    *   1. record `df`'s optimized plan under `tag` in [[graft.PlanEvidence]]
+    *      (a no-op unless the bench enables it) — the checkpoint truncates
+    *      that pipeline out of every later plan;
+    *   2. skip the checkpoint when [[cheapOverMaterialized]] holds — re-
+    *      checkpointing rows that are already storage-backed is one pure-
+    *      latency blocking action;
+    *   3. otherwise checkpoint: `localCheckpoint` by default, RELIABLE
+    *      `checkpoint` when the session sets [[ReliableSnapKey]] — one flag
+    *      flips every materialization in the engine to lineage-free-
+    *      recoverable state. Reliable mode installs the context's checkpoint
+    *      dir from [[SnapDirKey]] (tmpdir fallback);
+    *   4. when `eager`, return the [[realStatsIn]] rewrap rooted in `into`
+    *      (default: `df`'s own session). A LAZY snap (`eager = false`)
+    *      returns the bare checkpointed frame: an iterative loop lets its
+    *      own counting action build the blocks, then measures them with
+    *      [[realStats]].
     * [[realStats]] falls back to default statistics over reliable
     * checkpoints (no storage blocks to measure) — never wrong, only
     * slower planning; [[unpersistCheckpoint]] is a safe no-op on them
@@ -122,27 +123,34 @@ object shims {
     */
   def snap(
       df: org.apache.spark.sql.DataFrame,
-      eager: Boolean = true): org.apache.spark.sql.DataFrame = {
+      tag: String,
+      eager: Boolean = true,
+      into: org.apache.spark.sql.SparkSession = null): org.apache.spark.sql.DataFrame = {
+    _root_.graft.PlanEvidence.record(tag, df)
     val ss = df.sparkSession
-    if (ss.conf.get(ReliableSnapKey, "false").toBoolean) {
-      if (ss.sparkContext.getCheckpointDir.isEmpty)
-        ss.sparkContext.setCheckpointDir(ss.conf.get(
-          SnapDirKey, sys.props("java.io.tmpdir") + "/graft_snap_ckpt"))
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
+    val ck =
+      if (cheapOverMaterialized(df)) df
+      else if (ss.conf.get(ReliableSnapKey, "false").toBoolean) {
+        val sc = ss.sparkContext
+        val dir = ss.conf.getOption(SnapDirKey)
+        if (sc.getCheckpointDir.forall(cur => dir.exists(d => !cur.contains(d))))
+          sc.setCheckpointDir(dir.getOrElse(sys.props("java.io.tmpdir") + "/graft_snap_ckpt"))
+        df.checkpoint(eager)
+      } else df.localCheckpoint(eager)
+    if (eager) realStatsIn(Option(into).getOrElse(ss), ck) else ck
   }
 
   /** True when re-reading `df` re-reads STORAGE BLOCKS instead of
     * recomputing a pipeline: the optimized plan is nothing but
     * attribute-level projections (renames/casts) over exactly one
-    * materialized (persisted/checkpointed) [[LogicalRDD]] leaf. Used by
-    * iterative operators to SKIP re-materializing an input a caller
-    * already snapped — a contracted merge hands ConnectedComponents a
-    * checkpointed edge frame, and a second checkpoint of the same rows
-    * is one pure-latency blocking action per call. Deliberately
-    * conservative: any non-trivial projection expression (a kernel, a
-    * UDF, an aggregate) or a second leaf keeps the normal snap path, so
-    * an expensive derivation is never silently re-executed per read.
+    * materialized (persisted/checkpointed) [[LogicalRDD]] leaf. [[snap]]
+    * uses it to SKIP re-materializing an input a caller already snapped —
+    * a contracted merge hands ConnectedComponents a checkpointed edge
+    * frame, and a second checkpoint of the same rows is one pure-latency
+    * blocking action per call. Deliberately conservative: any non-trivial
+    * projection expression (a kernel, a UDF, an aggregate) or a second
+    * leaf keeps the normal snap path, so an expensive derivation is never
+    * silently re-executed per read.
     */
   def cheapOverMaterialized(df: org.apache.spark.sql.DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{
