@@ -413,9 +413,8 @@ object Curation {
     * window — O(batch) per day however big the corpus has grown.
     *
     * The stored artifact follows the band-index staleness rules
-    * ([[graft.queries.DedupStore.indexPathFor]] precedent): path fingerprinted
-    * by the kernel version, warm cross-call reuse only for the read-only
-    * testdata dirs.
+    * ([[graft.queries.DedupStore.indexPathFor]] precedent): a warm store
+    * keyed by the kernel version and the corpus content.
     */
   def incrementalThresholds(
       stored: org.apache.spark.sql.DataFrame,
@@ -650,39 +649,13 @@ object Curation {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .option("compression", "zstd").parquet(path)
 
-  /** One-time day-N window-store materialization (content-keyed warm
-    * reuse per [[WarmStores.dirTag]]; k rides the path so an incompatible
-    * store is never served).
+  /** One-time day-N window-store materialization (a content-keyed warm
+    * store; k rides the path so an incompatible store is never served).
     */
   private def windowStoreFor(
-      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_k$k" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      windowStore(base, k).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
-
-  /** [[windowStoreFor]]'s twin for the XXH64-hashed store (q133); the
-    * `_xxh` path suffix keeps the two representations from ever serving
-    * each other.
-    */
-  private def hashedWindowStoreFor(
-      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_k${k}_xxh" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      hashedWindowStore(base, k).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
+      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String =
+    WarmStores.artifact(base.sparkSession, dir, "documents", "ngram_store", s"k$k")()(
+      WarmStores.zstd(windowStore(base, k)))
 
   /** The REFCOUNTED window store — the retractable variant of
     * [[windowStore]] (q150). Schema `(g, rc)` with `rc` = the number of
@@ -829,18 +802,9 @@ object Curation {
       docs: org.apache.spark.sql.DataFrame,
       dir: String,
       hashed: Boolean,
-      k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      (if (hashed) "_rcxfull" else "_rcfull") + s"_k$k" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      rcStoreOf(docs, k, hashed).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
+      k: Int = 5): String =
+    WarmStores.artifact(docs.sparkSession, dir, "documents", "ngram_store",
+      if (hashed) "rcxfull" else "rcfull", s"k$k")()(WarmStores.zstd(rcStoreOf(docs, k, hashed)))
 
   /** Scheduled maintenance rewrite for a refcounted store (the
     * [[graft.queries.DedupStore.compactBandIndex]] move): collapse the absorb
@@ -1140,44 +1104,16 @@ object Curation {
     * can never warm-reuse an incompatible artifact.
     */
   def histogramPathFor(dir: String, kernelVersion: Int = 1): String =
-    s"${sys.props("java.io.tmpdir")}/graft_qhist_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_v$kernelVersion"
+    WarmStores.key(dir, "qhist", s"v$kernelVersion")
 
-  /** One-time day-N histogram materialization (content-keyed warm reuse —
-    * the [[graft.queries.DedupStore]] band-index policy verbatim).
+  /** One-time day-N histogram materialization (a content-keyed warm
+    * store at [[histogramPathFor]]'s root — the [[graft.queries.DedupStore]]
+    * band-index policy verbatim).
     */
   private def histogramIndexFor(
-      base: org.apache.spark.sql.DataFrame, dir: String): String = synchronized {
-    val path = histogramPathFor(dir) +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      scoreHistogram(base).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
-
-  /** Warm-reusable FULL-corpus histogram store at the ABSORBED state —
-    * counts are a mergeable statistic, so the one-shot full-corpus build
-    * equals base + day-1 + day-2 absorbs row-for-row (q121's
-    * incremental-equals-rebuild pin, applied at build time). Never
-    * mutated by its consumer: q152's registered retraction is a
-    * [[retractedHistogramRows]] probe (the q158 precedent — the
-    * store-REWRITING lifecycle is spec-proved in HistogramRetractSpec
-    * and LifecycleSpec).
-    */
-  private def histogramFullIndexFor(
-      docs: org.apache.spark.sql.DataFrame, dir: String): String = synchronized {
-    val path = histogramPathFor(dir) + "_full" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      scoreHistogram(docs).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
+      base: org.apache.spark.sql.DataFrame, dir: String): String =
+    WarmStores.artifact(base.sparkSession, dir, "documents", "qhist", "v1")()(
+      WarmStores.zstd(scoreHistogram(base)))
 
   /** ABSORB a batch into a stored [[scoreHistogram]] artifact — q121's
     * "(2) summing it into the stored day-N histogram" step materialized
@@ -2231,7 +2167,12 @@ object Curation {
       // (HistogramRetractSpec/LifecycleSpec-proved).
       val docs = Tables(s, dir, "documents")
       val flagged = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val path = histogramFullIndexFor(docs, dir)
+      // the warm FULL-corpus histogram store at the ABSORBED state: counts
+      // are a mergeable statistic, so the one-shot full-corpus build
+      // equals base + day-1 + day-2 absorbs row-for-row (q121's
+      // incremental-equals-rebuild pin, applied at build time)
+      val path = WarmStores.artifact(s, dir, "documents", "qhist", "v1", "full")()(
+        WarmStores.zstd(scoreHistogram(docs)))
       incrementalThresholds(
         retractedHistogramRows(s.read.parquet(path), flagged),
         flagged,
@@ -2351,8 +2292,10 @@ object Curation {
         "(q124's scale twin — same counts, long keys through the anti-join)",
       NoveltyOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val storePath = hashedWindowStoreFor(
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
+      // the `xxh` variant keeps the two representations from ever
+      // serving each other
+      val storePath = WarmStores.artifact(s, dir, "documents", "ngram_store", "k5", "xxh")()(
+        WarmStores.zstd(hashedWindowStore(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))))
       hashedContentNovelty(
         s.read.parquet(storePath),
         docs.filter(pmod(col("doc_id"), lit(5)) === 0))
@@ -2593,7 +2536,7 @@ object Curation {
         java.lang.Integer.toHexString(dir.hashCode) + "_absorb_k5_pid" +
         ProcessHandle.current().pid()
       Curation.synchronized {
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
+        if (!graft.ops.StoreSwap.committed(s, path))
           windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)).write
             .mode(org.apache.spark.sql.SaveMode.Overwrite)
             .option("compression", "zstd").parquet(path)

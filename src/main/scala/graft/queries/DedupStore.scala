@@ -263,7 +263,10 @@ object DedupStore {
   }
 
   private[graft] def manifestSubdir(indexPath: String, threshold: Double): String =
-    s"$indexPath/manifest_bp${math.round(threshold * 10000)}"
+    s"$indexPath/${manifestName(threshold)}"
+
+  private def manifestName(threshold: Double): String =
+    s"manifest_bp${math.round(threshold * 10000)}"
 
   /** The shared core of the incremental paths (q110/q112): CC over the
     * CONTRACTED merge graph — batch ids + touched stored representatives,
@@ -830,29 +833,6 @@ object DedupStore {
         |SELECT snap, doc_id, cluster_id, CAST(rn = 1 AS INTEGER) AS keep
         |FROM rk ORDER BY snap, doc_id""".stripMargin
 
-  /** Warm-reusable persisted store for the derived snapshots-0/1 corpus
-    * (q147): gid-keyed band index + component manifest. The store is a
-    * pure function of the read-only corpus dir and is NEVER mutated by
-    * its consumer (q147's merge is a probe, not an absorb), so the
-    * [[bandIndexFor]] testdata warm-reuse policy applies; the `_snap01`
-    * suffix keeps it from ever serving the plain-corpus index (different
-    * key space) and [[indexPathFor]]'s fingerprint carries the banding
-    * params.
-    */
-  private def snapshotStoreFor(
-      docs01: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_snap01" +
-      WarmStores.dirTag(docs01.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
-      persistBandIndex(docs01, path)
-      persistComponents(docs01, path, threshold)
-    }
-    path
-  }
-
   /** The registered three-snapshot derivation (q146/SnapshotDedupSpec):
     * q132's change conventions over the corpus, shared so the spec folds
     * exactly what the oracle replays.
@@ -873,45 +853,22 @@ object DedupStore {
           col("text")))
   }
 
-  /** Warm-reusable FULL-corpus band index + component manifest (q149's
-    * store — the `_full` suffix keeps it from ever colliding with the
-    * %5<>0 corpus store q66/q110 warm-reuse at the unsuffixed path). Never
-    * mutated by its consumer: [[retractManifest]] is a probe.
+  /** Warm-reusable band index + component manifest over `docs`, one
+    * store per `variant` so none collides with the %5<>0 corpus store
+    * q66/q110 warm-reuse at the unsuffixed path: `full` (q149, the whole
+    * corpus), `snap01` (q147, the derived snapshots 0–1, gid-keyed),
+    * `snapfull` (q158, all three snapshots — the q147 fold at its
+    * ABSORBED state, which a one-shot build stands in for by the
+    * incremental-equals-rebuild contract). Never mutated by a consumer:
+    * q147's merge and the [[retractManifest]] retractions are probes.
     */
-  private[queries] def fullComponentIndexFor(
-      docs: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_full" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
+  private[queries] def componentStoreFor(
+      docs: DataFrame, dir: String, threshold: Double, variant: String): String =
+    WarmStores.artifact(docs.sparkSession, dir, "documents", "band_index", BandParams, variant)(
+        "shingles", manifestName(threshold)) { path =>
       persistBandIndex(docs, path)
       persistComponents(docs, path, threshold)
     }
-    path
-  }
-
-  /** Warm-reusable gid-keyed store at the ABSORBED state — band index +
-    * component manifest over all three derived snapshots (q158's store:
-    * the q147 fold made durable). One-shot build stands in for the
-    * absorb-applied state by the incremental-equals-rebuild contract
-    * (q110/q147's pin). Never mutated by its consumer: q158's
-    * retraction is a [[retractManifest]] probe.
-    */
-  private def snapshotFullIndexFor(
-      docs: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_snapfull" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
-      persistBandIndex(docs, path)
-      persistComponents(docs, path, threshold)
-    }
-    path
-  }
 
   /** Artifact location for a corpus dir's band index, fingerprinted by
     * EVERY parameter the stored bytes depend on — the same staleness rule
@@ -919,7 +876,8 @@ object DedupStore {
     * (or kernel version) differ from the writer's computes a different
     * path, so it can never warm-reuse an incompatible index across JVM
     * restarts; it rebuilds at its own path instead. DedupIndexSpec proves
-    * any single-parameter change moves the path.
+    * any single-parameter change moves the path. The warm stores serve
+    * this root plus [[WarmStores.dirTag]]'s content tag.
     */
   def indexPathFor(
       dir: String,
@@ -927,55 +885,43 @@ object DedupStore {
       numPerm: Int = NumPerm,
       numBands: Int = NumBands,
       rowsPerBand: Int = RowsPerBand,
-      kernelVersion: Int = KernelVersion): String = {
-    val fp = s"k${k}p${numPerm}b${numBands}r${rowsPerBand}v$kernelVersion"
-    s"${sys.props("java.io.tmpdir")}/graft_band_index_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" + fp
-  }
+      kernelVersion: Int = KernelVersion): String =
+    WarmStores.key(dir, "band_index", bandParams(k, numPerm, numBands, rowsPerBand, kernelVersion))
+
+  private def bandParams(k: Int, numPerm: Int, numBands: Int, rowsPerBand: Int, v: Int) =
+    s"k${k}p${numPerm}b${numBands}r${rowsPerBand}v$v"
+
+  private lazy val BandParams =
+    bandParams(ShingleK, NumPerm, NumBands, RowsPerBand, KernelVersion)
 
   /** One-time band-index materialization per corpus dir — the q66 analogue
     * of [[Similarity]]'s persistedIndex rules: index build ≠ query (an
-    * offline artifact at scale). Cross-call reuse is content-keyed
-    * ([[WarmStores.dirTag]] rides the path): the band table is a
-    * deterministic function of (corpus bytes, banding parameters) and
-    * BOTH are in the path — [[indexPathFor]]'s parameter fingerprint plus
-    * the corpus tag — so a rewritten dir or changed parameters re-key
-    * instead of serving stale bands, and an unchanged dir warm-serves
-    * across calls and JVM restarts.
+    * offline artifact at scale). The band table is a deterministic
+    * function of (corpus bytes, banding parameters) and BOTH key the
+    * warm store, so a rewritten dir or changed parameters re-key instead
+    * of serving stale bands, and an unchanged dir warm-serves across
+    * calls and JVM restarts.
     */
-  private[queries] def bandIndexFor(corpus: DataFrame, dir: String): String = synchronized {
-    val path = indexPathFor(dir) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS")
-    if (!reusable) persistBandIndex(corpus, path)
-    path
-  }
+  private[queries] def bandIndexFor(corpus: DataFrame, dir: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "documents", "band_index", BandParams)(
+      "shingles")(persistBandIndex(corpus, _))
 
-  /** [[bandIndexFor]] plus the day-N component assignment (same warm-reuse
-    * policy; the threshold rides the subdirectory name so an incompatible
-    * assignment can never be served — see [[persistComponents]]).
+  /** [[bandIndexFor]]'s warm store for the exact-fingerprint artifact
+    * (fingerprint = plain md5, parameterless — the banding fingerprint in
+    * the path is irrelevant to it but harmless).
     */
-  /** [[bandIndexFor]]'s warm-reuse policy for the exact-fingerprint
-    * artifact (fingerprint = plain md5, parameterless — the banding
-    * fingerprint suffix in the path is irrelevant to it but harmless).
-    */
-  private[queries] def exactIndexFor(corpus: DataFrame, dir: String): String = synchronized {
-    val path = indexPathFor(dir) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "exact_fp/_SUCCESS")
-    if (!reusable) persistExactIndex(corpus, path)
-    path
-  }
+  private[queries] def exactIndexFor(corpus: DataFrame, dir: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "documents", "band_index", BandParams)(
+      "exact_fp")(persistExactIndex(corpus, _))
 
+  /** [[bandIndexFor]] plus the day-N component assignment (the threshold
+    * rides the subdirectory name so an incompatible assignment can never
+    * be served — see [[persistComponents]]).
+    */
   private[queries] def componentIndexFor(
-      corpus: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = bandIndexFor(corpus, dir)
-    val sub = manifestSubdir(path, threshold)
-    val reusable =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) persistComponents(corpus, path, threshold)
-    path
-  }
+      corpus: DataFrame, dir: String, threshold: Double): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "documents", "band_index", BandParams)(
+      manifestName(threshold))(_ => persistComponents(corpus, bandIndexFor(corpus, dir), threshold))
 
   /** q66's oracle: exact pairs restricted to those touching the batch
     * (doc_id%5==0), mapped to (new_id, existing_id) — the batch endpoint
@@ -1191,8 +1137,8 @@ object DedupStore {
             length(col("text")).cast("long").as("n_chars")), "snapshot.keyed")
       def gidDocs(n: Int) = keyed.filter(col("snap") === n)
         .select(col("gid").as("doc_id"), col("text"), col("n_chars"))
-      val path = snapshotStoreFor(
-        gidDocs(0).unionByName(gidDocs(1)), dir, threshold = 0.7)
+      val path = componentStoreFor(
+        gidDocs(0).unionByName(gidDocs(1)), dir, threshold = 0.7, "snap01")
       val merged = incrementalComponentMerge(s, gidDocs(2), path, threshold = 0.7)
       keepNewest(keyed,
         merged.select(col("doc_id").as("id"), col("cluster_id").as("component")))
@@ -1229,7 +1175,7 @@ object DedupStore {
       def gidDocs(n: Int) = keyed.filter(col("snap") === n)
         .select(col("gid").as("doc_id"), col("text"), col("n_chars"))
       val d01 = gidDocs(0).unionByName(gidDocs(1))
-      val path = snapshotFullIndexFor(d01.unionByName(gidDocs(2)), dir, thr)
+      val path = componentStoreFor(d01.unionByName(gidDocs(2)), dir, thr, "snapfull")
       val restored = retractManifest(s, gidDocs(2).select(col("doc_id")), d01, path, thr)
       keepNewest(keyed.filter(col("snap") < 2),
         restored.select(col("doc_id").as("id"), col("cluster_id").as("component")))
@@ -1245,7 +1191,7 @@ object DedupStore {
         "surviving members via the index, equals the rebuild without the batch",
       retractOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val path = fullComponentIndexFor(docs, dir, threshold = 0.7)
+      val path = componentStoreFor(docs, dir, threshold = 0.7, "full")
       retractManifest(s,
         docs.filter(pmod(col("doc_id"), lit(5)) === 0).select("doc_id"),
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),

@@ -657,7 +657,7 @@ object Extras {
       val docs = Tables(s, dir, "documents")
       val emb = Tables(s, dir, "embeddings")
       val ids = docs.filter(col("doc_id") % 97 === 0).select(col("doc_id"))
-      val full = DedupStore.fullComponentIndexFor(docs, dir, threshold = 0.7)
+      val full = DedupStore.componentStoreFor(docs, dir, threshold = 0.7, "full")
       val exact = DedupStore.exactIndexFor(
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
       val ivfPath = Similarity.persistedIndex(Similarity.modelFor(emb, dir), emb, dir)
@@ -767,10 +767,20 @@ object Extras {
         |ORDER BY d.doc_id""".stripMargin.replace("$q191Dir", q191Dir)) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val dump = s"$q191Dir/edges.parquet"
-      // edge arms probe the warm full-corpus per-modality indexes (the
-      // q192 treatment for the rebuild form): same edge rows, no per-call
-      // corpus decode/shingle — CrossModalSpec pins stored ≡ in-memory
-      val (ti, ii, ai, vi) = fullModalIndexesFor(s, docs, dir)
+      // edge arms probe warm FULL-corpus per-modality indexes (the q192
+      // treatment for the rebuild form; their own `xmfull` family, since
+      // [[dhashIndexFor]] and its siblings hold the %5≠0 store corpus):
+      // same edge rows, no per-call corpus decode/shingle —
+      // CrossModalSpec pins stored ≡ in-memory
+      def full(arm: String, committed: String*)(build: String => Unit) =
+        WarmStores.artifact(s, dir, "documents", "xmfull", arm)(committed: _*)(build)
+      val ti = full("text", "shingles")(DedupStore.persistBandIndex(docs, _))
+      val ii = full("img", "dhbands")(
+        Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), _))
+      val ai = full("aud", "dhbands")(
+        Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), _))
+      val vi = full("vid", "dhbands", "vcounts")(
+        Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), _))
       Extras.synchronized {
         crossModalEdgesStored(s, ti, ii, ai, vi).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -893,8 +903,17 @@ object Extras {
         |WHERE doc_id % 5 = 0 AND doc_id % 97 <> 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
+      // warm ledger of the %97 forgotten set (the q172 takedown
+      // convention); a build is delete-then-append, because the ledger is
+      // append-only by design and a repeat build must not accumulate
+      val ledger = WarmStores.artifact(s, dir, "documents", "tombs")() { path =>
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        graft.pipeline.Forget.appendTombstones(
+          docs.filter(col("doc_id") % 97 === 0).select(col("doc_id")), path)
+      }
       graft.pipeline.Forget.filterForgotten(
-          s, docs.filter(pmod(col("doc_id"), lit(5)) === 0), tombstoneLedgerFor(s, dir))
+          s, docs.filter(pmod(col("doc_id"), lit(5)) === 0), ledger)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id")
     },
@@ -1007,7 +1026,7 @@ object Extras {
     * stores hold the identical band/shingle/hash tables the kernels
     * compute (pinned in CrossModalSpec) — but the four corpus-wide
     * decode/shingle passes the q191 full rebuild paid PER CALL become a
-    * one-time index build ([[fullModalIndexesFor]]), exactly how the
+    * one-time index build (q191's `xmfull` warm stores), exactly how the
     * incremental tier (q192) already treats the same artifacts. At 100 TB
     * re-deriving all four modality edge sets per audit call was the
     * registry's single largest scale cost (the r16 sf1 band table's
@@ -1031,34 +1050,6 @@ object Extras {
       .unionByName(e(Multimodal.storedHammingPairs(spark, audioIndexPath, maxHammingAud)))
       .unionByName(e(Multimodal.storedVideoPairs(
         spark, videoIndexPath, maxHammingVid, minOverlapVid)))
-  }
-
-  /** Warm FULL-CORPUS per-modality index root for the q191 rebuild —
-    * the [[dhashIndexFor]] family's warm-reuse policy over the whole
-    * documents table (those helpers key on `dir` alone and hold the
-    * %5≠0 store corpus by convention, so the full-corpus artifacts get
-    * their own root). Returns (text, image, audio, video) index paths.
-    */
-  private def fullModalIndexesFor(
-      s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame,
-      dir: String): (String, String, String, String) = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_xmfull_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val text = s"$root/text"
-    val img = s"$root/img"
-    val aud = s"$root/aud"
-    val vid = s"$root/vid"
-    if (!WarmStores.ready(text, "shingles/_SUCCESS"))
-      DedupStore.persistBandIndex(docs, text)
-    if (!WarmStores.ready(img, "dhbands/_SUCCESS"))
-      Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), img)
-    if (!WarmStores.ready(aud, "dhbands/_SUCCESS"))
-      Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), aud)
-    if (!WarmStores.ready(vid, "dhbands/_SUCCESS", "vcounts/_SUCCESS"))
-      Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), vid)
-    (text, img, aud, vid)
   }
 
   /** q196: the media-store SYNC gauge over a dumped (artifact, doc_id,
@@ -1143,85 +1134,39 @@ object Extras {
       .select(col("component"), col("id").as("doc_id"))
       .orderBy("doc_id")
 
-  /** Warm tombstone ledger for q190 (the %97 forgotten set, the q172
-    * takedown convention): content-keyed reuse ([[WarmStores.dirTag]]);
-    * a fresh build is delete-then-append, because the ledger is
-    * append-only by design and a repeat build must not accumulate.
+  /** Warm cross-modal assignment store over the `tag`-named corpus (the
+    * DedupStore.bandIndexFor convention: a content-keyed warm store).
+    * Never mutated by its consumers — q192 registers the PROBE form; the
+    * store-rewriting absorb/retract lifecycle is CrossModalSpec's. `v4`:
+    * the arm-set version is a parameter — a store persisted under the
+    * three-arm union must never warm-serve the four-arm (video-enabled)
+    * readers.
     */
-  private def tombstoneLedgerFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_tombs_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.pipeline.Forget.appendTombstones(
-        Tables(s, dir, "documents")
-          .filter(col("doc_id") % 97 === 0).select(col("doc_id")), path)
-    }
-    path
-  }
+  private def crossModalIndexFor(corpus: DataFrame, dir: String, tag: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "documents", "xmidx", "v4", tag)(
+      "assignment")(graft.pipeline.CrossModal.persist(corpus, _))
 
-  /** Warm cross-modal assignment store over the %5<>0 store corpus (the
-    * DedupStore.bandIndexFor convention, content-keyed via
-    * [[WarmStores.dirTag]]). Never mutated by its consumers — q192
-    * registers the PROBE form; the store-rewriting absorb/retract
-    * lifecycle is CrossModalSpec's.
+  /** Warm image dHash index over the store corpus (the
+    * DedupStore.bandIndexFor convention — media payloads derive
+    * deterministically from the documents table).
     */
-  private def crossModalIndexFor(
-      corpus: DataFrame, dir: String, tag: String): String =
-    synchronized {
-      // `xmidx4`: the arm-set version is part of the path — a store
-      // persisted under the three-arm union must never warm-serve the
-      // four-arm (video-enabled) readers
-      val path = s"${sys.props("java.io.tmpdir")}/graft_xmidx4_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" + tag +
-        WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-      val reusable = WarmStores.ready(path, "assignment/_SUCCESS")
-      if (!reusable) graft.pipeline.CrossModal.persist(corpus, path)
-      path
-    }
+  private def dhashIndexFor(media: DataFrame, dir: String): String =
+    WarmStores.artifact(media.sparkSession, dir, "documents", "dhidx")("dhbands")(
+      Multimodal.persistDhashIndex(media, _))
 
-  /** Warm-reuse policy for the image dHash index (the DedupStore.bandIndexFor
-    * convention, content-keyed via [[WarmStores.dirTag]] — media payloads
-    * derive deterministically from the documents table).
+  /** [[dhashIndexFor]]'s twin for the audio fingerprint index (separate
+    * artifact root — the two kernels must never serve each other's bands).
     */
-  private def dhashIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_dhidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "dhbands/_SUCCESS")
-    if (!reusable) Multimodal.persistDhashIndex(media, path)
-    path
-  }
+  private def audioIndexFor(media: DataFrame, dir: String): String =
+    WarmStores.artifact(media.sparkSession, dir, "documents", "afidx")("dhbands")(
+      Multimodal.persistAudioIndex(media, _))
 
-  /** [[dhashIndexFor]]'s warm-reuse policy for the audio fingerprint
-    * index (separate artifact root — the two kernels must never serve
-    * each other's bands).
+  /** Warm video frame index (q187): both artifacts — frame bands and the
+    * vcounts denominators — must be committed, or the index rebuilds (a
+    * crash between the two writes must not serve a denominator-less
+    * index).
     */
-  private def audioIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_afidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "dhbands/_SUCCESS")
-    if (!reusable) Multimodal.persistAudioIndex(media, path)
-    path
-  }
-
-  /** Warm-reuse policy for the video frame index (q187): both artifacts
-    * — frame bands and the vcounts denominators — must exist, or the
-    * index rebuilds (a crash between the two writes must not serve a
-    * denominator-less index).
-    */
-  private def videoIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vfidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable =
-      WarmStores.ready(path, "dhbands/_SUCCESS", "vcounts/_SUCCESS")
-    if (!reusable) Multimodal.persistVideoIndex(media, path)
-    path
-  }
+  private def videoIndexFor(media: DataFrame, dir: String): String =
+    WarmStores.artifact(media.sparkSession, dir, "documents", "vfidx")("dhbands", "vcounts")(
+      Multimodal.persistVideoIndex(media, _))
 }

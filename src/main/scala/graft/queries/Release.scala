@@ -531,6 +531,17 @@ object Release {
       |      'added' AS status
       |    FROM d1 JOIN a1 ON a1.source = d1.source AND a1.pack_id = d1.pack_id))""".stripMargin
 
+  /** [[incrementalReleaseFor]]'s sibling for q164's epoch-1 release
+    * manifest — q172's release arm probes the stored manifest (the
+    * production shape: a locator reads stores, it does not re-release),
+    * while q164's own registration keeps measuring the derivation.
+    */
+  private[queries] def releaseManifestFor(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(WarmStores.artifact(s, dir, "documents", "relman")()(
+      WarmStores.zstd(releaseManifest(Tables(s, dir, "documents")))))
+
   /** Warm-reusable PERSISTED incremental-release manifest — the q158
     * probe-form precedent applied to the release family: q169's
     * derivation runs once per corpus dir and lands as a never-mutated
@@ -541,45 +552,16 @@ object Release {
     * something re-derived per takedown — instead of re-paying the
     * derivation q169 itself keeps measuring. Values are identical either
     * way (the artifact holds [[incrementalRelease]]'s rows verbatim), so
-    * the oracles are untouched. Warm reuse is content-keyed
-    * ([[WarmStores.dirTag]]): the artifact path encodes the corpus bytes
-    * that built it, so any dir warm-serves safely and a rewritten dir
-    * re-keys — the round-15 sf1 rehearsal measured this chain rebuilding
-    * per call (q171/q176/q177 at 46-82x on 10x data) under the old
-    * testdata-only policy.
+    * the oracles are untouched. A content-keyed warm store: any dir
+    * warm-serves safely and a rewritten dir re-keys — the round-15 sf1
+    * rehearsal measured this chain rebuilding per call (q171/q176/q177 at
+    * 46-82x on 10x data) under the old testdata-only policy.
     */
-  /** [[incrementalReleaseFor]]'s sibling for q164's epoch-1 release
-    * manifest — q172's release arm probes the stored manifest (the
-    * production shape: a locator reads stores, it does not re-release),
-    * while q164's own registration keeps measuring the derivation.
-    */
-  private[queries] def releaseManifestFor(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_relman_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      releaseManifest(Tables(s, dir, "documents")).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    s.read.parquet(path)
-  }
-
   private def incrementalReleaseFor(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_increl_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      incrementalRelease(s, dir).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    s.read.parquet(path)
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(WarmStores.artifact(s, dir, "documents", "increl")()(
+      WarmStores.zstd(incrementalRelease(s, dir))))
 
   /** q171: un-absorb the day-2 batch from an incremental release. The
     * absorb never rewrote a published file (additions are NEW tail
@@ -764,34 +746,6 @@ object Release {
     * tail-only guard included — so a PROBE-form registration measures the
     * retraction without mutating anything.
     */
-  /** Warm-reusable pack-manifest store at the ABSORBED state: the base
-    * manifest plus the batch's spans resumed at the base offsets, written
-    * in ONE job — by the q159 continuation contract this is row-identical
-    * to packManifest(base) followed by [[absorbIntoPackStore]](batch)
-    * (published rows are append-only, so the absorb only ever adds the
-    * resumed spans). Never mutated by its consumer: q161's registered
-    * retraction is a [[retractedPackRows]] probe (the q158 precedent —
-    * the store-REWRITING path is spec-proved in LifecycleSpec's pack
-    * days and the tail-guard specs).
-    */
-  private def packAbsorbedStoreFor(
-      base: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame,
-      dir: String,
-      packTokens: Int = 512): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_packabs_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_p$packTokens" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable) {
-      val m0 = packManifest(base, packTokens)
-      m0.unionByName(packSpans(batch, packResumeOffsets(m0, packTokens), packTokens))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    }
-    path
-  }
-
   private[graft] def retractedPackRows(
       store: org.apache.spark.sql.DataFrame,
       batchIds: org.apache.spark.sql.DataFrame,
@@ -888,8 +842,7 @@ object Release {
         java.lang.Integer.toHexString(dir.hashCode) + "_p512_pid" +
         ProcessHandle.current().pid()
       Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storePath, "_SUCCESS"))) {
+        if (!graft.ops.StoreSwap.committed(s, storePath)) {
           packManifest(docs.filter(col("doc_id") % 7 =!= 0)).write
             .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
         }
@@ -932,8 +885,14 @@ object Release {
       // store-rewriting retractFromPackStore (LifecycleSpec-proved).
       val docs = Tables(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 7 === 0)
-      val path = packAbsorbedStoreFor(
-        docs.filter(col("doc_id") % 7 =!= 0), batch, dir)
+      // the store at the ABSORBED state, written in ONE job: base
+      // manifest plus the batch's spans resumed at the base offsets is
+      // row-identical to packManifest(base) followed by
+      // absorbIntoPackStore(batch) (the q159 continuation contract)
+      val path = WarmStores.artifact(s, dir, "documents", "packabs", "p512")() { p =>
+        val m0 = packManifest(docs.filter(col("doc_id") % 7 =!= 0), 512)
+        WarmStores.zstd(m0.unionByName(packSpans(batch, packResumeOffsets(m0, 512), 512)))(p)
+      }
       retractedPackRows(s.read.parquet(path), batch.select(col("doc_id")))
         .orderBy("source", "pack_id", "doc_id")
     },
@@ -1001,8 +960,7 @@ object Release {
         java.lang.Integer.toHexString(dir.hashCode) + "_b512_pid" +
         ProcessHandle.current().pid()
       Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storePath, "_SUCCESS"))) {
+        if (!graft.ops.StoreSwap.committed(s, storePath)) {
           boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
             .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
         }
@@ -1307,7 +1265,7 @@ object Release {
       // keeper CTE + packing chain over the same corpus either way.
       val docs = Tables(s, dir, "documents")
       val thr = 0.7
-      val path = DedupStore.fullComponentIndexFor(docs, dir, thr)
+      val path = DedupStore.componentStoreFor(docs, dir, thr, "full")
       releaseManifestOver(docs,
         s.read.parquet(DedupStore.manifestSubdir(path, thr))
           .filter(col("keep") === 1).select(col("doc_id")))
@@ -1549,8 +1507,7 @@ object Release {
       val epochDir = s"$out/epoch=1"
       val manifestStore = s"$out/manifest_store"
       Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(manifestStore, "_SUCCESS"))) {
+        if (!graft.ops.StoreSwap.committed(s, manifestStore)) {
           graft.ops.ShardExport.write(
             Tables(s, dir, "documents"), out, epoch = 1,
             packTokens = 512, shardTokens = 2048)

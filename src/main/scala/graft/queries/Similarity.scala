@@ -507,39 +507,6 @@ object Similarity {
       |WHERE j >= i
       |GROUP BY i, j ORDER BY i, j""".stripMargin
 
-  /** q194's persisted moment-sum store over the STORED corpus — the
-    * [[persistedIndex]] memoization rules (testdata-only reuse; a user
-    * dir rebuilds per call). The path carries the quantization-scheme tag
-    * (`tf12` = tie-free floor at scale 12) the same way persistedIndex
-    * carries the centroid fingerprint: a store written under an older
-    * scheme can never be served to a newer reader.
-    */
-  private[graft] def momentStoreFor(corpus: DataFrame, dir: String): String = synchronized {
-    // content fingerprint, not just the dir name: one cheap corpus pass
-    // (order-insensitive sum of row hashes — far cheaper than the d²
-    // moment fold it memoizes) so a testdata dir whose embeddings change
-    // can never serve stale sums, and two processes over different data
-    // never share a path — the persistedIndex staleness rule
-    val fp = corpus.agg(
-        sum(xxhash64(col("vec_id"), col("embedding")).cast("decimal(38,0)")).as("h"),
-        count(lit(1)).as("n"))
-      .collect()(0)
-    val tag = java.lang.Long.toHexString(
-      fp.getDecimal(0).hashCode().toLong ^ (fp.getLong(1) * 1000003L))
-    val path = s"${sys.props("java.io.tmpdir")}/graft_moment_store_tf12_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" + tag
-    // the row-hash fp above keys the path by the corpus CONTENT, so a
-    // completed artifact at this path is valid for any dir — no
-    // dir-prefix gate needed (the WarmStores rationale)
-    val reusable =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
-    if (!reusable)
-      momentSums(corpus, dim = 64).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
-  }
-
   val all: Map[String, Q] = Map(
     "q36_knn_brute" -> Q(
       "Brute-force cosine top-5 for the first 10 vectors (ids only — FP-rank-safe)",
@@ -862,7 +829,12 @@ object Similarity {
       val store = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val batch = e.filter(pmod(col("vec_id"), lit(5)) === 0)
       val model = modelFor(e, dir)
-      val path = persistedStoreIndex(model, store, dir)
+      // the [[persistedIndex]] artifact restricted to the store, under its
+      // own name so the full-corpus index can never shadow it
+      val path = WarmStores.artifact(
+          s, dir, "embeddings", "ivf_index_store", fp(model.centroids))()(
+        graft.ops.Bucketing.writePartitioned(
+          graft.operators.IvfIndex.assign(model, store), _, Seq("bucket")))
       Similarity.synchronized {
         graft.operators.IvfIndex
           .candidatesIndexed(model, batch, s.read.parquet(path), nProbe = 4)
@@ -980,7 +952,13 @@ object Similarity {
         "from-scratch q94 rebuild exactly",
       MomentsOracleSql) { (s, dir) =>
       val e = emb(s, dir)
-      val path = momentStoreFor(e.filter(pmod(col("vec_id"), lit(5)) =!= 0), dir)
+      // the persisted moment-sum store over the STORED corpus, a warm
+      // store keyed like [[persistedIndex]]; the quantization-scheme
+      // token (`tf12` = tie-free floor at scale 12) is a parameter, so a
+      // store written under an older scheme is never served to a newer
+      // reader
+      val path = WarmStores.artifact(s, dir, "embeddings", "moment_store", "tf12")()(
+        WarmStores.zstd(momentSums(e.filter(pmod(col("vec_id"), lit(5)) =!= 0), dim = 64)))
       mergeMomentSums(Seq(
         s.read.parquet(path),
         momentSums(e.filter(pmod(col("vec_id"), lit(5)) === 0), dim = 64)))
@@ -1705,61 +1683,31 @@ object Similarity {
     * ⇒ same fingerprint ⇒ a completed warm index is reusable.
     */
   private[graft] def persistedIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
+      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "embeddings", "ivf_index", fp(model.centroids))()(
       graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assign(model, corpus), path, Seq("bucket"))
-    path
-  }
+        graft.operators.IvfIndex.assign(model, corpus), _, Seq("bucket")))
 
-  /** q193's persisted STORE-side index (the vec_id%5 != 0 stored corpus —
-    * the house daily-batch convention): the [[persistedIndex]] artifact
-    * restricted to the store, under a distinct path suffix so the
-    * full-corpus index can never shadow it. Same staleness rules.
-    */
-  private[graft] def persistedStoreIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assign(model, corpus), path, Seq("bucket"))
-    path
-  }
+  /** The IVF index families' model parameter: a hex hash of the model arrays. */
+  private def fp(a: Array[_]): String =
+    java.lang.Integer.toHexString(java.util.Arrays.deepHashCode(a.asInstanceOf[Array[AnyRef]]))
 
-  /** The int8 twin of [[persistedIndex]] — same path-by-fingerprint and
-    * testdata-only-reuse staleness rules (see there), distinct path suffix
-    * so the two artifacts can never shadow each other.
+  /** The int8 twin of [[persistedIndex]] — same staleness rules (see
+    * there), its own name so the two artifacts can never shadow each
+    * other.
     */
   private[graft] def persistedQuantizedIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_q8_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
+      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String =
+    WarmStores.artifact(
+        corpus.sparkSession, dir, "embeddings", "ivf_index_q8", fp(model.centroids))()(
       graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assignQuantized(model, corpus), path, Seq("bucket"))
-    path
-  }
+        graft.operators.IvfIndex.assignQuantized(model, corpus), _, Seq("bucket")))
 
   /** q71's coarse quantizer: FEWER, therefore larger, cells than the ANN
     * model (k=8 vs 16) because dedup recall needs near-dup pairs to
     * CO-OCCUR in a cell, a stricter ask than a query finding most of its
-    * top-k. Same memoization/staleness policy as [[modelFor]] (cache only
-    * the read-only testdata dirs), under a distinct cache key so the two
+    * top-k. Same memoization/staleness policy as [[modelFor]] (keyed by
+    * the corpus content tag), under a distinct cache key so the two
     * models can never shadow each other.
     */
   private[graft] def dedupModelFor(corpus: DataFrame, dir: String): graft.operators.IvfIndex.Model = {
@@ -1770,33 +1718,23 @@ object Similarity {
       _ => build())
   }
 
-  /** q117's code table — [[persistedIndex]]'s path-by-fingerprint and
-    * testdata-only-reuse staleness rules (see there); the fingerprint
-    * covers BOTH models (coarse centroids + PQ codebooks), so changing
-    * either retargets the path and rebuilds.
+  /** q117's code table — [[persistedIndex]]'s staleness rules (see
+    * there); the fingerprint covers BOTH models (coarse centroids + PQ
+    * codebooks), so changing either retargets the path and rebuilds.
     */
   private[graft] def persistedPqIndex(
       ivf: graft.operators.IvfIndex.Model,
       pq: graft.operators.PqIndex.Model,
       corpus: DataFrame,
-      dir: String): String = synchronized {
-    val fp = 31 * java.util.Arrays.deepHashCode(
-      ivf.centroids.asInstanceOf[Array[AnyRef]]) +
-      java.util.Arrays.deepHashCode(pq.codebooks.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_pq_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
+      dir: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "embeddings", "ivf_index_pq", fp(ivf.centroids),
+        fp(pq.codebooks))()(
       graft.ops.Bucketing.writePartitioned(
-        graft.operators.PqIndex.assign(ivf, pq, corpus), path, Seq("bucket"))
-    path
-  }
+        graft.operators.PqIndex.assign(ivf, pq, corpus), _, Seq("bucket")))
 
   /** q117's PQ codebooks — [[modelFor]]'s memoization/staleness policy
-    * (driver-bounded deterministic fit; cache only read-only testdata
-    * dirs), separate map because the model type differs.
+    * (a bounded-sample deterministic fit, keyed by the corpus content tag),
+    * separate map because the model type differs.
     */
   private[graft] def pqModelFor(corpus: DataFrame, dir: String): graft.operators.PqIndex.Model = {
     def build() = graft.operators.PqIndex.fit(

@@ -1,69 +1,74 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Content-keyed warm-store policy, shared by every persisted-artifact
-  * helper in the query registry (band/exact/component indexes, the n-gram
-  * and histogram stores, the release-manifest chain, the media and
+/** Content-keyed warm stores: the one way the query registry persists a
+  * reusable artifact (band/exact/component indexes, the n-gram and
+  * histogram stores, the release-manifest chain, the media and
   * cross-modal index families, the IVF/PQ vector indexes).
   *
-  * History: these helpers originally allowed cross-call reuse ONLY for
-  * the read-only driver testdata dirs — any other dir rebuilt its store
-  * on every invocation, because a user dir rewritten mid-session must
-  * never serve a stale artifact. Correct, but it made the REGISTERED
-  * query forms recompute corpus-scale upstream chains per call on any
-  * non-testdata corpus: the round-15 sf1 rehearsal measured the
-  * takedown/forget tier at 46-82x on 10x data purely from per-invocation
-  * chain rebuilds (q171/q176/q177 re-deriving the ~24 s incremental
-  * release, q188 re-building four media store families), while the
-  * probes themselves are O(batch). At 100 TB a store that cannot be
-  * warm-served is not a store.
-  *
-  * The fix is the [[Similarity.momentStoreFor]] staleness rule
-  * generalized: key the artifact path by the CONTENT that built it, then
-  * reuse becomes safe for any dir. For non-testdata dirs the tag is a
-  * hash of every underlying parquet file's (name, size, mtime) for the
-  * input tables — O(file-listing), no data scan — so a rewritten corpus
-  * re-keys to a fresh path instead of being trusted, and two dirs with
-  * different bytes can never share an artifact. The driver testdata is
-  * immutable by contract and keeps the historical constant (empty) tag:
-  * paths, I/O, and bench behavior there are byte-identical to the old
-  * policy.
+  * An artifact's path is a function of everything that built it — the
+  * artifact name, its parameters and version tokens, the corpus dir, and
+  * a content tag over the input table files ([[dirTag]]) — so a rewritten
+  * corpus or a changed parameter re-keys to a fresh path instead of being
+  * trusted, and an unchanged corpus warm-serves across calls and JVM
+  * restarts. With the tag in the path, a committed marker IS validity.
+  * Every dir is keyed the same way; the read-only testdata fixtures get
+  * no special case.
   */
-private[queries] object WarmStores {
+private[graft] object WarmStores {
 
   /** Content tag for `dir`, derived from the named top-level tables
-    * (e.g. "documents", "embeddings"). "" for the driver testdata
-    * (immutable; zero I/O). A missing table contributes nothing —
-    * callers name the tables their store is a function of.
+    * (e.g. "documents", "embeddings"): a hash of every underlying parquet
+    * file's (name, size, mtime) — O(file-listing), no data scan. A missing
+    * table contributes nothing — callers name the tables their store is a
+    * function of.
     */
-  def dirTag(s: SparkSession, dir: String, tables: String*): String =
-    if (dir.startsWith("/root/testdata")) ""
-    else {
-      val conf = s.sparkContext.hadoopConfiguration
-      var acc = 1125899906842597L
-      tables.sorted.foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) {
-          val it = fs.listFiles(p, true)
-          val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val f = it.next()
-            entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-          }
-          entries.sorted.foreach(e => acc = acc * 1000003L + e.hashCode)
+  def dirTag(s: SparkSession, dir: String, tables: String*): String = {
+    val conf = s.sparkContext.hadoopConfiguration
+    var acc = 1125899906842597L
+    tables.sorted.foreach { t =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+      val fs = p.getFileSystem(conf)
+      if (fs.exists(p)) {
+        val it = fs.listFiles(p, true)
+        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) {
+          val f = it.next()
+          entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
         }
+        entries.sorted.foreach(e => acc = acc * 1000003L + e.hashCode)
       }
-      "_" + java.lang.Long.toHexString(acc)
     }
-
-  /** The reuse test every helper shares: every named success marker
-    * exists under the content-keyed `path`. With the tag in the path,
-    * existence IS validity — no dir-prefix check remains.
-    */
-  def ready(path: String, markers: String*): Boolean = {
-    val ms = if (markers.isEmpty) Seq("_SUCCESS") else markers
-    ms.forall(m => java.nio.file.Files.exists(java.nio.file.Paths.get(path, m)))
+    "_" + java.lang.Long.toHexString(acc)
   }
+
+  /** The untagged artifact root: `tmpdir/graft_<name>_<hex(dir)>`, one
+    * `_<param>` segment per parameter or version token.
+    */
+  def key(dir: String, name: String, params: Any*): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${name}_" +
+      java.lang.Integer.toHexString(dir.hashCode) + params.map("_" + _).mkString
+
+  /** The warm store `name` over `table` of `dir`: serves the artifact at
+    * [[key]] plus [[dirTag]] when every `committed` subdirectory (none =
+    * the artifact root itself) carries its `_SUCCESS`, else runs
+    * `build(path)` first. Returns the path. Builds run under this
+    * object's (reentrant) lock, so a build may nest another artifact.
+    */
+  def artifact(s: SparkSession, dir: String, table: String, name: String, params: Any*)(
+      committed: String*)(build: String => Unit): String = {
+    val path = key(dir, name, params: _*) + dirTag(s, dir, table)
+    val dirs = if (committed.isEmpty) Seq(path) else committed.map(c => s"$path/$c")
+    synchronized {
+      if (!dirs.forall(graft.ops.StoreSwap.committed(s, _))) build(path)
+    }
+    path
+  }
+
+  /** The common `build`: `df` overwrites the artifact path as zstd
+    * parquet. By-name, so a served artifact never plans `df`.
+    */
+  def zstd(df: => DataFrame): String => Unit = path =>
+    df.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(path)
 }

@@ -430,11 +430,14 @@ class DedupIndexSpec extends SparkSpec {
       graft.queries.DedupStore.indexPathFor("/root/testdata/sf0.001", kernelVersion = 2))
     variants.foreach(v => assert(v != base, s"parameter change must move the path: $v"))
     assert(variants.distinct.size == variants.size)
-    // and the default path is where the warm q66 artifact actually lives
-    // (after any q66 run): the existence check and the write target agree
+    // and the default path plus the corpus content tag is where the warm
+    // q66 artifact actually lives (after any q66 run): the existence check
+    // and the write target agree
+    // (Bench.WarmupDir is this same sf0.001 fixture)
+    val served = base + graft.queries.WarmStores.dirTag(spark, Bench.WarmupDir, "documents")
     SparkEntry.queries("q66_dedup_incremental")(spark, "/root/testdata/sf0.001").collect()
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(base, "shingles", "_SUCCESS")),
-      s"warm artifact must live at the fingerprinted path $base")
+      java.nio.file.Paths.get(served, "shingles", "_SUCCESS")),
+      s"warm artifact must live at the fingerprinted path $served")
   }
 }
