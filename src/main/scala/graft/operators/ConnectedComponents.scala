@@ -1,15 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Connected components over an undirected edge list, as iterative min-label
-  * propagation with pointer chasing — the operator that turns near-dup PAIRS
-  * (q33/q34/q37) into dedup CLUSTERS: training pipelines drop whole clusters
-  * (keep one canonical doc per component), not individual pairs.
+/** Connected components over an undirected edge list — the operator that
+  * turns near-dup PAIRS (q33/q34/q37) into dedup CLUSTERS: training
+  * pipelines drop whole clusters (keep one canonical doc per component),
+  * not individual pairs.
   *
-  * Algorithm: every node starts labeled with `min(id, min neighbor id)`
+  * Two paths, chosen by the MEASURED size of the materialized edge list
+  * against the session's `spark.sql.autoBroadcastJoinThreshold` — the same
+  * size rule that picks a broadcast join over a shuffle join:
+  *   - at or under it, the edges are collected once and solved on the
+  *     driver with union-find (the driver already accepts that many bytes
+  *     for any broadcast); the small id→label map then rides the one
+  *     aggregate that dedups the requested nodes. Zero rounds, no cloned
+  *     session.
+  *   - above it (or when the threshold is -1), the distributed loop below.
+  *
+  * Loop algorithm: every node starts labeled with `min(id, min neighbor id)`
   * (round-1 propagation fused into initialization); each round
   *   1. propagation — label(u) := min(label(u), min over neighbors v of
   *      label(v)) via one union + min-aggregate (the previous label rides
@@ -24,8 +37,8 @@ import org.apache.spark.sql.graft.shims
   * exactly label(u) = min id reachable from u. Equivalently: the round that
   * changes nothing is the round where every edge is label-consistent.
   *
-  * Scale shape: everything is equi-joins and min-aggregates on the node-id
-  * key — no cartesians, no driver-side graph. Each round shuffles
+  * Loop scale shape: everything is equi-joins and min-aggregates on the
+  * node-id key — no cartesians, no driver-side graph. Each round shuffles
   * O(|V| + |E|) rows of small fixed-width longs, and costs exactly TWO
   * blocking driver actions: the propagation materialization and the chased
   * materialization (whose job also computes the changed-row count — the
@@ -52,34 +65,26 @@ import org.apache.spark.sql.graft.shims
   */
 object ConnectedComponents {
 
-  /** Ceiling (bytes, measured storage size) under which a round's label
-    * map is small enough to chase LAZILY via broadcast lookups; above it
-    * the chased level is materialized so later rounds read a leaf instead
-    * of re-executing shuffle joins per reference. 64 MB of (id, lab)
-    * pairs is ~4M nodes — broadcasting that per round is cheap against
-    * the shuffle stages it replaces; far larger maps pay one extra
-    * materialization action per round instead.
-    */
-  val FreshChaseBroadcastCeiling: Long = 64L << 20
-
   /** Labels every node in `nodes` (column `id`) with the minimum id
     * reachable through `edges` (columns `src`, `dst`; undirected, self-loops
-    * and duplicates tolerated). Output: (id, component). Nodes absent from
-    * every edge form singleton components labeled by themselves.
+    * and duplicates tolerated). Output: (id, component), one row per
+    * distinct non-null id. Nodes absent from every edge form singleton
+    * components labeled by themselves; an edge with a null endpoint
+    * connects nothing.
     *
     * Edge endpoints absent from `nodes` participate fully in propagation
     * (so a path through an absent intermediate still connects its ends, and
     * an absent low-id neighbor still pushes its id as a component label);
     * they are dropped from the OUTPUT, which covers exactly `nodes`.
     *
-    * @param chaseSteps pointer-chase lookups per round; each is one cheap
-    *        in-job hash join, and each extra step cuts chain-shaped round
-    *        count — rounds cost two blocking actions each, so more chase
-    *        per round is the cheaper currency (measured on the sf0.1
-    *        near-dup graph, 2000 nodes / 920 pairs: 10 rounds with no
-    *        chase, 4 with 3 steps, 3 with 5).
-    * @throws IllegalStateException if `maxIter` rounds do not reach the
-    *         fixpoint (raise it for pathological chains).
+    * @param chaseSteps loop path: pointer-chase lookups per round; each is
+    *        one cheap in-job hash join, and each extra step cuts
+    *        chain-shaped round count — rounds cost two blocking actions
+    *        each, so more chase per round is the cheaper currency (measured
+    *        on the sf0.1 near-dup graph, 2000 nodes / 920 pairs: 10 rounds
+    *        with no chase, 4 with 3 steps, 3 with 5).
+    * @throws IllegalStateException if `maxIter` loop rounds do not reach
+    *         the fixpoint (raise it for pathological chains).
     */
   def run(
       nodes: DataFrame,
@@ -87,6 +92,96 @@ object ConnectedComponents {
       maxIter: Int = 20,
       chaseSteps: Int = 5): DataFrame = {
     require(chaseSteps >= 0, s"chaseSteps must be >= 0, got $chaseSteps")
+    val caller = nodes.sparkSession
+    // materialize the DIRECTED edge list once, under the caller's conf:
+    // its measured size picks the path, and both paths read it more than
+    // once (the loop's symmetrizing union references it twice) — without
+    // the snap the edge derivation (often an expensive similarity join)
+    // would execute again per read.
+    val ep = shims.snap(edges
+      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")),
+      "cc.edges", into = caller)
+    val edgeBytes = ep.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = shims.broadcastThreshold(caller)
+    // a null endpoint names no node, so its edge connects nothing (a
+    // null-keyed row carried into the loop would bridge its other ends).
+    // Filtered lazily AFTER the snap: an edge frame the caller already
+    // materialized then still skips its re-checkpoint.
+    val nonNull = ep.where(col("u").isNotNull && col("v").isNotNull)
+    // the result is its own snap on both paths, so the edge checkpoint
+    // (usually the largest input, O(|E|) rows) is dead once it returns
+    try {
+      if (threshold >= 0 && edgeBytes <= threshold) solveOnDriver(nodes, nonNull)
+      else propagate(nodes, nonNull, edgeBytes, threshold, maxIter, chaseSteps)
+    } finally shims.unpersistCheckpoint(ep)
+  }
+
+  /** The small-graph path: union-find over the collected edges on primitive
+    * arrays — distinct endpoint ids sorted, parents as `Int` indexes, every
+    * union toward the smaller index, paths halved on each find. Indexes
+    * follow id order, so each root is its component's minimum id (absent
+    * endpoints included, exactly the loop's fixpoint). Only non-root
+    * endpoints enter the id→label map; every other node labels itself.
+    *
+    * The map is applied by the node dedup's own aggregate, as a union
+    * branch (the loop's seed idiom), not by a broadcast join: the nodes
+    * need that shuffle anyway, and broadcasting a local relation is one
+    * more blocking job per call.
+    */
+  private def solveOnDriver(nodes: DataFrame, ep: DataFrame): DataFrame = {
+    val edges = ep.collect()
+    val ids = new Array[Long](2 * edges.length)
+    edges.indices.foreach { i =>
+      ids(2 * i) = edges(i).getLong(0)
+      ids(2 * i + 1) = edges(i).getLong(1)
+    }
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i =>
+      if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
+    }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    edges.foreach { e =>
+      val a = find(index(e.getLong(0)))
+      val b = find(index(e.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labels = (0 until n).flatMap { i =>
+      val r = find(i)
+      if (r == i) None else Some(Row(ids(i), ids(r)))
+    }
+    val map = nodes.sparkSession.createDataFrame(labels.asJava,
+      StructType(Seq(StructField("id", LongType), StructField("lab", LongType))))
+    // one row per distinct requested id: `req` marks ids that came from
+    // `nodes` (map-only endpoints are dropped), `lab` is the map's label
+    shims.snap(nodes.select(col("id").cast("long").as("id"),
+        lit(null).cast("long").as("lab"), lit(true).as("req"))
+      .where(col("id").isNotNull)
+      .union(map.select(col("id"), col("lab"), lit(false).as("req")))
+      .groupBy("id").agg(min("lab").as("lab"), max("req").as("req"))
+      .where(col("req"))
+      .select(col("id"), coalesce(col("lab"), col("id")).as("component")), "cc.labels")
+  }
+
+  /** The distributed loop (see the object doc) over `edges`, a lazy
+    * null-free view of the materialized edge list of measured size
+    * `edgeBytes`. `threshold` is the caller's broadcast threshold: a
+    * round's label map at or under it is chased lazily through one
+    * broadcast, a larger one is materialized.
+    */
+  private def propagate(
+      nodes: DataFrame,
+      edges: DataFrame,
+      edgeBytes: BigInt,
+      threshold: Long,
+      maxIter: Int,
+      chaseSteps: Int): DataFrame = {
     // AQE is a per-round latency tax here, not a win: every exchange
     // becomes a sequentially-materialized query stage with a replan in
     // between (~0.3 s/round measured on a tiny graph, regardless of data),
@@ -101,22 +196,17 @@ object ConnectedComponents {
     // nothing needs restoring.
     val caller = nodes.sparkSession
     val loop = shims.cloneSession(caller)
-    // materialize the DIRECTED edge list BEFORE symmetrizing: the union
-    // below references it twice, and without materialization the edge
-    // derivation (often an expensive similarity join) would execute twice.
-    // (The checkpoint job itself runs under the caller's normal adaptive
-    // conf — only the loop's fixed-shape plans, rooted in `loop`, opt out.)
-    // The symmetrized view stays lazy — re-scanning a checkpoint is cheap.
-    val ep = shims.snap(edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")),
-      "cc.edges", into = loop)
+    // the edge checkpoint re-rooted in `loop` (it was built under the
+    // caller's normal adaptive conf — only the loop's fixed-shape plans opt
+    // out). The symmetrized view stays lazy — re-scanning a checkpoint is
+    // cheap.
+    val ep = shims.realStatsIn(loop, edges)
     val sym = ep.union(ep.select(col("v").as("u"), col("u").as("v")))
     // size the loop's shuffles to the MEASURED edge bytes (the same ~64 MB
     // per-partition rule AQE's coalescing applies): a tiny graph gets
     // single-task shuffle stages instead of 32 idle ones, a 100 TB graph
     // gets thousands — without paying AQE's per-stage replan latency every
     // round.
-    val edgeBytes = ep.queryExecution.optimizedPlan.stats.sizeInBytes
     // If realStats could not find the checkpoint's storage info, the leaf
     // reports the default don't-broadcast sentinel — treating THAT as a
     // size would cap out at 200k partitions with AQE off (minutes of empty
@@ -130,7 +220,7 @@ object ConnectedComponents {
     loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     // snapped ONCE: the seed union below and the final output semi-join
     // both read `ids`, and an expensive caller-side node derivation must
-    // not pay its cost twice (the edge plan gets the same treatment above)
+    // not pay its cost twice (the edge list got the same treatment in `run`)
     val ids = shims.snap(nodes.select(col("id").cast("long").as("id")), "cc.nodes", into = loop)
     // round-1 propagation fused into initialization: one union + aggregate
     // over nodes ∪ edge endpoints IS min(id, min neighbor id) — seeding
@@ -240,14 +330,16 @@ object ConnectedComponents {
           if (converged || chaseSteps == 0) propSized
           else {
             val mapBytes = propSized.queryExecution.optimizedPlan.stats.sizeInBytes
-            if (mapBytes <= FreshChaseBroadcastCeiling) {
-              // small map: leave the chase LAZY over the materialized prop
-              // leaf — chaseSteps lookups against ONE shared broadcast of
-              // it (map-side, one build), so the round still costs exactly
-              // one blocking action. With the bridge branch doing the
-              // long-distance jumps, plain re-application is enough here;
-              // deeper schemes (self-composition) were measured to buy no
-              // rounds while paying a nested broadcast build per level.
+            if (mapBytes <= threshold) {
+              // small map (at or under the broadcast threshold, the same
+              // rule that picked this path): leave the chase LAZY over the
+              // materialized prop leaf — chaseSteps lookups against ONE
+              // shared broadcast of it (map-side, one build), so the round
+              // still costs exactly one blocking action. With the bridge
+              // branch doing the long-distance jumps, plain re-application
+              // is enough here; deeper schemes (self-composition) were
+              // measured to buy no rounds while paying a nested broadcast
+              // build per level.
               val fl = broadcast(
                 propSized.select(col("id").as("__k"), col("lab").as("__v")))
               (1 to chaseSteps).foldLeft(propSized) { (acc, _) =>
@@ -298,14 +390,13 @@ object ConnectedComponents {
           .select(col("id"), col("lab").as("component")), "cc.labels", into = caller)
     } finally {
       // the returned result is its own snap, so the loop's levels are dead
-      // on BOTH paths: the edge checkpoint (usually the largest, O(|E|)
-      // rows), the last superseded label level and the final level with
-      // its backing propagation. `ids` is left to the ContextCleaner: when
-      // `nodes` was already a snap, it shares the caller's blocks. The
-      // loop session needs no teardown — its conf dies with it and its
-      // cached state is shared.
+      // on BOTH exits: the last superseded label level and the final level
+      // with its backing propagation (`run` frees the edge checkpoint).
+      // `ids` is left to the ContextCleaner: when `nodes` was already a
+      // snap, it shares the caller's blocks. The loop session needs no
+      // teardown — its conf dies with it and its cached state is shared.
       prevRound.foreach(free)
-      free(ep); free(labels); lastProp.foreach(free)
+      free(labels); lastProp.foreach(free)
     }
   }
 }

@@ -55,10 +55,13 @@ object shims {
       else r.dependencies.iterator.flatMap(d => persisted(d.rdd, depth + 1)).take(1)
         .toList.headOption
     val stats = persisted(rdd, 0).flatMap { p =>
-      session.sparkContext.getRDDStorageInfo.find(_.id == p.id).map { info =>
-        org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = BigInt((info.memSize + info.diskSize).max(1L)))
-      }
+      // an RDD without partitions stores no blocks, yet its size is known
+      val bytes =
+        if (p.partitions.isEmpty) Some(0L)
+        else session.sparkContext.getRDDStorageInfo.find(_.id == p.id)
+          .map(info => info.memSize + info.diskSize)
+      bytes.map(b =>
+        org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = BigInt(b.max(1L))))
     }
     org.apache.spark.sql.classic.Dataset.ofRows(session,
       org.apache.spark.sql.execution.LogicalRDD(
@@ -78,6 +81,15 @@ object shims {
   def cloneSession(
       session: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
     session.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, read
+    * through the typed SQLConf (`-1` = broadcasting disabled). Operators
+    * that choose between a driver-side and a distributed plan by measured
+    * size use the same ceiling the planner applies to broadcast joins.
+    */
+  def broadcastThreshold(session: org.apache.spark.sql.SparkSession): Long =
+    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
 
   /** Conf key: when `true`, [[snap]] materializes through RELIABLE
     * `checkpoint` (files under `spark.graft.snap.dir`, lineage-free
