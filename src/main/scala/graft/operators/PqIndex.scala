@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.Vectors
 
@@ -43,8 +50,12 @@ import graft.functions.Vectors
   * (id, bucket, 8 codes) — fixed-width and ~32× lighter than floats; the
   * query side (tables + probe buckets) broadcasts; the only exchanges are
   * the per-query top-k partials and the id-keyed rerank join, both
-  * shortlist-sized. Training cost is driver-local Lloyd over a bounded
-  * sample — independent of corpus size, like [[IvfIndex.fit]].
+  * shortlist-sized. That plan runs when the probed partitions of the
+  * persisted indexes exceed the broadcast threshold; a batch whose probed
+  * partitions fit under it is scored on the driver from one read of each
+  * index ([[searchIndexed]]), with no joins, windows or shuffles. Training
+  * cost is driver-local Lloyd over a bounded sample — independent of
+  * corpus size, like [[IvfIndex.fit]].
   */
 object PqIndex {
 
@@ -216,13 +227,27 @@ object PqIndex {
   /** IVFADC over a PERSISTED [[assign]]-layout code index — the shape a
     * 100 TB deployment actually runs (the q56/q62 story at the PQ tier):
     * `codesIndexed` is the code table written once partitioned by
-    * `bucket`, `floatIndexed` the float index in the same layout. The
+    * `bucket`, `floatIndexed` the float index in the same layout. Same
+    * contract as [[search]]: identical results for the same models/probe
+    * set (asserted in PqIndexSpec).
+    *
+    * The query side is collected once — id, embedding, ADC table and the
+    * probe array, unexploded, so a local batch costs no job (the plan path
+    * broadcasts this side anyway, so the driver already holds it). The
     * distinct probed buckets are pushed as a static `bucket IN (...)`
-    * predicate on BOTH scans, so candidate generation reads only the
-    * probed partitions of an 8-byte-per-vector table, and the exact
-    * rerank fetch prunes to the same directories. Same contract as
-    * [[search]]: identical results for the same models/probe set
-    * (asserted in PqIndexSpec).
+    * predicate on BOTH scans: candidate generation reads only the probed
+    * partitions of an 8-byte-per-vector table, and the exact rerank fetch
+    * prunes to the same directories. The pruned scans' estimated size then
+    * picks the path against the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the size rule that picks a
+    * broadcast join (and [[ConnectedComponents.run]]'s driver path):
+    *   - at or under it, each scan is collected in one job and every query
+    *   is answered on the driver ([[searchOnDriver]]) — row-identical to
+    *   the plan, returned as a local frame of the plan's schema; the plan
+    *   is never built;
+    *   - above it (or when the threshold is -1), the distributed plan:
+    *   the [[adcShortlistIndexed]] candidate join and top-k window, then
+    *   the id-keyed rerank join and the final window.
     */
   def searchIndexed(
       ivf: IvfIndex.Model,
@@ -235,20 +260,135 @@ object PqIndex {
       rerankFactor: Int = 8,
       embCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
-    val shortlist = adcShortlistIndexed(
-      ivf, pq, queries, codesIndexed, k, nProbe, rerankFactor, embCol, idCol)
-    val probed: Array[Int] = queries
-      .select(explode(ivf.probeBuckets(col(embCol), nProbe)).as("bucket"))
-      .distinct().collect().map(_.getInt(0))
-    val qf = broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv")))
-    TopK.perQuery(
-      shortlist
-        .join(floatIndexed.filter(col("bucket").isin(probed.toSeq: _*))
-          .select(col(idCol).as("neighbor_id"), col(embCol).as("cv")), "neighbor_id")
-        .join(qf, "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          Vectors.cosine(col("qv"), col("cv")).as("sim")),
-      k)
+    val q = queries.select(col(idCol), col(embCol), pq.adcTable(col(embCol)),
+      ivf.probeBuckets(col(embCol), nProbe))
+    val batch = q.collect()
+    // driver-bounded: ≤ queries × nProbe distinct buckets (and ≤ ivf k)
+    val probed = batch.toSeq.flatMap(probes).distinct
+    val codes = inProbed(codesIndexed, probed).select(col(idCol), col("bucket"), col("codes"))
+    val floats = inProbed(floatIndexed, probed).select(col(idCol), col(embCol))
+    val scanBytes = codes.queryExecution.optimizedPlan.stats.sizeInBytes +
+      floats.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = shims.broadcastThreshold(queries.sparkSession)
+    if (threshold >= 0 && scanBytes <= threshold) {
+      // the plan's output schema, derived without analyzing the plan (its
+      // table and probe expressions cost more to analyze than to run here)
+      val schema = StructType(Seq(
+        q.schema(0).copy(name = "query_id"),
+        codes.schema(0).copy(name = "neighbor_id"),
+        StructField("rank", IntegerType, nullable = false),
+        StructField("sim", DoubleType, nullable = q.schema(1).nullable || floats.schema(1).nullable)))
+      searchOnDriver(batch, codes, floats, k, k * rerankFactor, schema)
+    } else {
+      val qf = broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv")))
+      TopK.perQuery(
+        adcShortlistIndexed(ivf, pq, queries, codesIndexed, Some(probed),
+          k, nProbe, rerankFactor, embCol, idCol)
+          .join(floats.select(col(idCol).as("neighbor_id"), col(embCol).as("cv")), "neighbor_id")
+          .join(qf, "query_id")
+          .select(col("query_id"), col("neighbor_id"),
+            Vectors.cosine(col("qv"), col("cv")).as("sim")),
+        k)
+    }
+  }
+
+  /** The probe buckets of a collected [[searchIndexed]] query row. */
+  private def probes(query: Row): Seq[Int] = Option(query.getSeq[Int](3)).getOrElse(Nil)
+
+  private def inProbed(index: DataFrame, probed: Seq[Int]): DataFrame =
+    index.filter(col("bucket").isin(probed: _*))
+
+  /** [[searchIndexed]]'s small path, in plain Scala over `batch` (the
+    * collected (id, embedding, ADC table, probe array) query rows) and the
+    * collected pruned scans `codes` (id, bucket, codes) and `floats`
+    * (id, embedding). It replays the plan step for step, so the rows are
+    * identical:
+    *   1. a query's candidates are the code rows in its own probe buckets,
+    *      minus its own id and null ids; a neighbor met twice (several
+    *      probed buckets, several query rows of one id) is scored once;
+    *   2. [[Model.adcScore]]'s fold: seeded 0.0, subspaces left to right;
+    *   3. the top `shortlist` by [[TopK.perQuery]]'s order — sim
+    *      descending, nulls last, NaN and ±0.0 as Spark orders them, then
+    *      neighbor id ascending in the id type's SQL order;
+    *   4. the exact cosine, in [[graft.functions.CosineSimilarity]]'s
+    *      accumulation order, against every float row of the id in the
+    *      batch's probe set and every query row of the query's id (the
+    *      rerank join's fan-out);
+    *   5. the top `k` ranked 1..k.
+    * A null query id, embedding, code or table entry gives what its
+    * Spark expression gives: no candidates, or a null sim.
+    */
+  private def searchOnDriver(
+      batch: Array[Row],
+      codes: DataFrame,
+      floats: DataFrame,
+      k: Int,
+      shortlist: Int,
+      schema: StructType): DataFrame = {
+    def seq(r: Row, i: Int): IndexedSeq[Any] =
+      if (r.isNullAt(i)) null else r.getSeq[Any](i).toIndexedSeq
+    val byBucket = codes.collect().groupBy(_.getInt(1))
+    val vectors = floats.collect().toSeq.groupBy(_.get(0))
+      .map { case (id, rs) => id -> rs.map(seq(_, 1)) }
+    val idOrder = {
+      val dt = codes.schema.head.dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+      Ordering.by(toCatalyst)(TypeUtils.getInterpretedOrdering(dt))
+    }
+    val rankOrder: Ordering[(Any, Option[Double])] = (x, y) => {
+      val bySim = (x._2, y._2) match {
+        case (Some(a), Some(b)) => SQLOrderingUtil.compareDoubles(b, a)
+        case (Some(_), None) => -1
+        case (None, Some(_)) => 1
+        case (None, None) => 0
+      }
+      if (bySim != 0) bySim else idOrder.compare(x._1, y._1)
+    }
+    def num(v: Any): Option[Double] = v match {
+      case x: Number => Some(x.doubleValue)
+      case _ => None
+    }
+    def adc(tbl: IndexedSeq[Any], code: IndexedSeq[Any]): Option[Double] =
+      tbl.indices.foldLeft(Option(0.0)) { (acc, j) =>
+        for {
+          a <- acc
+          c <- if (code != null && j < code.length) num(code(j)) else None
+          row = tbl(j).asInstanceOf[scala.collection.Seq[Any]]
+          t <- if (c >= 0 && c < row.length) num(row(c.toInt)) else None
+        } yield a + t
+      }
+    def cosine(a: IndexedSeq[Any], b: IndexedSeq[Any]): Option[Double] =
+      if (a == null || b == null) None
+      else {
+        var dot, na, nb = 0.0
+        a.indices.take(b.length).foreach { i =>
+          val x = num(a(i)).getOrElse(0.0)
+          val y = num(b(i)).getOrElse(0.0)
+          dot += x * y; na += x * x; nb += y * y
+        }
+        Some(dot / (math.sqrt(na) * math.sqrt(nb)))
+      }
+    val byQuery = batch.toSeq.filterNot(_.isNullAt(0)).groupBy(_.get(0)).toSeq
+    val rows = byQuery.flatMap { case (qid, qs) =>
+      val scored = mutable.LinkedHashMap.empty[Any, Option[Double]]
+      for {
+        q <- qs
+        tbl = seq(q, 2)
+        b <- probes(q)
+        c <- byBucket.getOrElse(b, Array.empty[Row])
+        nid = c.get(0)
+        if nid != null && nid != qid && !scored.contains(nid)
+      } scored(nid) = adc(tbl, seq(c, 2))
+      val reranked = for {
+        (nid, _) <- scored.toSeq.sorted(rankOrder).take(shortlist)
+        q <- qs
+        v <- vectors.getOrElse(nid, Nil)
+      } yield nid -> cosine(seq(q, 1), v)
+      reranked.sorted(rankOrder).take(k).zipWithIndex.map { case ((nid, sim), i) =>
+        Row(qid, nid, i + 1, sim.orNull)
+      }
+    }
+    codes.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** The ADC-scored per-query SHORTLIST of [[searchIndexed]] (probed-cell
@@ -267,16 +407,31 @@ object PqIndex {
       nProbe: Int = 4,
       rerankFactor: Int = 8,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      idCol: String = "vec_id"): DataFrame =
+    adcShortlistIndexed(ivf, pq, queries, codesIndexed, None, k, nProbe, rerankFactor, embCol, idCol)
+
+  /** [[adcShortlistIndexed]], given the batch's distinct probe buckets when
+    * the caller has them already; `None` collects them here.
+    */
+  private def adcShortlistIndexed(
+      ivf: IvfIndex.Model,
+      pq: Model,
+      queries: DataFrame,
+      codesIndexed: DataFrame,
+      probed: Option[Seq[Int]],
+      k: Int,
+      nProbe: Int,
+      rerankFactor: Int,
+      embCol: String,
+      idCol: String): DataFrame = {
     val qExploded = queries.select(
       col(idCol).as("query_id"),
       pq.adcTable(col(embCol)).as("tbl"),
       explode(ivf.probeBuckets(col(embCol), nProbe)).as("bucket"))
     // driver-bounded: ≤ queries × nProbe distinct buckets (and ≤ ivf k)
-    val probed: Array[Int] = qExploded
-      .select(col("bucket")).distinct().collect().map(_.getInt(0))
-    val c = codesIndexed
-      .filter(col("bucket").isin(probed.toSeq: _*))
+    val buckets = probed.getOrElse(qExploded
+      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq)
+    val c = inProbed(codesIndexed, buckets)
       .select(col(idCol).as("neighbor_id"), col("bucket"), col("codes"))
     TopK.perQuery(
       c.join(broadcast(qExploded), Seq("bucket"))

@@ -1,9 +1,6 @@
 package org.apache.spark.sql.graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -11,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 /** [[shims.snap]], the engine's one materialization primitive: evidence
   * under its tag, no second checkpoint over storage-backed rows, and no
   * materialization anywhere in `src/main` that bypasses it. (Lives in the
-  * shim's package for the listener bus's `waitUntilEmpty`.)
+  * shim's package beside [[SparkActivity]].)
   */
 class SnapSpec extends _root_.graft.SparkSpec {
   import _root_.graft.PlanEvidence
@@ -27,18 +24,8 @@ class SnapSpec extends _root_.graft.SparkSpec {
 
   /** Spark jobs started while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val bus = spark.sparkContext.listenerBus
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    bus.waitUntilEmpty()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      bus.waitUntilEmpty()
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, ran) = SparkActivity.during(spark)(body)
+    (out, ran.jobs)
   }
 
   test("snap records the input plan under its tag when evidence is enabled") {
