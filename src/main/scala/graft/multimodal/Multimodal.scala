@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns + typed
@@ -26,17 +26,37 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  // ImageIO's stream factories (the paths inside `ImageIO.read(InputStream)`
-  // and `ImageIO.write(_, _, OutputStream)`) default to a DISK-backed cache:
-  // one temp-file create/write/delete per image, and the shared tmpdir
-  // serializes the 32 decode threads behind filesystem locks (measured: the
-  // synth+dhash kernel pair runs 3.6x faster at 32 threads with the cache
-  // off, and a 2k-image Spark stage drops from ~14 s to ~1 s of task time).
-  // Memory-cached streams produce byte-identical encodes/decodes — only the
-  // staging buffer moves off disk. decodeImage already constructed its
-  // MemoryCacheImageInputStream explicitly; this covers the remaining
-  // read/write call sites process-wide.
-  javax.imageio.ImageIO.setUseCache(false)
+  // Every ImageIO read/write goes through these two helpers on explicit
+  // memory-cached streams. ImageIO's own stream factories (inside
+  // `ImageIO.read(InputStream)` / `ImageIO.write(_, _, OutputStream)`)
+  // default to a DISK-backed cache: one temp-file create/write/delete per
+  // image, and the shared tmpdir serializes the decode threads behind
+  // filesystem locks (measured: the synth+dhash kernel pair ran 3.6x
+  // faster at 32 threads on memory caches). Encodes and decodes are
+  // byte-identical either way — only the staging buffer moves off disk —
+  // and the process-wide `ImageIO.setUseCache` stays untouched.
+
+  /** Decode an image payload (null when no reader claims it).
+    * `ImageIO.read(ImageInputStream)` closes the stream after a decode
+    * (a second close throws) but leaves it open on the null path.
+    */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val img = javax.imageio.ImageIO.read(in)
+    if (img == null) in.close()
+    img
+  }
+
+  /** PNG-encode an image. The stream is closed (which flushes its cache)
+    * before the bytes are taken.
+    */
+  private def writePng(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", out) finally out.close()
+    bos.toByteArray
+  }
 
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
 
@@ -304,7 +324,7 @@ object Multimodal {
     require(w > 0 && h > 0, "target dimensions must be positive")
     if (!looksLikeImage(bytes)) return None
     try {
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      val src = readImage(bytes)
       if (src == null) None
       else {
         val dst = new java.awt.image.BufferedImage(
@@ -316,9 +336,7 @@ object Multimodal {
             java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
           g.drawImage(src, 0, 0, w, h, null)
         } finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", bos)
-        Some(bos.toByteArray)
+        Some(writePng(dst))
       }
     } catch { case _: Exception => None }
   }
@@ -332,7 +350,7 @@ object Multimodal {
     require(bins > 0, "bins must be positive")
     if (!looksLikeImage(bytes)) return None
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      val img = readImage(bytes)
       if (img == null) None
       else {
         val hist = new Array[Long](bins)
@@ -370,7 +388,7 @@ object Multimodal {
   def dHash64(bytes: Array[Byte]): Option[Long] = {
     if (!looksLikeImage(bytes)) return None
     try {
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      val src = readImage(bytes)
       if (src == null) None
       else {
         val dst = new java.awt.image.BufferedImage(
@@ -426,9 +444,7 @@ object Multimodal {
       }
       by += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    writePng(img)
   }
 
   /** documents → synthesized IMAGE payloads with a known duplicate
@@ -454,36 +470,6 @@ object Multimodal {
         (id, payload)
       })
       .toDF("doc_id", "payload")
-  }
-
-  /** Perceptual near-dup image pairs: per-payload [[dHash64]]
-    * (partition-local — the payload bytes never shuffle), then the q34
-    * simhash blocking shape: 4×16-bit bands equi-joined, hamming-verified
-    * <= `maxHamming`. Shuffle payload per image is 8 bytes of hash + the
-    * id — the 100 TB-safe property — and candidates only ever come from a
-    * band-key equi-join, never a cross join.
-    */
-  def dhashPairs(media: DataFrame, maxHamming: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val hashes = media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap(r => dHash64(r.payload).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "dh")
-    bandedHammingPairs(hashes, maxHamming)
-  }
-
-  /** (doc_id, dh) dHash rows — the kernel [[dhashPairs]] hashes with,
-    * factored so the PERSISTED index ([[persistDhashIndex]]) and the
-    * incremental probe ([[incrementalDhashPairs]]) share it byte-for-byte
-    * (the minhashBands discipline: both forms MUST band identically or
-    * the incremental candidates diverge from the full run).
-    */
-  def dhashRows(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap(r => dHash64(r.payload).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "dh")
   }
 
   /** The fingerprint band store's schema, pinned in read-back column
@@ -514,14 +500,15 @@ object Multimodal {
   /** Schema-pinned read of a fingerprint index's band store (see
     * [[BandStoreSchema]] for why inference is never used).
     */
-  private[graft] def readBandStore(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+  private[graft] def readBandStore(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(BandStoreSchema).parquet(s"$path/dhbands")
 
   /** Schema-pinned read of a video index's frame-count denominators. */
-  private[graft] def readVcounts(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+  private[graft] def readVcounts(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(VcountsSchema).parquet(s"$path/vcounts")
+
+  /** The video a packed frame id belongs to (`fid / FidWidth`). */
+  private[graft] def videoId(fid: Column): Column = (fid / FidWidth).cast("long")
 
   /** The (doc_id, dh, band, bhash) table of the shared 4×16-bit banding —
     * the join key AND the persisted-index layout (partitioned by band).
@@ -535,363 +522,383 @@ object Multimodal {
       }: _*)).as("b"))
       .select(col("doc_id"), col("dh"), col("b.band").as("band"), col("b.bhash").as("bhash"))
 
-  /** The shared 64-bit-fingerprint blocking shape (q34/q70/q87): 4×16-bit
-    * bands equi-joined, hamming-verified <= `maxHamming`. Input: (doc_id,
-    * dh: long). Candidates only ever come from a band-key equi-join —
-    * never a cross join — and the shuffle payload per row is the 8-byte
-    * hash + id.
+  /** The one band equi-join + hamming verify behind every 64-bit
+    * fingerprint tier (text simhash q34, image/audio/video and their
+    * persisted forms): band rows of `x` and `y` meet on (band, bhash) —
+    * candidates only ever come from the equi-join, never a cross join,
+    * and the shuffle payload per row is the 8-byte hash + id — `ids`
+    * optionally constrains the pair's doc ids (`<` for a self-join's
+    * unordered pairs, `=!=` for batch vs store), and the distinct
+    * (a, b, hamming) rows keep at hamming <= `maxHamming`.
     */
-  private def bandedHammingPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    val bands = fingerprintBands(hashes)
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(
-        col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** PERSIST a 64-bit-fingerprint band index — the q66 band-index
-    * contract at the media tier: the corpus hashes once, the (doc_id, dh,
-    * band, bhash) table lands partitioned by `band`, and every later
-    * batch probes it without rescanning a stored payload. 32 bytes per
-    * item per band on disk; payload bytes never leave their partition.
-    */
-  private def persistFingerprintIndex(hashes: DataFrame, path: String): Unit =
-    graft.ops.Bucketing.writePartitioned(
-      fingerprintBands(hashes), s"$path/dhbands", Seq("band"))
-
-  /** APPEND a batch to a persisted fingerprint index — new files in the
-    * touched `band=` directories only, nothing rewrites (the
-    * appendToBandIndex / IvfIndex.appendToIndex contract).
-    */
-  private def appendToFingerprintIndex(hashes: DataFrame, path: String): Unit =
-    fingerprintBands(hashes).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$path/dhbands")
-
-  /** RETRACT a batch from a persisted fingerprint index — the media
-    * tier's entry in the un-absorb family (dedup q149, window q150,
-    * histogram q152, vector stores IvfIndex/PqIndex), closing the one
-    * store family that had persist/append only: without it a media
-    * takedown leaves fingerprints behind forever. Only doc ids are
-    * needed (the index is keyed by doc_id) — deliberately so, because a
-    * takedown usually arrives AFTER the payload is gone; nothing is
-    * re-decoded. Every doc fans out to ALL 4 bands, so unlike the
-    * IVF per-bucket retract there is no partition pruning to win — the
-    * honest shape is the [[graft.queries.DedupStore.retractBatch]] one: a
-    * store-sized left-anti rewrite, write-aside → rename swap
-    * ([[graft.ops.StoreSwap]] — probes never see a half-retracted
-    * index), schema re-selected to the writer's own column order. LIFO
-    * contract as everywhere in the family; at 100 TB the rewrite rides
-    * the scheduled compaction (retraction is compaction with a filter).
-    * A TOTAL takedown (zero survivors) publishes a directory holding
-    * only `_SUCCESS` — an empty partitioned write emits no part files —
-    * which stays probe-readable because every store read pins
-    * [[BandStoreSchema]] instead of inferring (probes of a fully-
-    * retracted index return empty results, they don't throw).
-    */
-  private def retractFromFingerprintIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      batchIds: DataFrame,
-      path: String): Unit = {
-    val ids = broadcast(batchIds.select(col("doc_id")))
-    val store = readBandStore(spark, path)
-    store.join(ids, Seq("doc_id"), "left_anti")
-      .select(store.columns.map(col).toSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$path/dhbands.next")
-    graft.ops.StoreSwap.swapInto(spark, s"$path/dhbands")
-  }
-
-  /** COMPACT a persisted fingerprint index CONTENT-IDENTICALLY — the
-    * media instance of the [[graft.queries.DedupStore.compactBandIndex]]
-    * contract: daily [[appendToFingerprintIndex]] calls add one small
-    * file set per batch to each `band=` directory, so after N days a
-    * probe opens N files per band. The rewrite lands few large
-    * (band, bhash, doc_id)-sorted runs — sorted so parquet rowgroup
-    * min/max on `bhash` turn a band probe into a rowgroup skip — sized
-    * from the source's plan-time estimate (no job). Writes to `dstPath`,
-    * source untouched (write-new → repoint → retire; probes never see a
-    * half-written index); the `band=` partitioning probes prune on is
-    * preserved exactly.
-    */
-  private def compactFingerprintIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      srcPath: String,
-      dstPath: String,
-      targetFileBytes: Long): Unit = {
-    val bands = readBandStore(spark, srcPath)
-    // clamp BEFORE toInt (the IvfIndex.compactIndex guard): a missing-
-    // stats Long.MaxValue estimate must degrade to many partitions, not
-    // wrap negative and collapse the rewrite into one task
-    val nOut = math.max(1,
-      (bands.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
-    bands
-      .repartition(nOut, col("band"), col("bhash"))
-      .sortWithinPartitions("band", "bhash", "doc_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$dstPath/dhbands")
-  }
-
-  /** WHOLE-CORPUS fingerprint near-dup pairs off a persisted band index —
-    * [[bandedHammingPairs]] with the band table read from the store
-    * instead of recomputed: the store IS `fingerprintBands(hashes)`
-    * written partitioned by band, so the self-join + hamming verify +
-    * distinct produce row-identical pairs with zero payload decode.
-    * This is what lets a full-rebuild consumer (q191's edge union) probe
-    * the same artifacts its incremental siblings maintain, instead of
-    * re-decoding the corpus per call.
-    */
-  private[graft] def storedHammingPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      maxHamming: Int): DataFrame = {
-    val bands = readBandStore(spark, path)
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(
-        col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** WHOLE-CORPUS video near-dup pairs off a persisted frame index —
-    * [[videoPairs]]' frame-match rollup with the frame-hash bands AND the
-    * per-video frame-count denominators both read from the store (the
-    * extraction/decode kernel never runs). Row-identical to [[videoPairs]]
-    * over the same corpus: the stored bands are `fingerprintBands` of the
-    * same packed-fid hash rows, and `vcounts` is the same grouping the
-    * in-memory form aggregates.
-    */
-  private[graft] def storedVideoPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
+  private def bandJoin(
+      x: DataFrame,
+      y: DataFrame,
       maxHamming: Int,
-      minOverlap: Double): DataFrame = {
-    val counts = readVcounts(spark, path)
-    val framePairs = storedHammingPairs(spark, path, maxHamming)
+      ids: Option[(Column, Column) => Column]): DataFrame = {
+    val onBand = col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash")
+    x.as("x")
+      .join(y.as("y"), ids.fold(onBand)(p => onBand && p(col("x.doc_id"), col("y.doc_id"))))
       .select(
-        (col("a") / FidWidth).cast("long").as("va"), col("a").as("fa"),
-        (col("b") / FidWidth).cast("long").as("vb"), col("b").as("fb"))
-      .filter(col("va") < col("vb"))
+        col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** Banded near-dup pairs (a < b, hamming) over (doc_id, dh) rows: the
+    * q34 blocking shape, for fingerprints computed outside the media tier
+    * ([[graft.queries.Dedup.simhashPairsOver]]).
+    */
+  private[graft] def bandedHammingPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
+    val bands = fingerprintBands(hashes)
+    bandJoin(bands, bands, maxHamming, Some(_ < _))
+  }
+
+  /** Per-video frame counts (vid, nf) of packed-fid hash rows — the
+    * overlap verify's denominators, persisted as a video index's
+    * `vcounts`.
+    */
+  private def frameCounts(frameHashes: DataFrame): DataFrame =
+    frameHashes.groupBy(videoId(col("doc_id")).as("vid")).agg(count(lit(1)).as("nf"))
+
+  /** The frame-grain verify: verified frame pairs (a, b, hamming) roll up
+    * per video pair — `matched_frames` = min over both sides of the
+    * distinct matched-frame count (robust to one frame matching several),
+    * `overlap` = matched / min(frame counts), with the a side's
+    * denominators from `countsA` and the b side's from `countsB` — and
+    * keep at overlap >= `minOverlap`. The min side is what makes the tier
+    * trim-robust (a clipped cut still overlaps 1.0), and precision-safe
+    * for a transitive fold: an incidental single-frame match cannot clear
+    * 0.5 on real multi-frame videos.
+    */
+  private def overlapRollup(
+      framePairs: DataFrame,
+      countsA: DataFrame,
+      countsB: DataFrame,
+      minOverlap: Double): DataFrame =
     framePairs
-      .groupBy(col("va"), col("vb"))
-      .agg(least(countDistinct(col("fa")), countDistinct(col("fb"))).as("matched_frames"))
-      .join(counts.withColumnRenamed("vid", "va").withColumnRenamed("nf", "nf_a"), "va")
-      .join(counts.withColumnRenamed("vid", "vb").withColumnRenamed("nf", "nf_b"), "vb")
+      .groupBy(videoId(col("a")).as("va"), videoId(col("b")).as("vb"))
+      .agg(least(countDistinct(col("a")), countDistinct(col("b"))).as("matched_frames"))
+      .join(countsA.withColumnRenamed("vid", "va").withColumnRenamed("nf", "nf_a"), "va")
+      .join(countsB.withColumnRenamed("vid", "vb").withColumnRenamed("nf", "nf_b"), "vb")
       .select(
         col("va").as("a"), col("vb").as("b"), col("matched_frames"),
         (col("matched_frames").cast("double") / least(col("nf_a"), col("nf_b")))
           .as("overlap"))
       .filter(col("overlap") >= minOverlap)
+
+  /** Output files for a compaction rewrite, from the source's plan-time
+    * size estimate (no job). Clamped BEFORE toInt (the
+    * IvfIndex.compactIndex guard): a missing-stats Long.MaxValue estimate
+    * must degrade to many partitions, not wrap negative into one task.
+    */
+  private def filesFor(df: DataFrame, targetFileBytes: Long): Int =
+    math.max(1,
+      (df.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
+        .min(BigInt(1 << 20)).toInt)
+
+  /** One persisted artifact of a media index, for the store audits: its
+    * audit name, its rows, the doc id each row derives from, and the
+    * columns that make up a whole row.
+    */
+  private[graft] final case class IndexArtifact(
+      name: String, rows: DataFrame, docKey: Column, content: Seq[String])
+
+  /** A 64-bit-fingerprint media modality and its whole index lifecycle.
+    * Every modality hashes partition-local to (doc_id, dh) rows — payload
+    * bytes never shuffle, only 8-byte fingerprints + ids — bands them
+    * 4×16-bit, and finds pairs through the one band equi-join + hamming
+    * verify. They differ only in the payload generator, the per-payload
+    * hash kernel, the warm-store artifact name (`artifact`; `name`
+    * prefixes the audit names of its stores), and whether they are
+    * FRAME-GRAINED: a video hashes per frame, keyed by the packed fid
+    * `doc_id * FidWidth + frame_idx`, persists per-video frame counts
+    * (`vcounts`) beside its bands, and verifies with the min-side
+    * [[overlapRollup]]. Pairs of a frame-grained modality are keyed by
+    * the VIDEO id, and its outputs carry (matched_frames, overlap) where
+    * the others carry hamming; `minOverlap` applies to them only.
+    *
+    * The persisted index is the q66 band-index contract at the media
+    * tier: the corpus hashes once, the (doc_id, dh, band, bhash) table
+    * lands under `<path>/dhbands` partitioned by `band`, and every later
+    * batch probes it without re-decoding a stored payload. All forms
+    * band the same [[hashRows]] byte-for-byte (the minhashBands
+    * discipline), so incremental ≡ full restricted and stored ≡
+    * in-memory.
+    */
+  sealed abstract class Modality(
+      val name: String,
+      val artifact: String,
+      val frameGrained: Boolean) extends Serializable {
+
+    /** documents → this modality's synthesized (doc_id, payload) rows. */
+    def payloads(docs: DataFrame): DataFrame
+
+    /** One payload's (doc_id, dh) rows: none when the payload does not
+      * decode, one per frame (keyed by packed fid) at frame grain.
+      */
+    protected def fingerprints(id: Long, payload: Array[Byte]): Iterator[(Long, Long)]
+
+    /** (doc_id, dh) hash rows — the kernel every form of this modality
+      * hashes with, partition-local.
+      */
+    def hashRows(media: DataFrame): DataFrame = {
+      val spark = media.sparkSession
+      import spark.implicits._
+      media.select(col("doc_id"), col("payload")).as[MediaRow]
+        .mapPartitions(_.flatMap(r => fingerprints(r.doc_id, r.payload)))
+        .toDF("doc_id", "dh")
+    }
+
+    /** The subdirectories a committed index carries (warm-store witnesses:
+      * a video index missing its denominators must rebuild, not serve).
+      */
+    def committed: Seq[String] = if (frameGrained) Seq("dhbands", "vcounts") else Seq("dhbands")
+
+    /** The id a pair is keyed by: the doc, or the video at frame grain. */
+    private def item(id: Column): Column = if (frameGrained) videoId(id) else id
+
+    /** Hash rows of `media`. At frame grain the decode — by far the
+      * dominant cost — is snapped once as `video.<tag>`, because the band
+      * table and the frame counts each consume it; the snap installs the
+      * measured size so the joins above are planned honestly.
+      */
+    private def rowsOf(media: DataFrame, tag: String): DataFrame =
+      if (frameGrained) org.apache.spark.sql.graft.shims.snap(hashRows(media), s"video.$tag")
+      else hashRows(media)
+
+    /** Verified pairs within one band table, a < b by item. `counts` are
+      * the frame denominators (read only at frame grain).
+      */
+    private def selfPairs(
+        bands: DataFrame,
+        counts: => DataFrame,
+        maxHamming: Int,
+        minOverlap: Double): DataFrame = {
+      val pairs = bandJoin(bands, bands, maxHamming, Some((x, y) => item(x) < item(y)))
+      if (!frameGrained) pairs
+      else {
+        val c = counts
+        overlapRollup(pairs, c, c, minOverlap)
+      }
+    }
+
+    /** Whole-corpus near-dup pairs over payloads (q70/q87/q89): output
+      * (a, b, hamming), or (a, b, matched_frames, overlap) at frame grain.
+      */
+    def pairs(media: DataFrame, maxHamming: Int, minOverlap: Double = 0.5): DataFrame = {
+      val rows = rowsOf(media, "frameHashes")
+      selfPairs(fingerprintBands(rows), frameCounts(rows), maxHamming, minOverlap)
+    }
+
+    /** [[pairs]] off a persisted index: the store IS the band table (and
+      * the denominators) the in-memory form computes, so the pairs are
+      * row-identical with zero payload decode — what lets a full-rebuild
+      * consumer (q191's edge union) probe the artifacts its incremental
+      * siblings maintain instead of re-decoding the corpus per call.
+      */
+    private[graft] def storedPairs(
+        spark: SparkSession,
+        path: String,
+        maxHamming: Int,
+        minOverlap: Double = 0.5): DataFrame =
+      selfPairs(readBandStore(spark, path), readVcounts(spark, path), maxHamming, minOverlap)
+
+    /** PERSIST the index at `path` (q185–q187's store): bands partitioned
+      * by `band`, plus `vcounts` at frame grain.
+      */
+    def persist(media: DataFrame, path: String): Unit = {
+      val rows = rowsOf(media, "index")
+      graft.ops.Bucketing.writePartitioned(fingerprintBands(rows), s"$path/dhbands", Seq("band"))
+      if (frameGrained)
+        frameCounts(rows).write.mode(SaveMode.Overwrite)
+          .option("compression", "zstd").parquet(s"$path/vcounts")
+    }
+
+    /** APPEND a batch: new files in the touched `band=` directories (and
+      * the batch's vcounts rows) only, nothing rewrites (the
+      * appendToBandIndex / IvfIndex.appendToIndex contract). At frame
+      * grain the vcounts write lands SECOND, so a video's count row
+      * implies its bands committed.
+      */
+    def appendTo(media: DataFrame, path: String): Unit = {
+      val rows = rowsOf(media, "append")
+      fingerprintBands(rows).write.mode(SaveMode.Append)
+        .option("compression", "zstd").partitionBy("band").parquet(s"$path/dhbands")
+      if (frameGrained)
+        frameCounts(rows).write.mode(SaveMode.Append)
+          .option("compression", "zstd").parquet(s"$path/vcounts")
+    }
+
+    /** RETRACT a batch by doc id — the media tier's entry in the un-absorb
+      * family (dedup q149, window q150, histogram q152, vector stores).
+      * Only ids are needed, deliberately: a takedown usually arrives AFTER
+      * the payload is gone, and nothing is re-decoded (frame rows are
+      * named by `fid / FidWidth ∈ batch`). Every doc fans out to ALL 4
+      * bands, so there is no partition pruning to win — the honest shape
+      * is [[graft.queries.DedupStore.retractBatch]]'s store-sized
+      * left-anti rewrite, write-aside → rename swap ([[graft.ops.StoreSwap]]
+      * — probes never see a half-retracted index). At frame grain both
+      * artifacts rewrite aside, then swap bands before vcounts: a probe
+      * between the swaps sees at worst stale denominators for videos it
+      * can no longer match. LIFO as everywhere in the family; at 100 TB
+      * the rewrite rides the scheduled compaction. A TOTAL takedown
+      * publishes a directory holding only `_SUCCESS`, which stays
+      * probe-readable through the pinned schemas.
+      */
+    def retractFrom(spark: SparkSession, batchIds: DataFrame, path: String): Unit = {
+      val ids = broadcast(batchIds.select(col("doc_id").as("gone")))
+      readBandStore(spark, path).join(ids, item(col("doc_id")) === col("gone"), "left_anti")
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd").partitionBy("band").parquet(s"$path/dhbands.next")
+      if (frameGrained)
+        readVcounts(spark, path).join(ids, col("vid") === col("gone"), "left_anti")
+          .write.mode(SaveMode.Overwrite)
+          .option("compression", "zstd").parquet(s"$path/vcounts.next")
+      graft.ops.StoreSwap.swapInto(spark, s"$path/dhbands")
+      if (frameGrained) graft.ops.StoreSwap.swapInto(spark, s"$path/vcounts")
+    }
+
+    /** COMPACT the index CONTENT-IDENTICALLY into `dstPath` (the
+      * [[graft.queries.DedupStore.compactBandIndex]] contract): daily
+      * appends add one small file set per batch to each `band=` directory,
+      * and the rewrite lands few large (band, bhash, doc_id)-sorted runs —
+      * sorted so rowgroup min/max on `bhash` turn a band probe into a
+      * rowgroup skip — with the `band=` partitioning preserved; vcounts
+      * land as a vid-sorted run. Source untouched (write-new → repoint →
+      * retire).
+      */
+    def compact(
+        spark: SparkSession,
+        srcPath: String,
+        dstPath: String,
+        targetFileBytes: Long = 128L << 20): Unit = {
+      val bands = readBandStore(spark, srcPath)
+      bands
+        .repartition(filesFor(bands, targetFileBytes), col("band"), col("bhash"))
+        .sortWithinPartitions("band", "bhash", "doc_id")
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd").partitionBy("band").parquet(s"$dstPath/dhbands")
+      if (frameGrained) {
+        val counts = readVcounts(spark, srcPath)
+        counts
+          .repartition(filesFor(counts, targetFileBytes), col("vid"))
+          .sortWithinPartitions("vid")
+          .write.mode(SaveMode.Overwrite)
+          .option("compression", "zstd").parquet(s"$dstPath/vcounts")
+      }
+    }
+
+    /** INCREMENTAL near-dup — q66's contract for a media fingerprint: the
+      * new batch hashes once (snapped, so the vs-store arm and the
+      * within-batch arm never each re-run the decode kernel — the dominant
+      * per-call cost), its bands equi-join the PERSISTED index (no stored
+      * payload read; denominators from the persisted vcounts) and the
+      * batch self-checks within itself. Output (new_id, existing_id,
+      * hamming), or (new_id, existing_id, matched_frames, overlap) at
+      * frame grain; within-batch pairs keep new_id < existing_id.
+      */
+    def incrementalPairs(
+        spark: SparkSession,
+        newMedia: DataFrame,
+        path: String,
+        maxHamming: Int,
+        minOverlap: Double = 0.5): DataFrame =
+      incrementalPairsOver(
+        org.apache.spark.sql.graft.shims.snap(hashRows(newMedia),
+          if (frameGrained) "video.probe" else "fingerprint.batch"),
+        readBandStore(spark, path), readVcounts(spark, path), maxHamming, minOverlap)
+
+    /** [[incrementalPairs]] over ALREADY-LOADED batch hash rows + store
+      * artifacts — factored so the q185–q187 registrations can dump them
+      * pid-scoped and probe the READBACK (the q183 dump-readback oracle
+      * move: DuckDB replays the band equi-join, the `bit_count(xor(...))`
+      * hamming verify and, at frame grain, the overlap fold over the same
+      * rows).
+      */
+    private[graft] def incrementalPairsOver(
+        newHashes: DataFrame,
+        store: DataFrame,
+        storeCounts: => DataFrame,
+        maxHamming: Int,
+        minOverlap: Double = 0.5): DataFrame = {
+      val nb = fingerprintBands(newHashes)
+      val vsStore = bandJoin(nb, store, maxHamming, Some((x, y) => item(x) =!= item(y)))
+      val within = bandJoin(nb, nb, maxHamming, Some((x, y) => item(x) < item(y)))
+      val pairs =
+        if (!frameGrained) vsStore.unionByName(within)
+        else {
+          val newCounts = frameCounts(newHashes)
+          overlapRollup(vsStore, newCounts, storeCounts, minOverlap)
+            .unionByName(overlapRollup(within, newCounts, newCounts, minOverlap))
+        }
+      pairs.withColumnRenamed("a", "new_id").withColumnRenamed("b", "existing_id")
+    }
+
+    /** Verified pairs (a, b), a < b, AMONG a bounded doc set, index-backed
+      * — the media arm of a bridge-split retract (the
+      * [[graft.queries.DedupStore.retractManifest]] survivor-pairs shape):
+      * the store's band rows (and denominators) restricted to the survivor
+      * set pair up off the STORED dh values, so no payload is re-decoded.
+      * The corpus-sized store streams against the `hinted`
+      * (broadcast-gated) survivor set.
+      */
+    private[graft] def survivorPairs(
+        spark: SparkSession,
+        path: String,
+        survivors: DataFrame,
+        maxHamming: Int,
+        minOverlap: Double,
+        hinted: DataFrame => DataFrame): DataFrame = {
+      val sv = hinted(survivors.select(col("doc_id").as("survivor")))
+      def among(rows: DataFrame, id: Column) =
+        rows.join(sv, id === col("survivor")).drop("survivor")
+      selfPairs(
+        among(readBandStore(spark, path), item(col("doc_id"))),
+        among(readVcounts(spark, path), col("vid")),
+        maxHamming, minOverlap)
+        .select(col("a"), col("b"))
+    }
+
+    /** The persisted artifacts of the index at `path`, as the store audits
+      * name them (Forget's residual families, q196's sync rows).
+      */
+    private[graft] def artifacts(spark: SparkSession, path: String): Seq[IndexArtifact] = {
+      val bands = IndexArtifact(
+        s"${name}_${if (frameGrained) "frames" else "bands"}", readBandStore(spark, path),
+        item(col("doc_id")), Seq("doc_id", "dh", "band", "bhash"))
+      if (!frameGrained) Seq(bands)
+      else Seq(bands,
+        IndexArtifact(s"${name}_counts", readVcounts(spark, path), col("vid"), Seq("vid", "nf")))
+    }
   }
 
-  /** INCREMENTAL fingerprint near-dup — q66's contract for any 64-bit
-    * media fingerprint: the new batch's bands equi-join the PERSISTED
-    * index (new vs existing; no stored payload ever read) and the batch
-    * self-checks within itself, both arms hamming-verified. Output
-    * (new_id, existing_id, hamming); within-batch pairs keep
-    * new_id < existing_id (the q66 convention). Shuffle payload: 8-byte
-    * hashes + ids, whatever the corpus size.
-    */
-  private def incrementalFingerprintPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      newHashes: DataFrame,
-      path: String,
-      maxHamming: Int): DataFrame = {
-    // snap the batch hash rows ONCE (the [[incrementalVideoPairs]]
-    // discipline): the vs-store band arm and the within-batch self-join
-    // otherwise each re-run the payload decode+hash kernel — the dominant
-    // per-call cost of a media probe at any scale
-    val fh = org.apache.spark.sql.graft.shims.snap(newHashes, "fingerprint.batch")
-    incrementalFingerprintPairsOver(fh, readBandStore(spark, path), maxHamming)
+  /** Images: one [[dHash64]] per payload (q70, q185). */
+  case object Image extends Modality("image", "dhidx", frameGrained = false) {
+    def payloads(docs: DataFrame): DataFrame = imagePayloads(docs)
+    protected def fingerprints(id: Long, payload: Array[Byte]): Iterator[(Long, Long)] =
+      dHash64(payload).iterator.map(h => (id, h))
   }
 
-  /** [[incrementalFingerprintPairs]] over an ALREADY-LOADED store band
-    * table — factored so the q185/q186 registrations can dump the store
-    * rows + batch hashes pid-scoped and probe the READBACK (the q183
-    * dump-readback oracle move: DuckDB replays the band equi-join and
-    * the `bit_count(xor(...))` hamming verify over the same rows).
-    */
-  private[graft] def incrementalFingerprintPairsOver(
-      newHashes: DataFrame,
-      store: DataFrame,
-      maxHamming: Int): DataFrame = {
-    val nb = fingerprintBands(newHashes)
-    val vsStore = nb.as("x")
-      .join(store.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(
-        col("x.doc_id").as("new_id"), col("y.doc_id").as("existing_id"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-    val within = bandedHammingPairs(newHashes, maxHamming)
-      .select(col("a").as("new_id"), col("b").as("existing_id"), col("hamming"))
-    vsStore.unionByName(within)
+  /** WAV audio: one [[audioFingerprint64]] per payload (q87, q186). */
+  case object Audio extends Modality("audio", "afidx", frameGrained = false) {
+    def payloads(docs: DataFrame): DataFrame = audioPayloads(docs)
+    protected def fingerprints(id: Long, payload: Array[Byte]): Iterator[(Long, Long)] =
+      audioFingerprint64(payload).iterator.map(h => (id, h))
   }
 
-  /** Verified fingerprint pairs AMONG a bounded doc set, index-backed —
-    * the media arm of a bridge-split retract (the
-    * [[graft.queries.DedupStore.retractManifest]] survivor-pairs shape): the
-    * store's band rows restricted to the survivor set equi-join on
-    * (band, bhash) and hamming-verify off the STORED dh values, so no
-    * payload is ever re-decoded. The corpus-sized store streams against
-    * the hinted (broadcast-gated) survivor set; output (a, b), a < b.
+  /** Video: [[videoFrames]] extracted, one [[dHash64]] per frame keyed by
+    * packed fid (q89, q187) — the shuffle carries 16 bytes per FRAME,
+    * never pixels.
     */
-  private[graft] def survivorFingerprintPairs(
-      store: DataFrame,
-      survivors: DataFrame,
-      maxHamming: Int,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val sb = store.join(hinted(survivors.select(col("doc_id"))), Seq("doc_id"))
-    sb.as("x")
-      .join(sb.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a"), col("b"))
+  case object Video extends Modality("video", "vfidx", frameGrained = true) {
+    def payloads(docs: DataFrame): DataFrame = videoPayloads(docs)
+    protected def fingerprints(id: Long, payload: Array[Byte]): Iterator[(Long, Long)] =
+      videoFrames(payload).getOrElse(Nil).iterator.zipWithIndex.flatMap {
+        case (frame, idx) => dHash64(frame).map(h => (id * FidWidth + idx, h))
+      }
   }
-
-  /** [[survivorFingerprintPairs]] at FRAME grain — the video arm of a
-    * bridge-split retract: the frame index's band rows restricted to the
-    * survivor VIDEO set (band keys are packed fids, so membership is
-    * `fid / FidWidth ∈ survivors`) self-join on (band, bhash),
-    * hamming-verify off the stored dh values, and roll up per video pair
-    * with [[videoPairs]]' min-side overlap — denominators from the
-    * persisted vcounts, never a payload re-decode. Output (a, b), a < b.
-    */
-  private[graft] def survivorVideoPairs(
-      store: DataFrame,
-      storeCounts: DataFrame,
-      survivors: DataFrame,
-      maxHamming: Int,
-      minOverlap: Double,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val sv = hinted(survivors.select(col("doc_id").as("vid")))
-    val sb = store
-      .withColumn("vid", (col("doc_id") / FidWidth).cast("long"))
-      .join(sv, Seq("vid"))
-    val counts = storeCounts.join(sv, Seq("vid"))
-    sb.as("x")
-      .join(sb.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.vid") < col("y.vid"))
-      .select(
-        col("x.vid").as("va"), col("x.doc_id").as("fa"),
-        col("y.vid").as("vb"), col("y.doc_id").as("fb"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .groupBy(col("va"), col("vb"))
-      .agg(least(countDistinct(col("fa")), countDistinct(col("fb")))
-        .as("matched_frames"))
-      .join(counts.withColumnRenamed("vid", "va")
-        .withColumnRenamed("nf", "nf_a"), "va")
-      .join(counts.withColumnRenamed("vid", "vb")
-        .withColumnRenamed("nf", "nf_b"), "vb")
-      .filter(
-        col("matched_frames").cast("double") / least(col("nf_a"), col("nf_b"))
-          >= minOverlap)
-      .select(col("va").as("a"), col("vb").as("b"))
-  }
-
-  /** The image instance of the fingerprint-index trio (q185). */
-  def persistDhashIndex(media: DataFrame, path: String): Unit =
-    persistFingerprintIndex(dhashRows(media), path)
-
-  def appendToDhashIndex(media: DataFrame, path: String): Unit =
-    appendToFingerprintIndex(dhashRows(media), path)
-
-  def incrementalDhashPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      newMedia: DataFrame,
-      path: String,
-      maxHamming: Int): DataFrame =
-    incrementalFingerprintPairs(spark, dhashRows(newMedia), path, maxHamming)
-
-  /** Un-absorb a batch from the image index by doc id (LIFO; no payload
-    * needed — see [[retractFromFingerprintIndex]]).
-    */
-  def retractFromDhashIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      batchIds: DataFrame,
-      path: String): Unit =
-    retractFromFingerprintIndex(spark, batchIds, path)
-
-  /** Content-identical defragmentation of the image index (write-new →
-    * repoint; see [[compactFingerprintIndex]]).
-    */
-  def compactDhashIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      srcPath: String,
-      dstPath: String,
-      targetFileBytes: Long = 128L << 20): Unit =
-    compactFingerprintIndex(spark, srcPath, dstPath, targetFileBytes)
-
-  /** (doc_id, dh) audio-fingerprint rows — [[audioPairs]]' kernel,
-    * factored for the persisted-index forms exactly like [[dhashRows]].
-    */
-  def audioHashRows(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap(r => audioFingerprint64(r.payload).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "dh")
-  }
-
-  /** The audio instance of the fingerprint-index trio (q186): identical
-    * mechanics to the image index — only the 64-bit kernel differs.
-    */
-  def persistAudioIndex(media: DataFrame, path: String): Unit =
-    persistFingerprintIndex(audioHashRows(media), path)
-
-  def appendToAudioIndex(media: DataFrame, path: String): Unit =
-    appendToFingerprintIndex(audioHashRows(media), path)
-
-  def incrementalAudioPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      newMedia: DataFrame,
-      path: String,
-      maxHamming: Int): DataFrame =
-    incrementalFingerprintPairs(spark, audioHashRows(newMedia), path, maxHamming)
-
-  /** Un-absorb a batch from the audio index by doc id (LIFO; see
-    * [[retractFromFingerprintIndex]]).
-    */
-  def retractFromAudioIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      batchIds: DataFrame,
-      path: String): Unit =
-    retractFromFingerprintIndex(spark, batchIds, path)
-
-  /** Content-identical defragmentation of the audio index (see
-    * [[compactFingerprintIndex]]).
-    */
-  def compactAudioIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      srcPath: String,
-      dstPath: String,
-      targetFileBytes: Long = 128L << 20): Unit =
-    compactFingerprintIndex(spark, srcPath, dstPath, targetFileBytes)
 
   /** WAV payload → (sampleRate, mono float samples in [-1, 1]). 16-bit PCM
     * only (the fingerprint tier's contract; other depths return None and
@@ -1106,19 +1113,6 @@ object Multimodal {
     }
   }
 
-  /** Audio near-dup pairs: per-payload [[audioFingerprint64]] (partition-
-    * local — payload bytes never shuffle), then the shared 4×16-bit band
-    * blocking, hamming-verified <= `maxHamming`.
-    */
-  def audioPairs(media: DataFrame, maxHamming: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val hashes = media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap(r => audioFingerprint64(r.payload).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "dh")
-    bandedHammingPairs(hashes, maxHamming)
-  }
-
   final case class MediaFrame(doc_id: Long, payload: Array[Byte], resized: Boolean)
 
   /** Partition-local resize stage. Image payloads are resized to (w, h);
@@ -1180,7 +1174,7 @@ object Multimodal {
 
   /** Frames per synthesized video and the fid packing width: frame ids
     * pack as `doc_id * 64 + frame_idx`, so extraction truncates at 64
-    * frames — far above [[VideoFrames]] and documented on [[videoPairs]].
+    * frames — far above [[VideoFrames]] (see [[Video]]).
     */
   val VideoFrames = 6
   private[graft] val FidWidth = 64L
@@ -1224,7 +1218,7 @@ object Multimodal {
     * self-delimiting, so stored frames need no external size table).
     * None when the payload isn't an MP4; Some(empty) when the mdat is
     * absent or carries no well-formed frames. Truncates at 64 frames (the
-    * fid packing width in [[videoPairs]]).
+    * fid packing width of [[Video]]).
     */
   def videoFrames(bytes: Array[Byte]): Option[Seq[Array[Byte]]] = {
     if (!looksLikeMp4(bytes)) return None
@@ -1319,241 +1313,6 @@ object Multimodal {
         (id, payload)
       })
       .toDF("doc_id", "payload")
-  }
-
-  /** Video near-dup pairs: extract frames partition-local ([[videoFrames]]
-    * — payload bytes never shuffle), dHash each frame, and find videos
-    * sharing enough near-identical frames. Frame ids pack as
-    * `doc_id * 64 + frame_idx` so the per-frame banding reuses the shared
-    * 4×16-bit blocking — the shuffle carries 16 bytes per FRAME, never
-    * pixels. Frame-level matches roll up per video pair: `matched` =
-    * min over both sides of the distinct matched-frame count (robust to
-    * one frame matching several), `overlap` = matched / min(frame counts),
-    * and pairs keep when overlap >= `minOverlap` — which is what makes the
-    * tier trim-robust: a clipped cut still overlaps 1.0 on the min side.
-    */
-  def videoPairs(media: DataFrame, maxHamming: Int, minOverlap: Double): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val extracted = media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        videoFrames(r.payload).getOrElse(Nil).iterator.zipWithIndex.flatMap {
-          case (frame, idx) => dHash64(frame).map(h => (r.doc_id * FidWidth + idx, h))
-        }
-      })
-      .toDF("doc_id", "dh") // doc_id here is the packed fid
-    // The band self-join and the frame-count aggregate would each recompute
-    // frame extraction + per-frame decode — by far the dominant cost (the
-    // payload decode IS the query at any scale). Materialize the 16-byte-
-    // per-frame hash table ONCE; the snap installs the measured checkpoint
-    // size so the joins above it are planned honestly (the q55/q69 idiom).
-    val frameHashes = org.apache.spark.sql.graft.shims.snap(extracted, "video.frameHashes")
-    val counts = frameHashes
-      .groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
-      .agg(count(lit(1)).as("nf"))
-    val framePairs = bandedHammingPairs(frameHashes, maxHamming)
-      .select(
-        (col("a") / FidWidth).cast("long").as("va"), col("a").as("fa"),
-        (col("b") / FidWidth).cast("long").as("vb"), col("b").as("fb"))
-      .filter(col("va") < col("vb"))
-    framePairs
-      .groupBy(col("va"), col("vb"))
-      .agg(least(countDistinct(col("fa")), countDistinct(col("fb"))).as("matched_frames"))
-      .join(counts.withColumnRenamed("vid", "va").withColumnRenamed("nf", "nf_a"), "va")
-      .join(counts.withColumnRenamed("vid", "vb").withColumnRenamed("nf", "nf_b"), "vb")
-      .select(
-        col("va").as("a"), col("vb").as("b"), col("matched_frames"),
-        (col("matched_frames").cast("double") / least(col("nf_a"), col("nf_b")))
-          .as("overlap"))
-      .filter(col("overlap") >= minOverlap)
-  }
-
-  /** (packed-fid, dh) video frame-hash rows — [[videoPairs]]' extraction
-    * kernel factored for the persisted-index forms (the [[dhashRows]]
-    * discipline): frame split + per-frame dHash stay partition-local,
-    * only 16 bytes per frame ever shuffle.
-    */
-  def videoHashRows(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        videoFrames(r.payload).getOrElse(Nil).iterator.zipWithIndex.flatMap {
-          case (frame, idx) => dHash64(frame).map(h => (r.doc_id * FidWidth + idx, h))
-        }
-      })
-      .toDF("doc_id", "dh") // doc_id here is the packed fid
-  }
-
-  /** PERSIST the video frame index — the media-index contract at frame
-    * grain: the corpus decodes ONCE (the decode is the dominant cost at
-    * any scale), its frame-hash bands land partitioned by `band`, and the
-    * per-video frame counts — the overlap verify's denominators — persist
-    * alongside so a probe never re-opens a stored payload.
-    */
-  def persistVideoIndex(media: DataFrame, path: String): Unit = {
-    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(media), "video.index")
-    graft.ops.Bucketing.writePartitioned(
-      fingerprintBands(fh), s"$path/dhbands", Seq("band"))
-    fh.groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
-      .agg(count(lit(1)).as("nf"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$path/vcounts")
-  }
-
-  /** APPEND a video batch to a persisted frame index: new band files plus
-    * the batch's (vid, nf) count rows — both append-only.
-    */
-  def appendToVideoIndex(media: DataFrame, path: String): Unit = {
-    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(media), "video.append")
-    fingerprintBands(fh).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$path/dhbands")
-    fh.groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
-      .agg(count(lit(1)).as("nf"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(s"$path/vcounts")
-  }
-
-  /** Un-absorb a video batch from the frame index by VIDEO id (LIFO; no
-    * payload re-decoded — the whole point of a media retract): the band
-    * store is keyed by packed fid, so the batch's frame rows are named by
-    * `fid / FidWidth ∈ batch` rather than a direct id join; the vcounts
-    * denominators retract by vid directly. Both artifacts rewrite
-    * write-aside and swap in sequence — a complete version of each exists
-    * on disk at every instant, and a probe between the two swaps sees at
-    * worst a retracted band store with stale denominators for videos it
-    * can no longer match (overlap denominators join on surviving pairs
-    * only, so the stale rows are unreachable).
-    */
-  def retractFromVideoIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      batchIds: DataFrame,
-      path: String): Unit = {
-    val ids = broadcast(batchIds.select(col("doc_id").as("vid")))
-    val store = readBandStore(spark, path)
-    store.withColumn("vid", (col("doc_id") / FidWidth).cast("long"))
-      .join(ids, Seq("vid"), "left_anti")
-      .select(store.columns.map(col).toSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$path/dhbands.next")
-    val counts = readVcounts(spark, path)
-    counts.join(ids, Seq("vid"), "left_anti")
-      .select(counts.columns.map(col).toSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(s"$path/vcounts.next")
-    graft.ops.StoreSwap.swapInto(spark, s"$path/dhbands")
-    graft.ops.StoreSwap.swapInto(spark, s"$path/vcounts")
-  }
-
-  /** Content-identical defragmentation of BOTH video-index artifacts —
-    * the frame bands via the shared rewrite and the vcounts denominators
-    * as a (vid)-sorted run (tiny — one row per video — but probes open it
-    * every call, so fragmentation costs every probe).
-    */
-  def compactVideoIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      srcPath: String,
-      dstPath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    compactFingerprintIndex(spark, srcPath, dstPath, targetFileBytes)
-    val counts = readVcounts(spark, srcPath)
-    val nOut = math.max(1,
-      (counts.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
-    counts
-      .repartition(nOut, col("vid"))
-      .sortWithinPartitions("vid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(s"$dstPath/vcounts")
-  }
-
-  /** INCREMENTAL video near-dup — q66's contract at frame grain: the new
-    * batch decodes once, its frame bands probe the PERSISTED index (no
-    * stored video is re-opened — the denominators come from the persisted
-    * vcounts), the batch self-checks within itself, and both arms apply
-    * [[videoPairs]]' overlap verify (matched frames ≥ minOverlap of the
-    * smaller side). Output (new_id, existing_id, matched_frames, overlap);
-    * within-batch pairs keep new_id < existing_id.
-    */
-  def incrementalVideoPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      newMedia: DataFrame,
-      path: String,
-      maxHamming: Int,
-      minOverlap: Double): DataFrame = {
-    val fh = org.apache.spark.sql.graft.shims.snap(videoHashRows(newMedia), "video.probe")
-    incrementalVideoPairsOver(
-      fh, readBandStore(spark, path), readVcounts(spark, path),
-      maxHamming, minOverlap)
-  }
-
-  /** [[incrementalVideoPairs]] over ALREADY-LOADED batch frame hashes +
-    * store artifacts — the dump-readback factoring
-    * ([[incrementalFingerprintPairsOver]]) at frame grain, so q187's
-    * oracle can replay the band join, hamming verify AND the overlap
-    * fold (denominators from the dumped vcounts) in DuckDB.
-    */
-  private[graft] def incrementalVideoPairsOver(
-      fh: DataFrame,
-      store: DataFrame,
-      storeCounts: DataFrame,
-      maxHamming: Int,
-      minOverlap: Double): DataFrame = {
-    val newCounts = fh
-      .groupBy((col("doc_id") / FidWidth).cast("long").as("vid"))
-      .agg(count(lit(1)).as("nf"))
-    val nb = fingerprintBands(fh)
-    val vsStore = nb.as("x")
-      .join(store.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash"))
-      .select(
-        col("x.doc_id").as("fa"), col("y.doc_id").as("fb"),
-        graft.functions.Text.hamming64(col("x.dh"), col("y.dh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .select(
-        (col("fa") / FidWidth).cast("long").as("va"), col("fa"),
-        (col("fb") / FidWidth).cast("long").as("vb"), col("fb"))
-      .filter(col("va") =!= col("vb"))
-      .groupBy(col("va"), col("vb"))
-      .agg(least(countDistinct(col("fa")), countDistinct(col("fb")))
-        .as("matched_frames"))
-      .join(newCounts.withColumnRenamed("vid", "va")
-        .withColumnRenamed("nf", "nf_a"), "va")
-      .join(storeCounts.withColumnRenamed("vid", "vb")
-        .withColumnRenamed("nf", "nf_b"), "vb")
-      .select(
-        col("va").as("new_id"), col("vb").as("existing_id"),
-        col("matched_frames"),
-        (col("matched_frames").cast("double") / least(col("nf_a"), col("nf_b")))
-          .as("overlap"))
-      .filter(col("overlap") >= minOverlap)
-    val within = bandedHammingPairs(fh, maxHamming)
-      .select(
-        (col("a") / FidWidth).cast("long").as("va"), col("a").as("fa"),
-        (col("b") / FidWidth).cast("long").as("vb"), col("b").as("fb"))
-      .filter(col("va") < col("vb"))
-      .groupBy(col("va"), col("vb"))
-      .agg(least(countDistinct(col("fa")), countDistinct(col("fb")))
-        .as("matched_frames"))
-      .join(newCounts.withColumnRenamed("vid", "va")
-        .withColumnRenamed("nf", "nf_a"), "va")
-      .join(newCounts.withColumnRenamed("vid", "vb")
-        .withColumnRenamed("nf", "nf_b"), "vb")
-      .select(
-        col("va").as("new_id"), col("vb").as("existing_id"),
-        col("matched_frames"),
-        (col("matched_frames").cast("double") / least(col("nf_a"), col("nf_b")))
-          .as("overlap"))
-      .filter(col("overlap") >= minOverlap)
-    vsStore.unionByName(within)
   }
 
   /** Frame-sample stub: deterministic every-nth-byte "frames" from a payload,

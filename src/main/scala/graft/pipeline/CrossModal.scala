@@ -47,7 +47,7 @@ object CrossModal {
     * lifecycle operation derives edges identically (one vocabulary — the
     * q191 precision-first arm defaults). The VIDEO arm is optional (a
     * deployment without a frame index skips it); when present it is the
-    * q187 frame-grain incremental probe with [[Multimodal.videoPairs]]'
+    * q187 frame-grain incremental probe with [[Multimodal.Video]]'s
     * min-side overlap verify — trim-robust, and precision-safe for a
     * transitive fold because the overlap denominator is the SMALLER
     * side's frame count, so an incidental single-frame match can never
@@ -62,7 +62,17 @@ object CrossModal {
       maxHammingAud: Int = 4,
       videoIndexPath: Option[String] = None,
       maxHammingVid: Int = 8,
-      minOverlapVid: Double = 0.5)
+      minOverlapVid: Double = 0.5) {
+
+    /** The media arms as (modality, index path, hamming bound), in union
+      * order; every arm gets `minOverlapVid`, which only the frame-grained
+      * video arm reads.
+      */
+    private[graft] def media: Seq[(Multimodal.Modality, String, Int)] =
+      Seq((Multimodal.Image, imageIndexPath, maxHammingImg),
+        (Multimodal.Audio, audioIndexPath, maxHammingAud)) ++
+        videoIndexPath.map(p => (Multimodal.Video, p, maxHammingVid))
+  }
 
   private def assignmentDir(path: String) = s"$path/assignment"
 
@@ -96,18 +106,12 @@ object CrossModal {
     def e(df: DataFrame) = df.select(
       col("new_id").cast("long").as("new_id"),
       col("existing_id").cast("long").as("existing_id"))
-    val tia =
-      e(DedupStore.incrementalMinhashPairs(spark, batchDocs, src.textIndexPath, src.threshold))
-        .unionByName(e(Multimodal.incrementalDhashPairs(
-          spark, Multimodal.imagePayloads(batchDocs),
-          src.imageIndexPath, src.maxHammingImg)))
-        .unionByName(e(Multimodal.incrementalAudioPairs(
-          spark, Multimodal.audioPayloads(batchDocs),
-          src.audioIndexPath, src.maxHammingAud)))
-    src.videoIndexPath.fold(tia)(p =>
-      tia.unionByName(e(Multimodal.incrementalVideoPairs(
-        spark, Multimodal.videoPayloads(batchDocs),
-        p, src.maxHammingVid, src.minOverlapVid))))
+    src.media.foldLeft(
+      e(DedupStore.incrementalMinhashPairs(spark, batchDocs, src.textIndexPath, src.threshold))) {
+      case (edges, (m, p, maxHamming)) =>
+        edges.unionByName(e(m.incrementalPairs(
+          spark, m.payloads(batchDocs), p, maxHamming, src.minOverlapVid)))
+    }
   }
 
   /** The contracted merge over an already-derived batch edge set — split
@@ -192,10 +196,7 @@ object CrossModal {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd").parquet(assignmentDir(path) + ".next")
     DedupStore.appendToBandIndex(batchDocs, src.textIndexPath)
-    Multimodal.appendToDhashIndex(Multimodal.imagePayloads(batchDocs), src.imageIndexPath)
-    Multimodal.appendToAudioIndex(Multimodal.audioPayloads(batchDocs), src.audioIndexPath)
-    src.videoIndexPath.foreach(p =>
-      Multimodal.appendToVideoIndex(Multimodal.videoPayloads(batchDocs), p))
+    src.media.foreach { case (m, p, _) => m.appendTo(m.payloads(batchDocs), p) }
     graft.ops.StoreSwap.swapInto(spark, assignmentDir(path))
   }
 
@@ -284,18 +285,11 @@ object CrossModal {
     val small = survivorsSized.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(broadcastCeiling)
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val tia = DedupStore.survivorTextPairs(
-        spark, src.textIndexPath, survivorsSized, src.threshold, hinted)
-      .unionByName(Multimodal.survivorFingerprintPairs(
-        Multimodal.readBandStore(spark, src.imageIndexPath),
-        survivorsSized, src.maxHammingImg, hinted))
-      .unionByName(Multimodal.survivorFingerprintPairs(
-        Multimodal.readBandStore(spark, src.audioIndexPath),
-        survivorsSized, src.maxHammingAud, hinted))
-    src.videoIndexPath.fold(tia)(p =>
-      tia.unionByName(Multimodal.survivorVideoPairs(
-        Multimodal.readBandStore(spark, p),
-        Multimodal.readVcounts(spark, p),
-        survivorsSized, src.maxHammingVid, src.minOverlapVid, hinted)))
+    src.media.foldLeft(DedupStore.survivorTextPairs(
+        spark, src.textIndexPath, survivorsSized, src.threshold, hinted)) {
+      case (edges, (m, p, maxHamming)) =>
+        edges.unionByName(m.survivorPairs(
+          spark, p, survivorsSized, maxHamming, src.minOverlapVid, hinted))
+    }
   }
 }

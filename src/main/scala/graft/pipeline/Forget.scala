@@ -152,10 +152,14 @@ object Forget {
     stores.crossModal.foreach { case (p, src) =>
       CrossModal.retract(spark, ids, p, src)
     }
-    stores.imageIndexPath.foreach(p => Multimodal.retractFromDhashIndex(spark, ids, p))
-    stores.audioIndexPath.foreach(p => Multimodal.retractFromAudioIndex(spark, ids, p))
-    stores.videoIndexPath.foreach(p => Multimodal.retractFromVideoIndex(spark, ids, p))
+    mediaIndexes(stores).foreach { case (m, p) => m.retractFrom(spark, ids, p) }
   }
+
+  /** The configured media indexes, image → audio → video. */
+  private def mediaIndexes(stores: Stores): Seq[(Multimodal.Modality, String)] =
+    Seq(Multimodal.Image -> stores.imageIndexPath, Multimodal.Audio -> stores.audioIndexPath,
+      Multimodal.Video -> stores.videoIndexPath)
+      .flatMap { case (m, p) => p.map(m -> _) }
 
   /** TOMBSTONE LEDGER — "remember you forgot": a forget that does not
     * survive the next re-crawl is not a forget, because the same document
@@ -249,15 +253,9 @@ object Forget {
     val vecs = stores.vectorIndexes.zipWithIndex.map { case ((_, p), i) =>
       Family(s"vector_index_$i", read(p), col("vec_id"))
     }
-    val media =
-      stores.imageIndexPath.toSeq.map(p =>
-        Family("media_image_bands", Multimodal.readBandStore(spark, p), col("doc_id"))) ++
-      stores.audioIndexPath.toSeq.map(p =>
-        Family("media_audio_bands", Multimodal.readBandStore(spark, p), col("doc_id"))) ++
-      stores.videoIndexPath.toSeq.flatMap(p => Seq(
-        Family("media_video_frames", Multimodal.readBandStore(spark, p),
-          (col("doc_id") / Multimodal.FidWidth).cast("long")),
-        Family("media_video_counts", Multimodal.readVcounts(spark, p), col("vid"))))
+    val media = mediaIndexes(stores).flatMap { case (m, p) =>
+      m.artifacts(spark, p).map(a => Family(s"media_${a.name}", a.rows, a.docKey))
+    }
     val xm = stores.crossModal.toSeq.map { case (p, _) =>
       Family("crossmodal_assignment",
         CrossModal.readAssignment(spark, p), col("doc_id"))

@@ -309,26 +309,13 @@ object Dedup {
 
   /** Banding + band equi-join + hamming verify over precomputed
     * (doc_id, sim) rows — the readback half of q34's dump-readback oracle
-    * (and the shared tail of [[simhashPairs]]).
+    * (and the shared tail of [[simhashPairs]]): the media tier's 64-bit
+    * fingerprint join ([[graft.multimodal.Multimodal.bandedHammingPairs]])
+    * with the simhash as the fingerprint.
     */
-  def simhashPairsOver(sh: DataFrame, maxHamming: Int): DataFrame = {
-    val bands = sh.select(
-      col("doc_id"), col("sim"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL)).as("bhash"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("sim"), col("b.band").as("band"), col("b.bhash").as("bhash"))
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(
-        col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        Text.hamming64(col("x.sim"), col("y.sim")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  def simhashPairsOver(sh: DataFrame, maxHamming: Int): DataFrame =
+    graft.multimodal.Multimodal.bandedHammingPairs(
+      sh.select(col("doc_id"), col("sim").as("dh")), maxHamming)
 
   /** q65's oracle, shared with its hashed twin q67: the twin's output is
     * row-identical (DedupIndexSpec pins it on both testdata corpora), so the

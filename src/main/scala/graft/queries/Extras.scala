@@ -78,7 +78,7 @@ object Extras {
     * the difference anyway — equi-joins them against the dumped index
     * bands, and hamming-verifies with `bit_count(xor(...))`, replaying
     * BOTH probe arms (vs-store and within-batch) of
-    * [[Multimodal.incrementalFingerprintPairsOver]].
+    * [[Multimodal.Modality.incrementalPairsOver]].
     */
   private def mediaIncrementalOracleSql(dumpDir: String, maxHamming: Int): String =
     s"""WITH idx AS (SELECT doc_id, dh, band, bhash
@@ -498,7 +498,7 @@ object Extras {
     "q70_image_neardup" -> Q.noOracle(
       "Perceptual image near-dup pairs: dHash64 + 4×16-bit banding, hamming-verified <= 8") {
       (s, dir) =>
-        Multimodal.dhashPairs(
+        Multimodal.Image.pairs(
           Multimodal.imagePayloads(Tables(s, dir, "documents")), maxHamming = 8)
           .orderBy("a", "b")
     },
@@ -514,7 +514,7 @@ object Extras {
     "q87_audio_neardup" -> Q.noOracle(
       "Audio near-dup pairs: energy/zcr fingerprint64 + 4×16-bit banding, hamming <= 6") {
       (s, dir) =>
-        Multimodal.audioPairs(
+        Multimodal.Audio.pairs(
           Multimodal.audioPayloads(Tables(s, dir, "documents")), maxHamming = 6)
           .orderBy("a", "b")
     },
@@ -533,13 +533,13 @@ object Extras {
     "q89_video_neardup" -> Q.noOracle(
       "Video near-dup pairs: per-frame dHash64, banded frame matches, overlap >= 0.5 on min side") {
       (s, dir) =>
-        Multimodal.videoPairs(
+        Multimodal.Video.pairs(
           Multimodal.videoPayloads(Tables(s, dir, "documents")),
           maxHamming = 8, minOverlap = 0.5)
           .orderBy("a", "b")
     },
 
-    // INCREMENTAL image dedup ([[Multimodal.incrementalDhashPairs]]) —
+    // INCREMENTAL image dedup ([[Multimodal.Modality.incrementalPairs]]) —
     // q66's contract at the image tier: the daily batch's dHash bands
     // probe the PERSISTED index (no stored image is re-decoded or
     // re-hashed — the property that matters when "stored" is a billion
@@ -548,7 +548,7 @@ object Extras {
     // full restricted — DHashSpec pins it, with the append path.
     // ORACLED since round 14 (dump-readback): the warm index rows and
     // the batch's hash rows dump pid-scoped, the engine probes the
-    // READBACK ([[Multimodal.incrementalFingerprintPairsOver]]), and
+    // READBACK ([[Multimodal.Modality.incrementalPairsOver]]), and
     // DuckDB replays banding + band equi-join + bit_count(xor()) hamming
     // over the same rows — only the JDK image decode (dHash64 itself)
     // stays spec-closed.
@@ -556,22 +556,7 @@ object Extras {
       "Incremental image near-dup: new batch vs persisted dHash band " +
         "index + within-batch, hamming <= 8",
       mediaIncrementalOracleSql(q185Dir, maxHamming = 8)) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val path = dhashIndexFor(
-        Multimodal.imagePayloads(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)), dir)
-      Extras.synchronized {
-        Multimodal.readBandStore(s, path).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q185Dir/index.parquet")
-        Multimodal.dhashRows(
-            Multimodal.imagePayloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q185Dir/batch.parquet")
-      }
-      Multimodal.incrementalFingerprintPairsOver(
-          s.read.parquet(s"$q185Dir/batch.parquet"),
-          s.read.parquet(s"$q185Dir/index.parquet"), maxHamming = 8)
-        .orderBy("new_id", "existing_id")
+      mediaIncrementalOverDump(s, dir, Multimodal.Image, q185Dir, maxHamming = 8)
     },
 
     // INCREMENTAL audio dedup — the q185 trio instantiated on the audio
@@ -585,22 +570,7 @@ object Extras {
       "Incremental audio near-dup: new batch vs persisted fingerprint " +
         "band index + within-batch, hamming <= 6",
       mediaIncrementalOracleSql(q186Dir, maxHamming = 6)) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val path = audioIndexFor(
-        Multimodal.audioPayloads(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)), dir)
-      Extras.synchronized {
-        Multimodal.readBandStore(s, path).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q186Dir/index.parquet")
-        Multimodal.audioHashRows(
-            Multimodal.audioPayloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q186Dir/batch.parquet")
-      }
-      Multimodal.incrementalFingerprintPairsOver(
-          s.read.parquet(s"$q186Dir/batch.parquet"),
-          s.read.parquet(s"$q186Dir/index.parquet"), maxHamming = 6)
-        .orderBy("new_id", "existing_id")
+      mediaIncrementalOverDump(s, dir, Multimodal.Audio, q186Dir, maxHamming = 6)
     },
 
     // INCREMENTAL video dedup at FRAME grain — completes the media
@@ -706,13 +676,11 @@ object Extras {
       val docs = Tables(s, dir, "documents")
       val ids = docs.filter(col("doc_id") % 97 === 0).select(col("doc_id"))
       val store = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val img = dhashIndexFor(Multimodal.imagePayloads(store), dir)
-      val aud = audioIndexFor(Multimodal.audioPayloads(store), dir)
-      val vid = videoIndexFor(Multimodal.videoPayloads(store), dir)
       val fams = graft.pipeline.Forget.families(
         s, graft.pipeline.Forget.Stores(
-          imageIndexPath = Some(img), audioIndexPath = Some(aud),
-          videoIndexPath = Some(vid)))
+          imageIndexPath = Some(mediaIndexFor(Multimodal.Image, store, dir)),
+          audioIndexPath = Some(mediaIndexFor(Multimodal.Audio, store, dir)),
+          videoIndexPath = Some(mediaIndexFor(Multimodal.Video, store, dir))))
       assert(fams.map(_.store).toSet == Q189Families.toSet,
         s"q189 families drifted: ${fams.map(_.store)}")
       val dumped = Extras.synchronized {
@@ -769,18 +737,15 @@ object Extras {
       val dump = s"$q191Dir/edges.parquet"
       // edge arms probe warm FULL-corpus per-modality indexes (the q192
       // treatment for the rebuild form; their own `xmfull` family, since
-      // [[dhashIndexFor]] and its siblings hold the %5≠0 store corpus):
+      // [[mediaIndexFor]] holds the %5≠0 store corpus):
       // same edge rows, no per-call corpus decode/shingle —
       // CrossModalSpec pins stored ≡ in-memory
       def full(arm: String, committed: String*)(build: String => Unit) =
         WarmStores.artifact(s, dir, "documents", "xmfull", arm)(committed: _*)(build)
       val ti = full("text", "shingles")(DedupStore.persistBandIndex(docs, _))
-      val ii = full("img", "dhbands")(
-        Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), _))
-      val ai = full("aud", "dhbands")(
-        Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), _))
-      val vi = full("vid", "dhbands", "vcounts")(
-        Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), _))
+      val Seq(ii, ai, vi) = Seq(
+          Multimodal.Image -> "img", Multimodal.Audio -> "aud", Multimodal.Video -> "vid")
+        .map { case (m, arm) => full(arm, m.committed: _*)(m.persist(m.payloads(docs), _)) }
       Extras.synchronized {
         crossModalEdgesStored(s, ti, ii, ai, vi).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -827,9 +792,9 @@ object Extras {
       val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       val src = graft.pipeline.CrossModal.EdgeSources(
         textIndexPath = DedupStore.bandIndexFor(corpus, dir),
-        imageIndexPath = dhashIndexFor(Multimodal.imagePayloads(corpus), dir),
-        audioIndexPath = audioIndexFor(Multimodal.audioPayloads(corpus), dir),
-        videoIndexPath = Some(videoIndexFor(Multimodal.videoPayloads(corpus), dir)))
+        imageIndexPath = mediaIndexFor(Multimodal.Image, corpus, dir),
+        audioIndexPath = mediaIndexFor(Multimodal.Audio, corpus, dir),
+        videoIndexPath = Some(mediaIndexFor(Multimodal.Video, corpus, dir)))
       val xm = crossModalIndexFor(corpus, dir, "store")
       Extras.synchronized {
         graft.pipeline.CrossModal.readAssignment(s, xm).write
@@ -881,9 +846,9 @@ object Extras {
       val rows = mediaStoreSyncRows(s,
         crossModalIndexFor(corpus, dir, "store"),
         DedupStore.bandIndexFor(corpus, dir),
-        dhashIndexFor(Multimodal.imagePayloads(corpus), dir),
-        audioIndexFor(Multimodal.audioPayloads(corpus), dir),
-        videoIndexFor(Multimodal.videoPayloads(corpus), dir))
+        mediaIndexFor(Multimodal.Image, corpus, dir),
+        mediaIndexFor(Multimodal.Audio, corpus, dir),
+        mediaIndexFor(Multimodal.Video, corpus, dir))
       Extras.synchronized {
         // hive-partitioned by arm: the reconcile's orphan reference is
         // one arm ('assignment'), so its scan partition-prunes to a
@@ -932,27 +897,7 @@ object Extras {
       "Incremental video near-dup: new batch's frames vs the persisted " +
         "frame index + within-batch, overlap >= 0.5 on the min side",
       q187OracleSql) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val path = videoIndexFor(
-        Multimodal.videoPayloads(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)), dir)
-      Extras.synchronized {
-        Multimodal.readBandStore(s, path).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q187Dir/index.parquet")
-        Multimodal.readVcounts(s, path).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q187Dir/vcounts.parquet")
-        Multimodal.videoHashRows(
-            Multimodal.videoPayloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q187Dir/batch.parquet")
-      }
-      Multimodal.incrementalVideoPairsOver(
-          s.read.parquet(s"$q187Dir/batch.parquet"),
-          s.read.parquet(s"$q187Dir/index.parquet"),
-          s.read.parquet(s"$q187Dir/vcounts.parquet"),
-          maxHamming = 8, minOverlap = 0.5)
-        .orderBy("new_id", "existing_id")
+      mediaIncrementalOverDump(s, dir, Multimodal.Video, q187Dir, maxHamming = 8)
     })
 
   /** CROSS-MODAL duplicate families: connected components over the UNION
@@ -1005,15 +950,15 @@ object Extras {
       minOverlapVid: Double = 0.5): DataFrame = {
     def e(df: DataFrame) =
       df.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
-    e(Dedup.minhashPairs(docs, threshold))
-      .unionByName(e(Multimodal.dhashPairs(Multimodal.imagePayloads(docs), maxHammingImg)))
-      .unionByName(e(Multimodal.audioPairs(Multimodal.audioPayloads(docs), maxHammingAud)))
-      // the video arm (q89's kernel): precision-safe for a transitive
-      // fold without tightening — the min-side overlap verify means an
-      // incidental single-frame band hit can never clear 0.5 on real
-      // multi-frame videos, so the arm does not chain across families
-      .unionByName(e(Multimodal.videoPairs(
-        Multimodal.videoPayloads(docs), maxHammingVid, minOverlapVid)))
+    // the video arm (q89's kernel) is precision-safe for a transitive
+    // fold without tightening — the min-side overlap verify means an
+    // incidental single-frame band hit can never clear 0.5 on real
+    // multi-frame videos, so the arm does not chain across families
+    Seq(Multimodal.Image -> maxHammingImg, Multimodal.Audio -> maxHammingAud,
+        Multimodal.Video -> maxHammingVid)
+      .foldLeft(e(Dedup.minhashPairs(docs, threshold))) { case (edges, (m, maxHamming)) =>
+        edges.unionByName(e(m.pairs(m.payloads(docs), maxHamming, minOverlapVid)))
+      }
   }
 
   /** [[crossModalEdges]] probing PERSISTED full-corpus per-modality
@@ -1021,7 +966,7 @@ object Extras {
     * text arm self-joins the stored band/shingle artifacts
     * ([[DedupStore.storedMinhashPairs]]) and the media arms the stored
     * fingerprint bands + video denominators
-    * ([[Multimodal.storedHammingPairs]]/[[Multimodal.storedVideoPairs]]).
+    * ([[Multimodal.Modality.storedPairs]]).
     * Row-identical to the in-memory form over the same corpus — the
     * stores hold the identical band/shingle/hash tables the kernels
     * compute (pinned in CrossModalSpec) — but the four corpus-wide
@@ -1045,11 +990,13 @@ object Extras {
       minOverlapVid: Double = 0.5): DataFrame = {
     def e(df: DataFrame) =
       df.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
-    e(DedupStore.storedMinhashPairs(spark, textIndexPath, threshold))
-      .unionByName(e(Multimodal.storedHammingPairs(spark, imageIndexPath, maxHammingImg)))
-      .unionByName(e(Multimodal.storedHammingPairs(spark, audioIndexPath, maxHammingAud)))
-      .unionByName(e(Multimodal.storedVideoPairs(
-        spark, videoIndexPath, maxHammingVid, minOverlapVid)))
+    Seq((Multimodal.Image, imageIndexPath, maxHammingImg),
+        (Multimodal.Audio, audioIndexPath, maxHammingAud),
+        (Multimodal.Video, videoIndexPath, maxHammingVid))
+      .foldLeft(e(DedupStore.storedMinhashPairs(spark, textIndexPath, threshold))) {
+        case (edges, (m, p, maxHamming)) =>
+          edges.unionByName(e(m.storedPairs(spark, p, maxHamming, minOverlapVid)))
+      }
   }
 
   /** q196: the media-store SYNC gauge over a dumped (artifact, doc_id,
@@ -1102,25 +1049,17 @@ object Extras {
         content: org.apache.spark.sql.Column*): DataFrame =
       df.select(lit(artifact).as("artifact"), id.cast("long").as("doc_id"),
         xxhash64(content: _*).as("sig"))
-    arm("assignment",
+    val media = Seq(Multimodal.Image -> imageIndexPath, Multimodal.Audio -> audioIndexPath,
+        Multimodal.Video -> videoIndexPath)
+      .flatMap { case (m, p) => m.artifacts(spark, p) }
+      .map(a => arm(a.name, a.rows, a.docKey, a.content.map(col): _*))
+    (arm("assignment",
         graft.pipeline.CrossModal.readAssignment(spark, xmPath),
-        col("doc_id"), col("doc_id"), col("component"))
-      .unionByName(arm("text_bands",
+        col("doc_id"), col("doc_id"), col("component")) +:
+      arm("text_bands",
         spark.read.parquet(s"$textIndexPath/bands"),
-        col("doc_id"), col("doc_id"), col("band"), col("bhash")))
-      .unionByName(arm("image_bands",
-        Multimodal.readBandStore(spark, imageIndexPath),
-        col("doc_id"), col("doc_id"), col("dh"), col("band"), col("bhash")))
-      .unionByName(arm("audio_bands",
-        Multimodal.readBandStore(spark, audioIndexPath),
-        col("doc_id"), col("doc_id"), col("dh"), col("band"), col("bhash")))
-      .unionByName(arm("video_frames",
-        Multimodal.readBandStore(spark, videoIndexPath),
-        (col("doc_id") / Multimodal.FidWidth).cast("long"),
-        col("doc_id"), col("dh"), col("band"), col("bhash")))
-      .unionByName(arm("video_counts",
-        Multimodal.readVcounts(spark, videoIndexPath),
-        col("vid"), col("vid"), col("nf")))
+        col("doc_id"), col("doc_id"), col("band"), col("bhash")) +:
+      media).reduce(_.unionByName(_))
   }
 
   /** The component fold alone: every doc keeps an assignment (singletons
@@ -1146,27 +1085,43 @@ object Extras {
     WarmStores.artifact(corpus.sparkSession, dir, "documents", "xmidx", "v4", tag)(
       "assignment")(graft.pipeline.CrossModal.persist(corpus, _))
 
-  /** Warm image dHash index over the store corpus (the
+  /** Warm media index of modality `m` over the store corpus (the
     * DedupStore.bandIndexFor convention — media payloads derive
-    * deterministically from the documents table).
+    * deterministically from the documents table). Each modality keys its
+    * own artifact root, so no kernel ever serves another's bands, and a
+    * video index serves only with both its bands and its vcounts
+    * denominators committed (a crash between the two writes rebuilds).
     */
-  private def dhashIndexFor(media: DataFrame, dir: String): String =
-    WarmStores.artifact(media.sparkSession, dir, "documents", "dhidx")("dhbands")(
-      Multimodal.persistDhashIndex(media, _))
+  private def mediaIndexFor(m: Multimodal.Modality, corpus: DataFrame, dir: String): String =
+    WarmStores.artifact(corpus.sparkSession, dir, "documents", m.artifact)(m.committed: _*)(
+      m.persist(m.payloads(corpus), _))
 
-  /** [[dhashIndexFor]]'s twin for the audio fingerprint index (separate
-    * artifact root — the two kernels must never serve each other's bands).
+  /** The q185–q187 probe body: warm index over the %5≠0 store corpus,
+    * the index rows (and video denominators) plus the %5==0 batch's hash
+    * rows dumped pid-scoped under `dumpDir`, and the incremental probe
+    * run over the READBACK — DuckDB replays it from the same rows.
     */
-  private def audioIndexFor(media: DataFrame, dir: String): String =
-    WarmStores.artifact(media.sparkSession, dir, "documents", "afidx")("dhbands")(
-      Multimodal.persistAudioIndex(media, _))
-
-  /** Warm video frame index (q187): both artifacts — frame bands and the
-    * vcounts denominators — must be committed, or the index rebuilds (a
-    * crash between the two writes must not serve a denominator-less
-    * index).
-    */
-  private def videoIndexFor(media: DataFrame, dir: String): String =
-    WarmStores.artifact(media.sparkSession, dir, "documents", "vfidx")("dhbands", "vcounts")(
-      Multimodal.persistVideoIndex(media, _))
+  private def mediaIncrementalOverDump(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String,
+      m: Multimodal.Modality,
+      dumpDir: String,
+      maxHamming: Int): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+    val path = mediaIndexFor(m, docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
+    def dump(df: DataFrame, name: String): Unit =
+      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("compression", "zstd").parquet(s"$dumpDir/$name.parquet")
+    Extras.synchronized {
+      dump(Multimodal.readBandStore(s, path), "index")
+      if (m.frameGrained) dump(Multimodal.readVcounts(s, path), "vcounts")
+      dump(m.hashRows(m.payloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0))), "batch")
+    }
+    m.incrementalPairsOver(
+        s.read.parquet(s"$dumpDir/batch.parquet"),
+        s.read.parquet(s"$dumpDir/index.parquet"),
+        s.read.parquet(s"$dumpDir/vcounts.parquet"),
+        maxHamming)
+      .orderBy("new_id", "existing_id")
+  }
 }

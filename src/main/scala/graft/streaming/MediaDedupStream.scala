@@ -15,17 +15,17 @@ import graft.multimodal.Multimodal
   * [[ReleaseIngestStream]] probe-then-absorb shape at the media tier.
   *
   * Stream ≡ batch by CONSTRUCTION, not by re-derivation: each micro-batch
-  * runs the exact batch operators (`incremental*Pairs` to probe,
-  * `appendTo*Index` to absorb), so driving batches B1, B2 through the
-  * stream leaves the index content-identical to two batch absorbs and
-  * emits exactly `incremental(B1, idx)` ++ `incremental(B2, idx+B1)` —
-  * the MediaDedupStreamSpec twin-store pin.
+  * runs the exact batch operators ([[Multimodal.Modality.incrementalPairs]]
+  * to probe, [[Multimodal.Modality.appendTo]] to absorb), so driving
+  * batches B1, B2 through the stream leaves the index content-identical
+  * to two batch absorbs and emits exactly `incremental(B1, idx)` ++
+  * `incremental(B2, idx+B1)` — the MediaDedupStreamSpec twin-store pin.
   *
   * Restart semantics (foreachBatch is at-least-once): each micro-batch is
   * first narrowed to its NOT-YET-ABSORBED remainder — an anti join of the
   * batch's doc ids against the store's (one O(batch) equi-join; for video
   * the absorbed-id witness is the vcounts artifact, written SECOND inside
-  * [[Multimodal.appendToVideoIndex]], so its presence implies the band
+  * [[Multimodal.Modality.appendTo]], so its presence implies the band
   * append committed) — and effects run remainder-only, ordered
   * results-then-absorb:
   *   - a PURE replay (every doc already absorbed) yields an empty
@@ -54,48 +54,23 @@ import graft.multimodal.Multimodal
   */
 object MediaDedupStream {
 
-  /** One modality's batch kernels, so the three starters share the
-    * foreachBatch mechanics verbatim.
+  /** The doc ids an index has absorbed. Image/audio: distinct ids in the
+    * band artifact (schema-pinned read — an empty, fully-retracted store
+    * reads as an empty frame, so every batch doc counts as new). Video:
+    * the vcounts artifact, written second in the absorb, so a vid's
+    * presence implies its band append committed.
     */
-  private final case class Kernel(
-      probe: (SparkSession, DataFrame, String) => DataFrame,
-      absorb: (DataFrame, String) => Unit,
-      absorbedIds: (SparkSession, String) => DataFrame)
-
-  /** Absorbed doc ids for image/audio: distinct ids in the single band
-    * artifact (schema-pinned read — an empty, fully-retracted store reads
-    * as an empty frame, so every batch doc counts as new).
-    */
-  private def bandIds(spark: SparkSession, path: String): DataFrame =
-    Multimodal.readBandStore(spark, path).select(col("doc_id")).distinct()
-
-  /** Absorbed doc ids for video: the vcounts artifact (written second in
-    * the absorb, so a vid's presence implies its band append committed).
-    */
-  private def vcountIds(spark: SparkSession, path: String): DataFrame =
-    Multimodal.readVcounts(spark, path).select(col("vid").as("doc_id"))
-
-  private def image(maxHamming: Int) = Kernel(
-    probe = (s, b, p) => Multimodal.incrementalDhashPairs(s, b, p, maxHamming),
-    absorb = (b, p) => Multimodal.appendToDhashIndex(b, p),
-    absorbedIds = bandIds)
-
-  private def audio(maxHamming: Int) = Kernel(
-    probe = (s, b, p) => Multimodal.incrementalAudioPairs(s, b, p, maxHamming),
-    absorb = (b, p) => Multimodal.appendToAudioIndex(b, p),
-    absorbedIds = bandIds)
-
-  private def video(maxHamming: Int, minOverlap: Double) = Kernel(
-    probe = (s, b, p) =>
-      Multimodal.incrementalVideoPairs(s, b, p, maxHamming, minOverlap),
-    absorb = (b, p) => Multimodal.appendToVideoIndex(b, p),
-    absorbedIds = vcountIds)
+  private def absorbedIds(m: Multimodal.Modality, spark: SparkSession, path: String): DataFrame =
+    if (m.frameGrained) Multimodal.readVcounts(spark, path).select(col("vid").as("doc_id"))
+    else Multimodal.readBandStore(spark, path).select(col("doc_id")).distinct()
 
   private def run(
       media: DataFrame,
       indexPath: String,
       resultsDir: String,
-      kernel: Kernel,
+      m: Multimodal.Modality,
+      maxHamming: Int,
+      minOverlap: Double,
       queryName: String,
       checkpointDir: Option[String],
       trigger: Trigger,
@@ -116,14 +91,14 @@ object MediaDedupStream {
           // of the anti join stays un-broadcast — it is the unbounded
           // side, the batch is the small one
           val remainder = org.apache.spark.sql.graft.shims.snap(guarded
-            .join(kernel.absorbedIds(s, indexPath), Seq("doc_id"), "left_anti"),
+            .join(absorbedIds(m, s, indexPath), Seq("doc_id"), "left_anti"),
             "media.remainder")
           if (!remainder.isEmpty) {
-            kernel.probe(s, remainder, indexPath)
+            m.incrementalPairs(s, remainder, indexPath, maxHamming, minOverlap)
               .write.mode(SaveMode.Overwrite)
               .option("compression", "zstd")
               .parquet(s"$resultsDir/batch=$batchId")
-            kernel.absorb(remainder, indexPath)
+            m.appendTo(remainder, indexPath)
           }
         }
       }
@@ -140,7 +115,7 @@ object MediaDedupStream {
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, image(maxHamming), queryName,
+    run(media, indexPath, resultsDir, Multimodal.Image, maxHamming, 0.5, queryName,
       checkpointDir, trigger, tombstonePath)
 
   /** Online q186: streamed WAVs probe + absorb a persisted audio index. */
@@ -153,7 +128,7 @@ object MediaDedupStream {
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, audio(maxHamming), queryName,
+    run(media, indexPath, resultsDir, Multimodal.Audio, maxHamming, 0.5, queryName,
       checkpointDir, trigger, tombstonePath)
 
   /** Online q187: streamed videos probe + absorb the frame index (bands +
@@ -169,6 +144,6 @@ object MediaDedupStream {
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, video(maxHamming, minOverlap), queryName,
+    run(media, indexPath, resultsDir, Multimodal.Video, maxHamming, minOverlap, queryName,
       checkpointDir, trigger, tombstonePath)
 }

@@ -6,7 +6,7 @@ import graft.multimodal.Multimodal
 
 /** Planted-family recall/precision for the audio near-dup tier (q87):
   * [[Multimodal.audioPayloads]] builds families of 4 (base, level twin,
-  * pitch twin, unrelated control), [[Multimodal.audioPairs]] must connect
+  * pitch twin, unrelated control), [[Multimodal.Audio.pairs]] must connect
   * the three twins and nothing else.
   */
 class AudioFingerprintSpec extends SparkSpec {
@@ -41,7 +41,7 @@ class AudioFingerprintSpec extends SparkSpec {
   test("banded pipeline finds twin pairs with high recall and no cross-family pair") {
     val nIds = 120L // 30 families of (base, level, pitch, unrelated)
     val docs = (0L until nIds).toDF("doc_id")
-    val pairs = Multimodal.audioPairs(Multimodal.audioPayloads(docs), maxHamming = 6)
+    val pairs = Multimodal.Audio.pairs(Multimodal.audioPayloads(docs), maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def isTwin(id: Long) = id % 4 != 3
     val expected = for {
@@ -69,15 +69,15 @@ class AudioFingerprintSpec extends SparkSpec {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }
     rm(new java.io.File(path))
-    Multimodal.persistAudioIndex(store, path)
+    Multimodal.Audio.persist(store, path)
     val full = Multimodal
-      .audioPairs(Multimodal.audioPayloads(docs), maxHamming = 6)
+      .Audio.pairs(Multimodal.audioPayloads(docs), maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = full.collect {
       case (a, b) if a % 5 == 0 || b % 5 == 0 =>
         if (a % 5 == 0) (a, b) else (b, a)
     }
-    val inc = Multimodal.incrementalAudioPairs(spark, batch, path, maxHamming = 6)
+    val inc = Multimodal.Audio.incrementalPairs(spark, batch, path, maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def norm(p: (Long, Long)) =
       if (p._1 % 5 == 0 && p._2 % 5 == 0)

@@ -85,7 +85,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partitioned write prunes whole directories on a partition-column filter") {
-    val path = "/tmp/graft_part_docs"
+    val path = java.nio.file.Files.createTempDirectory("graft_part").resolve("docs").toString
     val docs = Tables.raw(spark, "/root/testdata/sf0.001", "documents")
     Bucketing.writePartitioned(docs, path, Seq("source"))
 

@@ -8,7 +8,7 @@ import graft.queries.Tables
 class CompactSpec extends SparkSpec {
 
   test("compaction shrinks file count, preserves content, restores sort") {
-    val dir = "/tmp/graft_compact_test"
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_test").resolve("t").toString
     val ev = Tables.raw(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "user_id", "ts")
       .withColumn("time", unix_micros(col("ts")))
@@ -41,7 +41,7 @@ class CompactSpec extends SparkSpec {
   }
 
   test("partitioned compaction rewrites each leaf dir, preserving layout and pruning") {
-    val dir = "/tmp/graft_compact_leafwise"
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_leafwise").resolve("t").toString
     val ev = Tables.raw(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "user_id", "ts")
       .withColumn("time", unix_micros(col("ts"))).drop("ts")
@@ -71,7 +71,7 @@ class CompactSpec extends SparkSpec {
   }
 
   test("refuses to flatten a hive-partitioned directory tree") {
-    val dir = "/tmp/graft_compact_partitioned"
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_partitioned").resolve("t").toString
     val docs = Tables.raw(spark, "/root/testdata/sf0.001", "documents")
     graft.ops.Bucketing.writePartitioned(docs, dir, Seq("source"))
     val layoutBefore = new java.io.File(dir).listFiles
@@ -90,7 +90,7 @@ class CompactSpec extends SparkSpec {
   }
 
   test("refuses a MIXED directory (top-level parquet beside partition subdirs)") {
-    val dir = "/tmp/graft_compact_mixed"
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_mixed").resolve("t").toString
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }

@@ -36,9 +36,9 @@ class CrossModalDedupStreamSpec extends SparkSpec {
     val src = CrossModal.EdgeSources(s"$root/text", s"$root/img", s"$root/aud",
       videoIndexPath = Some(s"$root/vid"))
     DedupStore.persistBandIndex(corpus, src.textIndexPath)
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(corpus), src.imageIndexPath)
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(corpus), src.audioIndexPath)
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(corpus), s"$root/vid")
+    Multimodal.Image.persist(Multimodal.imagePayloads(corpus), src.imageIndexPath)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(corpus), src.audioIndexPath)
+    Multimodal.Video.persist(Multimodal.videoPayloads(corpus), s"$root/vid")
     src
   }
 

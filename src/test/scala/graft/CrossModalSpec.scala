@@ -20,9 +20,9 @@ class CrossModalSpec extends SparkSpec {
       df.select(col("a").cast("long"), col("b").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val text = pairs(Dedup.minhashPairs(docs, 0.7))
-    val img = pairs(Multimodal.dhashPairs(Multimodal.imagePayloads(docs), 8))
-    val aud = pairs(Multimodal.audioPairs(Multimodal.audioPayloads(docs), 4))
-    val vid = pairs(Multimodal.videoPairs(Multimodal.videoPayloads(docs), 8, 0.5))
+    val img = pairs(Multimodal.Image.pairs(Multimodal.imagePayloads(docs), 8))
+    val aud = pairs(Multimodal.Audio.pairs(Multimodal.audioPayloads(docs), 4))
+    val vid = pairs(Multimodal.Video.pairs(Multimodal.videoPayloads(docs), 8, 0.5))
 
     // reference: plain union-find over the collected union graph
     val parent = scala.collection.mutable.Map(ids.map(i => i -> i).toSeq: _*)
@@ -53,18 +53,47 @@ class CrossModalSpec extends SparkSpec {
     }
   }
 
-  test("stored-index edge arms are row-identical to the in-memory kernels (the q191 rebuild's probe form)") {
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+  /** Full-corpus sf0.001 indexes (text + the three media arms), built
+    * once for the stored-edge and survivor-pair cases.
+    */
+  private lazy val fullIndexDir: String = {
+    val docs = Tables(spark, Bench.WarmupDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft-xmfull").toString
     DedupStore.persistBandIndex(docs, s"$dir/text")
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), s"$dir/img")
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), s"$dir/aud")
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), s"$dir/vid")
+    Multimodal.Image.persist(Multimodal.imagePayloads(docs), s"$dir/img")
+    Multimodal.Audio.persist(Multimodal.audioPayloads(docs), s"$dir/aud")
+    Multimodal.Video.persist(Multimodal.videoPayloads(docs), s"$dir/vid")
+    dir
+  }
+
+  test("stored-index edge arms are row-identical to the in-memory kernels (the q191 rebuild's probe form)") {
+    val docs = Tables(spark, Bench.WarmupDir, "documents")
+    val dir = fullIndexDir
     val stored = Extras.crossModalEdgesStored(
       spark, s"$dir/text", s"$dir/img", s"$dir/aud", s"$dir/vid")
     val mem = Extras.crossModalEdges(docs)
     assert(stored.exceptAll(mem).count() == 0 && mem.exceptAll(stored).count() == 0,
       "stored-index edge union must equal the in-memory kernels row-for-row")
+  }
+
+  test("survivor pairs over each persisted media index equal the in-memory pairs among the survivors") {
+    val docs = Tables(spark, Bench.WarmupDir, "documents")
+    val survivors = docs.filter(pmod(col("doc_id"), lit(7)) =!= 0).select(col("doc_id"))
+    val kept = survivors.collect().map(_.getLong(0)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select(col("a").cast("long"), col("b").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for ((m, arm, maxHamming) <- Seq(
+        (Multimodal.Image, "img", 8), (Multimodal.Audio, "aud", 4), (Multimodal.Video, "vid", 8))) {
+      val all = pairs(m.pairs(m.payloads(docs), maxHamming))
+      val want = all.filter { case (a, b) => kept(a) && kept(b) }
+      assert(want.nonEmpty && want.size < all.size,
+        s"${m.name}: the survivor set must keep some pairs and cut others")
+      val got = pairs(m.survivorPairs(
+        spark, s"$fullIndexDir/$arm", survivors, maxHamming, minOverlap = 0.5, broadcast(_)))
+      assert(got == want,
+        s"${m.name}: missing=${(want -- got).take(5)} spurious=${(got -- want).take(5)}")
+    }
   }
 
   test("q192 lifecycle: incremental equals rebuild, absorb persists it, retract splits a forgotten bridge") {
@@ -80,9 +109,9 @@ class CrossModalSpec extends SparkSpec {
     val aud = s"$root/aud"
     val vid = s"$root/vid"
     DedupStore.persistBandIndex(corpus, text)
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(corpus), img)
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(corpus), aud)
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(corpus), vid)
+    Multimodal.Image.persist(Multimodal.imagePayloads(corpus), img)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(corpus), aud)
+    Multimodal.Video.persist(Multimodal.videoPayloads(corpus), vid)
     val src = CrossModal.EdgeSources(text, img, aud, videoIndexPath = Some(vid))
     val xm = s"$root/xm"
     CrossModal.persist(corpus, xm)
@@ -151,9 +180,9 @@ class CrossModalSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") === 20L)
     val root = java.nio.file.Files.createTempDirectory("graft_xm_vbridge").toString
     DedupStore.persistBandIndex(corpus, s"$root/text")
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(corpus), s"$root/img")
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(corpus), s"$root/aud")
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(corpus), s"$root/vid")
+    Multimodal.Image.persist(Multimodal.imagePayloads(corpus), s"$root/img")
+    Multimodal.Audio.persist(Multimodal.audioPayloads(corpus), s"$root/aud")
+    Multimodal.Video.persist(Multimodal.videoPayloads(corpus), s"$root/vid")
     val src = CrossModal.EdgeSources(
       s"$root/text", s"$root/img", s"$root/aud",
       videoIndexPath = Some(s"$root/vid"))
@@ -191,9 +220,9 @@ class CrossModalSpec extends SparkSpec {
     val (text, img, aud, vid, xm) =
       (s"$root/text", s"$root/img", s"$root/aud", s"$root/vid", s"$root/xm")
     DedupStore.persistBandIndex(corpus, text)
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(corpus), img)
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(corpus), aud)
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(corpus), vid)
+    Multimodal.Image.persist(Multimodal.imagePayloads(corpus), img)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(corpus), aud)
+    Multimodal.Video.persist(Multimodal.videoPayloads(corpus), vid)
     CrossModal.persist(corpus, xm)
 
     def gauge(): Map[String, (Long, Long, Long, Long)] =
@@ -216,10 +245,10 @@ class CrossModalSpec extends SparkSpec {
     // exact duplicates) and a ghost audio absorb of 2 docs the assignment
     // never saw (the crash-between-appends state)
     val dupDocs = corpus.orderBy("doc_id").limit(3)
-    Multimodal.appendToDhashIndex(Multimodal.imagePayloads(dupDocs), img)
+    Multimodal.Image.appendTo(Multimodal.imagePayloads(dupDocs), img)
     val ghosts = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       .orderBy("doc_id").limit(2)
-    Multimodal.appendToAudioIndex(Multimodal.audioPayloads(ghosts), aud)
+    Multimodal.Audio.appendTo(Multimodal.audioPayloads(ghosts), aud)
 
     val drifted = gauge()
     assert(drifted("image_bands")._2 == 12L && drifted("image_bands")._4 == 0L,

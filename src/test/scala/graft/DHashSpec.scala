@@ -30,6 +30,10 @@ class DHashSpec extends SparkSpec {
       "structurally unrelated images must not collide")
     // non-images produce no hash (pipeline stays total on arbitrary bytes)
     assert(Multimodal.dHash64("not an image".getBytes).isEmpty)
+    // the kernels stage through their own memory-cached streams: the
+    // process-wide ImageIO cache flag keeps its default
+    assert(javax.imageio.ImageIO.getUseCache,
+      "image kernels must not change the process-wide ImageIO cache setting")
   }
 
   test("q70 finds exactly the planted re-encoding families on real doc_ids") {
@@ -40,7 +44,7 @@ class DHashSpec extends SparkSpec {
     val docs = graft.queries.Tables(spark, "/root/testdata/sf0.001", "documents")
     val ids = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     val pairs = Multimodal
-      .dhashPairs(Multimodal.imagePayloads(docs), maxHamming = 8)
+      .Image.pairs(Multimodal.imagePayloads(docs), maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (for {
       id <- ids; other <- ids
@@ -61,19 +65,19 @@ class DHashSpec extends SparkSpec {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }
     rm(new java.io.File(path))
-    Multimodal.persistDhashIndex(store, path)
+    Multimodal.Image.persist(store, path)
 
     // incremental ≡ full restricted (the q66 identity, image tier): the
     // whole-corpus pair set restricted to pairs touching the batch, mapped
     // to (new_id, existing_id) with the batch endpoint first
     val full = Multimodal
-      .dhashPairs(Multimodal.imagePayloads(docs), maxHamming = 8)
+      .Image.pairs(Multimodal.imagePayloads(docs), maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = full.collect {
       case (a, b) if a % 5 == 0 || b % 5 == 0 =>
         if (a % 5 == 0) (a, b) else (b, a)
     }
-    val inc = Multimodal.incrementalDhashPairs(spark, batch, path, maxHamming = 8)
+    val inc = Multimodal.Image.incrementalPairs(spark, batch, path, maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // within-batch pairs keep new_id < existing_id; batch-vs-store pairs
     // may have either orientation in `expected` — normalize both sides
@@ -88,9 +92,9 @@ class DHashSpec extends SparkSpec {
     // APPEND the batch: a re-probe of the same batch now also matches
     // itself through the store — every within-batch pair re-appears as a
     // store hit (both orientations), proving the absorb landed
-    Multimodal.appendToDhashIndex(batch, path)
+    Multimodal.Image.appendTo(batch, path)
     val reprobe = Multimodal
-      .incrementalDhashPairs(spark, batch, path, maxHamming = 8)
+      .Image.incrementalPairs(spark, batch, path, maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val withinBatch = expected.filter(p => p._1 % 5 == 0 && p._2 % 5 == 0)
       .map(norm)

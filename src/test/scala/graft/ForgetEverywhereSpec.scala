@@ -48,11 +48,11 @@ class ForgetEverywhereSpec extends SparkSpec {
     graft.ops.Bucketing.writePartitioned(
       PqIndex.assign(model, pq, emb), pqPath, Seq("bucket"))
     val img = s"$root/img"
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), img)
+    Multimodal.Image.persist(Multimodal.imagePayloads(docs), img)
     val aud = s"$root/aud"
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), aud)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(docs), aud)
     val vid = s"$root/vid"
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), vid)
+    Multimodal.Video.persist(Multimodal.videoPayloads(docs), vid)
     val xm = s"$root/xm"
     graft.pipeline.CrossModal.persist(docs, xm)
 
@@ -142,7 +142,7 @@ class ForgetEverywhereSpec extends SparkSpec {
       "re-run must not double-subtract the histogram")
 
     // ---- planted leak: content sneaks back into ONE family -------------
-    Multimodal.appendToDhashIndex(Multimodal.imagePayloads(td), img)
+    Multimodal.Image.appendTo(Multimodal.imagePayloads(td), img)
     val leak = audit()
     assert(leak("media_image_bands") > 0,
       "the audit must flag the store holding planted content")
@@ -165,7 +165,7 @@ class ForgetEverywhereSpec extends SparkSpec {
     DedupStore.persistComponents(docs, idx, 0.7)
     DedupStore.persistExactIndex(docs, idx)
     val img = s"$root/img"
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), img)
+    Multimodal.Image.persist(Multimodal.imagePayloads(docs), img)
     val model = IvfIndex.fit(emb, k = 4)
     val ivfPath = s"$root/ivf"
     graft.ops.Bucketing.writePartitioned(
@@ -202,7 +202,7 @@ class ForgetEverywhereSpec extends SparkSpec {
     val recrawl = Forget.filterForgotten(spark, td, ledger)
     assert(recrawl.isEmpty, "a re-crawl of forgotten docs must be fully refused")
     // absorbing the guarded (empty) batch leaves the stores residual-free
-    Multimodal.appendToDhashIndex(Multimodal.imagePayloads(recrawl), img)
+    Multimodal.Image.appendTo(Multimodal.imagePayloads(recrawl), img)
     assert(audit()("media_image_bands") == 0L,
       "a guarded re-ingest must leave no trace in any store")
     // a mixed batch keeps exactly its non-forgotten rows

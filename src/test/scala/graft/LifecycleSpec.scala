@@ -595,69 +595,69 @@ class LifecycleSpec extends SparkSpec {
 
     // ---- IMAGE (q185's store) -----------------------------------------
     val ip = s"$root/img"
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(d0), ip)
+    Multimodal.Image.persist(Multimodal.imagePayloads(d0), ip)
     val iSnap0 = bandSet(ip)
     def iProbe() = pairSet(
-      Multimodal.incrementalDhashPairs(spark, Multimodal.imagePayloads(d1), ip, 8))
+      Multimodal.Image.incrementalPairs(spark, Multimodal.imagePayloads(d1), ip, 8))
     val iProbe0 = iProbe()
     assert(iProbe0.nonEmpty, "fixture must exercise image store hits")
-    Multimodal.appendToDhashIndex(Multimodal.imagePayloads(d1), ip)
+    Multimodal.Image.appendTo(Multimodal.imagePayloads(d1), ip)
     // incremental ≡ rebuild at the absorb boundary: the appended store
     // must equal a from-scratch persist over the cumulative corpus
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), s"$root/img_rb")
+    Multimodal.Image.persist(Multimodal.imagePayloads(docs), s"$root/img_rb")
     assert(bandSet(ip) == bandSet(s"$root/img_rb"),
       "image append must equal the from-scratch rebuild")
     // RETRACT day: the store and the probe must return to pre-append
-    Multimodal.retractFromDhashIndex(spark, batchIds, ip)
+    Multimodal.Image.retractFrom(spark, batchIds, ip)
     assert(bandSet(ip) == iSnap0, "image retract must restore the exact content")
     assert(iProbe() == iProbe0, "image retract must restore the exact probe result")
     // COMPACTION: content- and probe-identical through the rewrite
-    Multimodal.compactDhashIndex(spark, ip, s"$root/img_c")
+    Multimodal.Image.compact(spark, ip, s"$root/img_c")
     assert(bandSet(s"$root/img_c") == iSnap0, "image compaction must be content-identical")
-    assert(pairSet(Multimodal.incrementalDhashPairs(
+    assert(pairSet(Multimodal.Image.incrementalPairs(
       spark, Multimodal.imagePayloads(d1), s"$root/img_c", 8)) == iProbe0,
       "image compaction must be probe-identical")
 
     // ---- AUDIO (q186's store, same mechanics, audio kernel) -----------
     val ap = s"$root/aud"
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(d0), ap)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(d0), ap)
     val aSnap0 = bandSet(ap)
     def aProbe() = pairSet(
-      Multimodal.incrementalAudioPairs(spark, Multimodal.audioPayloads(d1), ap, 6))
+      Multimodal.Audio.incrementalPairs(spark, Multimodal.audioPayloads(d1), ap, 6))
     val aProbe0 = aProbe()
     assert(aProbe0.nonEmpty, "fixture must exercise audio store hits")
-    Multimodal.appendToAudioIndex(Multimodal.audioPayloads(d1), ap)
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), s"$root/aud_rb")
+    Multimodal.Audio.appendTo(Multimodal.audioPayloads(d1), ap)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(docs), s"$root/aud_rb")
     assert(bandSet(ap) == bandSet(s"$root/aud_rb"),
       "audio append must equal the from-scratch rebuild")
-    Multimodal.retractFromAudioIndex(spark, batchIds, ap)
+    Multimodal.Audio.retractFrom(spark, batchIds, ap)
     assert(bandSet(ap) == aSnap0, "audio retract must restore the exact content")
     assert(aProbe() == aProbe0, "audio retract must restore the exact probe result")
-    Multimodal.compactAudioIndex(spark, ap, s"$root/aud_c")
+    Multimodal.Audio.compact(spark, ap, s"$root/aud_c")
     assert(bandSet(s"$root/aud_c") == aSnap0, "audio compaction must be content-identical")
 
     // ---- VIDEO (q187's store: frame bands + vcounts denominators) -----
     val vp = s"$root/vid"
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(d0), vp)
+    Multimodal.Video.persist(Multimodal.videoPayloads(d0), vp)
     val vSnap0 = bandSet(vp)
     val vcSnap0 = vcSet(vp)
-    def vProbe() = pairSet(Multimodal.incrementalVideoPairs(
+    def vProbe() = pairSet(Multimodal.Video.incrementalPairs(
       spark, Multimodal.videoPayloads(d1), vp, maxHamming = 8, minOverlap = 0.5))
     val vProbe0 = vProbe()
     assert(vProbe0.nonEmpty, "fixture must exercise video store hits")
-    Multimodal.appendToVideoIndex(Multimodal.videoPayloads(d1), vp)
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), s"$root/vid_rb")
+    Multimodal.Video.appendTo(Multimodal.videoPayloads(d1), vp)
+    Multimodal.Video.persist(Multimodal.videoPayloads(docs), s"$root/vid_rb")
     assert(bandSet(vp) == bandSet(s"$root/vid_rb") && vcSet(vp) == vcSet(s"$root/vid_rb"),
       "video append must equal the from-scratch rebuild on BOTH artifacts")
     // retract is keyed by VIDEO id; both artifacts must restore
-    Multimodal.retractFromVideoIndex(spark, batchIds, vp)
+    Multimodal.Video.retractFrom(spark, batchIds, vp)
     assert(bandSet(vp) == vSnap0, "video retract must restore the frame bands")
     assert(vcSet(vp) == vcSnap0, "video retract must restore the denominators")
     assert(vProbe() == vProbe0, "video retract must restore the exact probe result")
-    Multimodal.compactVideoIndex(spark, vp, s"$root/vid_c")
+    Multimodal.Video.compact(spark, vp, s"$root/vid_c")
     assert(bandSet(s"$root/vid_c") == vSnap0 && vcSet(s"$root/vid_c") == vcSnap0,
       "video compaction must be content-identical on BOTH artifacts")
-    assert(pairSet(Multimodal.incrementalVideoPairs(
+    assert(pairSet(Multimodal.Video.incrementalPairs(
       spark, Multimodal.videoPayloads(d1), s"$root/vid_c", 8, 0.5)) == vProbe0,
       "video compaction must be probe-identical")
   }
@@ -753,9 +753,9 @@ class LifecycleSpec extends SparkSpec {
     val batchIds = d1.select(col("doc_id"))
     val root = java.nio.file.Files.createTempDirectory("graft_xm_day").toString
     DedupStore.persistBandIndex(d0, s"$root/text")
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(d0), s"$root/img")
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(d0), s"$root/aud")
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(d0), s"$root/vid")
+    Multimodal.Image.persist(Multimodal.imagePayloads(d0), s"$root/img")
+    Multimodal.Audio.persist(Multimodal.audioPayloads(d0), s"$root/aud")
+    Multimodal.Video.persist(Multimodal.videoPayloads(d0), s"$root/vid")
     val src = CrossModal.EdgeSources(
       s"$root/text", s"$root/img", s"$root/aud",
       videoIndexPath = Some(s"$root/vid"))
@@ -769,7 +769,7 @@ class LifecycleSpec extends SparkSpec {
 
     // fixture pin: the day's batch must carry live VIDEO edges against the
     // store — without this the fourth arm would be decorative here
-    def vProbe(path: String) = rowSet(Multimodal.incrementalVideoPairs(
+    def vProbe(path: String) = rowSet(Multimodal.Video.incrementalPairs(
       spark, Multimodal.videoPayloads(d1), path, maxHamming = 8, minOverlap = 0.5))
     val vEdges0 = vProbe(s"$root/vid")
     assert(vEdges0.nonEmpty, "fixture must exercise video store hits")
@@ -783,7 +783,7 @@ class LifecycleSpec extends SparkSpec {
     // COMPACT the video index and repoint EdgeSources at the rewrite: an
     // empty day is still a fixed point (gauge-after-compact through the
     // cross-modal tier, not just the raw probe)
-    Multimodal.compactVideoIndex(spark, s"$root/vid", s"$root/vid_c")
+    Multimodal.Video.compact(spark, s"$root/vid", s"$root/vid_c")
     val srcC = src.copy(videoIndexPath = Some(s"$root/vid_c"))
     assert(rowSet(CrossModal.incremental(spark, d1.limit(0), xm, srcC)) == rebuild,
       "an empty day against the compacted video index must be a fixed point")
@@ -794,7 +794,7 @@ class LifecycleSpec extends SparkSpec {
     CrossModal.retract(spark, batchIds, xm, srcC)
     assert(assignSet() == snap0,
       "the assignment must return to its day-0 bootstrap after the retract")
-    Multimodal.retractFromVideoIndex(spark, batchIds, s"$root/vid")
+    Multimodal.Video.retractFrom(spark, batchIds, s"$root/vid")
     assert(vProbe(s"$root/vid") == vEdges0,
       "video retract must restore the exact day-0 probe result")
   }

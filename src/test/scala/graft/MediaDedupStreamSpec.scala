@@ -42,14 +42,14 @@ class MediaDedupStreamSpec extends SparkSpec {
     val live = s"$root/live"
     val twin = s"$root/twin"
     val results = s"$root/results"
-    Multimodal.persistDhashIndex(store, live)
-    Multimodal.persistDhashIndex(store, twin)
+    Multimodal.Image.persist(store, live)
+    Multimodal.Image.persist(store, twin)
 
     // the batch twin: sequential daily absorbs through the BATCH operators
-    val exp1 = pairSet(Multimodal.incrementalDhashPairs(spark, b1, twin, 8))
-    Multimodal.appendToDhashIndex(b1, twin)
-    val exp2 = pairSet(Multimodal.incrementalDhashPairs(spark, b2, twin, 8))
-    Multimodal.appendToDhashIndex(b2, twin)
+    val exp1 = pairSet(Multimodal.Image.incrementalPairs(spark, b1, twin, 8))
+    Multimodal.Image.appendTo(b1, twin)
+    val exp2 = pairSet(Multimodal.Image.incrementalPairs(spark, b2, twin, 8))
+    Multimodal.Image.appendTo(b2, twin)
     assert(exp1.nonEmpty && exp2.nonEmpty, "fixture must exercise store hits")
 
     val input = MemoryStream[(Long, Array[Byte])]
@@ -112,12 +112,12 @@ class MediaDedupStreamSpec extends SparkSpec {
     val live = s"$root/live"
     val twin = s"$root/twin"
     val results = s"$root/results"
-    Multimodal.persistDhashIndex(store, live)
-    Multimodal.persistDhashIndex(store, twin)
+    Multimodal.Image.persist(store, live)
+    Multimodal.Image.persist(store, twin)
 
     // the batch twin runs the REMAINDER only — that is the contract
-    val exp1 = pairSet(Multimodal.incrementalDhashPairs(spark, b1, twin, 8))
-    Multimodal.appendToDhashIndex(b1, twin)
+    val exp1 = pairSet(Multimodal.Image.incrementalPairs(spark, b1, twin, 8))
+    Multimodal.Image.appendTo(b1, twin)
 
     // mixed feed: the whole new batch plus one already-absorbed store doc
     val mixed = mediaRows(b1) ++ mediaRows(store.orderBy("doc_id").limit(1))
@@ -154,15 +154,15 @@ class MediaDedupStreamSpec extends SparkSpec {
     val live = s"$root/live"
     val twin = s"$root/twin"
     val results = s"$root/results"
-    Multimodal.persistDhashIndex(store, live)
-    Multimodal.persistDhashIndex(store, twin)
+    Multimodal.Image.persist(store, live)
+    Multimodal.Image.persist(store, twin)
     val ledger = s"$root/tombs"
     graft.pipeline.Forget.appendTombstones(
       docs.filter(pmod(col("doc_id"), lit(10)) === 0).select(col("doc_id")), ledger)
 
     // the batch twin over the NON-tombstoned half only
-    val exp1 = pairSet(Multimodal.incrementalDhashPairs(spark, keepOnly, twin, 8))
-    Multimodal.appendToDhashIndex(keepOnly, twin)
+    val exp1 = pairSet(Multimodal.Image.incrementalPairs(spark, keepOnly, twin, 8))
+    Multimodal.Image.appendTo(keepOnly, twin)
 
     val input = MemoryStream[(Long, Array[Byte])]
     val q = MediaDedupStream.startImage(
@@ -196,12 +196,12 @@ class MediaDedupStreamSpec extends SparkSpec {
     val live = s"$root/live"
     val twin = s"$root/twin"
     val results = s"$root/results"
-    Multimodal.persistVideoIndex(store, live)
-    Multimodal.persistVideoIndex(store, twin)
+    Multimodal.Video.persist(store, live)
+    Multimodal.Video.persist(store, twin)
 
     val exp1 = pairSet(
-      Multimodal.incrementalVideoPairs(spark, b1, twin, maxHamming = 8, minOverlap = 0.5))
-    Multimodal.appendToVideoIndex(b1, twin)
+      Multimodal.Video.incrementalPairs(spark, b1, twin, maxHamming = 8, minOverlap = 0.5))
+    Multimodal.Video.appendTo(b1, twin)
     assert(exp1.nonEmpty, "fixture must exercise video store hits")
 
     val input = MemoryStream[(Long, Array[Byte])]

@@ -898,9 +898,9 @@ class PlanShapeSpec extends SparkSpec {
     val (text, img, aud, vid) =
       (s"$root/text", s"$root/img", s"$root/aud", s"$root/vid")
     graft.queries.DedupStore.persistBandIndex(docs, text)
-    Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), img)
-    Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), aud)
-    Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), vid)
+    Multimodal.Image.persist(Multimodal.imagePayloads(docs), img)
+    Multimodal.Audio.persist(Multimodal.audioPayloads(docs), aud)
+    Multimodal.Video.persist(Multimodal.videoPayloads(docs), vid)
     val src = CrossModal.EdgeSources(text, img, aud, videoIndexPath = Some(vid))
     // the materialized (persisted + counted) survivor set retractAssembly
     // hands the gate — a takedown's surviving family members

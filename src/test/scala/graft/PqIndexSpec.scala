@@ -108,8 +108,9 @@ class PqIndexSpec extends SparkSpec {
     }
     val ivf = IvfIndex.fit(corpus, k = 10)
     val pq = PqIndex.fit(corpus, m = 16, numCodes = 16)
-    val codePath = "/tmp/graft_pq_spec_index"
-    val floatPath = "/tmp/graft_pq_spec_findex"
+    val root = java.nio.file.Files.createTempDirectory("graft_pq_spec").toString
+    val codePath = s"$root/graft_pq_spec_index"
+    val floatPath = s"$root/graft_pq_spec_findex"
     rm(new java.io.File(codePath))
     rm(new java.io.File(floatPath))
     graft.ops.Bucketing.writePartitioned(

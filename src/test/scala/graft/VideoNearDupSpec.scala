@@ -5,7 +5,7 @@ import graft.multimodal.Multimodal
 /** Planted-family recall/precision for the video near-dup tier (q89):
   * [[Multimodal.videoPayloads]] builds families of 4 on even doc_ids
   * (base, brightness re-render, trimmed cut, unrelated control);
-  * [[Multimodal.videoPairs]] must connect the three variants — trim
+  * [[Multimodal.Video.pairs]] must connect the three variants — trim
   * included, via min-side overlap — and nothing else.
   */
 class VideoNearDupSpec extends SparkSpec {
@@ -39,7 +39,7 @@ class VideoNearDupSpec extends SparkSpec {
   test("banded pipeline connects base/brightness/trim variants and nothing else") {
     val nIds = 480L // every 4th id → 30 families of (base, bright, trim, control)
     val docs = (0L until nIds).map(id => (id, s"doc $id text")).toDF("doc_id", "text")
-    val rows = Multimodal.videoPairs(
+    val rows = Multimodal.Video.pairs(
         Multimodal.videoPayloads(docs), maxHamming = 8, minOverlap = 0.5)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(3))).toMap
@@ -74,16 +74,16 @@ class VideoNearDupSpec extends SparkSpec {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }
     rm(new java.io.File(path))
-    Multimodal.persistVideoIndex(store, path)
+    Multimodal.Video.persist(store, path)
     val full = Multimodal
-      .videoPairs(Multimodal.videoPayloads(docs), maxHamming = 8, minOverlap = 0.5)
+      .Video.pairs(Multimodal.videoPayloads(docs), maxHamming = 8, minOverlap = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = full.collect {
       case (a, b) if a % 5 == 0 || b % 5 == 0 =>
         if (a % 5 == 0) (a, b) else (b, a)
     }
     val inc = Multimodal
-      .incrementalVideoPairs(spark, batch, path, maxHamming = 8, minOverlap = 0.5)
+      .Video.incrementalPairs(spark, batch, path, maxHamming = 8, minOverlap = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def norm(p: (Long, Long)) =
       if (p._1 % 5 == 0 && p._2 % 5 == 0)

@@ -33,11 +33,12 @@ class ZOrderSpec extends SparkSpec {
     def avg(xs: Seq[Long]): Double = xs.sum.toDouble / xs.size
 
     // linear sort on event_id: event ranges narrow, user ranges ~full-domain
-    val linPath = "/tmp/graft_zorder_lin"
+    val root = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val linPath = s"$root/lin"
     ev.orderBy("event_id").write.mode("overwrite")
       .option("maxRecordsPerFile", "1000").parquet(linPath)
     // z-order on (event_id, user_id): BOTH ranges narrow
-    val zPath = "/tmp/graft_zorder_z"
+    val zPath = s"$root/z"
     ZOrder.writeClustered(ev, zPath, "event_id", "user_id", maxRecordsPerFile = 1000)
 
     val dom = ev.agg(max("user_id").cast("long") - min("user_id").cast("long"),
@@ -76,7 +77,7 @@ class ZOrderSpec extends SparkSpec {
       ws.sum.toDouble / ws.size
     }
 
-    val zPath = "/tmp/graft_zorder_z3"
+    val zPath = java.nio.file.Files.createTempDirectory("graft_zorder_z3").resolve("z3").toString
     ZOrder.writeClusteredN(ev, zPath, cols, maxRecordsPerFile = 1000)
 
     val doms = cols.map { c =>

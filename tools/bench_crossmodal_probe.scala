@@ -21,9 +21,9 @@ val store = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
 val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
 def ok(p: String, sub: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p, sub, "_SUCCESS"))
 val tp = s"$idxRoot/text"; val ip = s"$idxRoot/img"; val ap = s"$idxRoot/aud"; val xp = s"$idxRoot/xm"
-if (!ok(tp, "shingles")) { val t0 = System.nanoTime; graft.queries.Dedup.persistBandIndex(store, tp); println(f"[build] text index ${(System.nanoTime - t0) / 1e9}%.2f s") }
-if (!ok(ip, "dhbands")) { val t0 = System.nanoTime; Multimodal.persistDhashIndex(Multimodal.imagePayloads(store), ip); println(f"[build] image index ${(System.nanoTime - t0) / 1e9}%.2f s") }
-if (!ok(ap, "dhbands")) { val t0 = System.nanoTime; Multimodal.persistAudioIndex(Multimodal.audioPayloads(store), ap); println(f"[build] audio index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!ok(tp, "shingles")) { val t0 = System.nanoTime; graft.queries.DedupStore.persistBandIndex(store, tp); println(f"[build] text index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!ok(ip, "dhbands")) { val t0 = System.nanoTime; Multimodal.Image.persist(Multimodal.imagePayloads(store), ip); println(f"[build] image index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!ok(ap, "dhbands")) { val t0 = System.nanoTime; Multimodal.Audio.persist(Multimodal.audioPayloads(store), ap); println(f"[build] audio index ${(System.nanoTime - t0) / 1e9}%.2f s") }
 if (!ok(xp, "assignment")) { val t0 = System.nanoTime; CrossModal.persist(store, xp); println(f"[build] xm assignment ${(System.nanoTime - t0) / 1e9}%.2f s") }
 val src = CrossModal.EdgeSources(tp, ip, ap)
 def time(name: String)(f: => Long): Unit = { val runs = (1 to 3).map { _ => val t0 = System.nanoTime; val n = f; ((System.nanoTime - t0) / 1e9, n) }; println(f"[probe] $name best=${runs.map(_._1).min}%.2f s runs=${runs.map(r => f"${r._1}%.2f").mkString(",")} rows=${runs.head._2}") }

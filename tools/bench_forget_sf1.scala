@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.operators.{IvfIndex, PqIndex}
 import graft.pipeline.Forget
-import graft.queries.{Curation, Dedup, Tables}
+import graft.queries.{Curation, DedupStore, Tables}
 import graft.streaming.ReleaseIngestStream
 val sf = sys.env.getOrElse("GRAFT_SF_DIR", "/tmp/graft_sf1")
 val root = "/tmp/graft_forget_bench_" + java.lang.Integer.toHexString(sf.hashCode)
@@ -24,15 +24,15 @@ def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
 if (!exists(s"$base/_DONE")) {
   val t0 = System.nanoTime
   ReleaseIngestStream.ingest(docs, s"$base/dedup", s"$base/release")
-  Dedup.persistExactIndex(docs, s"$base/dedup")
+  DedupStore.persistExactIndex(docs, s"$base/dedup")
   Curation.refcountedWindowStore(docs).write.mode("overwrite").option("compression", "zstd").parquet(s"$base/win")
   Curation.scoreHistogram(docs).write.mode("overwrite").option("compression", "zstd").parquet(s"$base/hist")
   graft.ops.Bucketing.writePartitioned(IvfIndex.assign(model, emb), s"$base/ivf", Seq("bucket"))
   val pq = PqIndex.fit(emb, m = 8, numCodes = 16)
   graft.ops.Bucketing.writePartitioned(PqIndex.assign(model, pq, emb), s"$base/pq", Seq("bucket"))
-  Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), s"$base/img")
-  Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), s"$base/aud")
-  Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), s"$base/vid")
+  Multimodal.Image.persist(Multimodal.imagePayloads(docs), s"$base/img")
+  Multimodal.Audio.persist(Multimodal.audioPayloads(docs), s"$base/aud")
+  Multimodal.Video.persist(Multimodal.videoPayloads(docs), s"$base/vid")
   java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
   println(f"[build] all 11 store families ${(System.nanoTime - t0) / 1e9}%.1f s")
 }

@@ -19,11 +19,11 @@ val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
 def ready(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p, "dhbands", "_SUCCESS"))
 def vready(p: String) = ready(p) && java.nio.file.Files.exists(java.nio.file.Paths.get(p, "vcounts", "_SUCCESS"))
 val ip = s"$idxRoot/img"; val ap = s"$idxRoot/aud"; val vp = s"$idxRoot/vid"
-if (!ready(ip)) { val t0 = System.nanoTime; Multimodal.persistDhashIndex(Multimodal.imagePayloads(store), ip); println(f"[build] image index ${(System.nanoTime - t0) / 1e9}%.2f s") }
-if (!ready(ap)) { val t0 = System.nanoTime; Multimodal.persistAudioIndex(Multimodal.audioPayloads(store), ap); println(f"[build] audio index ${(System.nanoTime - t0) / 1e9}%.2f s") }
-if (!vready(vp)) { val t0 = System.nanoTime; Multimodal.persistVideoIndex(Multimodal.videoPayloads(store), vp); println(f"[build] video index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!ready(ip)) { val t0 = System.nanoTime; Multimodal.Image.persist(Multimodal.imagePayloads(store), ip); println(f"[build] image index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!ready(ap)) { val t0 = System.nanoTime; Multimodal.Audio.persist(Multimodal.audioPayloads(store), ap); println(f"[build] audio index ${(System.nanoTime - t0) / 1e9}%.2f s") }
+if (!vready(vp)) { val t0 = System.nanoTime; Multimodal.Video.persist(Multimodal.videoPayloads(store), vp); println(f"[build] video index ${(System.nanoTime - t0) / 1e9}%.2f s") }
 def time(name: String)(f: => Long): Unit = { val runs = (1 to 3).map { _ => val t0 = System.nanoTime; val n = f; ((System.nanoTime - t0) / 1e9, n) }; println(f"[probe] $name best=${runs.map(_._1).min}%.2f s runs=${runs.map(r => f"${r._1}%.2f").mkString(",")} rows=${runs.head._2}") }
-time("image") { Multimodal.incrementalDhashPairs(spark, Multimodal.imagePayloads(batch), ip, 8).count() }
-time("audio") { Multimodal.incrementalAudioPairs(spark, Multimodal.audioPayloads(batch), ap, 6).count() }
-time("video") { Multimodal.incrementalVideoPairs(spark, Multimodal.videoPayloads(batch), vp, 8, 0.5).count() }
+time("image") { Multimodal.Image.incrementalPairs(spark, Multimodal.imagePayloads(batch), ip, 8).count() }
+time("audio") { Multimodal.Audio.incrementalPairs(spark, Multimodal.audioPayloads(batch), ap, 6).count() }
+time("video") { Multimodal.Video.incrementalPairs(spark, Multimodal.videoPayloads(batch), vp, 8, 0.5).count() }
 sys.exit(0)
