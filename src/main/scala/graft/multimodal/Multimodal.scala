@@ -588,16 +588,6 @@ object Multimodal {
           .as("overlap"))
       .filter(col("overlap") >= minOverlap)
 
-  /** Output files for a compaction rewrite, from the source's plan-time
-    * size estimate (no job). Clamped BEFORE toInt (the
-    * IvfIndex.compactIndex guard): a missing-stats Long.MaxValue estimate
-    * must degrade to many partitions, not wrap negative into one task.
-    */
-  private def filesFor(df: DataFrame, targetFileBytes: Long): Int =
-    math.max(1,
-      (df.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
-
   /** One persisted artifact of a media index, for the store audits: its
     * audit name, its rows, the doc id each row derives from, and the
     * columns that make up a whole row.
@@ -774,16 +764,12 @@ object Multimodal {
         srcPath: String,
         dstPath: String,
         targetFileBytes: Long = 128L << 20): Unit = {
-      val bands = readBandStore(spark, srcPath)
-      bands
-        .repartition(filesFor(bands, targetFileBytes), col("band"), col("bhash"))
-        .sortWithinPartitions("band", "bhash", "doc_id")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").partitionBy("band").parquet(s"$dstPath/dhbands")
+      graft.ops.Compact.bandStore(
+        readBandStore(spark, srcPath), s"$dstPath/dhbands", targetFileBytes)
       if (frameGrained) {
         val counts = readVcounts(spark, srcPath)
         counts
-          .repartition(filesFor(counts, targetFileBytes), col("vid"))
+          .repartition(graft.ops.Compact.filesFor(counts, targetFileBytes), col("vid"))
           .sortWithinPartitions("vid")
           .write.mode(SaveMode.Overwrite)
           .option("compression", "zstd").parquet(s"$dstPath/vcounts")

@@ -362,16 +362,8 @@ object IvfIndex {
       dstPath: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     val idx = spark.read.parquet(srcPath).dropDuplicates("bucket", "vec_id")
-    // clamp BEFORE toInt: with stats unavailable sizeInBytes falls back to
-    // Long.MaxValue-ish estimates whose quotient wraps negative under
-    // toInt, and max(1, wrapped) = 1 would funnel a huge index through a
-    // single rewrite task; a capped-huge estimate degrades to many
-    // partitions instead
-    val nOut = math.max(1,
-      (idx.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
     idx
-      .repartition(nOut, col("bucket"))
+      .repartition(graft.ops.Compact.filesFor(idx, targetFileBytes), col("bucket"))
       .sortWithinPartitions("bucket", "vec_id")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd")

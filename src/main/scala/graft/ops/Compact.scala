@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Small-file compaction — the maintenance half of a streaming lake.
@@ -25,6 +25,34 @@ import org.apache.spark.sql.functions.col
 object Compact {
 
   final case class CompactResult(filesBefore: Int, filesAfter: Int, rows: Long)
+
+  /** Output files for a rewrite of `sizeInBytes` at `targetFileBytes`
+    * each: the quotient, at least 1, clamped to 2^20 BEFORE `toInt` — a
+    * missing-stats Long.MaxValue estimate must degrade to many
+    * partitions, not wrap negative and collapse the rewrite into one
+    * task.
+    */
+  def filesFor(sizeInBytes: BigInt, targetFileBytes: Long): Int =
+    math.max(1, (sizeInBytes / BigInt(targetFileBytes)).min(BigInt(1 << 20)).toInt)
+
+  /** [[filesFor]] of `df`'s plan-time size estimate (no job). */
+  def filesFor(df: DataFrame, targetFileBytes: Long): Int =
+    filesFor(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetFileBytes)
+
+  /** The band-store compaction shared by the text band index and every
+    * media fingerprint index: (doc_id, band, bhash, …) rows rewrite to
+    * `dst` as few large (band, bhash, doc_id)-sorted runs — sorted so
+    * rowgroup min/max on `bhash` turn a band probe into a rowgroup skip —
+    * with the `band=` partitioning preserved.
+    */
+  def bandStore(bands: DataFrame, dst: String, targetFileBytes: Long): Unit =
+    bands
+      .repartition(filesFor(bands, targetFileBytes), col("band"), col("bhash"))
+      .sortWithinPartitions("band", "bhash", "doc_id")
+      .write.mode(SaveMode.Overwrite)
+      .option("compression", "zstd")
+      .partitionBy("band")
+      .parquet(dst)
 
   def compact(
       spark: SparkSession,

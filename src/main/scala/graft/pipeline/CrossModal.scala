@@ -123,9 +123,7 @@ object CrossModal {
       batchIds: DataFrame,
       stored: DataFrame,
       edges: DataFrame,
-      batchSmall: Boolean): DataFrame = {
-    def hinted(df: DataFrame): DataFrame =
-      if (batchSmall) broadcast(df) else df
+      hinted: DataFrame => DataFrame): DataFrame = {
     val ct = DedupStore.contractedComponentsOver(
       batchIds.select(col("doc_id").as("id")),
       stored.select(col("doc_id"), col("component")),
@@ -145,11 +143,10 @@ object CrossModal {
       path: String,
       src: EdgeSources,
       broadcastCeiling: Long = Dedup.IncrementalBroadcastCeiling): DataFrame = {
-    val batchSmall = batchDocs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(broadcastCeiling)
     mergeOver(batchDocs.select(col("doc_id")),
       readAssignment(spark, path),
-      incrementalEdges(spark, batchDocs, src), batchSmall)
+      incrementalEdges(spark, batchDocs, src),
+      org.apache.spark.sql.graft.shims.broadcastGate(batchDocs, broadcastCeiling))
   }
 
   /** Fold a batch into the store: merged assignment write-aside → swap,
@@ -282,9 +279,7 @@ object CrossModal {
       survivorsSized: DataFrame,
       src: EdgeSources,
       broadcastCeiling: Long = Dedup.IncrementalBroadcastCeiling): DataFrame = {
-    val small = survivorsSized.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(broadcastCeiling)
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(survivorsSized, broadcastCeiling)
     src.media.foldLeft(DedupStore.survivorTextPairs(
         spark, src.textIndexPath, survivorsSized, src.threshold, hinted)) {
       case (edges, (m, p, maxHamming)) =>

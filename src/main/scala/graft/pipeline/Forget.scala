@@ -194,9 +194,8 @@ object Forget {
       path: String,
       broadcastCeiling: Long = Dedup.IncrementalBroadcastCeiling): DataFrame = {
     val ledger = spark.read.parquet(path).select(col("doc_id"))
-    val small = ledger.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(broadcastCeiling)
-    batch.join(if (small) broadcast(ledger) else ledger, Seq("doc_id"), "left_anti")
+    batch.join(org.apache.spark.sql.graft.shims.broadcastGate(ledger, broadcastCeiling)(ledger),
+      Seq("doc_id"), "left_anti")
   }
 
   /** Content-identical-up-to-duplicates ledger rewrite: distinct ids in

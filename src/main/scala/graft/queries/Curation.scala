@@ -774,9 +774,7 @@ object Curation {
     // snap's measured size also gives the broadcast gate an exact size
     val bw = org.apache.spark.sql.graft.shims.snap(rcStoreOf(batch, k, hashed)
       .select(col("g"), col("rc").as("dn")), "windows.batchCounts")
-    val small =
-      bw.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
-    def hinted(df: org.apache.spark.sql.DataFrame) = if (small) broadcast(df) else df
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(bw, broadcastCeiling)
     val store = spark.read.parquet(path)
     val untouched = store.join(hinted(bw.select(col("g"))), Seq("g"), "left_anti")
     val touched = store.join(hinted(bw.select(col("g"))), Seq("g"))
@@ -818,14 +816,8 @@ object Curation {
       path: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     val st = spark.read.parquet(path)
-    // clamp BEFORE toInt (the IvfIndex.compactIndex rule): a missing-stats
-    // Long.MaxValue estimate must degrade to many partitions, not wrap
-    // negative and collapse the rewrite into one task
-    val nOut = math.max(1,
-      (st.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
     st.groupBy("g").agg(sum(col("rc")).as("rc"))
-      .repartition(nOut, col("g"))
+      .repartition(graft.ops.Compact.filesFor(st, targetFileBytes), col("g"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd").parquet(path + ".next")
     swapInto(spark, path)
@@ -2532,9 +2524,7 @@ object Curation {
         "append, day-2 batch novelty against the grown store",
       NoveltyOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_absorb_k5_pid" +
-        ProcessHandle.current().pid()
+      val path = WarmStores.key(dir, "ngram_store", "absorb", "k5", WarmStores.Pid)
       Curation.synchronized {
         if (!graft.ops.StoreSwap.committed(s, path))
           windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)).write

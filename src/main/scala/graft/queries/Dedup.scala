@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExpressions, Text}
@@ -16,11 +16,11 @@ import graft.functions.{HashExpressions, Text}
 object Dedup {
 
   /** THE banding contract — the single source of every minhash parameter.
-    * Both [[minhashPairs]] (which bands inline, see there) and
-    * [[minhashBands]] (the persisted-index form) read these vals, so the
-    * two paths cannot drift apart; the persisted-index path fingerprints
-    * them into its artifact location ([[indexPathFor]]) so a binary with
-    * different values can never deserialize a stale index.
+    * Every minhash path reads these vals through [[minhashSig]] and
+    * [[bandRows]], so no two paths can band differently; the
+    * persisted-index path fingerprints them into its artifact location
+    * ([[indexPathFor]]) so a binary with different values can never
+    * deserialize a stale index.
     */
   val ShingleK = 3
   val NumPerm = 32
@@ -65,30 +65,18 @@ object Dedup {
       col("doc_id"),
       HashExpressions.shingleHashSet(Text.tokens(col("text")), k = ShingleK).as("sh"))
 
-  /** The (doc_id, band, bhash) LSH band table — the join key of every
-    * minhash path (whole-corpus [[minhashPairs]] AND the incremental
-    * [[incrementalMinhashPairs]]; both MUST band identically or the
-    * incremental candidates diverge from the batch-restricted full run).
-    * The guarantee comes from the shared constants above: minhashPairs
-    * re-states this pipeline inline (signature projected once, then
-    * exploded — the plan shape its benchmark is pinned to) but reads the
-    * SAME (ShingleK, NumPerm, NumBands, RowsPerBand), so the band values
-    * are bit-identical across both forms.
-    */
   /** q183's pid-scoped band-table dump root (the q46 convention for
     * registered side-effect artifacts): Verify and Bench each dump under
     * their own pid, the oracle SQL interpolates the same val, and the
     * driver replays DuckDB in-process with the Verify pid's file on disk.
     */
-  private val q183Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q183_pid${ProcessHandle.current().pid()}"
+  private val q183Dir: String = WarmStores.dumpDir("q183")
 
   /** q34's pid-scoped simhash dump root (the q183/q185 convention): the
     * (doc_id, sim) hash rows dump here and BOTH engines replay banding +
     * band equi-join + hamming verify over the same readback.
     */
-  private val q34Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q34_pid${ProcessHandle.current().pid()}"
+  private val q34Dir: String = WarmStores.dumpDir("q34")
 
   /** q107's pid-scoped dump root: the chunk table AND the chunk band
     * table dump, and BOTH engines replay candidates → verify → fold →
@@ -101,22 +89,74 @@ object Dedup {
     * it is scale-factor-robust; banding recall stays a spec/gauge
     * question — MinHashRecallSpec, q144 — not an oracle assumption.)
     */
-  private val q107Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q107_pid${ProcessHandle.current().pid()}"
+  private val q107Dir: String = WarmStores.dumpDir("q107")
 
+  /** The minhash signature of a text column on the shared constants —
+    * the one signature expression of every document-grain minhash path
+    * (whole-corpus, persisted, incremental batch, streaming guard).
+    */
+  private[graft] def minhashSig(text: Column): Column =
+    HashExpressions.shingleMinHash(Text.tokens(text), k = ShingleK, numPerm = NumPerm)
+
+  /** The one band builder: `rows` with the signature `sig` exploded into
+    * (band, bhash) rows on the shared (NumBands, RowsPerBand), each band
+    * row carrying `keep` (named columns, referenced by name after the
+    * explode). Every banded minhash path goes through here, so the band
+    * values are bit-identical across whole-corpus, persisted, batch and
+    * streaming forms; callers choose only whether the signature is a
+    * projected column (`col("sig")`, the q33 shape: projected once, then
+    * exploded) or computed inside the explode.
+    */
+  private[graft] def bandRows(rows: DataFrame, sig: Column, keep: Column*): DataFrame = {
+    val exploded = rows.select(keep :+ explode(
+      Text.lshBands(sig, numBands = NumBands, rowsPerBand = RowsPerBand)).as("b"): _*)
+    exploded.select(exploded.columns.filter(_ != "b").map(col) ++
+      Seq(col("b.band").as("band"), col("b.bhash").as("bhash")): _*)
+  }
+
+  /** The (doc_id, band, bhash) LSH band table — the persisted-index form
+    * of the banding every minhash path shares ([[bandRows]] over
+    * [[minhashSig]]).
+    */
   def minhashBands(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      explode(Text.lshBands(
-        HashExpressions.shingleMinHash(Text.tokens(col("text")), k = ShingleK, numPerm = NumPerm),
-        numBands = NumBands, rowsPerBand = RowsPerBand)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bhash").as("bhash"))
+    bandRows(docs, minhashSig(col("text")), col("doc_id"))
+
+  /** THE banded-jaccard body behind every text minhash tier (whole
+    * corpus, batch, stored index, survivors, paragraph chunks): band rows
+    * (doc_id, band, bhash) of `x` and `y` meet on (band, bhash) — under
+    * `ids` on (x.doc_id, y.doc_id) when given (`<` for a self-join's
+    * unordered pairs) — the distinct (a, b) candidates then verify by
+    * exact shingle-set jaccard against the (doc_id, sh) frames `shX`
+    * (a's side) and `shY` (b's side), keeping jaccard >= `threshold`.
+    * `hinted` marks the batch-sized inputs of a store probe (`y`, the
+    * candidates, `shY`) for broadcast, so the `x`-side stores stream;
+    * the default leaves every join to the planner.
+    */
+  private[graft] def bandedJaccard(
+      x: DataFrame,
+      y: DataFrame,
+      shX: DataFrame,
+      shY: DataFrame,
+      threshold: Double,
+      ids: Option[(Column, Column) => Column] = Some(_ < _),
+      hinted: DataFrame => DataFrame = identity): DataFrame = {
+    val onBand = col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash")
+    val candidates = x.as("x")
+      .join(hinted(y.as("y")),
+        ids.fold(onBand)(p => onBand && p(col("x.doc_id"), col("y.doc_id"))))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+    hinted(candidates)
+      .join(shX.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
+      .join(hinted(shY.select(col("doc_id").as("b"), col("sh").as("sh_b"))), "b")
+      .select(col("a"), col("b"),
+        HashExpressions.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
 
   /** Candidate near-dup pairs via MinHash LSH (numPerm=32, 8 bands × 4 rows),
-    * verified with exact shingle-set Jaccard >= `threshold`. Bands are
-    * computed inline (not via [[minhashBands]]) so the signature is
-    * projected exactly once before the explode — the q33 plan shape — but
-    * from the same shared banding constants, so the values are identical.
+    * verified with exact shingle-set Jaccard >= `threshold`. The signature
+    * is projected exactly once before the explode — the q33 plan shape.
     *
     * `maxBucketSize` is the DEGENERATE-BUCKET guard for web-scale corpora:
     * a boilerplate fragment shared by millions of documents piles them all
@@ -137,14 +177,8 @@ object Dedup {
       threshold: Double,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val sh = shingled(docs)
-    val sig = docs.select(
-      col("doc_id"),
-      HashExpressions.shingleMinHash(
-        Text.tokens(col("text")), k = ShingleK, numPerm = NumPerm).as("sig"))
-    val allBands = sig.select(
-      col("doc_id"),
-      explode(Text.lshBands(col("sig"), numBands = NumBands, rowsPerBand = RowsPerBand)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bhash").as("bhash"))
+    val allBands = bandRows(
+      docs.select(col("doc_id"), minhashSig(col("text")).as("sig")), col("sig"), col("doc_id"))
     val bands =
       if (maxBucketSize == Int.MaxValue) allBands
       else {
@@ -154,18 +188,7 @@ object Dedup {
           .filter(col("__bsz") <= maxBucketSize)
           .drop("__bsz")
       }
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    candidates
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"),
-        HashExpressions.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    bandedJaccard(bands, bands, sh, sh, threshold)
   }
 
   /** The 100 TB form of q65's cross-source overlap matrix: identical plan
@@ -1456,7 +1479,7 @@ object Dedup {
     * "Paragraph" = non-overlapping `window`-token chunk (the q78 chunker
     * at stride = window; the synthetic corpus has no newlines — on real
     * text, swap the splitter, the graph machinery is unchanged). The
-    * near-dup graph REUSES [[minhashPairs]] verbatim: chunk keys
+    * near-dup graph goes through [[minhashPairs]]' body: chunk keys
     * (doc_id·[[ParagraphChunkStride]] + chunk_idx, GUARDED — the key
     * expression raises on any chunk_idx ≥ 2^22 or doc_id ≥ 2^41 rather
     * than silently colliding with a neighboring doc's keys) pose as
@@ -1529,20 +1552,11 @@ object Dedup {
       chunks: DataFrame,
       bands: DataFrame,
       threshold: Double): DataFrame = {
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.ck") < col("y.ck"))
-      .select(col("x.ck").as("a"), col("y.ck").as("b"))
-      .distinct()
+    // chunk keys pose as doc_ids through the shared body (ck → doc_id in,
+    // pairs of chunk keys out)
     val sh = shingled(chunks.select(col("ck").as("doc_id"), col("ptext").as("text")))
-      .select(col("doc_id").as("ck"), col("sh"))
-    val pairs = candidates
-      .join(sh.select(col("ck").as("a"), col("sh").as("sh_a")), "a")
-      .join(sh.select(col("ck").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"),
-        HashExpressions.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val ckBands = bands.select(col("ck").as("doc_id"), col("band"), col("bhash"))
+    val pairs = bandedJaccard(ckBands, ckBands, sh, sh, threshold)
     val comps = graft.operators.ConnectedComponents.run(
       chunks.select(col("ck").as("id")),
       pairs.select(col("a").as("src"), col("b").as("dst")))

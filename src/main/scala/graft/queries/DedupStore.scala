@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExpressions, Text}
 import graft.queries.Dedup.{
-  shingled, minhashBands, minhashPairs, dedupManifest, rankRepresentatives,
+  shingled, minhashBands, minhashPairs, minhashSig, bandRows, bandedJaccard,
+  dedupManifest, rankRepresentatives,
   IncrementalBroadcastCeiling, ShingleK, NumPerm, NumBands, RowsPerBand,
   KernelVersion, ExactPairPrefixSql, manifestOracleSql}
 
@@ -97,23 +98,11 @@ object DedupStore {
       srcPath: String,
       dstPath: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    val bands = spark.read.parquet(s"$srcPath/bands")
-    // clamp BEFORE toInt (see IvfIndex.compactIndex): a missing-stats
-    // Long.MaxValue estimate must degrade to many partitions, not wrap
-    // negative and collapse the rewrite into one task
-    def nOut(df: DataFrame) = math.max(1,
-      (df.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
-    bands
-      .repartition(nOut(bands), col("band"), col("bhash"))
-      .sortWithinPartitions("band", "bhash", "doc_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$dstPath/bands")
+    graft.ops.Compact.bandStore(
+      spark.read.parquet(s"$srcPath/bands"), s"$dstPath/bands", targetFileBytes)
     val sh = spark.read.parquet(s"$srcPath/shingles")
     sh
-      .repartition(nOut(sh), col("doc_id"))
+      .repartition(graft.ops.Compact.filesFor(sh, targetFileBytes), col("doc_id"))
       .sortWithinPartitions("doc_id")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd")
@@ -150,14 +139,9 @@ object DedupStore {
       indexPath: String,
       threshold: Double,
       broadcastCeiling: Long = IncrementalBroadcastCeiling): DataFrame = {
-    // plan-time estimate, no job: parquet file bytes through whatever
-    // filters Catalyst can reason about. Overestimates (a filter without
-    // CBO stats keeps the scan's size) only make the gate MORE cautious.
-    // (Taken on the INPUT frame, before the snap below, so the gate's
-    // semantics are unchanged by the materialization.)
-    val batchSmall =
-      newDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
-    def hinted(df: DataFrame): DataFrame = if (batchSmall) broadcast(df) else df
+    // gated on the INPUT frame, before the snap below, so the gate's
+    // semantics are unchanged by the materialization
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(newDocs, broadcastCeiling)
     // the batch's shingle set AND minhash signature in ONE projection,
     // snapped ONCE: the probe's band arm, the verify's sh_new arm and the
     // within-batch pair run each referenced the batch text otherwise, so
@@ -169,43 +153,17 @@ object DedupStore {
     val hashed = org.apache.spark.sql.graft.shims.snap(newDocs.select(
       col("doc_id"),
       HashExpressions.shingleHashSet(Text.tokens(col("text")), k = ShingleK).as("sh"),
-      HashExpressions.shingleMinHash(
-        Text.tokens(col("text")), k = ShingleK, numPerm = NumPerm).as("sig")), "store.batchHashes")
-    // band values bit-identical to [[minhashBands]]: same shared constants,
-    // same lshBands expression — only the signature's source frame differs
-    val batchBands = hashed.select(
-      col("doc_id"),
-      explode(Text.lshBands(
-        col("sig"), numBands = NumBands, rowsPerBand = RowsPerBand)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bhash").as("bhash"))
-    val newBands = batchBands.withColumnRenamed("doc_id", "new_id")
-    val newSh = hashed.select(col("doc_id").as("new_id"), col("sh").as("sh_new"))
-    val candidates = spark.read.parquet(s"$indexPath/bands")
-      .join(hinted(newBands), Seq("band", "bhash"))
-      .select(col("new_id"), col("doc_id").as("existing_id"))
-      .distinct()
-    val crossings = spark.read.parquet(s"$indexPath/shingles")
-      .select(col("doc_id").as("existing_id"), col("sh").as("sh_old"))
-      .join(hinted(candidates), "existing_id")
-      .join(hinted(newSh), "new_id")
-      .select(col("new_id"), col("existing_id"),
-        HashExpressions.jaccardSorted(col("sh_new"), col("sh_old")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    // within-batch arm: [[minhashPairs]]' candidate self-join + verify
-    // verbatim, over the snapped frame (identical band values, identical
-    // jaccard — DedupSpec/DedupIndexSpec pin the pair set)
-    val wcand = batchBands.as("x")
-      .join(batchBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val withinBatch = wcand
-      .join(hashed.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-      .join(hashed.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a").as("new_id"), col("b").as("existing_id"),
-        HashExpressions.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      minhashSig(col("text")).as("sig")), "store.batchHashes")
+    val batchBands = bandRows(hashed, col("sig"), col("doc_id"))
+    // crossings: the stored index streams as x against the hinted batch
+    // (y, candidates, batch shingles); no id order between the sides
+    val crossings = bandedJaccard(
+        spark.read.parquet(s"$indexPath/bands"), batchBands,
+        spark.read.parquet(s"$indexPath/shingles"), hashed, threshold,
+        ids = None, hinted = hinted)
+      .select(col("b").as("new_id"), col("a").as("existing_id"), col("jaccard"))
+    val withinBatch = bandedJaccard(batchBands, batchBands, hashed, hashed, threshold)
+      .select(col("a").as("new_id"), col("b").as("existing_id"), col("jaccard"))
     crossings.unionByName(withinBatch)
   }
 
@@ -225,19 +183,7 @@ object DedupStore {
       threshold: Double): DataFrame = {
     val bands = spark.read.parquet(s"$indexPath/bands")
     val sh = spark.read.parquet(s"$indexPath/shingles")
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    candidates
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"),
-        graft.functions.HashExpressions.jaccardSorted(col("sh_a"), col("sh_b"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    bandedJaccard(bands, bands, sh, sh, threshold)
   }
 
   /** Persist the corpus' day-N dedup MANIFEST (doc_id, component, n_chars,
@@ -319,9 +265,7 @@ object DedupStore {
       indexPath: String,
       threshold: Double,
       broadcastCeiling: Long): ContractedMerge = {
-    val batchSmall =
-      newDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
-    def hinted(df: DataFrame): DataFrame = if (batchSmall) broadcast(df) else df
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(newDocs, broadcastCeiling)
     val pairs = incrementalMinhashPairs(spark, newDocs, indexPath, threshold)
       .select(col("new_id"), col("existing_id"))
     contractedComponentsOver(newDocs.select(col("doc_id").as("id")), stored, pairs, hinted)
@@ -461,9 +405,7 @@ object DedupStore {
       indexPath: String,
       broadcastCeiling: Long = IncrementalBroadcastCeiling): DataFrame = {
     val store = spark.read.parquet(s"$indexPath/exact_fp")
-    val batchSmall =
-      newDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
-    def hinted(df: DataFrame): DataFrame = if (batchSmall) broadcast(df) else df
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(newDocs, broadcastCeiling)
     val batch = newDocs.select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
     val withinBatch = batch.groupBy("fp").agg(min(col("doc_id")).as("wmin"))
     // store streams against the broadcast batch fingerprints (inner join
@@ -548,6 +490,26 @@ object DedupStore {
     graft.ops.StoreSwap.swapInto(spark, sub)
   }
 
+  /** Verified text near-dup pairs AMONG a bounded doc set, index-backed
+    * (factored from [[retractManifest]], shared with the cross-modal
+    * retract): the store's band rows restricted to the survivor set
+    * equi-join on (band, bhash), verified by the stored shingle sets —
+    * the corpus-sized artifacts stream against the hinted survivor set,
+    * the same O(touched) shape as the absorb. Output (a, b), a < b.
+    */
+  private[graft] def survivorTextPairs(
+      spark: org.apache.spark.sql.SparkSession,
+      indexPath: String,
+      survivors: DataFrame,
+      threshold: Double,
+      hinted: DataFrame => DataFrame): DataFrame = {
+    val sb = spark.read.parquet(s"$indexPath/bands")
+      .join(hinted(survivors), Seq("doc_id"))
+    val shs = spark.read.parquet(s"$indexPath/shingles")
+      .join(hinted(survivors), Seq("doc_id"))
+    bandedJaccard(sb, sb, shs, shs, threshold).select(col("a"), col("b"))
+  }
+
   /** q149: RETRACT a previously-absorbed batch from the dedup manifest —
     * the un-absorb the daily loop needs when the gauges (q123 drift, q126
     * audit, q144 recall) flag a batch AFTER [[absorbBatch]] ran. Exactly
@@ -566,38 +528,6 @@ object DedupStore {
     * corpus MINUS the batch — equality is the retract-equals-rebuild
     * contract, the mirror image of q110/q112's.
     */
-  /** Verified text near-dup pairs AMONG a bounded doc set, index-backed
-    * (factored from [[retractManifest]], shared with the cross-modal
-    * retract): the store's band rows restricted to the survivor set
-    * equi-join on (band, bhash), verified by the stored shingle sets —
-    * the corpus-sized artifacts stream against the hinted survivor set,
-    * the same O(touched) shape as the absorb. Output (a, b), a < b.
-    */
-  private[graft] def survivorTextPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      survivors: DataFrame,
-      threshold: Double,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val sb = spark.read.parquet(s"$indexPath/bands")
-      .join(hinted(survivors), Seq("doc_id"))
-    val cand = sb.as("x")
-      .join(sb.as("y"),
-        col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val shs = spark.read.parquet(s"$indexPath/shingles")
-      .join(hinted(survivors), Seq("doc_id"))
-    cand
-      .join(shs.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-      .join(shs.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"),
-        HashExpressions.jaccardSorted(col("sh_a"), col("sh_b")).as("j"))
-      .filter(col("j") >= threshold)
-      .select(col("a"), col("b"))
-  }
-
   def retractManifest(
       spark: org.apache.spark.sql.SparkSession,
       batchIds: DataFrame,
@@ -606,9 +536,7 @@ object DedupStore {
       threshold: Double,
       broadcastCeiling: Long = IncrementalBroadcastCeiling): DataFrame = {
     val store = spark.read.parquet(manifestSubdir(indexPath, threshold))
-    val batchSmall =
-      batchIds.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(broadcastCeiling)
-    def hinted(df: DataFrame): DataFrame = if (batchSmall) broadcast(df) else df
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(batchIds, broadcastCeiling)
     val ids = batchIds.select(col("doc_id"))
     val touched = store.join(hinted(ids), Seq("doc_id"))
       .select(col("component")).distinct()
@@ -902,7 +830,7 @@ object DedupStore {
     * of serving stale bands, and an unchanged dir warm-serves across
     * calls and JVM restarts.
     */
-  private[queries] def bandIndexFor(corpus: DataFrame, dir: String): String =
+  private[graft] def bandIndexFor(corpus: DataFrame, dir: String): String =
     WarmStores.artifact(corpus.sparkSession, dir, "documents", "band_index", BandParams)(
       "shingles")(persistBandIndex(corpus, _))
 
@@ -1029,7 +957,7 @@ object DedupStore {
       incrementalOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val src = bandIndexFor(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
-      val dst = src + "_compact_pid" + ProcessHandle.current().pid()
+      val dst = src + "_compact_" + WarmStores.Pid
       compactBandIndex(s, src, dst)
       incrementalMinhashPairs(
           s, docs.filter(pmod(col("doc_id"), lit(5)) === 0), dst, threshold = 0.7)

@@ -23,15 +23,13 @@ object Extras {
     * the driver replays it in-process with the Verify pid's file still on
     * disk, so the readback and DuckDB always see the same bytes.
     */
-  private val q46Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q46_pid${ProcessHandle.current().pid()}"
+  private val q46Dir: String = WarmStores.dumpDir("q46")
 
   /** q189's pid-scoped store-row dump root (the q183 convention): each
     * media store family's doc-key rows dump here and BOTH engines run
     * the residual-count audit over the same readback.
     */
-  private val q189Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q189_pid${ProcessHandle.current().pid()}"
+  private val q189Dir: String = WarmStores.dumpDir("q189")
 
   /** The audit families q189 dumps, in the exact store-name vocabulary
     * [[graft.pipeline.Forget.families]] emits for a media-only config
@@ -45,18 +43,15 @@ object Extras {
     * folds over the readback and DuckDB replays the fold via the
     * recursive CC CTE over the identical edge rows.
     */
-  private val q191Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q191_pid${ProcessHandle.current().pid()}"
+  private val q191Dir: String = WarmStores.dumpDir("q191")
 
   /** Per-query pid-scoped dump roots for the media incremental trio's
     * dump-readback oracles (index rows + batch hash rows; video adds the
     * vcounts denominators).
     */
-  private def mediaDumpDir(q: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${q}_pid${ProcessHandle.current().pid()}"
-  private val q185Dir = mediaDumpDir("q185")
-  private val q186Dir = mediaDumpDir("q186")
-  private val q187Dir = mediaDumpDir("q187")
+  private val q185Dir = WarmStores.dumpDir("q185")
+  private val q186Dir = WarmStores.dumpDir("q186")
+  private val q187Dir = WarmStores.dumpDir("q187")
 
   /** q192's pid-scoped dump root: the warm store assignment + the
     * batch's union edge set, so DuckDB replays the contracted merge as a
@@ -64,13 +59,13 @@ object Extras {
     * the q110 contraction argument made driver-checkable without
     * replaying any modality kernel.
     */
-  private val q192Dir = mediaDumpDir("q192")
+  private val q192Dir = WarmStores.dumpDir("q192")
 
   /** q196's pid-scoped dump root: (artifact, doc_id, sig) rows for every
     * cross-modal store arm; both engines replay the dup/orphan reconcile
     * over the identical readback (q195's shape at the media tier).
     */
-  private val q196Dir = mediaDumpDir("q196")
+  private val q196Dir = WarmStores.dumpDir("q196")
 
   /** The q185/q186 oracle: DuckDB recomputes the batch's 4×16-bit bands
     * off the dumped (doc_id, dh) rows — `>>` is arithmetic (sign-
@@ -808,8 +803,7 @@ object Extras {
         batch.select(col("doc_id")),
         s.read.parquet(s"$q192Dir/assignment.parquet"),
         s.read.parquet(s"$q192Dir/pairs.parquet"),
-        batchSmall = batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(Dedup.IncrementalBroadcastCeiling))
+        org.apache.spark.sql.graft.shims.broadcastGate(batch, Dedup.IncrementalBroadcastCeiling))
     },
 
     // MEDIA-STORE SYNC GAUGE ([[mediaStoreSync]]) — q195's reconcile

@@ -838,9 +838,7 @@ object Release {
         |    AS crosses_boundary
         |FROM c ORDER BY source, pack_id, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val storePath = s"${sys.props("java.io.tmpdir")}/graft_packstore_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_p512_pid" +
-        ProcessHandle.current().pid()
+      val storePath = WarmStores.key(dir, "packstore", "p512", WarmStores.Pid)
       Curation.synchronized {
         if (!graft.ops.StoreSwap.committed(s, storePath)) {
           packManifest(docs.filter(col("doc_id") % 7 =!= 0)).write
@@ -956,9 +954,7 @@ object Release {
         |  CAST(oversize AS INT) AS oversize
         |FROM r ORDER BY source, bucket_slot, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val storePath = s"${sys.props("java.io.tmpdir")}/graft_bpackstore_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_b512_pid" +
-        ProcessHandle.current().pid()
+      val storePath = WarmStores.key(dir, "bpackstore", "b512", WarmStores.Pid)
       Curation.synchronized {
         if (!graft.ops.StoreSwap.committed(s, storePath)) {
           boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
@@ -997,9 +993,7 @@ object Release {
         |FROM r ORDER BY source, bucket_slot, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 7 === 0)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_bpackretract_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_b512_pid" +
-        ProcessHandle.current().pid()
+      val path = WarmStores.key(dir, "bpackretract", "b512", WarmStores.Pid)
       Curation.synchronized {
         boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
@@ -1475,9 +1469,7 @@ object Release {
       // path would race — one deleting files the other is reading for its
       // manifest. The pid token isolates them; within a process, calls are
       // sequential and the rewrite is deterministic.
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_p512s2048_pid" +
-        ProcessHandle.current().pid()
+      val out = WarmStores.key(dir, "shards", "p512s2048", WarmStores.Pid)
       val epochDir = graft.ops.ShardExport.write(
         Tables(s, dir, "documents"), out, epoch = 1, packTokens = 512, shardTokens = 2048)
       graft.ops.ShardExport.manifest(s, epochDir)
@@ -1501,9 +1493,7 @@ object Release {
         "reconciled against the stored manifest, status per shard",
       s"""SELECT shard_id, 'ok' AS status, n_seqs, n_docs, n_tokens, content_hash
          |FROM ($ShardManifestSelectSql) m ORDER BY shard_id""".stripMargin) { (s, dir) =>
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_audit_p512s2048_pid" +
-        ProcessHandle.current().pid()
+      val out = WarmStores.key(dir, "shards", "audit", "p512s2048", WarmStores.Pid)
       val epochDir = s"$out/epoch=1"
       val manifestStore = s"$out/manifest_store"
       Curation.synchronized {
@@ -1595,9 +1585,7 @@ object Release {
       // is the honest day-boundary work: reset any prior append, append
       // the batch, manifest. Output is deterministic either way (the
       // append re-deals identically over the identical base).
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_incr_p512s2048_pid" +
-        ProcessHandle.current().pid()
+      val out = WarmStores.key(dir, "shards", "incr", "p512s2048", WarmStores.Pid)
       val docs = Tables(s, dir, "documents")
       val marker = java.nio.file.Paths.get(out, "_BASE_MAX")
       val baseManifestPath = s"$out/base_manifest"

@@ -46,18 +46,16 @@ object Similarity {
     * BOTH engines score + rank the same readback — the driver replays the
     * oracle in-process with the Verify pid's files still on disk.
     */
-  private def annDumpDir(q: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${q}_pid${ProcessHandle.current().pid()}"
-  private val q38Dir = annDumpDir("q38")
-  private val q42Dir = annDumpDir("q42")
-  private val q56Dir = annDumpDir("q56")
-  private val q62Dir = annDumpDir("q62")
-  private val q71Dir = annDumpDir("q71")
-  private val q95Dir = annDumpDir("q95")
-  private val q117Dir = annDumpDir("q117")
-  private val q173Dir = annDumpDir("q173")
-  private val q193Dir = annDumpDir("q193")
-  private val q195Dir = annDumpDir("q195")
+  private val q38Dir = WarmStores.dumpDir("q38")
+  private val q42Dir = WarmStores.dumpDir("q42")
+  private val q56Dir = WarmStores.dumpDir("q56")
+  private val q62Dir = WarmStores.dumpDir("q62")
+  private val q71Dir = WarmStores.dumpDir("q71")
+  private val q95Dir = WarmStores.dumpDir("q95")
+  private val q117Dir = WarmStores.dumpDir("q117")
+  private val q173Dir = WarmStores.dumpDir("q173")
+  private val q193Dir = WarmStores.dumpDir("q193")
+  private val q195Dir = WarmStores.dumpDir("q195")
 
   /** The shared ANN dump-readback oracle: exact-cosine top-`k` over the
     * DUMPED candidate set — q36's oracle template with the corpus join
@@ -92,9 +90,8 @@ object Similarity {
     */
   private def rankCandidateReadback(
       cand: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val small = cand.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(graft.queries.Dedup.IncrementalBroadcastCeiling)
-    val hinted = if (small) broadcast(cand) else cand
+    val hinted = org.apache.spark.sql.graft.shims.broadcastGate(
+      cand, graft.queries.Dedup.IncrementalBroadcastCeiling)(cand)
     val q = corpus.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val n = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     topKPerQuery(
@@ -310,9 +307,8 @@ object Similarity {
     val nv = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     // size-gated like rankCandidateReadback: at maxProbe the candidate set
     // approaches |queries| x |corpus| and must not force-broadcast
-    val candSmall = candIds.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(graft.queries.Dedup.IncrementalBroadcastCeiling)
-    val cand = (if (candSmall) broadcast(candIds) else candIds)
+    val cand = org.apache.spark.sql.graft.shims.broadcastGate(
+        candIds, graft.queries.Dedup.IncrementalBroadcastCeiling)(candIds)
       .join(nv, Seq("neighbor_id")).join(qv, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("probe_rank"),
         Vectors.cosine(col("qv"), col("cv")).as("sim"))

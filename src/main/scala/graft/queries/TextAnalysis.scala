@@ -23,8 +23,7 @@ object TextAnalysis {
     * ANN-family dump-readback convention — see
     * [[graft.operators.BpeTrainer.learnMerges]]).
     */
-  private val Q69Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q69_pid${ProcessHandle.current().pid()}"
+  private val Q69Dir: String = WarmStores.dumpDir("q69")
 
   // Portable token count: identical length/replace arithmetic both engines.
   private val tokSql =

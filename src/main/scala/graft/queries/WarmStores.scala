@@ -50,6 +50,19 @@ private[graft] object WarmStores {
     s"${sys.props("java.io.tmpdir")}/graft_${name}_" +
       java.lang.Integer.toHexString(dir.hashCode) + params.map("_" + _).mkString
 
+  /** The process token `pid<pid>`: the last parameter of a store that
+    * each process rewrites for itself (Verify and Bench running side by
+    * side must never share one), and the suffix of every [[dumpDir]].
+    */
+  val Pid: String = s"pid${ProcessHandle.current().pid()}"
+
+  /** The pid-scoped dump root `tmpdir/graft_<q>_pid<pid>` of a registered
+    * query's side-effect artifacts: the engine dumps there, the oracle
+    * SQL interpolates the same path, and DuckDB replays over the files
+    * the engine wrote.
+    */
+  def dumpDir(q: String): String = s"${sys.props("java.io.tmpdir")}/graft_${q}_$Pid"
+
   /** The warm store `name` over `table` of `dir`: serves the artifact at
     * [[key]] plus [[dirTag]] when every `committed` subdirectory (none =
     * the artifact root itself) carries its `_SUCCESS`, else runs

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.{HashExpressions, Text}
 import graft.queries.{Dedup, DedupStore}
+import graft.queries.Dedup.{bandRows, minhashSig}
 
 /** Streaming near-dup guard against the PERSISTED corpus band index — the
   * online form of the batch incremental dedup (q66): documents arriving as
@@ -57,17 +58,10 @@ object IndexDedupStream {
       .select(col("doc_id").as("existing_id"), col("sh").as("sh_old"))
     // one projection computes signature AND shingle set; the set rides
     // along so the verify join needs no second text pass
-    val banded = docs
-      .withWatermark("ts", watermarkDelay)
-      .select(col("doc_id"), col("ts"),
-        HashExpressions.shingleHashSet(
-          Text.tokens(col("text")), k = Dedup.ShingleK).as("sh_new"),
-        explode(Text.lshBands(
-          HashExpressions.shingleMinHash(
-            Text.tokens(col("text")), k = Dedup.ShingleK, numPerm = Dedup.NumPerm),
-          numBands = Dedup.NumBands, rowsPerBand = Dedup.RowsPerBand)).as("b"))
-      .select(col("doc_id"), col("ts"), col("sh_new"),
-        col("b.band").as("band"), col("b.bhash").as("bhash"))
+    val banded = bandRows(docs.withWatermark("ts", watermarkDelay),
+      minhashSig(col("text")), col("doc_id"), col("ts"),
+      HashExpressions.shingleHashSet(
+        Text.tokens(col("text")), k = Dedup.ShingleK).as("sh_new"))
     banded
       .join(bands, Seq("band", "bhash")) // stream-static: stateless
       .join(shingles, Seq("existing_id")) // stream-static: stateless

@@ -307,12 +307,7 @@ object ReleaseIngestStream {
         Seq("doc_id"), "left_anti")
       .select(col("source"), col("doc_id"), col("n_toks"),
         col("pack_id"), col("shard_id"), col("status"))
-    // clamp BEFORE toInt (the IvfIndex.compactIndex lesson): an
-    // unavailable-stats fallback must degrade to many partitions, not one
-    val nOut = math.max(1,
-      (live.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(targetFileBytes))
-        .min(BigInt(1 << 20)).toInt)
-    live.repartition(nOut, col("shard_id"))
+    live.repartition(graft.ops.Compact.filesFor(live, targetFileBytes), col("shard_id"))
       .sortWithinPartitions("shard_id", "pack_id", "doc_id")
       .write.mode(SaveMode.Overwrite)
       .option("compression", "zstd").parquet(releaseDir + ".next")

@@ -91,6 +91,20 @@ object shims {
     session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
 
+  /** The plan-time broadcast gate: a hint that broadcasts its frame when
+    * `measured`'s optimized-plan size estimate (no job) is at or under
+    * `ceiling` bytes, and leaves it to the planner above. Overestimates
+    * (a filter without CBO stats keeps its scan's size) only make the
+    * gate more cautious; an unbounded input above the ceiling is a
+    * driver OOM if force-broadcast, never an optimization.
+    */
+  def broadcastGate(
+      measured: org.apache.spark.sql.DataFrame,
+      ceiling: Long): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+    if (measured.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(ceiling))
+      org.apache.spark.sql.functions.broadcast(_)
+    else identity
+
   /** Conf key: when `true`, [[snap]] materializes through RELIABLE
     * `checkpoint` (files under `spark.graft.snap.dir`, lineage-free
     * recovery on executor loss) instead of `localCheckpoint` (executor

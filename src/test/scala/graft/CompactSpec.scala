@@ -7,6 +7,13 @@ import graft.queries.Tables
 
 class CompactSpec extends SparkSpec {
 
+  test("filesFor: the size quotient, at least 1, clamped to 2^20") {
+    val target = 128L << 20
+    assert(Compact.filesFor(BigInt(Long.MaxValue), target) == (1 << 20))
+    assert(Compact.filesFor(BigInt(10), target) == 1)
+    assert(Compact.filesFor(BigInt(target) * 37, target) == 37)
+  }
+
   test("compaction shrinks file count, preserves content, restores sort") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_test").resolve("t").toString
     val ev = Tables.raw(spark, "/root/testdata/sf0.001", "events")

@@ -61,6 +61,30 @@ class DedupIndexSpec extends SparkSpec {
       assert(inc == full, s"$d: incremental=$inc vs restricted-full=$full")
       assert(inc.keySet.forall { case (a, b) =>
         newIds.contains(a) || newIds.contains(b) }, "every pair must touch the batch")
+      // the within-batch arm alone: pairs with both endpoints in the batch
+      def withinBatch(m: Map[(Long, Long), Double]) =
+        m.filter { case ((a, b), _) => newIds.contains(a) && newIds.contains(b) }
+      assert(withinBatch(inc) == withinBatch(full), s"$d: within-batch arm diverges")
+      // the other stored arms of the banded-jaccard body, over q66's own
+      // persisted index: the whole-index self-join equals a full run over
+      // the indexed docs ...
+      val indexed = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+      val path = graft.queries.DedupStore.bandIndexFor(indexed, d)
+      def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      val stored = pairs(graft.queries.DedupStore.storedMinhashPairs(spark, path, 0.7))
+      assert(stored == pairs(graft.queries.Dedup.minhashPairs(indexed, threshold = 0.7)),
+        s"$d: stored-index pairs diverge from the full run over the indexed docs")
+      assert(stored.keySet.forall { case (a, b) => a < b }, s"$d: pairs must be a < b")
+      // ... and the survivor-restricted form is exactly that pair set with
+      // both endpoints among the survivors
+      val survivors = indexed.filter(pmod(col("doc_id"), lit(7)) =!= 0).select("doc_id")
+      val surv = graft.queries.DedupStore
+        .survivorTextPairs(spark, path, survivors, 0.7, identity)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val restricted = stored.keySet.filter { case (a, b) => a % 7 != 0 && b % 7 != 0 }
+      assert(surv == restricted, s"$d: survivor pairs=$surv vs restricted=$restricted")
+      assert(restricted.size < stored.size, s"$d: the survivor set must cut some pairs")
     }
   }
 

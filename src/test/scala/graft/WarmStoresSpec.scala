@@ -88,6 +88,15 @@ class WarmStoresSpec extends SparkSpec {
     assert(WarmStores.dirTag(spark, td, "documents") == tag, "the tag is stable")
   }
 
+  test("pid-scoped dump roots and stores keep their literal paths") {
+    // the oracle SQL interpolates these paths: they must not move
+    val (tmp, pid) = (sys.props("java.io.tmpdir"), ProcessHandle.current().pid())
+    assert(WarmStores.dumpDir("q183") == s"$tmp/graft_q183_pid$pid")
+    assert(WarmStores.key(dir, "shards", "audit", "p512s2048", WarmStores.Pid) ==
+      s"$tmp/graft_shards_" + java.lang.Integer.toHexString(dir.hashCode) +
+        "_audit_p512s2048_pid" + pid)
+  }
+
   test("no java.nio _SUCCESS existence probe in src/main: use StoreSwap.committed") {
     val cwd = new java.io.File(sys.props("user.dir")).getAbsoluteFile
     val root = Iterator.iterate(cwd)(_.getParentFile).takeWhile(_ != null)
