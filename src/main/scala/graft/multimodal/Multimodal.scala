@@ -1,7 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.StoreSwap
 
 /** Multimodal column plumbing: media as opaque `binary` columns + typed
   * metadata, with decode / feature-extract as partition-local typed
@@ -701,9 +703,7 @@ object Multimodal {
     def persist(media: DataFrame, path: String): Unit = {
       val rows = rowsOf(media, "index")
       graft.ops.Bucketing.writePartitioned(fingerprintBands(rows), s"$path/dhbands", Seq("band"))
-      if (frameGrained)
-        frameCounts(rows).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$path/vcounts")
+      if (frameGrained) StoreSwap.write(frameCounts(rows), s"$path/vcounts")
     }
 
     /** APPEND a batch: new files in the touched `band=` directories (and
@@ -714,11 +714,9 @@ object Multimodal {
       */
     def appendTo(media: DataFrame, path: String): Unit = {
       val rows = rowsOf(media, "append")
-      fingerprintBands(rows).write.mode(SaveMode.Append)
-        .option("compression", "zstd").partitionBy("band").parquet(s"$path/dhbands")
-      if (frameGrained)
-        frameCounts(rows).write.mode(SaveMode.Append)
-          .option("compression", "zstd").parquet(s"$path/vcounts")
+      StoreSwap.write(fingerprintBands(rows), s"$path/dhbands", append = true,
+        partitionBy = Seq("band"))
+      if (frameGrained) StoreSwap.write(frameCounts(rows), s"$path/vcounts", append = true)
     }
 
     /** RETRACT a batch by doc id — the media tier's entry in the un-absorb
@@ -739,15 +737,15 @@ object Multimodal {
       */
     def retractFrom(spark: SparkSession, batchIds: DataFrame, path: String): Unit = {
       val ids = broadcast(batchIds.select(col("doc_id").as("gone")))
-      readBandStore(spark, path).join(ids, item(col("doc_id")) === col("gone"), "left_anti")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").partitionBy("band").parquet(s"$path/dhbands.next")
+      StoreSwap.stage(
+        readBandStore(spark, path).join(ids, item(col("doc_id")) === col("gone"), "left_anti"),
+        s"$path/dhbands", partitionBy = Seq("band"))
       if (frameGrained)
-        readVcounts(spark, path).join(ids, col("vid") === col("gone"), "left_anti")
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$path/vcounts.next")
-      graft.ops.StoreSwap.swapInto(spark, s"$path/dhbands")
-      if (frameGrained) graft.ops.StoreSwap.swapInto(spark, s"$path/vcounts")
+        StoreSwap.stage(
+          readVcounts(spark, path).join(ids, col("vid") === col("gone"), "left_anti"),
+          s"$path/vcounts")
+      StoreSwap.swapInto(spark, s"$path/dhbands")
+      if (frameGrained) StoreSwap.swapInto(spark, s"$path/vcounts")
     }
 
     /** COMPACT the index CONTENT-IDENTICALLY into `dstPath` (the
@@ -768,11 +766,10 @@ object Multimodal {
         readBandStore(spark, srcPath), s"$dstPath/dhbands", targetFileBytes)
       if (frameGrained) {
         val counts = readVcounts(spark, srcPath)
-        counts
-          .repartition(graft.ops.Compact.filesFor(counts, targetFileBytes), col("vid"))
-          .sortWithinPartitions("vid")
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$dstPath/vcounts")
+        StoreSwap.write(
+          counts.repartition(graft.ops.Compact.filesFor(counts, targetFileBytes), col("vid"))
+            .sortWithinPartitions("vid"),
+          s"$dstPath/vcounts")
       }
     }
 

@@ -160,9 +160,7 @@ object BpeTrainer {
             // .limit(1)`: max pc, ties by UNSIGNED BYTE-wise UTF-8
             // comparison — exactly Spark's UTF8String binary order.
             val path = s"$d/pairs_r$round"
-            pairTable.withColumn("round", lit(round))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("compression", "zstd").parquet(path)
+            graft.ops.StoreSwap.write(pairTable.withColumn("round", lit(round)), path)
             readbackArgmax(loop, path)
           case None =>
             pairTable

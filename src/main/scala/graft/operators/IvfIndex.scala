@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.Vectors
+import graft.ops.StoreSwap
 
 /** IVF (inverted-file) approximate nearest neighbor — the centroid-
   * quantized scale path for similarity search, alongside the sign-bit LSH
@@ -228,11 +229,8 @@ object IvfIndex {
       newVectors: DataFrame,
       path: String,
       embCol: String = "embedding"): Unit =
-    assign(model, newVectors, embCol).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("bucket")
-      .parquet(path)
+    StoreSwap.write(assign(model, newVectors, embCol), path, append = true,
+      partitionBy = Seq("bucket"))
 
   /** RETRACT previously-appended vectors from a persisted index — the
     * vector store's entry in the un-absorb family (dedup q149, window
@@ -291,12 +289,10 @@ object IvfIndex {
       .filter(col("bucket").isin(touched: _*))
     val cols = idx.columns.toSeq
     try {
-      idx.join(broadcast(assigned.select(col(idCol))), Seq(idCol), "left_anti")
-        .select(cols.map(col): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(path + ".retract")
+      StoreSwap.write(
+        idx.join(broadcast(assigned.select(col(idCol))), Seq(idCol), "left_anti")
+          .select(cols.map(col): _*),
+        path + ".retract", partitionBy = Seq("bucket"))
     } catch {
       case e: Throwable =>
         // no live bucket has been touched yet — shed the staging dir so a
@@ -362,13 +358,10 @@ object IvfIndex {
       dstPath: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     val idx = spark.read.parquet(srcPath).dropDuplicates("bucket", "vec_id")
-    idx
-      .repartition(graft.ops.Compact.filesFor(idx, targetFileBytes), col("bucket"))
-      .sortWithinPartitions("bucket", "vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("bucket")
-      .parquet(dstPath)
+    StoreSwap.write(
+      idx.repartition(graft.ops.Compact.filesFor(idx, targetFileBytes), col("bucket"))
+        .sortWithinPartitions("bucket", "vec_id"),
+      dstPath, partitionBy = Seq("bucket"))
   }
 
   /** Int8-QUANTIZED corpus side of the index: (id, q8, bucket), where

@@ -218,11 +218,8 @@ object PqIndex {
       newVectors: DataFrame,
       path: String,
       embCol: String = "embedding"): Unit =
-    assign(ivf, pq, newVectors, embCol).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("bucket")
-      .parquet(path)
+    graft.ops.StoreSwap.write(assign(ivf, pq, newVectors, embCol), path, append = true,
+      partitionBy = Seq("bucket"))
 
   /** IVFADC over a PERSISTED [[assign]]-layout code index — the shape a
     * 100 TB deployment actually runs (the q56/q62 story at the PQ tier):

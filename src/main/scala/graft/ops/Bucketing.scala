@@ -50,11 +50,6 @@ object Bucketing {
   def writePartitioned(
       df: DataFrame,
       path: String,
-      partitionCols: Seq[String],
-      codec: String = "zstd"): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("compression", codec)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
+      partitionCols: Seq[String]): Unit =
+    StoreSwap.write(df, path, partitionBy = partitionCols)
 }

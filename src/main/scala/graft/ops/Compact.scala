@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Small-file compaction — the maintenance half of a streaming lake.
@@ -13,14 +13,9 @@ import org.apache.spark.sql.functions.col
   * ~`targetBytes`-sized files, re-sorted by `sortCol`, so both file count
   * and per-file ordering (row-group min/max pruning) are restored.
   *
-  * The rewrite goes through a temp directory + two-rename swap so a
-  * failure mid-compaction leaves the original data recoverable — but the
-  * swap is NOT atomic for concurrent readers: between rename(dir → .__old__)
-  * and rename(.__compact__ → dir) the directory briefly does not exist, and
-  * if the second rename fails the restore itself can fail, leaving the data
-  * under `<dir>.__old__` (reported in the thrown exception). Quiesce readers
-  * during compaction, or on a real lake use a table format whose
-  * transaction log provides the atomicity this filesystem swap cannot.
+  * The rewrite is staged beside the directory and published through
+  * [[StoreSwap.swapInto]], the same write-aside swap every store rewrite
+  * uses.
   */
 object Compact {
 
@@ -46,13 +41,11 @@ object Compact {
     * with the `band=` partitioning preserved.
     */
   def bandStore(bands: DataFrame, dst: String, targetFileBytes: Long): Unit =
-    bands
-      .repartition(filesFor(bands, targetFileBytes), col("band"), col("bhash"))
-      .sortWithinPartitions("band", "bhash", "doc_id")
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(dst)
+    StoreSwap.write(
+      bands
+        .repartition(filesFor(bands, targetFileBytes), col("band"), col("bhash"))
+        .sortWithinPartitions("band", "bhash", "doc_id"),
+      dst, partitionBy = Seq("band"))
 
   def compact(
       spark: SparkSession,
@@ -102,23 +95,12 @@ object Compact {
       if (sortable) df.repartitionByRange(nOut, col(sortCol)).sortWithinPartitions(col(sortCol))
       else df.coalesce(nOut)
 
-    val tmp = dir.stripSuffix("/") + ".__compact__"
-    arranged.write.mode("overwrite").option("compression", codec).parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
-
-    // swap: remove originals, move compacted files in, drop temp dir
-    val bak = new Path(dir.stripSuffix("/") + ".__old__")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (!fs.rename(path, bak))
-      throw new IllegalStateException(s"could not move $dir aside for swap")
-    if (!fs.rename(new Path(tmp), path)) {
-      val restored = fs.rename(bak, path)
-      throw new IllegalStateException(
-        s"could not move compacted files into $dir" + (
-          if (restored) " (original restored)"
-          else s"; RESTORE ALSO FAILED — original data is at $bak"))
-    }
-    fs.delete(bak, true)
+    // the caller's codec (zstd or gzip, reference parity) is why this one
+    // stage does not go through StoreSwap.stage
+    val live = dir.stripSuffix("/")
+    arranged.write.mode("overwrite").option("compression", codec).parquet(live + ".next")
+    StoreSwap.swapInto(spark, live)
+    val rows = spark.read.parquet(live).count()
 
     val after = fs.listStatus(path).count(_.getPath.getName.endsWith(".parquet"))
     CompactResult(parts.length, after, rows)

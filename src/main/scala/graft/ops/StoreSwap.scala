@@ -1,29 +1,80 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** The house swap for write-aside store rewrites: publish `path + ".next"`
-  * at `path` without ever holding the only complete copy in a half-deleted
-  * state. The naive delete-then-rename (the original q149 shape) has a
-  * crash window in which the live directory is already gone and `.next`
-  * has not yet been renamed — recovery exists (`.next` is complete) but a
-  * reader during the window sees a MISSING store, and the window is
-  * O(delete) = O(files) long. Rename-aside inverts the order:
+/** The one store writer: every persisted store lands on disk as zstd
+  * Parquet through [[write]], and every write-aside rewrite publishes
+  * through the house swap below.
+  *
+  * The swap publishes `path + ".next"` at `path` without ever holding the
+  * only complete copy in a half-deleted state. The naive
+  * delete-then-rename (the original q149 shape) has a crash window in
+  * which the live directory is already gone and `.next` has not yet been
+  * renamed — recovery exists (`.next` is complete) but a reader during the
+  * window sees a MISSING store, and the window is O(delete) = O(files)
+  * long. Rename-aside inverts the order:
   *
   *   1. `path`      -> `path + ".old"`   (metadata-only)
   *   2. `path.next` -> `path`            (metadata-only)
   *   3. delete `path + ".old"`           (slow part, AFTER publication)
   *
   * At every instant a complete copy of some store version exists on disk
-  * under a well-known name, the unreadable window shrinks to two renames,
-  * and crash recovery is mechanical by inspection: `.next` present and
-  * `path` absent -> redo step 2; `.old` present and `path` present ->
-  * redo step 3. A stale `.old` from a previous crash is cleared first so
-  * step 1 cannot collide. On a real object store (no atomic rename) the
-  * production analogue is write-new -> repoint -> retire, which this
-  * sequence degrades to gracefully.
+  * under a well-known name, and the unreadable window shrinks to two
+  * renames. A crash between steps 1 and 2 leaves `path` absent and
+  * `.old` present; `recover` finishes that swap at the head of every
+  * [[write]] append, [[stage]] and [[rewrite]] — BEFORE their rows are
+  * planned, which is why those rows are by-name — by publishing `.next`
+  * when it carries `_SUCCESS` and restoring `.old` otherwise. Without it
+  * an append that never reads the store would recreate `path` holding
+  * only its batch, and the next swap's clearing of a stale `.old` would
+  * delete the only full copy. A `.old` beside a live `path` (a crash
+  * between steps 2 and 3) is superseded, and [[swapInto]] clears it
+  * first. On a real object store (no atomic rename) the production
+  * analogue is write-new -> repoint -> retire, which this sequence
+  * degrades to gracefully.
   */
 object StoreSwap {
+
+  /** The zstd Parquet store write: overwrite `path` (or append to it)
+    * with `rows`, hive-partitioned by `partitionBy` when given. An append
+    * first finishes an interrupted swap of `path` (see object doc).
+    */
+  def write(
+      rows: => DataFrame,
+      path: String,
+      append: Boolean = false,
+      partitionBy: Seq[String] = Nil): Unit = {
+    if (append) recover(path)
+    val w = rows.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
+      .option("compression", "zstd")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(path)
+  }
+
+  /** Write `rows` aside at `path + ".next"` and return that path, for a
+    * caller that stages several artifacts (or appends elsewhere) before
+    * its [[swapInto]]. Finishes an interrupted swap of `path` first.
+    */
+  def stage(rows: => DataFrame, path: String, partitionBy: Seq[String] = Nil): String = {
+    recover(path)
+    write(rows, path + ".next", partitionBy = partitionBy)
+    path + ".next"
+  }
+
+  /** Replace the store at `path` with `rows` (by-name: usually a read of
+    * `path` itself): stage, stamp the `onceId` witness, swap. A retract
+    * whose `onceId` witness is already on the store is skipped before its
+    * rows are planned (see [[RetractMarkerPrefix]]).
+    */
+  def rewrite(spark: SparkSession, path: String, onceId: Option[String] = None)(
+      rows: => DataFrame): Unit = {
+    recover(path)
+    if (!onceId.exists(hasRetractMarker(spark, path, _))) {
+      val next = stage(rows, path)
+      onceId.foreach(stampRetractMarker(spark, next, _))
+      swapInto(spark, path)
+    }
+  }
 
   /** Prefix of the zero-byte exactly-once witness files a COUNT-keyed
     * store's retract stamps into its directory (underscore-named, so
@@ -31,34 +82,27 @@ object StoreSwap {
     * retract already subtracted from THIS store" — the batch-witness
     * probe (`MediaDedupStream`/`ReleaseIngestStream` `hasBatch`) adapted
     * to stores whose rows carry no doc attribution after an absorb.
-    * Markers are stamped into the `.next` directory BEFORE the swap, so
-    * the marker publishes atomically with the subtracted store: a crash
-    * before the swap leaves no marker and the retract re-runs cleanly; a
-    * crash after leaves the marker and the re-run skips. [[swapInto]]
-    * carries existing markers forward on every rewrite (absorbs,
-    * compactions, later retracts all swap through it), so the witness
-    * survives the store's whole lifecycle.
+    * [[rewrite]] stamps the marker into the `.next` directory BEFORE the
+    * swap, so the marker publishes atomically with the subtracted store:
+    * a crash before the swap leaves no marker and the retract re-runs
+    * cleanly; a crash after leaves the marker and the re-run skips.
+    * [[swapInto]] carries existing markers forward on every rewrite
+    * (absorbs, compactions, later retracts all swap through it), so the
+    * witness survives the store's whole lifecycle.
     */
-  val RetractMarkerPrefix = "_retract_"
+  private val RetractMarkerPrefix = "_retract_"
 
-  private def markerFile(path: String, id: String): org.apache.hadoop.fs.Path = {
+  private def markerFile(path: String, id: String): Path = {
     val safe = id.map(c => if (c.isLetterOrDigit || c == '-' || c == '.') c else '_')
-    new org.apache.hadoop.fs.Path(path, RetractMarkerPrefix + safe)
+    new Path(path, RetractMarkerPrefix + safe)
   }
 
-  /** Has the retract named `id` already been applied to the store at
-    * `path`? (See [[RetractMarkerPrefix]].)
-    */
-  def hasRetractMarker(spark: SparkSession, path: String, id: String): Boolean = {
+  private def hasRetractMarker(spark: SparkSession, path: String, id: String): Boolean = {
     val m = markerFile(path, id)
     m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
   }
 
-  /** Stamp the retract witness for `id` into a store directory — called
-    * on the `.next` dir before [[swapInto]] so witness and subtraction
-    * publish in one rename.
-    */
-  def stampRetractMarker(spark: SparkSession, dir: String, id: String): Unit = {
+  private def stampRetractMarker(spark: SparkSession, dir: String, id: String): Unit = {
     val m = markerFile(dir, id)
     val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(m)) fs.create(m).close()
@@ -72,8 +116,28 @@ object StoreSwap {
     * existence check (stream bootstraps, optional-artifact probes).
     */
   def committed(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    val p = new Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Finish a swap a crash cut between its steps 1 and 2 (`path` absent,
+    * `.old` present): a committed `.next` is the version that swap was
+    * publishing, so it goes live and `.old` is retired; otherwise `.old`
+    * is restored and an uncommitted `.next` dropped. Any other state is
+    * left as it is.
+    */
+  private def recover(path: String): Unit = {
+    val live = new Path(path)
+    val next = new Path(path + ".next")
+    val old = new Path(path + ".old")
+    val fs = live.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live) && fs.exists(old)) {
+      val publish = fs.exists(new Path(next, "_SUCCESS"))
+      if (!publish) fs.delete(next, true)
+      if (!fs.rename(if (publish) next else old, live))
+        throw new java.io.IOException(s"store swap recovery: could not restore $path")
+      fs.delete(old, true)
+    }
   }
 
   /** Replace `path` with `path + ".next"` via rename-aside (see object
@@ -83,18 +147,17 @@ object StoreSwap {
     * into `.next` before the swap so no rewrite can lose them.
     */
   def swapInto(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val next = new org.apache.hadoop.fs.Path(path + ".next")
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = p.getFileSystem(conf)
+    val p = new Path(path)
+    val next = new Path(path + ".next")
+    val old = new Path(path + ".old")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(old, true)
     val hadLive = fs.exists(p)
     if (hadLive) {
       fs.listStatus(p).map(_.getPath.getName)
         .filter(_.startsWith(RetractMarkerPrefix))
         .foreach { name =>
-          val t = new org.apache.hadoop.fs.Path(next, name)
+          val t = new Path(next, name)
           if (!fs.exists(t)) fs.create(t).close()
         }
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.ops.StoreSwap
 import graft.queries.{Dedup, DedupStore}
 
 /** PERSISTED cross-modal duplicate-family store — the q191 one-shot fold
@@ -79,9 +80,7 @@ object CrossModal {
   /** Bootstrap the assignment from a full corpus (the q191 fold). */
   def persist(docs: DataFrame, path: String): String = {
     val out = assignmentDir(path)
-    graft.queries.Extras.crossModalComponents(docs)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(out)
+    StoreSwap.write(graft.queries.Extras.crossModalComponents(docs), out)
     out
   }
 
@@ -189,12 +188,10 @@ object CrossModal {
       batchDocs: DataFrame,
       path: String,
       src: EdgeSources): Unit = {
-    merged
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(assignmentDir(path) + ".next")
+    StoreSwap.stage(merged, assignmentDir(path))
     DedupStore.appendToBandIndex(batchDocs, src.textIndexPath)
     src.media.foreach { case (m, p, _) => m.appendTo(m.payloads(batchDocs), p) }
-    graft.ops.StoreSwap.swapInto(spark, assignmentDir(path))
+    StoreSwap.swapInto(spark, assignmentDir(path))
   }
 
   /** Un-absorb a doc set from the assignment with BRIDGE-SPLIT
@@ -217,11 +214,9 @@ object CrossModal {
       path: String,
       src: EdgeSources): Unit = {
     val (next, survivorsSized) = retractAssembly(spark, batchIds, path, src)
-    next
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(assignmentDir(path) + ".next")
+    StoreSwap.stage(next, assignmentDir(path))
     survivorsSized.unpersist()
-    graft.ops.StoreSwap.swapInto(spark, assignmentDir(path))
+    StoreSwap.swapInto(spark, assignmentDir(path))
   }
 
   /** The plan-visible half of [[retract]]: the post-retraction assignment

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.operators.IvfIndex
+import graft.ops.StoreSwap
 import graft.queries.{Curation, Dedup, DedupStore}
 import graft.streaming.ReleaseIngestStream
 
@@ -30,7 +31,7 @@ import graft.streaming.ReleaseIngestStream
   * once per forget; that is enforced, not asked of the caller: the
   * mandatory `forgetId` stamps a witness marker into each count store
   * atomically with its subtraction
-  * ([[graft.ops.StoreSwap.stampRetractMarker]]), so re-running the same
+  * ([[graft.ops.StoreSwap.rewrite]]), so re-running the same
   * forget — crash recovery, an audit-driven retry — skips the applied
   * count arms and the whole composition is safely re-runnable end to
   * end.
@@ -95,7 +96,7 @@ object Forget {
     * (ignored when `vectorIndexes` is empty).
     *
     * `forgetId` names this forget for the COUNT-keyed arms' exactly-once
-    * witness (the [[graft.ops.StoreSwap.stampRetractMarker]] contract):
+    * witness (the [[graft.ops.StoreSwap.rewrite]] contract):
     * each count store records the id atomically with its subtraction, so
     * re-running the same forget after a crash in a later arm skips the
     * already-applied count arms instead of double-subtracting — the whole
@@ -176,9 +177,7 @@ object Forget {
     * guard is one broadcast-gated anti join per batch — O(batch).
     */
   def appendTombstones(ids: DataFrame, path: String): Unit =
-    ids.select(col("doc_id")).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(path)
+    StoreSwap.write(ids.select(col("doc_id")).distinct(), path, append = true)
 
   /** The ingest guard: drop batch rows whose doc_id is tombstoned. The
     * ledger side broadcasts under the house size gate (it is takedown-
@@ -203,10 +202,10 @@ object Forget {
     * store; the distinct also sheds re-appended ids).
     */
   def compactTombstones(spark: SparkSession, srcPath: String, dstPath: String): Unit =
-    spark.read.parquet(srcPath).select(col("doc_id")).distinct()
-      .repartition(1).sortWithinPartitions("doc_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(dstPath)
+    StoreSwap.write(
+      spark.read.parquet(srcPath).select(col("doc_id")).distinct()
+        .repartition(1).sortWithinPartitions("doc_id"),
+      dstPath)
 
   /** One id-keyed store family for the residual audit: its rows and the
     * column (in those rows) that names the doc/vec a row derives from.
@@ -224,14 +223,8 @@ object Forget {
     def read(p: String) = spark.read.parquet(p)
     val dedup = stores.dedupIndexDir.toSeq.flatMap { d =>
       val sub = DedupStore.manifestSubdir(d, stores.dedupThreshold)
-      // existence through the Hadoop FileSystem for the path (the
-      // StoreSwap/IvfIndex discipline) — java.nio only sees the local
-      // filesystem, and on HDFS/object stores the exact tier would
-      // silently drop out of exactly the audit meant to catch residuals
-      val exactSuccess = new org.apache.hadoop.fs.Path(s"$d/exact_fp/_SUCCESS")
       val exact =
-        if (exactSuccess.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(exactSuccess))
+        if (StoreSwap.committed(spark, s"$d/exact_fp"))
           Seq(Family("dedup_exact", read(s"$d/exact_fp"), col("keep_id")))
         else Nil
       Seq(

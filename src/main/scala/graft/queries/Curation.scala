@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.ops.StoreSwap
 
 /** Dataset-curation operators for training pipelines: per-source mixture
   * sampling, context-window sequence packing, and eval-set decontamination.
@@ -644,10 +645,9 @@ object Curation {
     // novel-window set fully before any file lands in the directory being
     // scanned, so a re-executed/retried write stage can never observe its
     // own partial output
-    org.apache.spark.sql.graft.shims.snap(windowStore(batch, k)
-      .join(spark.read.parquet(path), Seq("g"), "left_anti"), "windows.novel")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(path)
+    StoreSwap.write(org.apache.spark.sql.graft.shims.snap(windowStore(batch, k)
+      .join(spark.read.parquet(path), Seq("g"), "left_anti"), "windows.novel"),
+      path, append = true)
 
   /** One-time day-N window-store materialization (a content-keyed warm
     * store; k rides the path so an incompatible store is never served).
@@ -714,9 +714,7 @@ object Curation {
       path: String,
       k: Int = 5,
       hashed: Boolean = false): Unit =
-    rcStoreOf(batch, k, hashed)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(path)
+    StoreSwap.write(rcStoreOf(batch, k, hashed), path, append = true)
 
   /** RETRACT a previously-absorbed batch from a refcounted store — the
     * q149 un-absorb for the window-set family, O(store) I/O but O(touched)
@@ -733,7 +731,7 @@ object Curation {
     * Pass `onceId` to make that contract ENFORCED instead of caller
     * discipline: the retract stamps a zero-byte witness marker into the
     * store atomically with the swap
-    * ([[graft.ops.StoreSwap.stampRetractMarker]]), and a re-run bearing
+    * ([[graft.ops.StoreSwap.rewrite]]), and a re-run bearing
     * the same id — an audit-driven retry, a crashed forget resumed —
     * finds the marker and skips, so the subtract applies exactly once.
     */
@@ -744,14 +742,9 @@ object Curation {
       k: Int = 5,
       broadcastCeiling: Long = graft.queries.Dedup.IncrementalBroadcastCeiling,
       hashed: Boolean = false,
-      onceId: Option[String] = None): Unit = {
-    if (onceId.exists(graft.ops.StoreSwap.hasRetractMarker(spark, path, _))) return
-    retractedRefcountedRows(spark, batch, path, k, broadcastCeiling, hashed)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    onceId.foreach(graft.ops.StoreSwap.stampRetractMarker(spark, path + ".next", _))
-    swapInto(spark, path)
-  }
+      onceId: Option[String] = None): Unit =
+    StoreSwap.rewrite(spark, path, onceId)(
+      retractedRefcountedRows(spark, batch, path, k, broadcastCeiling, hashed))
 
   /** The rows [[retractFromRefcountedStore]] writes, exposed pre-write
     * (the ShardExport.appendAssembly precedent) so PlanShapeSpec can pin
@@ -814,23 +807,12 @@ object Curation {
   def compactRefcountedStore(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val st = spark.read.parquet(path)
-    st.groupBy("g").agg(sum(col("rc")).as("rc"))
-      .repartition(graft.ops.Compact.filesFor(st, targetFileBytes), col("g"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    swapInto(spark, path)
-  }
-
-  /** Replace `path` with `path + ".next"` — shared by the refcounted /
-    * histogram / pack-store rewrites. Delegates to the house rename-aside
-    * swap ([[graft.ops.StoreSwap]]): the original delete-then-rename left
-    * only `.next` on disk during its crash window, weaker than the
-    * write-aside-then-swap atomicity these stores document.
-    */
-  private[queries] def swapInto(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.ops.StoreSwap.swapInto(spark, path)
+      targetFileBytes: Long = 128L << 20): Unit =
+    StoreSwap.rewrite(spark, path) {
+      val st = spark.read.parquet(path)
+      st.groupBy("g").agg(sum(col("rc")).as("rc"))
+        .repartition(graft.ops.Compact.filesFor(st, targetFileBytes), col("g"))
+    }
 
   /** q125: QUALITY ENSEMBLE — fuse several weak quality signals into one
     * rank (the FineWeb-Edu-style move: no single heuristic is trustworthy,
@@ -1120,14 +1102,11 @@ object Curation {
   def absorbIntoHistogramStore(
       spark: org.apache.spark.sql.SparkSession,
       batch: org.apache.spark.sql.DataFrame,
-      path: String): Unit = {
-    spark.read.parquet(path).select(col("source"), col("score"), col("n"))
-      .union(scoreHistogram(batch).select(col("source"), col("score"), col("n")))
-      .groupBy("source", "score").agg(sum("n").as("n"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    swapInto(spark, path)
-  }
+      path: String): Unit =
+    StoreSwap.rewrite(spark, path)(
+      spark.read.parquet(path).select(col("source"), col("score"), col("n"))
+        .union(scoreHistogram(batch).select(col("source"), col("score"), col("n")))
+        .groupBy("source", "score").agg(sum("n").as("n")))
 
   /** RETRACT a previously-absorbed batch from a stored histogram — the
     * count-subtraction un-absorb q149's sibling-store scaladoc promised
@@ -1148,14 +1127,8 @@ object Curation {
       spark: org.apache.spark.sql.SparkSession,
       batch: org.apache.spark.sql.DataFrame,
       path: String,
-      onceId: Option[String] = None): Unit = {
-    if (onceId.exists(graft.ops.StoreSwap.hasRetractMarker(spark, path, _))) return
-    retractedHistogramRows(spark.read.parquet(path), batch)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    onceId.foreach(graft.ops.StoreSwap.stampRetractMarker(spark, path + ".next", _))
-    swapInto(spark, path)
-  }
+      onceId: Option[String] = None): Unit =
+    StoreSwap.rewrite(spark, path, onceId)(retractedHistogramRows(spark.read.parquet(path), batch))
 
   /** The rows [[retractFromHistogramStore]] writes, exposed pre-write (the
     * [[retractedRefcountedRows]] precedent): the retracted store as a pure
@@ -2526,10 +2499,8 @@ object Curation {
       val docs = Tables(s, dir, "documents")
       val path = WarmStores.key(dir, "ngram_store", "absorb", "k5", WarmStores.Pid)
       Curation.synchronized {
-        if (!graft.ops.StoreSwap.committed(s, path))
-          windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("compression", "zstd").parquet(path)
+        if (!StoreSwap.committed(s, path))
+          StoreSwap.write(windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)), path)
         appendToWindowStore(s, docs.filter(pmod(col("doc_id"), lit(5)) === 1), path)
       }
       contentNovelty(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExpressions, Text}
+import graft.ops.StoreSwap
 
 /** Deduplication operators over `documents`: exact (hash group-by),
   * MinHash+LSH near-dup, SimHash near-dup, n-gram Jaccard verification.
@@ -814,9 +815,7 @@ object Dedup {
         |WHERE bit_count(xor(x.sim, y.sim)) <= 8
         |ORDER BY a, b""".stripMargin) { (s, dir) =>
       Dedup.synchronized {
-        simhashRows(Tables(s, dir, "documents")).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q34Dir/hashes.parquet")
+        StoreSwap.write(simhashRows(Tables(s, dir, "documents")), s"$q34Dir/hashes.parquet")
       }
       simhashPairsOver(s.read.parquet(s"$q34Dir/hashes.parquet"), maxHamming = 8)
         .orderBy("a", "b")
@@ -853,9 +852,7 @@ object Dedup {
         |ORDER BY band""".stripMargin.replace("$q183Dir", q183Dir)) { (s, dir) =>
       val dump = s"$q183Dir/bands.parquet"
       Dedup.synchronized {
-        minhashBands(Tables(s, dir, "documents")).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(dump)
+        StoreSwap.write(minhashBands(Tables(s, dir, "documents")), dump)
       }
       bandSkewOf(s.read.parquet(dump))
     },
@@ -1130,9 +1127,7 @@ object Dedup {
       val chunks = org.apache.spark.sql.graft.shims.snap(
         paragraphChunks(Tables(s, dir, "documents")), "dedup.paragraphChunks")
       Dedup.synchronized {
-        paragraphBands(chunks).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q107Dir/bands.parquet")
+        StoreSwap.write(paragraphBands(chunks), s"$q107Dir/bands.parquet")
       }
       paragraphDedupOver(
         chunks, s.read.parquet(s"$q107Dir/bands.parquet"), threshold = 0.7)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExpressions, Text}
+import graft.ops.StoreSwap
 import graft.queries.Dedup.{
   shingled, minhashBands, minhashPairs, minhashSig, bandRows, bandedJaccard,
   dedupManifest, rankRepresentatives,
@@ -38,10 +39,7 @@ object DedupStore {
     */
   def persistBandIndex(docs: DataFrame, path: String): Unit = {
     graft.ops.Bucketing.writePartitioned(minhashBands(docs), s"$path/bands", Seq("band"))
-    shingled(docs).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(s"$path/shingles")
+    StoreSwap.write(shingled(docs), s"$path/shingles")
   }
 
   /** Absorb a checked batch into a [[persistBandIndex]] artifact so the
@@ -64,15 +62,8 @@ object DedupStore {
     // compose Forget.filterForgotten upstream
     val nd = tombstonePath.fold(newDocs)(p =>
       graft.pipeline.Forget.filterForgotten(newDocs.sparkSession, newDocs, p))
-    minhashBands(nd).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("band")
-      .parquet(s"$path/bands")
-    shingled(nd).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .parquet(s"$path/shingles")
+    StoreSwap.write(minhashBands(nd), s"$path/bands", append = true, partitionBy = Seq("band"))
+    StoreSwap.write(shingled(nd), s"$path/shingles", append = true)
   }
 
   /** INDEX COMPACTION — the store-maintenance half of the incremental
@@ -101,12 +92,10 @@ object DedupStore {
     graft.ops.Compact.bandStore(
       spark.read.parquet(s"$srcPath/bands"), s"$dstPath/bands", targetFileBytes)
     val sh = spark.read.parquet(s"$srcPath/shingles")
-    sh
-      .repartition(graft.ops.Compact.filesFor(sh, targetFileBytes), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(s"$dstPath/shingles")
+    StoreSwap.write(
+      sh.repartition(graft.ops.Compact.filesFor(sh, targetFileBytes), col("doc_id"))
+        .sortWithinPartitions("doc_id"),
+      s"$dstPath/shingles")
   }
 
   /** Incremental near-dup: jaccard-verified pairs with AT LEAST ONE
@@ -199,14 +188,13 @@ object DedupStore {
     */
   def persistComponents(docs: DataFrame, indexPath: String, threshold: Double): String = {
     val out = manifestSubdir(indexPath, threshold)
-    dedupManifest(docs, threshold)
-      .select(col("doc_id"), col("cluster_id").as("component"),
-        col("n_chars"), col("keep"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(out)
+    StoreSwap.write(manifestColumns(dedupManifest(docs, threshold)), out)
     out
   }
+
+  /** The stored manifest's columns, from a [[dedupManifest]]-shaped frame. */
+  private[graft] def manifestColumns(m: DataFrame): DataFrame =
+    m.select(col("doc_id"), col("cluster_id").as("component"), col("n_chars"), col("keep"))
 
   private[graft] def manifestSubdir(indexPath: String, threshold: Double): String =
     s"$indexPath/${manifestName(threshold)}"
@@ -378,12 +366,9 @@ object DedupStore {
     */
   def persistExactIndex(docs: DataFrame, indexPath: String): String = {
     val out = s"$indexPath/exact_fp"
-    docs
-      .groupBy(Text.fingerprint(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("keep_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(out)
+    StoreSwap.write(
+      docs.groupBy(Text.fingerprint(col("text")).as("fp")).agg(min(col("doc_id")).as("keep_id")),
+      out)
     out
   }
 
@@ -440,9 +425,7 @@ object DedupStore {
       newDocs.select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
         .groupBy("fp").agg(min(col("doc_id")).as("keep_id"))
         .join(store.select(col("fp")), Seq("fp"), "left_anti"), "store.exactNovel")
-    fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd")
-      .parquet(s"$indexPath/exact_fp")
+    StoreSwap.write(fresh, s"$indexPath/exact_fp", append = true)
   }
 
   /** The day-boundary operation of the incremental store: compute the
@@ -477,17 +460,13 @@ object DedupStore {
     // derived from the store it will replace AND from a band probe that
     // must not see the batch yet
     val sub = manifestSubdir(indexPath, threshold)
-    val next = sub + ".next"
-    incrementalManifest(spark, nd, d, indexPath, threshold, broadcastCeiling)
-      .select(col("doc_id"), col("cluster_id").as("component"),
-        col("n_chars"), col("keep"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(next)
+    StoreSwap.stage(
+      manifestColumns(incrementalManifest(spark, nd, d, indexPath, threshold, broadcastCeiling)),
+      sub)
     appendToBandIndex(nd, indexPath)
     // rename-aside swap (graft.ops.StoreSwap) — a complete manifest
     // version exists on disk at every instant
-    graft.ops.StoreSwap.swapInto(spark, sub)
+    StoreSwap.swapInto(spark, sub)
   }
 
   /** Verified text near-dup pairs AMONG a bounded doc set, index-backed
@@ -584,41 +563,29 @@ object DedupStore {
       threshold: Double): Unit = {
     val ids = broadcast(batchIds.select(col("doc_id")))
     val sub = manifestSubdir(indexPath, threshold)
-    retractManifest(spark, batchIds, docsAfter, indexPath, threshold)
-      .select(col("doc_id"), col("cluster_id").as("component"),
-        col("n_chars"), col("keep"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(sub + ".next")
+    StoreSwap.stage(
+      manifestColumns(retractManifest(spark, batchIds, docsAfter, indexPath, threshold)), sub)
     // re-select each artifact's own column order after the key-fronting
     // anti join: the retracted store must be schema-identical to what the
     // original writers produce, not just row-equivalent
-    val bands = spark.read.parquet(s"$indexPath/bands")
-    bands.join(ids, Seq("doc_id"), "left_anti")
-      .select(bands.columns.map(col).toSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").partitionBy("band")
-      .parquet(s"$indexPath/bands.next")
-    val shingles = spark.read.parquet(s"$indexPath/shingles")
-    shingles.join(ids, Seq("doc_id"), "left_anti")
-      .select(shingles.columns.map(col).toSeq: _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$indexPath/shingles.next")
+    def without(path: String, key: String, partitionBy: String*): Unit =
+      StoreSwap.stage({
+        val st = spark.read.parquet(path)
+        st.join(ids.select(col("doc_id").as(key)), Seq(key), "left_anti")
+          .select(st.columns.map(col).toSeq: _*)
+      }, path, partitionBy)
+    without(s"$indexPath/bands", "doc_id", "band")
+    without(s"$indexPath/shingles", "doc_id")
     // the exact-fingerprint tier is optional in the artifact (the release
     // ingest index carries bands + shingles + manifest only)
     val exactPath = s"$indexPath/exact_fp"
-    val hasExact = graft.ops.StoreSwap.committed(spark, exactPath)
-    if (hasExact) {
-      val exact = spark.read.parquet(exactPath)
-      exact.join(ids.select(col("doc_id").as("keep_id")), Seq("keep_id"), "left_anti")
-        .select(exact.columns.map(col).toSeq: _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$exactPath.next")
-    }
+    val hasExact = StoreSwap.committed(spark, exactPath)
+    if (hasExact) without(exactPath, "keep_id")
     val parts = Seq(sub, s"$indexPath/bands", s"$indexPath/shingles") ++
       (if (hasExact) Seq(exactPath) else Nil)
     // rename-aside swaps (graft.ops.StoreSwap): a complete version of
     // every artifact exists on disk at each instant of the multi-store swap
-    parts.foreach(graft.ops.StoreSwap.swapInto(spark, _))
+    parts.foreach(StoreSwap.swapInto(spark, _))
   }
 
   /** Snapshot-id stride for the cross-snapshot global key: `gid = snap ·

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.gen.Findings
 import graft.multimodal.Multimodal
 import graft.operators.Salting
-import graft.ops.DtCoercion
+import graft.ops.{DtCoercion, StoreSwap}
 import graft.pipeline.ConvertJob
 
 /** Multimodal plumbing + reference-parity coercion exercised over the driver
@@ -681,9 +681,7 @@ object Extras {
       val dumped = Extras.synchronized {
         fams.map { f =>
           val path = s"$q189Dir/${f.store}.parquet"
-          f.rows.select(f.docKey.cast("long").as("doc_id"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("compression", "zstd").parquet(path)
+          StoreSwap.write(f.rows.select(f.docKey.cast("long").as("doc_id")), path)
           graft.pipeline.Forget.Family(f.store, s.read.parquet(path), col("doc_id"))
         }
       }
@@ -742,9 +740,7 @@ object Extras {
           Multimodal.Image -> "img", Multimodal.Audio -> "aud", Multimodal.Video -> "vid")
         .map { case (m, arm) => full(arm, m.committed: _*)(m.persist(m.payloads(docs), _)) }
       Extras.synchronized {
-        crossModalEdgesStored(s, ti, ii, ai, vi).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(dump)
+        StoreSwap.write(crossModalEdgesStored(s, ti, ii, ai, vi), dump)
       }
       crossModalFold(docs, s.read.parquet(dump))
     },
@@ -792,12 +788,10 @@ object Extras {
         videoIndexPath = Some(mediaIndexFor(Multimodal.Video, corpus, dir)))
       val xm = crossModalIndexFor(corpus, dir, "store")
       Extras.synchronized {
-        graft.pipeline.CrossModal.readAssignment(s, xm).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q192Dir/assignment.parquet")
-        graft.pipeline.CrossModal.incrementalEdges(s, batch, src).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q192Dir/pairs.parquet")
+        StoreSwap.write(
+          graft.pipeline.CrossModal.readAssignment(s, xm), s"$q192Dir/assignment.parquet")
+        StoreSwap.write(
+          graft.pipeline.CrossModal.incrementalEdges(s, batch, src), s"$q192Dir/pairs.parquet")
       }
       graft.pipeline.CrossModal.mergeOver(
         batch.select(col("doc_id")),
@@ -848,9 +842,7 @@ object Extras {
         // one arm ('assignment'), so its scan partition-prunes to a
         // single directory instead of re-reading every arm's rows
         // (PlanShapeSpec pins the PartitionFilters)
-        rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("artifact")
-          .option("compression", "zstd").parquet(s"$q196Dir/rows.parquet")
+        StoreSwap.write(rows, s"$q196Dir/rows.parquet", partitionBy = Seq("artifact"))
       }
       mediaStoreSync(s.read.parquet(s"$q196Dir/rows.parquet"))
     },
@@ -1104,8 +1096,7 @@ object Extras {
     val docs = Tables(s, dir, "documents")
     val path = mediaIndexFor(m, docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
     def dump(df: DataFrame, name: String): Unit =
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$dumpDir/$name.parquet")
+      StoreSwap.write(df, s"$dumpDir/$name.parquet")
     Extras.synchronized {
       dump(Multimodal.readBandStore(s, path), "index")
       if (m.frameGrained) dump(Multimodal.readVcounts(s, path), "vcounts")

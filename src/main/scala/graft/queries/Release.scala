@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.ops.StoreSwap
 
 /** The RELEASE surface of the engine — everything between "the corpus is
   * curated" and "a training loader reads bytes": sequence packing (q58)
@@ -255,14 +256,13 @@ object Release {
       spark: org.apache.spark.sql.SparkSession,
       batch: org.apache.spark.sql.DataFrame,
       path: String,
-      budget: Int = 512): Unit = {
-    val counts = boundaryResumeCounts(spark.read.parquet(path), budget)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-    import spark.implicits._
-    boundarySpans(batch, counts.toDF("source", "bucket_slot", "base_rn"), budget)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(path)
-  }
+      budget: Int = 512): Unit =
+    StoreSwap.write({
+      val counts = boundaryResumeCounts(spark.read.parquet(path), budget)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      import spark.implicits._
+      boundarySpans(batch, counts.toDF("source", "bucket_slot", "base_rn"), budget)
+    }, path, append = true)
 
   /** RETRACT a batch from a boundary-pack store —
     * [[retractFromPackStore]]'s sibling at the (source, slot) grain;
@@ -274,7 +274,7 @@ object Release {
       spark: org.apache.spark.sql.SparkSession,
       batchIds: org.apache.spark.sql.DataFrame,
       path: String,
-      budget: Int = 512): Unit = {
+      budget: Int = 512): Unit = StoreSwap.rewrite(spark, path) {
     val store = spark.read.parquet(path)
     val ids = batchIds.select(col("doc_id"))
     val capacity = floor(lit(budget.toDouble) / col("bucket_slot")).cast("long")
@@ -293,9 +293,6 @@ object Release {
           .otherwise(col("source")).as("source"),
         col("bucket_slot"), col("doc_id"), col("n_toks"),
         col("window_id"), col("slot_pos"), col("pad_tokens"), col("oversize"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    Curation.swapInto(spark, path)
   }
 
   /** q164's shared core: dedup keepers → per-source pack cumsum →
@@ -709,14 +706,13 @@ object Release {
       spark: org.apache.spark.sql.SparkSession,
       batch: org.apache.spark.sql.DataFrame,
       path: String,
-      packTokens: Int = 512): Unit = {
-    val offsets = packResumeOffsets(spark.read.parquet(path), packTokens)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    import spark.implicits._
-    packSpans(batch, offsets.toDF("source", "base_off"), packTokens)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "zstd").parquet(path)
-  }
+      packTokens: Int = 512): Unit =
+    StoreSwap.write({
+      val offsets = packResumeOffsets(spark.read.parquet(path), packTokens)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      import spark.implicits._
+      packSpans(batch, offsets.toDF("source", "base_off"), packTokens)
+    }, path, append = true)
 
   /** RETRACT a batch from a pack-manifest store. The stream is
     * append-only, so ONLY the tail is retractable: a batch whose spans
@@ -733,12 +729,8 @@ object Release {
       spark: org.apache.spark.sql.SparkSession,
       batchIds: org.apache.spark.sql.DataFrame,
       path: String,
-      packTokens: Int = 512): Unit = {
-    retractedPackRows(spark.read.parquet(path), batchIds, packTokens)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    Curation.swapInto(spark, path)
-  }
+      packTokens: Int = 512): Unit =
+    StoreSwap.rewrite(spark, path)(retractedPackRows(spark.read.parquet(path), batchIds, packTokens))
 
   /** The rows [[retractFromPackStore]] writes, exposed pre-write (the
     * [[retractedRefcountedRows]] precedent): the restored manifest as a

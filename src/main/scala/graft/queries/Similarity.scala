@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.ops.StoreSwap
 
 /** Similarity search over the `embeddings` table (`array<float>` column).
   *
@@ -568,9 +569,9 @@ object Similarity {
       annCandidateOracleSql(q38Dir, k = 5)) { (s, dir) =>
       val e = emb(s, dir)
       Similarity.synchronized {
-        lshCandidates(e.filter(col("vec_id") < 10), e, bits = 4, probeHamming = 2)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q38Dir/candidates.parquet")
+        StoreSwap.write(
+          lshCandidates(e.filter(col("vec_id") < 10), e, bits = 4, probeHamming = 2),
+          s"$q38Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q38Dir/candidates.parquet"), e, k = 5)
     },
@@ -586,11 +587,11 @@ object Similarity {
       annCandidateOracleSql(q42Dir, k = 5)) { (s, dir) =>
       val corpus = emb(s, dir)
       Similarity.synchronized {
-        graft.operators.IvfIndex
-          .candidates(modelFor(corpus, dir), corpus.filter(col("vec_id") < 10),
-            corpus, nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q42Dir/candidates.parquet")
+        StoreSwap.write(
+          graft.operators.IvfIndex
+            .candidates(modelFor(corpus, dir), corpus.filter(col("vec_id") < 10),
+              corpus, nProbe = 4),
+          s"$q42Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q42Dir/candidates.parquet"), corpus, k = 5)
     },
@@ -642,9 +643,9 @@ object Similarity {
       val corpus = emb(s, dir)
       val queries = corpus.filter(col("vec_id") < 100)
       Similarity.synchronized {
-        ivfCandidatesRanked(modelFor(corpus, dir), queries, corpus, maxProbe = 16)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q173Dir/candidates.parquet")
+        StoreSwap.write(
+          ivfCandidatesRanked(modelFor(corpus, dir), queries, corpus, maxProbe = 16),
+          s"$q173Dir/candidates.parquet")
       }
       ivfRecallSweepOver(
         s.read.parquet(s"$q173Dir/candidates.parquet"), queries, corpus, k = 5)
@@ -668,11 +669,11 @@ object Similarity {
       val model = modelFor(corpus, dir)
       val path = persistedIndex(model, corpus, dir)
       Similarity.synchronized {
-        graft.operators.IvfIndex
-          .candidatesIndexed(model, corpus.filter(col("vec_id") < 10),
-            s.read.parquet(path), nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q56Dir/candidates.parquet")
+        StoreSwap.write(
+          graft.operators.IvfIndex
+            .candidatesIndexed(model, corpus.filter(col("vec_id") < 10),
+              s.read.parquet(path), nProbe = 4),
+          s"$q56Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q56Dir/candidates.parquet"), corpus, k = 5)
     },
@@ -699,11 +700,11 @@ object Similarity {
       val model = modelFor(corpus, dir)
       val qPath = persistedQuantizedIndex(model, corpus, dir)
       Similarity.synchronized {
-        graft.operators.IvfIndex
-          .quantizedShortlist(model, corpus.filter(col("vec_id") < 10),
-            s.read.parquet(qPath), k = 5, nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q62Dir/candidates.parquet")
+        StoreSwap.write(
+          graft.operators.IvfIndex
+            .quantizedShortlist(model, corpus.filter(col("vec_id") < 10),
+              s.read.parquet(qPath), k = 5, nProbe = 4),
+          s"$q62Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q62Dir/candidates.parquet"), corpus, k = 5)
     },
@@ -731,12 +732,12 @@ object Similarity {
       val ivf = modelFor(corpus, dir)
       val pq = pqModelFor(corpus, dir)
       Similarity.synchronized {
-        graft.operators.PqIndex
-          .adcShortlistIndexed(ivf, pq, corpus.filter(col("vec_id") < 10),
-            s.read.parquet(persistedPqIndex(ivf, pq, corpus, dir)),
-            k = 5, nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q117Dir/candidates.parquet")
+        StoreSwap.write(
+          graft.operators.PqIndex
+            .adcShortlistIndexed(ivf, pq, corpus.filter(col("vec_id") < 10),
+              s.read.parquet(persistedPqIndex(ivf, pq, corpus, dir)),
+              k = 5, nProbe = 4),
+          s"$q117Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q117Dir/candidates.parquet"), corpus, k = 5)
     },
@@ -786,9 +787,9 @@ object Similarity {
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       Similarity.synchronized {
-        semanticDedupCandidates(e, dedupModelFor(e, dir), nAssign = 2)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q71Dir/candidates.parquet")
+        StoreSwap.write(
+          semanticDedupCandidates(e, dedupModelFor(e, dir), nAssign = 2),
+          s"$q71Dir/candidates.parquet")
       }
       val comps = graft.operators.ConnectedComponents.run(
         e.select(col("vec_id").as("id")),
@@ -832,10 +833,10 @@ object Similarity {
         graft.ops.Bucketing.writePartitioned(
           graft.operators.IvfIndex.assign(model, store), _, Seq("bucket")))
       Similarity.synchronized {
-        graft.operators.IvfIndex
-          .candidatesIndexed(model, batch, s.read.parquet(path), nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q193Dir/candidates.parquet")
+        StoreSwap.write(
+          graft.operators.IvfIndex
+            .candidatesIndexed(model, batch, s.read.parquet(path), nProbe = 4),
+          s"$q193Dir/candidates.parquet")
       }
       rankCandidateReadback(s.read.parquet(s"$q193Dir/candidates.parquet"), e, k = 5)
     },
@@ -876,13 +877,13 @@ object Similarity {
       val qPath = persistedQuantizedIndex(model, corpus, dir)
       val pPath = persistedPqIndex(model, pq, corpus, dir)
       Similarity.synchronized {
-        s.read.parquet(fPath).select(lit("float").as("artifact"), col("vec_id"))
-          .unionByName(
-            s.read.parquet(qPath).select(lit("int8").as("artifact"), col("vec_id")))
-          .unionByName(
-            s.read.parquet(pPath).select(lit("pq").as("artifact"), col("vec_id")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q195Dir/rows.parquet")
+        StoreSwap.write(
+          s.read.parquet(fPath).select(lit("float").as("artifact"), col("vec_id"))
+            .unionByName(
+              s.read.parquet(qPath).select(lit("int8").as("artifact"), col("vec_id")))
+            .unionByName(
+              s.read.parquet(pPath).select(lit("pq").as("artifact"), col("vec_id"))),
+          s"$q195Dir/rows.parquet")
       }
       vectorArtifactSync(s.read.parquet(s"$q195Dir/rows.parquet"))
     },
@@ -998,11 +999,11 @@ object Similarity {
       Similarity.synchronized {
         val spark2 = e.sparkSession
         import spark2.implicits._
-        pcaAxes(e, dim = 64, nComponents = 2)
-          .map { case (k, vec) => (k, vec.toSeq) }.toDF("k", "axis")
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$q95Dir/axes.parquet")
+        StoreSwap.write(
+          pcaAxes(e, dim = 64, nComponents = 2)
+            .map { case (k, vec) => (k, vec.toSeq) }.toDF("k", "axis")
+            .coalesce(1),
+          s"$q95Dir/axes.parquet")
       }
       val readback = e.sparkSession.read.parquet(s"$q95Dir/axes.parquet")
         .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -1586,8 +1587,8 @@ object Similarity {
     * holds bit-for-bit, the same associativity argument as the absorb).
     * COUNT-keyed class: no doc attribution survives in the sums, so a
     * double subtract corrupts silently — `onceId` stamps the
-    * exactly-once witness marker into `.next` atomically with the
-    * rewrite ([[graft.ops.StoreSwap.stampRetractMarker]], the window/
+    * exactly-once witness marker atomically with the rewrite
+    * ([[graft.ops.StoreSwap.rewrite]], the window/
     * histogram store contract), making the arm safely re-runnable. The
     * rewrite is O(store) = d(d+1)/2 rows — constant-sized, the cheapest
     * retract of any store family.
@@ -1597,17 +1598,12 @@ object Similarity {
       vectors: DataFrame,
       path: String,
       dim: Int = 64,
-      onceId: Option[String] = None): Unit = {
-    if (onceId.exists(graft.ops.StoreSwap.hasRetractMarker(spark, path, _))) return
+      onceId: Option[String] = None): Unit = StoreSwap.rewrite(spark, path, onceId) {
     val neg = momentSums(vectors, dim)
       .select(col("i"), col("j"), negate(col("s")).as("s"), negate(col("n")).as("n"))
     spark.read.parquet(path).unionByName(neg)
       .groupBy("i", "j")
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(path + ".next")
-    onceId.foreach(graft.ops.StoreSwap.stampRetractMarker(spark, path + ".next", _))
-    graft.ops.StoreSwap.swapInto(spark, path)
   }
 
   /** q95: project onto the top principal axes of [[secondMoments]]. The

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Content-keyed warm stores: the one way the query registry persists a
   * reusable artifact (band/exact/component indexes, the n-gram and
@@ -82,6 +82,5 @@ private[graft] object WarmStores {
   /** The common `build`: `df` overwrites the artifact path as zstd
     * parquet. By-name, so a served artifact never plans `df`.
     */
-  def zstd(df: => DataFrame): String => Unit = path =>
-    df.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(path)
+  def zstd(df: => DataFrame): String => Unit = graft.ops.StoreSwap.write(df, _)
 }

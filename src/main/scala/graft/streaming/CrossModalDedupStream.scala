@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ops.StoreSwap
 import graft.pipeline.{CrossModal, Forget}
 
 /** Streaming CROSS-MODAL duplicate-family maintenance — the online form
@@ -69,11 +70,10 @@ object CrossModalDedupStream {
             // rows (results) and the full updated assignment (store)
             val merged = org.apache.spark.sql.graft.shims.snap(
               CrossModal.incremental(s, remainder, path, src), "crossmodal.merged")
-            merged.join(broadcast(remainder.select(col("doc_id"))), Seq("doc_id"))
-              .select(col("component"), col("doc_id"))
-              .write.mode(SaveMode.Overwrite)
-              .option("compression", "zstd")
-              .parquet(s"$resultsDir/batch=$batchId")
+            StoreSwap.write(
+              merged.join(broadcast(remainder.select(col("doc_id"))), Seq("doc_id"))
+                .select(col("component"), col("doc_id")),
+              s"$resultsDir/batch=$batchId")
             CrossModal.absorbMerged(s, merged, remainder, path, src)
           }
         }

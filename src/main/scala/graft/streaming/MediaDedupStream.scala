@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.multimodal.Multimodal
+import graft.ops.StoreSwap
 
 /** Streaming MEDIA near-dup guard + absorb — the online form of the
   * incremental media trio (image q185, audio q186, video q187), closing
@@ -94,10 +95,8 @@ object MediaDedupStream {
             .join(absorbedIds(m, s, indexPath), Seq("doc_id"), "left_anti"),
             "media.remainder")
           if (!remainder.isEmpty) {
-            m.incrementalPairs(s, remainder, indexPath, maxHamming, minOverlap)
-              .write.mode(SaveMode.Overwrite)
-              .option("compression", "zstd")
-              .parquet(s"$resultsDir/batch=$batchId")
+            StoreSwap.write(m.incrementalPairs(s, remainder, indexPath, maxHamming, minOverlap),
+              s"$resultsDir/batch=$batchId")
             m.appendTo(remainder, indexPath)
           }
         }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.queries.{Dedup, DedupStore, Release}
-import graft.ops.ShardExport
+import graft.ops.{ShardExport, StoreSwap}
 
 /** Streaming ingestion into a PUBLISHED RELEASE — the continuous form of
   * the incremental release (q169), and the top of the ingest stack: each
@@ -98,7 +98,7 @@ object ReleaseIngestStream {
     if (tombstonePath.isDefined && guarded.isEmpty) return
     val b = guarded.withColumn("n_chars", length(col("text")).cast("long"))
     val sub = DedupStore.manifestSubdir(indexDir, threshold)
-    def committed(dir: String) = graft.ops.StoreSwap.committed(s, dir)
+    def committed(dir: String) = StoreSwap.committed(s, dir)
     // bootstrap completes only when BOTH artifacts exist (see object doc)
     val bootstrapped = committed(sub) && committed(releaseDir)
     if (!bootstrapped) {
@@ -106,10 +106,10 @@ object ReleaseIngestStream {
       DedupStore.persistComponents(b, indexDir, threshold)
       val keep = s.read.parquet(sub)
         .filter(col("keep") === 1).select(col("doc_id"))
-      releaseRows(b.join(keep, Seq("doc_id"), "left_semi"),
-          packBases = Nil, shardBase = 0L, packTokens, shardTokens)
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(releaseDir)
+      StoreSwap.write(
+        releaseRows(b.join(keep, Seq("doc_id"), "left_semi"),
+          packBases = Nil, shardBase = 0L, packTokens, shardTokens),
+        releaseDir)
     } else {
       val batchIds = b.select(col("doc_id"))
       // FULL-replay guard (crash after the manifest swap, before the
@@ -127,14 +127,11 @@ object ReleaseIngestStream {
       if (nKnown == nBatch) return
       // the day-N+1 manifest, write-aside (its plan reads the live store
       // and the band index — nothing is mutated until it is on disk)
-      val next = sub + ".next"
       val docsLite = s.read.parquet(sub).select(col("doc_id"), col("n_chars"))
         .unionByName(b.select(col("doc_id"), col("n_chars")))
-      DedupStore.incrementalManifest(s, b, docsLite, indexDir, threshold)
-        .select(col("doc_id"), col("cluster_id").as("component"),
-          col("n_chars"), col("keep"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(next)
+      val next = StoreSwap.stage(
+        DedupStore.manifestColumns(DedupStore.incrementalManifest(s, b, docsLite, indexDir, threshold)),
+        sub)
       // batch-sized deltas staged WRITE-ASIDE (never collected): the adds
       // and the demoted keepers' published addresses land in a sibling
       // staging dir, so the release append below reads only staging + the
@@ -142,16 +139,14 @@ object ReleaseIngestStream {
       val stage = releaseDir + ".delta"
       val k0 = s.read.parquet(sub).filter(col("keep") === 1).select(col("doc_id"))
       val k1 = s.read.parquet(next).filter(col("keep") === 1).select(col("doc_id"))
-      k1.join(k0, Seq("doc_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$stage/adds")
+      StoreSwap.write(k1.join(k0, Seq("doc_id"), "left_anti"), s"$stage/adds")
       val live = s.read.parquet(releaseDir)
       val pub = live.filter(col("status") === "published")
-      pub.join(k0.join(k1, Seq("doc_id"), "left_anti"), Seq("doc_id"), "left_semi")
-        .select(col("source"), col("doc_id"), col("n_toks"),
-          col("pack_id"), col("shard_id"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$stage/demoted")
+      StoreSwap.write(
+        pub.join(k0.join(k1, Seq("doc_id"), "left_anti"), Seq("doc_id"), "left_semi")
+          .select(col("source"), col("doc_id"), col("n_toks"),
+            col("pack_id"), col("shard_id")),
+        s"$stage/demoted")
       val adds = s.read.parquet(s"$stage/adds")
       val demoted = s.read.parquet(s"$stage/demoted")
       // bounded continuation offsets: ≤ n_sources pack rows + a 1-row
@@ -186,9 +181,7 @@ object ReleaseIngestStream {
         val tombRows = demoted
           .select(col("source"), col("doc_id"), col("n_toks"),
             col("pack_id"), col("shard_id"), lit("revoked").as("status"))
-        addRows.unionByName(tombRows)
-          .write.mode(SaveMode.Append)
-          .option("compression", "zstd").parquet(releaseDir)
+        StoreSwap.write(addRows.unionByName(tombRows), releaseDir, append = true)
       }
       // band index grows unless a replay already grew it (probe the
       // shingle store — written second inside appendToBandIndex, so its
@@ -207,7 +200,7 @@ object ReleaseIngestStream {
       if (!bandHasBatch) DedupStore.appendToBandIndex(b, indexDir)
       // commit point: the manifest swap (rename-aside — a complete
       // manifest version exists on disk at every instant)
-      graft.ops.StoreSwap.swapInto(s, sub)
+      StoreSwap.swapInto(s, sub)
       val conf = s.sparkContext.hadoopConfiguration
       val stagePath = new org.apache.hadoop.fs.Path(stage)
       stagePath.getFileSystem(conf).delete(stagePath, true)
@@ -277,9 +270,7 @@ object ReleaseIngestStream {
         .filter(coalesce(col("__d"), lit(0)) === 0 ||
           col("status") =!= "revoked")
         .select(rel.columns.map(col).toSeq: _*)
-      restored.write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(releaseDir + ".next")
-      graft.ops.StoreSwap.swapInto(spark, releaseDir)
+      StoreSwap.rewrite(spark, releaseDir)(restored)
     }
     DedupStore.retractBatch(spark, ids, docsAfter, indexDir, threshold)
   }
@@ -299,7 +290,7 @@ object ReleaseIngestStream {
   def compactRelease(
       spark: org.apache.spark.sql.SparkSession,
       releaseDir: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
+      targetFileBytes: Long = 128L << 20): Unit = StoreSwap.rewrite(spark, releaseDir) {
     val rel = spark.read.parquet(releaseDir)
     val live = rel.filter(col("status") === "published")
       .join(rel.filter(col("status").isin("revoked", "taken_down"))
@@ -309,9 +300,6 @@ object ReleaseIngestStream {
         col("pack_id"), col("shard_id"), col("status"))
     live.repartition(graft.ops.Compact.filesFor(live, targetFileBytes), col("shard_id"))
       .sortWithinPartitions("shard_id", "pack_id", "doc_id")
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(releaseDir + ".next")
-    graft.ops.StoreSwap.swapInto(spark, releaseDir)
   }
 
   /** Pack + shard the given docs under the q120 offset rule and emit
@@ -364,20 +352,18 @@ object ReleaseIngestStream {
       releaseDir: String): Unit = {
     val rel = spark.read.parquet(releaseDir)
     val stage = releaseDir + ".tddelta"
-    rel.filter(col("status") === "published")
-      .join(rel.filter(col("status").isin("revoked", "taken_down"))
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .join(broadcast(takedownIds.select(col("doc_id"))),
-        Seq("doc_id"), "left_semi")
-      .select(col("source"), col("doc_id"), col("n_toks"),
-        col("pack_id"), col("shard_id"), lit("taken_down").as("status"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(stage)
+    StoreSwap.write(
+      rel.filter(col("status") === "published")
+        .join(rel.filter(col("status").isin("revoked", "taken_down"))
+            .select(col("doc_id")),
+          Seq("doc_id"), "left_anti")
+        .join(broadcast(takedownIds.select(col("doc_id"))),
+          Seq("doc_id"), "left_semi")
+        .select(col("source"), col("doc_id"), col("n_toks"),
+          col("pack_id"), col("shard_id"), lit("taken_down").as("status")),
+      stage)
     val tomb = spark.read.parquet(stage)
-    if (tomb.limit(1).count() > 0L)
-      tomb.write.mode(SaveMode.Append)
-        .option("compression", "zstd").parquet(releaseDir)
+    if (tomb.limit(1).count() > 0L) StoreSwap.write(tomb, releaseDir, append = true)
     val conf = spark.sparkContext.hadoopConfiguration
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     stagePath.getFileSystem(conf).delete(stagePath, true)

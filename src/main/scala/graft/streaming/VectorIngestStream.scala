@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.IvfIndex
+import graft.ops.StoreSwap
 
 /** Streaming VECTOR ingest — the online form of the persisted ANN index's
   * daily absorb ([[IvfIndex.appendToIndex]]), closing the last store
@@ -127,27 +128,20 @@ object VectorIngestStream {
             // write-aside → swap so the merge never reads-and-rewrites the
             // same live directory.
             val outDir = s"$resultsDir/batch=$batchId"
-            val fresh = IvfIndex
-              .searchIndexed(model, remainder, s.read.parquet(indexPath),
-                k = k, nProbe = nProbe)
-            val fs = new org.apache.hadoop.fs.Path(outDir)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
-            val merged =
-              if (fs.exists(new org.apache.hadoop.fs.Path(outDir, "_SUCCESS"))) {
+            StoreSwap.rewrite(s, outDir) {
+              val fresh = IvfIndex
+                .searchIndexed(model, remainder, s.read.parquet(indexPath),
+                  k = k, nProbe = nProbe)
+              if (StoreSwap.committed(s, outDir)) {
                 val committed = s.read.parquet(outDir)
                 committed.unionByName(fresh.join(
                   committed.select(col("query_id")).distinct(),
                   Seq("query_id"), "left_anti"))
               } else fresh
-            merged.write.mode(SaveMode.Overwrite)
-              .option("compression", "zstd")
-              .parquet(outDir + ".next")
-            graft.ops.StoreSwap.swapInto(s, outDir)
+            }
             quantizedIndexPath.foreach { p =>
-              IvfIndex.assignQuantized(model, remainder).write
-                .mode(SaveMode.Append)
-                .option("compression", "zstd")
-                .partitionBy("bucket").parquet(p)
+              StoreSwap.write(IvfIndex.assignQuantized(model, remainder), p, append = true,
+                partitionBy = Seq("bucket"))
             }
             pqIndex.foreach { case (pq, p) =>
               graft.operators.PqIndex.appendToIndex(model, pq, remainder, p)

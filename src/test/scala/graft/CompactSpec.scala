@@ -45,6 +45,8 @@ class CompactSpec extends SparkSpec {
     // no temp/backup residue
     assert(!new java.io.File(dir + ".__compact__").exists)
     assert(!new java.io.File(dir + ".__old__").exists)
+    assert(!new java.io.File(dir + ".next").exists)
+    assert(!new java.io.File(dir + ".old").exists)
   }
 
   test("partitioned compaction rewrites each leaf dir, preserving layout and pruning") {
@@ -94,6 +96,8 @@ class CompactSpec extends SparkSpec {
       .filter(_.getName.startsWith("source=")).map(_.getName).sorted.toSeq == layoutBefore)
     assert(!new java.io.File(dir + ".__compact__").exists)
     assert(!new java.io.File(dir + ".__old__").exists)
+    assert(!new java.io.File(dir + ".next").exists)
+    assert(!new java.io.File(dir + ".old").exists)
   }
 
   test("refuses a MIXED directory (top-level parquet beside partition subdirs)") {
@@ -120,5 +124,7 @@ class CompactSpec extends SparkSpec {
     assert(new java.io.File(dir).listFiles.exists(_.getName.startsWith("source=")))
     assert(!new java.io.File(dir + ".__compact__").exists)
     assert(!new java.io.File(dir + ".__old__").exists)
+    assert(!new java.io.File(dir + ".next").exists)
+    assert(!new java.io.File(dir + ".old").exists)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.StoreSwap
+import graft.queries.Curation
+import org.apache.spark.sql.functions.sum
 
 /** The house rename-aside swap: publish must be atomic-by-inspection and a
   * failed publish must never strand the live store at `.old` (the r12
@@ -43,5 +45,71 @@ class StoreSwapSpec extends SparkSpec {
     write(Seq(7L), s"$p.next")
     StoreSwap.swapInto(spark, p)
     assert(read(p) == Set(7L))
+  }
+
+  // The crash window between swapInto's two renames, set up by hand on a
+  // refcounted window store: its absorb is an append that never reads the
+  // store, its compaction a rewrite.
+
+  private def docs(ids: Seq[Int]) =
+    ids.map(i => (i.toLong, s"alpha beta gamma delta epsilon doc$i zeta eta")).toDF("doc_id", "text")
+
+  /** Net count per window: what the store holds, whatever its delta rows. */
+  private def netCounts(store: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    store.groupBy("g").agg(sum("rc")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def expected(ids: Seq[Int]) = netCounts(Curation.refcountedWindowStore(docs(ids)))
+
+  private def exists(path: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+
+  /** swapInto died after step 1: the live store is at `.old`, `path` is gone. */
+  private def crashMidSwap(path: String): Unit =
+    java.nio.file.Files.move(java.nio.file.Paths.get(path), java.nio.file.Paths.get(s"$path.old"))
+
+  private def assertRecovered(path: String, ids: Seq[Int]): Unit = {
+    assert(netCounts(spark.read.parquet(path)) == expected(ids), s"rows lost at $path")
+    assert(!exists(s"$path.old") && !exists(s"$path.next"), "recovery must leave no .old/.next")
+  }
+
+  test("an append and a rewrite after a swap that died with no .next restore .old") {
+    val p = java.nio.file.Files.createTempDirectory("graft_swap_crash").toString + "/store"
+    Curation.absorbIntoRefcountedStore(spark, docs(0 until 6), p)
+    crashMidSwap(p)
+    Curation.absorbIntoRefcountedStore(spark, docs(6 until 9), p)
+    assertRecovered(p, 0 until 9)
+    crashMidSwap(p)
+    Curation.compactRefcountedStore(spark, p)
+    assertRecovered(p, 0 until 9)
+  }
+
+  test("an append and a rewrite after a swap that died with .next committed publish .next") {
+    val p = java.nio.file.Files.createTempDirectory("graft_swap_crash_next").toString + "/store"
+    Curation.absorbIntoRefcountedStore(spark, docs(0 until 6), p)
+    Curation.absorbIntoRefcountedStore(spark, docs(6 until 9), p)
+    // a retract of the last batch was staged and committed when the swap died
+    Curation.retractedRefcountedRows(spark, docs(6 until 9), p).write.parquet(s"$p.next")
+    crashMidSwap(p)
+    Curation.absorbIntoRefcountedStore(spark, docs(9 until 12), p)
+    assertRecovered(p, (0 until 6) ++ (9 until 12))
+    Curation.retractedRefcountedRows(spark, docs(9 until 12), p).write.parquet(s"$p.next")
+    crashMidSwap(p)
+    Curation.compactRefcountedStore(spark, p)
+    assertRecovered(p, 0 until 6)
+  }
+
+  test("no store writer in src/main bypasses StoreSwap") {
+    // a zstd store write, a `.next` path, or a retract-witness call
+    val writer = """option\("compression",\s*"zstd"\)|\.next(?![\w(])|(has|stamp)RetractMarker""".r
+    assert(writer.findFirstIn(""".option("compression", "zstd")""").isDefined)
+    assert(writer.findFirstIn("""parquet(path + ".next")""").isDefined)
+    assert(writer.findFirstIn("""s"$path/dhbands.next"""").isDefined)
+    assert(writer.findFirstIn("rng.nextInt(3); it.next()").isEmpty)
+    val comment = Seq("*", "//", "/*")
+    val hits = SourceScan.hits(writer).filterNot { h =>
+      h.file.getName == "StoreSwap.scala" || comment.exists(h.text.startsWith) ||
+        // the one exception: Compact.compact stages in its caller's codec
+        (h.file.getName == "Compact.scala" && h.text.contains("""option("compression", codec)"""))
+    }
+    assert(hits.isEmpty, "write stores through graft.ops.StoreSwap:\n" + hits.mkString("\n"))
   }
 }

@@ -98,27 +98,13 @@ class WarmStoresSpec extends SparkSpec {
   }
 
   test("no java.nio _SUCCESS existence probe in src/main: use StoreSwap.committed") {
-    val cwd = new java.io.File(sys.props("user.dir")).getAbsoluteFile
-    val root = Iterator.iterate(cwd)(_.getParentFile).takeWhile(_ != null)
-      .map(new java.io.File(_, "src/main")).find(_.isDirectory)
-      .getOrElse(fail(s"no src/main at or above $cwd"))
-    def scalaFiles(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).iterator.flatten.flatMap(scalaFiles)
-      else Iterator(f).filter(_.getName.endsWith(".scala"))
     // a local-filesystem path built around a `_SUCCESS` literal, also
     // when the call wraps onto the next line
     val probe = """(Paths\.get|Path\.of|new\s+(java\.io\.)?File)\([^)]*?_SUCCESS""".r
     assert(probe.findFirstIn(
       "Files.exists(java.nio.file.Paths.get(\n  path, \"shingles\", \"_SUCCESS\"))").isDefined)
     assert(probe.findFirstIn("new org.apache.hadoop.fs.Path(dir, \"_SUCCESS\")").isEmpty)
-    val hits = scalaFiles(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val text = try src.mkString finally src.close()
-      probe.findAllMatchIn(text).map { m =>
-        val line = text.take(m.start).count(_ == '\n')
-        s"${f.getPath}:${line + 1}: ${text.linesIterator.drop(line).next().trim}"
-      }.toList
-    }.toList
+    val hits = SourceScan.hits(probe)
     assert(hits.isEmpty,
       "probe committed markers through graft.ops.StoreSwap.committed:\n" + hits.mkString("\n"))
   }

@@ -61,21 +61,8 @@ class SnapSpec extends _root_.graft.SparkSpec {
   }
 
   test("no materialization in src/main bypasses shims.snap") {
-    val cwd = new java.io.File(sys.props("user.dir")).getAbsoluteFile
-    val root = Iterator.iterate(cwd)(_.getParentFile).takeWhile(_ != null)
-      .map(new java.io.File(_, "src/main")).find(_.isDirectory)
-      .getOrElse(fail(s"no src/main at or above $cwd"))
-    def scalaFiles(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).iterator.flatten.flatMap(scalaFiles)
-      else Iterator(f).filter(_.getName.endsWith(".scala"))
     val materialize = """localCheckpoint\(|\.checkpoint\(""".r
-    val hits = scalaFiles(root).filter(_.getName != "shims.scala").flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex
-        .filter { case (line, _) => materialize.findFirstIn(line).isDefined }
-        .map { case (line, i) => s"${f.getPath}:${i + 1}: ${line.trim}" }.toList
-      finally src.close()
-    }.toList
+    val hits = _root_.graft.SourceScan.hits(materialize).filter(_.file.getName != "shims.scala")
     assert(hits.isEmpty, "materialize through shims.snap instead:\n" + hits.mkString("\n"))
   }
 }
