@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions.col
   * ~`targetBytes`-sized files, re-sorted by `sortCol`, so both file count
   * and per-file ordering (row-group min/max pruning) are restored.
   *
-  * The rewrite is staged beside the directory and published through
-  * [[StoreSwap.swapInto]], the same write-aside swap every store rewrite
-  * uses.
+  * The rewrite is staged beside the directory in the caller's codec and
+  * published through [[StoreSwap.rewrite]], the same write-aside swap
+  * every store rewrite uses.
   */
 object Compact {
 
@@ -95,13 +95,7 @@ object Compact {
       if (sortable) df.repartitionByRange(nOut, col(sortCol)).sortWithinPartitions(col(sortCol))
       else df.coalesce(nOut)
 
-    // the caller's codec (zstd or gzip, reference parity) is why this one
-    // stage does not go through StoreSwap.stage
-    val live = dir.stripSuffix("/")
-    arranged.write.mode("overwrite").option("compression", codec).parquet(live + ".next")
-    StoreSwap.swapInto(spark, live)
-    val rows = spark.read.parquet(live).count()
-
+    val rows = StoreSwap.rewrite(spark, dir.stripSuffix("/"), codec = codec)(arranged)
     val after = fs.listStatus(path).count(_.getPath.getName.endsWith(".parquet"))
     CompactResult(parts.length, after, rows)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -88,10 +88,11 @@ object ShardExport {
     val assigned = assignShards(packs, epoch, shardTokens)
       .select(col("source"), col("pack_id"), col("shard_id"))
     val dir = s"$outDir/epoch=$epoch"
-    pd.join(assigned, Seq("source", "pack_id"))
-      .select(col("shard_id"), col("source"), col("pack_id"), col("doc_id"), col("text"))
-      .repartition(col("shard_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard_id").parquet(dir)
+    StoreSwap.write(
+      pd.join(assigned, Seq("source", "pack_id"))
+        .select(col("shard_id"), col("source"), col("pack_id"), col("doc_id"), col("text"))
+        .repartition(col("shard_id")),
+      dir, partitionBy = Seq("shard_id"))
     dir
   }
 
@@ -120,9 +121,10 @@ object ShardExport {
       epoch: Int,
       packTokens: Int,
       shardTokens: Int): String = {
-    appendAssembly(spark, batch, epochDir, epoch, packTokens, shardTokens)
-      .repartition(col("shard_id"))
-      .write.mode(SaveMode.Append).partitionBy("shard_id").parquet(epochDir)
+    StoreSwap.write(
+      appendAssembly(spark, batch, epochDir, epoch, packTokens, shardTokens)
+        .repartition(col("shard_id")),
+      epochDir, append = true, partitionBy = Seq("shard_id"))
     epochDir
   }
 

@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions.col
   *     schema; absent → pass through and report (`pyarrow/main.py:70-73`);
   *   - zstd compression (gzip as an option — the reference's runtime codec
   *     probe, `pyarrow/main.py:125-133`, is unnecessary: Spark bundles zstd);
-  *   - 1 MB uncompressed data pages (`pyarrow/main.py:145`);
+  *   - 1 MB uncompressed data pages (`pyarrow/main.py:145`), which every
+  *     [[StoreSwap.write]] sets;
   *   - no INT96 timestamps (Spark default `TIMESTAMP_MICROS`);
   *   - optionally a single output file named by the caller
   *     (`<stem>.zst.parquet` key mapping lives in [[graft.pipeline.ConvertJob]]).
+  *
+  * One pass, like the reference: the reported row count is the one
+  * [[StoreSwap.write]] observes on the write job itself, so no write reads
+  * its output back to count it.
   *
   * Scale posture: `singleFile = true` is a PARITY mode (one Lambda invoke →
   * one file). At 100 TB you keep `singleFile = false`: the global sort is a
@@ -47,17 +52,10 @@ object SortedWrite {
       outPath: String,
       sortCol: String = "time",
       codec: String = "zstd",
-      singleFile: Boolean = false,
-      pageSizeBytes: Int = 1048576): WriteResult = {
+      singleFile: Boolean = false): WriteResult = {
 
     val sortable = df.columns.contains(sortCol)
-    val sorted = if (sortable) df.orderBy(col(sortCol).asc) else df
-
-    def writerOf(d: DataFrame) =
-      d.write
-        .mode("overwrite")
-        .option("compression", codec)
-        .option("parquet.page.size", pageSizeBytes.toString)
+    val fs = new Path(outPath).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
 
     val rows =
       if (singleFile) {
@@ -67,9 +65,7 @@ object SortedWrite {
         val one =
           if (sortable) df.coalesce(1).sortWithinPartitions(col(sortCol).asc)
           else df.coalesce(1)
-        writerOf(one).parquet(tmpDir)
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        val fs = new Path(tmpDir).getFileSystem(conf)
+        val n = StoreSwap.write(one, tmpDir, codec = codec)
         val part = fs
           .listStatus(new Path(tmpDir))
           .map(_.getPath)
@@ -82,18 +78,15 @@ object SortedWrite {
         fs.rename(part, target)
         fs.delete(new Path(tmpDir), true)
         if (sortable) stampLocal(fs, Seq(target), sortCol)
-        df.sparkSession.read.parquet(outPath).count()
+        n
       } else {
-        writerOf(sorted).parquet(outPath)
+        val n = StoreSwap.write(if (sortable) df.orderBy(col(sortCol).asc) else df, outPath, codec = codec)
         if (sortable) {
-          val conf = df.sparkSession.sparkContext.hadoopConfiguration
-          val fs = new Path(outPath).getFileSystem(conf)
           val parts = fs.listStatus(new Path(outPath)).map(_.getPath)
             .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
           stampLocal(fs, parts.toSeq, sortCol)
         }
-        // Metadata-only count of what was just written.
-        df.sparkSession.read.parquet(outPath).count()
+        n
       }
 
     WriteResult(outPath, rows, sortable, sortCol, codec)
@@ -111,38 +104,21 @@ object SortedWrite {
     * large date across many tasks by sort-key range. The dynamic-partition
     * writer still routes every row to its directory, and each task's range
     * is contiguous in (date, time) so files stay internally sorted.
-    * `maxRecordsPerFile` additionally caps file size when set.
     */
   def writePartitioned(
       df: DataFrame,
       outPath: String,
       partitionCols: Seq[String],
       sortCol: String = "time",
-      codec: String = "zstd",
-      pageSizeBytes: Int = 1048576,
-      maxRecordsPerFile: Long = 0L): WriteResult = {
+      codec: String = "zstd"): WriteResult = {
     require(partitionCols.nonEmpty, "at least one partition column required")
     val sortable = df.columns.contains(sortCol)
     val arranged =
       if (sortable) df.orderBy((partitionCols :+ sortCol).map(col): _*)
       else df.repartition(partitionCols.map(col): _*)
-    withMaxRecords(
-      arranged.write
-        .mode("overwrite")
-        .option("compression", codec)
-        .option("parquet.page.size", pageSizeBytes.toString),
-      maxRecordsPerFile)
-      .partitionBy(partitionCols: _*).parquet(outPath)
-    val rows = df.sparkSession.read.parquet(outPath).count()
+    val rows = StoreSwap.write(arranged, outPath, partitionBy = partitionCols, codec = codec)
     WriteResult(outPath, rows, sortable, sortCol, codec)
   }
-
-  /** Apply the optional per-file record cap (0 = writer default). */
-  private[ops] def withMaxRecords[T](
-      w: org.apache.spark.sql.DataFrameWriter[T],
-      maxRecordsPerFile: Long): org.apache.spark.sql.DataFrameWriter[T] =
-    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    else w
 
   /** Stamp `sorting_columns` into footers of local files (in-place rewrite
     * needs a seekable file; object-store outputs keep sorted ORDER without

@@ -1,11 +1,14 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
-/** The one store writer: every persisted store lands on disk as zstd
-  * Parquet through [[write]], and every write-aside rewrite publishes
-  * through the house swap below.
+/** The one Parquet writer: every engine write — stores, converted
+  * objects, compactions, shard exports — lands on disk through [[write]],
+  * in the caller's codec (zstd unless it picks gzip) with the reference's
+  * 1 MB pages, and every write-aside rewrite publishes through the house
+  * swap below.
   *
   * The swap publishes `path + ".next"` at `path` without ever holding the
   * only complete copy in a half-deleted state. The naive
@@ -23,32 +26,48 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * under a well-known name, and the unreadable window shrinks to two
   * renames. A crash between steps 1 and 2 leaves `path` absent and
   * `.old` present; `recover` finishes that swap at the head of every
-  * [[write]] append, [[stage]] and [[rewrite]] — BEFORE their rows are
-  * planned, which is why those rows are by-name — by publishing `.next`
-  * when it carries `_SUCCESS` and restoring `.old` otherwise. Without it
-  * an append that never reads the store would recreate `path` holding
-  * only its batch, and the next swap's clearing of a stale `.old` would
-  * delete the only full copy. A `.old` beside a live `path` (a crash
-  * between steps 2 and 3) is superseded, and [[swapInto]] clears it
-  * first. On a real object store (no atomic rename) the production
-  * analogue is write-new -> repoint -> retire, which this sequence
-  * degrades to gracefully.
+  * [[write]] append, [[stage]], [[rewrite]] and [[committed]] probe —
+  * BEFORE their rows are planned, which is why those rows are by-name — by
+  * publishing `.next` when it carries `_SUCCESS` and restoring `.old`
+  * otherwise. Without it an append that never reads the store, or a
+  * bootstrap that reads the missing `_SUCCESS` as "no store yet", would
+  * recreate `path` holding only its batch, and the next swap's clearing
+  * of a stale `.old` would delete the only full copy. A `.old` beside a
+  * live `path` (a crash between steps 2 and 3) is superseded, and
+  * [[swapInto]] clears it first. On a real object store (no atomic
+  * rename) the production analogue is write-new -> repoint -> retire,
+  * which this sequence degrades to gracefully.
   */
 object StoreSwap {
 
-  /** The zstd Parquet store write: overwrite `path` (or append to it)
-    * with `rows`, hive-partitioned by `partitionBy` when given. An append
-    * first finishes an interrupted swap of `path` (see object doc).
+  /** Parquet data page size: the reference's 1 MB (`pyarrow/main.py:145`),
+    * also parquet-hadoop's default, set so it cannot drift with the jar.
+    */
+  private val PageSizeBytes = "1048576"
+
+  /** Overwrite `path` (or append to it) with `rows` as `codec` Parquet,
+    * hive-partitioned by `partitionBy` when given, at most
+    * `maxRecordsPerFile` rows a file when positive, and return the number
+    * of rows written. The count is observed on the write's own job, so
+    * nothing reads the output back. An append first finishes an
+    * interrupted swap of `path` (see object doc).
     */
   def write(
       rows: => DataFrame,
       path: String,
       append: Boolean = false,
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil,
+      codec: String = "zstd",
+      maxRecordsPerFile: Long = 0L): Long = {
     if (append) recover(path)
-    val w = rows.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
-      .option("compression", "zstd")
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(path)
+    val written = Observation()
+    val w = rows.observe(written, count(lit(1)).as("rows")).write
+      .mode(if (append) SaveMode.Append else SaveMode.Overwrite)
+      .option("compression", codec)
+      .option("parquet.page.size", PageSizeBytes)
+    val capped = if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+    (if (partitionBy.isEmpty) capped else capped.partitionBy(partitionBy: _*)).parquet(path)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Write `rows` aside at `path + ".next"` and return that path, for a
@@ -61,18 +80,22 @@ object StoreSwap {
     path + ".next"
   }
 
-  /** Replace the store at `path` with `rows` (by-name: usually a read of
-    * `path` itself): stage, stamp the `onceId` witness, swap. A retract
-    * whose `onceId` witness is already on the store is skipped before its
-    * rows are planned (see [[RetractMarkerPrefix]]).
+  /** Replace the store at `path` with `codec` Parquet `rows` (by-name:
+    * usually a read of `path` itself): stage, stamp the `onceId` witness,
+    * swap; return the rows staged. A retract whose `onceId` witness is
+    * already on the store is skipped before its rows are planned (see
+    * [[RetractMarkerPrefix]]) and writes none.
     */
-  def rewrite(spark: SparkSession, path: String, onceId: Option[String] = None)(
-      rows: => DataFrame): Unit = {
+  def rewrite(spark: SparkSession, path: String, onceId: Option[String] = None,
+      codec: String = "zstd")(rows: => DataFrame): Long = {
     recover(path)
-    if (!onceId.exists(hasRetractMarker(spark, path, _))) {
-      val next = stage(rows, path)
+    if (onceId.exists(hasRetractMarker(spark, path, _))) 0L
+    else {
+      val next = path + ".next"
+      val n = write(rows, next, codec = codec)
       onceId.foreach(stampRetractMarker(spark, next, _))
       swapInto(spark, path)
+      n
     }
   }
 
@@ -113,9 +136,12 @@ object StoreSwap {
     * local filesystem, so a bootstrap/committed probe built on it reads
     * "absent" for every HDFS/object-store deployment — which silently
     * re-bootstraps over a live store. Shared by every production-path
-    * existence check (stream bootstraps, optional-artifact probes).
+    * existence check (stream bootstraps, optional-artifact probes). An
+    * interrupted swap of `dir` is finished first, so a store a crash left
+    * at `dir.old` reads as committed instead of absent.
     */
   def committed(spark: SparkSession, dir: String): Boolean = {
+    recover(dir)
     val p = new Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }

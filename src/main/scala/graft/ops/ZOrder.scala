@@ -107,9 +107,6 @@ object ZOrder {
         df.withColumn("__z", z).orderBy(col("__z")).drop("__z")
       case None => df // empty / all-null bounds: nothing to cluster
     }
-    SortedWrite.withMaxRecords(
-      arranged.write.mode("overwrite").option("compression", codec),
-      maxRecordsPerFile.toLong)
-      .parquet(outPath)
+    StoreSwap.write(arranged, outPath, codec = codec, maxRecordsPerFile = maxRecordsPerFile)
   }
 }

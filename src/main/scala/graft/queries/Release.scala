@@ -833,8 +833,7 @@ object Release {
       val storePath = WarmStores.key(dir, "packstore", "p512", WarmStores.Pid)
       Curation.synchronized {
         if (!graft.ops.StoreSwap.committed(s, storePath)) {
-          packManifest(docs.filter(col("doc_id") % 7 =!= 0)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
+          StoreSwap.write(packManifest(docs.filter(col("doc_id") % 7 =!= 0)), storePath)
         }
       }
       packManifestAppend(
@@ -949,8 +948,7 @@ object Release {
       val storePath = WarmStores.key(dir, "bpackstore", "b512", WarmStores.Pid)
       Curation.synchronized {
         if (!graft.ops.StoreSwap.committed(s, storePath)) {
-          boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
+          StoreSwap.write(boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)), storePath)
         }
       }
       boundaryPackAppend(
@@ -987,8 +985,7 @@ object Release {
       val batch = docs.filter(col("doc_id") % 7 === 0)
       val path = WarmStores.key(dir, "bpackretract", "b512", WarmStores.Pid)
       Curation.synchronized {
-        boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
+        StoreSwap.write(boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)), path)
         absorbIntoBoundaryPackStore(s, batch, path)
         retractFromBoundaryPackStore(s, batch.select(col("doc_id")), path)
       }
@@ -1493,9 +1490,7 @@ object Release {
           graft.ops.ShardExport.write(
             Tables(s, dir, "documents"), out, epoch = 1,
             packTokens = 512, shardTokens = 2048)
-          graft.ops.ShardExport.manifest(s, epochDir).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(manifestStore)
+          StoreSwap.write(graft.ops.ShardExport.manifest(s, epochDir), manifestStore)
         }
       }
       graft.ops.ShardExport.audit(s, epochDir, s.read.parquet(manifestStore))
@@ -1596,9 +1591,7 @@ object Release {
           // attest the published shards ONCE; their files are immutable
           // under append (byte-stability spec-proved), so these rows are
           // the artifact every later day reuses
-          graft.ops.ShardExport.manifest(s, epochDir)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(baseManifestPath)
+          StoreSwap.write(graft.ops.ShardExport.manifest(s, epochDir), baseManifestPath)
           java.nio.file.Files.writeString(marker, m.toString)
           m
         }

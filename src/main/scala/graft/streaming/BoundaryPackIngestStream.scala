@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.queries.{Curation, Release}
+import graft.queries.Release
 
 /** Streaming ingestion into the BOUNDARY-pack manifest — the continuous
   * form of the bucket-grain continuation (q165), and
@@ -21,7 +21,8 @@ import graft.queries.{Curation, Release}
   * the standard foreachBatch at-least-once file-sink contract.
   *
   * The FIRST batch bootstraps via [[Release.boundaryPack]]; every later
-  * batch appends [[Release.boundarySpans]].
+  * batch appends [[Release.boundarySpans]] through
+  * [[Release.absorbIntoBoundaryPackStore]], the batch path's absorb.
   */
 object BoundaryPackIngestStream {
 
@@ -43,19 +44,9 @@ object BoundaryPackIngestStream {
           val b = tombstonePath.fold(batch.toDF())(p =>
             graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
           if (tombstonePath.isEmpty || !b.isEmpty) {
-          val bootstrapped = graft.ops.StoreSwap.committed(s, storeDir)
-          if (!bootstrapped) {
-            Release.boundaryPack(b, budget).write
-              .mode(SaveMode.Overwrite).parquet(storeDir)
-          } else {
-            val counts = Release
-              .boundaryResumeCounts(s.read.parquet(storeDir), budget)
-              .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            import s.implicits._
-            Release.boundarySpans(
-                b, counts.toDF("source", "bucket_slot", "base_rn"), budget)
-              .write.mode(SaveMode.Append).parquet(storeDir)
-          }
+          if (!graft.ops.StoreSwap.committed(s, storeDir))
+            graft.ops.StoreSwap.write(Release.boundaryPack(b, budget), storeDir)
+          else Release.absorbIntoBoundaryPackStore(s, b, storeDir, budget)
           }
           ()
         }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.queries.{Curation, Release}
+import graft.queries.Release
 
 /** Streaming ingestion INTO the pack manifest — the continuous form of the
   * continuation append (q159): each micro-batch plays the role of a "day"
@@ -27,7 +27,8 @@ import graft.queries.{Curation, Release}
   * downstream batch-id manifest check.
   *
   * The FIRST batch bootstraps the manifest via [[Release.packManifest]]
-  * (there is no day-0 to resume from); every later batch appends spans.
+  * (there is no day-0 to resume from); every later batch appends spans
+  * through [[Release.absorbIntoPackStore]], the batch path's absorb.
   */
 object PackIngestStream {
 
@@ -51,21 +52,9 @@ object PackIngestStream {
           val b = tombstonePath.fold(batch.toDF())(p =>
             graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
           if (tombstonePath.isEmpty || !b.isEmpty) {
-          val bootstrapped = graft.ops.StoreSwap.committed(s, storeDir)
-          if (!bootstrapped) {
-            Release.packManifest(b, packTokens).write
-              .mode(SaveMode.Overwrite).parquet(storeDir)
-          } else {
-            // bounded collect (one row per source) — materializes the
-            // resume state so the span plan is store-independent
-            val offsets = Release
-              .packResumeOffsets(s.read.parquet(storeDir), packTokens)
-              .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-            import s.implicits._
-            val base = offsets.toDF("source", "base_off")
-            Release.packSpans(b, base, packTokens).write
-              .mode(SaveMode.Append).parquet(storeDir)
-          }
+          if (!graft.ops.StoreSwap.committed(s, storeDir))
+            graft.ops.StoreSwap.write(Release.packManifest(b, packTokens), storeDir)
+          else Release.absorbIntoPackStore(s, b, storeDir, packTokens)
           }
           ()
         }

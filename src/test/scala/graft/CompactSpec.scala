@@ -35,6 +35,7 @@ class CompactSpec extends SparkSpec {
     // content identical
     val after = spark.read.parquet(dir)
     assert(after.orderBy("event_id").collect().sameElements(expect))
+    assert(res.rows == after.count(), "the reported rows are the rows written")
     // every compacted file internally sorted by the sort column
     new java.io.File(dir).listFiles
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -72,6 +73,9 @@ class CompactSpec extends SparkSpec {
       .filter(_.getName.startsWith("bucketed=")).map(_.getName).sorted.toSeq == partsBefore)
     val back = spark.read.parquet(dir)
     assert(back.orderBy("event_id").collect().sameElements(expect))
+    res.foreach { case (rel, r) =>
+      assert(r.rows == spark.read.parquet(s"$dir/$rel").count(), s"rows reported for $rel")
+    }
     val pruned = back.filter(col("bucketed") === 1)
     val scan = pruned.queryExecution.executedPlan.collect {
       case fs: org.apache.spark.sql.execution.FileSourceScanExec => fs

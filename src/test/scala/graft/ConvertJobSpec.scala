@@ -38,6 +38,7 @@ class ConvertJobSpec extends SparkSpec {
 
     val back = spark.read.parquet(out)
     assert(back.count() == 500)
+    assert(res.rows == back.count(), "the reported rows are the rows written")
     // globally ascending time
     val times = back.select("time").collect().map(_.getLong(0))
     assert(times.sliding(2).forall(p => p(0) <= p(1)), "output must be globally sorted")
@@ -54,6 +55,11 @@ class ConvertJobSpec extends SparkSpec {
     val mismatch = back
       .filter(unix_millis(col("time_dt")) =!= col("time")).count()
     assert(mismatch == 0, "time_dt must parse to exactly `time` epoch ms")
+
+    // an empty input writes one empty file and reports 0 rows
+    val empty = s"$dir/out/finding-empty.zst.parquet"
+    val none = ConvertJob.runOn(spark.read.json(fixtures._2).limit(0), empty, singleFile = true)
+    assert(none.rows == 0L && none.rows == spark.read.parquet(empty).count())
   }
 
   test("sorted and unsorted variants converge to identical sorted content") {
@@ -116,7 +122,7 @@ class ConvertJobSpec extends SparkSpec {
   }
 
   test("multi-part sorted write stamps every part file footer") {
-    import graft.ops.{SortedWrite, SortingColumnsStamp}
+    import graft.ops.SortingColumnsStamp
     val out = s"$dir/out4/parts.parquet"
     val df = spark.range(0, 10000).toDF("time")
       .withColumn("v", col("time") * 2)
@@ -124,7 +130,7 @@ class ConvertJobSpec extends SparkSpec {
     // keep the range exchange at 4 partitions so the write emits 4 files
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try SortedWrite.write(df, out, sortCol = "time")
+    val res = try ConvertJob.runOn(df, out, sortCol = "time")
     finally {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
       spark.conf.unset("spark.sql.shuffle.partitions")
@@ -138,6 +144,7 @@ class ConvertJobSpec extends SparkSpec {
     }
     // range-partitioned sort: reading the directory back is still globally sorted per file
     assert(spark.read.parquet(out).count() == 10000)
+    assert(res.rows == spark.read.parquet(out).count(), "the reported rows are the rows written")
   }
 
   test("malformed NDJSON line: FAILFAST raises (pyarrow parity), PERMISSIVE opts out") {
@@ -157,6 +164,7 @@ class ConvertJobSpec extends SparkSpec {
     assert(res.rows == 2, "permissive mode keeps rows (corrupt one nulled)")
     val cols = spark.read.parquet(s"$dir/out_perm.zst.parquet").columns
     assert(cols.contains("_corrupt_record"), "lenient mode surfaces the corrupt line")
+    assert(res.rows == spark.read.parquet(s"$dir/out_perm.zst.parquet").count())
   }
 
   test("date-partitioned convert: hive dirs per day, sorted within, prunable") {
@@ -181,6 +189,7 @@ class ConvertJobSpec extends SparkSpec {
 
     val back = spark.read.parquet(out)
     assert(back.schema("time_dt").dataType == TimestampType, "coercion must survive")
+    assert(res.rows == back.count(), "the reported rows are the rows written")
     // per-file sort within each date partition
     dirs.foreach { d =>
       d.listFiles.filter(_.getName.endsWith(".parquet")).foreach { f =>

@@ -80,6 +80,10 @@ class StoreSwapSpec extends SparkSpec {
     crashMidSwap(p)
     Curation.compactRefcountedStore(spark, p)
     assertRecovered(p, 0 until 9)
+    // a bootstrap probe must read the cut store as committed, not absent
+    crashMidSwap(p)
+    assert(StoreSwap.committed(spark, p), "a store cut mid-swap must still read as committed")
+    assertRecovered(p, 0 until 9)
   }
 
   test("an append and a rewrite after a swap that died with .next committed publish .next") {
@@ -95,21 +99,35 @@ class StoreSwapSpec extends SparkSpec {
     crashMidSwap(p)
     Curation.compactRefcountedStore(spark, p)
     assertRecovered(p, 0 until 6)
+    Curation.retractedRefcountedRows(spark, docs(3 until 6), p).write.parquet(s"$p.next")
+    crashMidSwap(p)
+    assert(StoreSwap.committed(spark, p), "a store cut mid-swap must still read as committed")
+    assertRecovered(p, 0 until 3)
   }
 
   test("no store writer in src/main bypasses StoreSwap") {
-    // a zstd store write, a `.next` path, or a retract-witness call
-    val writer = """option\("compression",\s*"zstd"\)|\.next(?![\w(])|(has|stamp)RetractMarker""".r
+    // any DataFrameWriter chain, a zstd option, a `.next` path, or a
+    // retract-witness call
+    val writer =
+      """\.write(?![\w(])|option\("compression",\s*"zstd"\)|\.next(?![\w(])|(has|stamp)RetractMarker""".r
     assert(writer.findFirstIn(""".option("compression", "zstd")""").isDefined)
     assert(writer.findFirstIn("""parquet(path + ".next")""").isDefined)
     assert(writer.findFirstIn("""s"$path/dhbands.next"""").isDefined)
+    assert(writer.findFirstIn("df.write\n  .mode(SaveMode.Append)").isDefined)
     assert(writer.findFirstIn("rng.nextInt(3); it.next()").isEmpty)
+    assert(writer.findFirstIn("raf.write(footer); sdf.writeStream; StoreSwap.write(df, p)").isEmpty)
     val comment = Seq("*", "//", "/*")
-    val hits = SourceScan.hits(writer).filterNot { h =>
-      h.file.getName == "StoreSwap.scala" || comment.exists(h.text.startsWith) ||
-        // the one exception: Compact.compact stages in its caller's codec
-        (h.file.getName == "Compact.scala" && h.text.contains("""option("compression", codec)"""))
+    // the writes that are no Parquet store: the bench's noop sinks,
+    // Verify's result dump, and the catalog table of Bucketing.writeBucketed
+    def exempt(h: SourceScan.Hit): Boolean = (h.file.getName, h.text) match {
+      case ("Bench.scala" | "BenchOne.scala", t) => t.contains(""".write.format("noop")""")
+      case ("Verify.scala", t) => t.contains(""".coalesce(1).write.mode("overwrite")""")
+      case ("Bucketing.scala", t) => t == "df.write"
+      case _ => false
     }
-    assert(hits.isEmpty, "write stores through graft.ops.StoreSwap:\n" + hits.mkString("\n"))
+    val hits = SourceScan.hits(writer).filterNot { h =>
+      h.file.getName == "StoreSwap.scala" || comment.exists(h.text.startsWith) || exempt(h)
+    }
+    assert(hits.isEmpty, "write Parquet through graft.ops.StoreSwap:\n" + hits.mkString("\n"))
   }
 }
