@@ -23,10 +23,8 @@ object Vectors {
     * through unchanged). L2 distance between unit vectors is monotone in
     * cosine, which lets L2-trained quantizers serve cosine search.
     * Codegen'd single-pass kernel ([[UnitVector]]) — bit-identical to the
-    * zip_with formulation it replaces (see the expression doc), but
-    * codegen-capable, so the hundreds of inlined copies the PQ/IVF argmin
-    * cascades create collapse under whole-stage subexpression elimination
-    * instead of each paying an interpreted three-pass normalization.
+    * zip_with formulation it replaces (see the expression doc), and the
+    * same body the IVF/PQ model expressions normalize through.
     * The output element type follows the input's (float stays float,
     * double stays double — no silent 24-bit rounding).
     */

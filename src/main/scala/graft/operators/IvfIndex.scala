@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.functions.Vectors
+import graft.functions.{Codebooks, VectorExpressions, Vectors}
 import graft.ops.StoreSwap
 
 /** IVF (inverted-file) approximate nearest neighbor — the centroid-
@@ -15,9 +15,9 @@ import graft.ops.StoreSwap
   * Shape for 100 TB:
   *   - `fit` trains k-means on a driver-bounded SAMPLE of the corpus
   *     (centroids are k×dim floats — kilobytes — regardless of corpus size);
-  *   - bucket assignment is a pure codegen expression (argmin of k
-  *     [[graft.functions.L2Squared]] distances against centroid literals) —
-  *     no model object, no UDF, no shuffle; the corpus is written
+  *   - bucket assignment is one codegen expression
+  *     ([[graft.functions.NearestCentroids]], carrying the centroids as one
+  *     value) — no UDF, no shuffle; the corpus is written
   *     partitioned/bucketed by `bucket` once and probed forever;
   *   - `search` probes the `nProbe` nearest centroids per query, so the
   *     candidate join is an equi-join on bucket touching nProbe/k of the
@@ -30,30 +30,22 @@ object IvfIndex {
     // search ranks by cosine, so bucketing must be direction-based: compare
     // UNIT query/corpus vectors against UNIT centroids (L2 on the unit
     // sphere is monotone in cosine — spherical k-means assignment)
-    private def dists(emb: Column): Seq[Column] = {
-      val u = Vectors.unit(emb)
-      centroids.toSeq.map(c => Vectors.l2sq(u, typedlit(c.toSeq)))
-    }
+    private lazy val book = new Codebooks(Array(centroids))
 
-    /** Nearest-centroid id (0-based) — codegen argmin over k distances. */
-    def bucketOf(emb: Column): Column = {
-      val ds = dists(emb)
-      val zipped = array(ds.zipWithIndex.map { case (d, i) =>
-        struct(d.as("d"), lit(i).as("i"))
-      }: _*)
-      // array_min on array<struct> orders by (d, i): deterministic ties
-      array_min(zipped).getField("i")
-    }
+    /** Nearest-centroid id (0-based); ties break to the lower id. */
+    def bucketOf(emb: Column): Column = probeBuckets(emb, 1).getItem(0)
 
     /** The `nProbe` nearest centroid ids, nearest first. */
-    def probeBuckets(emb: Column, nProbe: Int): Column = {
-      val ds = dists(emb)
-      val zipped = array(ds.zipWithIndex.map { case (d, i) =>
-        struct(d.as("d"), lit(i).as("i"))
-      }: _*)
-      transform(slice(array_sort(zipped), 1, nProbe), x => x.getField("i"))
-    }
+    def probeBuckets(emb: Column, nProbe: Int): Column =
+      VectorExpressions.nearestCentroids(emb, book, nProbe)
   }
+
+  /** The distinct `bucket` values of `rows`, collected to the driver: the
+    * probe set a search prunes its index scans to. Driver-bounded, since a
+    * model has at most k buckets.
+    */
+  private[graft] def bucketsOf(rows: DataFrame): Seq[Int] =
+    rows.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
 
   /** Train the coarse quantizer on a sample of `corpus.embCol`.
     *
@@ -149,9 +141,7 @@ object IvfIndex {
     val qExploded = queries.select(
       col(idCol).as("query_id"),
       explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    val probed: Array[Int] = qExploded
-      .select(col("bucket")).distinct().collect().map(_.getInt(0))
-    indexed.filter(col("bucket").isin(probed.toSeq: _*))
+    indexed.filter(col("bucket").isin(bucketsOf(qExploded): _*))
       .select(col(idCol).as("neighbor_id"), col("bucket"))
       .join(broadcast(qExploded), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -203,10 +193,8 @@ object IvfIndex {
     val qExploded = queries.select(
       col(idCol).as("query_id"), col(embCol).as("qv"),
       explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    val probed: Array[Int] = qExploded
-      .select(col("bucket")).distinct().collect().map(_.getInt(0))
     val c = indexed
-      .filter(col("bucket").isin(probed.toSeq: _*))
+      .filter(col("bucket").isin(bucketsOf(qExploded): _*))
       .select(col(idCol).as("neighbor_id"), col(embCol).as("cv"), col("bucket"))
     rankCandidates(c, broadcast(qExploded), k)
   }
@@ -282,8 +270,7 @@ object IvfIndex {
     }
     val assigned = assign(model, batch, embCol)
       .select(col(idCol), col("bucket"))
-    val touched: Seq[Int] = assigned.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touched = bucketsOf(assigned)
     if (touched.isEmpty) return
     val idx = spark.read.parquet(path)
       .filter(col("bucket").isin(touched: _*))
@@ -411,14 +398,13 @@ object IvfIndex {
       idCol: String = "vec_id"): DataFrame = {
     val shortlist = quantizedShortlist(
       model, queries, indexedQ, k, nProbe, rerankFactor, embCol, idCol)
-    val probed: Array[Int] = queries
-      .select(explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-      .distinct().collect().map(_.getInt(0))
+    val probed = bucketsOf(
+      queries.select(explode(model.probeBuckets(col(embCol), nProbe)).as("bucket")))
     // exact rerank: fetch float vectors for the shortlist only; when the
     // rerank side is the bucket-partitioned float index, prune it to the
     // probed partitions too (every shortlist candidate came from one)
     val floats = (if (corpus.columns.contains("bucket"))
-        corpus.filter(col("bucket").isin(probed.toSeq: _*))
+        corpus.filter(col("bucket").isin(probed: _*))
       else corpus)
       .select(col(idCol).as("neighbor_id"), col(embCol).as("cv"))
     val exact = shortlist
@@ -450,13 +436,11 @@ object IvfIndex {
     val qExploded = queries.select(
       col(idCol).as("query_id"), col(embCol).as("qv"),
       explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    val probed: Array[Int] = qExploded
-      .select(col("bucket")).distinct().collect().map(_.getInt(0))
     // the int8 shortlist stage IS rankCandidates (the asymmetric kernel
     // accepts the tinyint array as `cv` directly) — reusing it keeps every
     // search variant's join/filter/dedup/tie-break semantics in one place
     val cand = indexedQ
-      .filter(col("bucket").isin(probed.toSeq: _*))
+      .filter(col("bucket").isin(bucketsOf(qExploded): _*))
       .select(col(idCol).as("neighbor_id"), col("q8").as("cv"), col("bucket"))
     rankCandidates(cand, broadcast(qExploded), k * rerankFactor)
       .select("query_id", "neighbor_id")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
-import graft.functions.Vectors
+import graft.functions.{Codebooks, VectorExpressions, Vectors}
 
 /** Product quantization (PQ) — the memory tier BELOW the int8 index
   * ([[IvfIndex.assignQuantized]]) for approximate nearest neighbor at
@@ -31,14 +31,16 @@ import graft.functions.Vectors
   * each codeword — then a candidate's approximate cosine is `m` table
   * lookups and adds, never a float-vector touch.
   *
-  * Spark mapping — everything is built-in codegen surface, no UDFs:
-  *   - codebooks are plan LITERALS (m·numCodes·dSub floats — kilobytes);
-  *   - [[Model.encode]] is a per-subspace argmin over `numCodes` l2
-  *     distances (the [[IvfIndex]] `array_min`-over-structs trick);
-  *   - [[Model.adcTable]] builds the per-query lookup table as an
-  *     `array<array<double>>` column on the (small, broadcast) query side;
-  *   - [[Model.adcScore]] is `aggregate(zip_with(codes, table, lookup))` —
-  *     whole-stage-codegen'd HOFs over an 8-element array.
+  * Spark mapping — everything is codegen surface, no UDFs:
+  *   - the codebooks ride as ONE expression argument (m·numCodes·dSub
+  *     floats — kilobytes), so a plan analyzes one node per model call;
+  *   - [[Model.encode]] is [[graft.functions.PqEncode]], a per-subspace
+  *     argmin over `numCodes` l2 distances;
+  *   - [[Model.adcTable]] is [[graft.functions.AdcTable]], the per-query
+  *     lookup table as an `array<array<double>>` column on the (small,
+  *     broadcast) query side;
+  *   - [[Model.adcScore]] is an unrolled chain of `m` `element_at` lookups
+  *     added left to right.
   *
   * The candidate walk composes with the IVF coarse quantizer exactly as in
   * the paper (IVFADC): probe `nProbe` cells, ADC-score only the codes in
@@ -65,35 +67,21 @@ object PqIndex {
     def numCodes: Int = codebooks.head.length
     def dSub: Int = codebooks.head.head.length
 
-    private def subvec(u: Column, j: Int): Column = slice(u, j * dSub + 1, dSub)
+    private lazy val book = new Codebooks(codebooks)
 
     /** PQ codes of `emb`: `array<int>` of length `m`, each in
-      * [0, numCodes) — per-subspace argmin code, pure codegen. Ties break
-      * to the lowest code id (array_min orders by (distance, id)).
+      * [0, numCodes) — the nearest codeword of each unit subvector, one
+      * codegen expression ([[graft.functions.PqEncode]]). Ties break to the
+      * lowest code id.
       */
-    def encode(emb: Column): Column = {
-      val u = Vectors.unit(emb)
-      array((0 until m).map { j =>
-        val sv = subvec(u, j)
-        val zipped = array(codebooks(j).toSeq.zipWithIndex.map { case (cw, c) =>
-          struct(Vectors.l2sq(sv, typedlit(cw.toSeq)).as("d"), lit(c).as("i"))
-        }: _*)
-        array_min(zipped).getField("i")
-      }: _*)
-    }
+    def encode(emb: Column): Column = VectorExpressions.pqEncode(emb, book)
 
     /** Per-query ADC table: `array<array<double>>`, entry (j, c) = dot of
-      * the query's j-th unit subvector with codeword c. Built on the query
-      * side only — the corpus never evaluates it.
+      * the query's j-th unit subvector with codeword c
+      * ([[graft.functions.AdcTable]]). Built on the query side only — the
+      * corpus never evaluates it.
       */
-    def adcTable(emb: Column): Column = {
-      val u = Vectors.unit(emb)
-      array((0 until m).map { j =>
-        val sv = subvec(u, j)
-        array(codebooks(j).toSeq.map(cw =>
-          Vectors.dot(sv, typedlit(cw.toSeq)).cast("double")): _*)
-      }: _*)
-    }
+    def adcTable(emb: Column): Column = VectorExpressions.adcTable(emb, book)
 
     /** Approximate cosine via ADC: Σ_j table(j)(code_j). Equals the dot of
       * the unit query with the RECONSTRUCTED (codeword-concatenated) unit
@@ -268,8 +256,8 @@ object PqIndex {
       floats.queryExecution.optimizedPlan.stats.sizeInBytes
     val threshold = shims.broadcastThreshold(queries.sparkSession)
     if (threshold >= 0 && scanBytes <= threshold) {
-      // the plan's output schema, derived without analyzing the plan (its
-      // table and probe expressions cost more to analyze than to run here)
+      // the plan's output schema, derived without building the plan (its
+      // joins and windows cost more to analyze than this path takes to run)
       val schema = StructType(Seq(
         q.schema(0).copy(name = "query_id"),
         codes.schema(0).copy(name = "neighbor_id"),
@@ -426,8 +414,7 @@ object PqIndex {
       pq.adcTable(col(embCol)).as("tbl"),
       explode(ivf.probeBuckets(col(embCol), nProbe)).as("bucket"))
     // driver-bounded: ≤ queries × nProbe distinct buckets (and ≤ ivf k)
-    val buckets = probed.getOrElse(qExploded
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq)
+    val buckets = probed.getOrElse(IvfIndex.bucketsOf(qExploded))
     val c = inProbed(codesIndexed, buckets)
       .select(col(idCol).as("neighbor_id"), col("bucket"), col("codes"))
     TopK.perQuery(

@@ -1,5 +1,10 @@
 package graft.ops
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
@@ -67,8 +72,18 @@ object StoreSwap {
       .option("parquet.page.size", PageSizeBytes)
     val capped = if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
     (if (partitionBy.isEmpty) capped else capped.partitionBy(partitionBy: _*)).parquet(path)
-    written.get("rows").asInstanceOf[Long]
+    // the count arrives through the session's listener bus, which drops
+    // events when its queue is full: wait a bounded time, never forever
+    try Await.result(written.future, CountWait).getAs[Long]("rows")
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"StoreSwap.write: the row count of $path did not arrive within $CountWait " +
+          "after the write finished (listener event dropped?)")
+    }
   }
+
+  /** How long [[write]] waits for its row count once the write job ended. */
+  private val CountWait = 2.minutes
 
   /** Write `rows` aside at `path + ".next"` and return that path, for a
     * caller that stages several artifacts (or appends elsewhere) before

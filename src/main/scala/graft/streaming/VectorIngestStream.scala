@@ -67,10 +67,8 @@ object VectorIngestStream {
       batch: DataFrame,
       model: IvfIndex.Model,
       indexPath: String): DataFrame = {
-    val buckets: Array[Int] = IvfIndex.assign(model, batch)
-      .select(col("bucket")).distinct().collect().map(_.getInt(0))
     val absorbed = spark.read.parquet(indexPath)
-      .filter(col("bucket").isin(buckets.toSeq: _*))
+      .filter(col("bucket").isin(IvfIndex.bucketsOf(IvfIndex.assign(model, batch)): _*))
       .select(col("vec_id"))
     batch.join(absorbed, Seq("vec_id"), "left_anti")
   }
