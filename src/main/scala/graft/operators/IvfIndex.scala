@@ -22,6 +22,13 @@ import graft.ops.StoreSwap
   *   - `search` probes the `nProbe` nearest centroids per query, so the
   *     candidate join is an equi-join on bucket touching nProbe/k of the
   *     corpus instead of all of it.
+  *
+  * Every IVF-family search, shortlist and candidate dump (float, int8,
+  * [[PqIndex]]'s ADC codes; in-memory and persisted) composes three steps:
+  * [[probe]] (the bucket join), [[rank]] (score, pair dedup, top-k) and
+  * [[rerank]] (exact float rerank). A persisted form prunes its scans to
+  * the batch's [[probeSet]], collected once; the in-memory forms prune
+  * nothing.
   */
 object IvfIndex {
 
@@ -40,12 +47,71 @@ object IvfIndex {
       VectorExpressions.nearestCentroids(emb, book, nProbe)
   }
 
-  /** The distinct `bucket` values of `rows`, collected to the driver: the
-    * probe set a search prunes its index scans to. Driver-bounded, since a
-    * model has at most k buckets.
+  /** The distinct `bucket` values of `rows`, collected to the driver.
+    * Driver-bounded, since a model has at most k buckets.
     */
   private[graft] def bucketsOf(rows: DataFrame): Seq[Int] =
     rows.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
+
+  /** `index` restricted to `buckets`: on a `bucket`-partitioned Parquet
+    * read, a static partition filter (IvfIndexSpec pins `selectedPartitions`).
+    */
+  private[graft] def inBuckets(index: DataFrame, buckets: Seq[Int]): DataFrame =
+    index.filter(col("bucket").isin(buckets: _*))
+
+  /** Each query row once per probed bucket: (query_id, q, bucket). */
+  private def probeRows(model: Model, queries: DataFrame, nProbe: Int, query: Column,
+      embCol: String, idCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), query.as("q"),
+      explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
+
+  /** The batch's distinct probe buckets, collected once (≤ queries × nProbe
+    * and ≤ k). The query side is small by contract, so evaluating its argmin
+    * here and again in [[probe]]'s broadcast beats checkpointing it, which
+    * would pin blocks past the call and run a job the caller may not need.
+    */
+  private[graft] def probeSet(
+      model: Model, queries: DataFrame, nProbe: Int, embCol: String, idCol: String): Seq[Int] =
+    bucketsOf(probeRows(model, queries, nProbe, col(embCol), embCol, idCol))
+
+  /** The IVF probe: the broadcast query side, exploded to its `nProbe`
+    * nearest buckets, equi-joined to `index` (`idCol`, `bucket`, ...) on
+    * `bucket`, self-matches dropped. Output (query_id, q, neighbor_id, c),
+    * `q`/`c` being the `query`/`neighbor` payloads; a pair appears once per
+    * bucket it meets through. Unpruned: persisted callers prune `index`.
+    */
+  private[graft] def probe(model: Model, queries: DataFrame, index: DataFrame, nProbe: Int,
+      query: Column, neighbor: Column, embCol: String, idCol: String): DataFrame =
+    index.select(col(idCol).as("neighbor_id"), neighbor.as("c"), col("bucket"))
+      .join(broadcast(probeRows(model, queries, nProbe, query, embCol, idCol)), Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select("query_id", "q", "neighbor_id", "c")
+
+  /** Per-query top `k` of [[probe]]'s pairs by `score` (over `q` and `c`),
+    * each pair scored once however many buckets it met through.
+    */
+  private[graft] def rank(probed: DataFrame, score: Column, k: Int): DataFrame =
+    TopK.perQuery(
+      probed.select(col("query_id"), col("neighbor_id"), score.as("sim"))
+        .dropDuplicates("query_id", "neighbor_id"),
+      k)
+
+  /** Exact float rerank of a (query_id, neighbor_id) shortlist: the cosine
+    * of the broadcast query and the neighbor's `floats` row, per-query top
+    * `k` — it repairs a quantized shortlist's rank inversions near the cut.
+    */
+  private[graft] def rerank(shortlist: DataFrame, queries: DataFrame, floats: DataFrame, k: Int,
+      embCol: String, idCol: String): DataFrame =
+    TopK.perQuery(
+      shortlist.select("query_id", "neighbor_id")
+        .join(floats.select(col(idCol).as("neighbor_id"), col(embCol).as("cv")), Seq("neighbor_id"))
+        .join(broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv"))),
+          Seq("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          Vectors.cosine(col("qv"), col("cv")).as("sim")),
+      k)
+
+  private def probeCosine: Column = Vectors.cosine(col("q"), col("c"))
 
   /** Train the coarse quantizer on a sample of `corpus.embCol`.
     *
@@ -91,15 +157,9 @@ object IvfIndex {
       k: Int,
       nProbe: Int = 4,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val q = broadcast(
-      queries.select(
-        col(idCol).as("query_id"), col(embCol).as("qv"),
-        explode(model.probeBuckets(col(embCol), nProbe)).as("bucket")))
-    val c = assign(model, corpus, embCol)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("cv"), col("bucket"))
-    rankCandidates(c, q, k)
-  }
+      idCol: String = "vec_id"): DataFrame =
+    rank(probe(model, queries, assign(model, corpus, embCol), nProbe,
+      col(embCol), col(embCol), embCol, idCol), probeCosine, k)
 
   /** The probed-bucket candidate PAIR SET of [[search]]: (query_id,
     * neighbor_id), deduped across probe buckets. This is what the ANN
@@ -114,17 +174,9 @@ object IvfIndex {
       corpus: DataFrame,
       nProbe: Int = 4,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"),
-      explode(model.probeBuckets(col(embCol), nProbe)).as("bucket")))
-    val c = assign(model, corpus, embCol)
-      .select(col(idCol).as("neighbor_id"), col("bucket"))
-    c.join(q, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-  }
+      idCol: String = "vec_id"): DataFrame =
+    pairsOf(probe(model, queries, assign(model, corpus, embCol), nProbe,
+      col(embCol), col(embCol), embCol, idCol))
 
   /** [[candidates]] over an already-assigned (persisted) index: the
     * distinct probed buckets prune the scan exactly as in
@@ -137,45 +189,19 @@ object IvfIndex {
       indexed: DataFrame,
       nProbe: Int = 4,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val qExploded = queries.select(
-      col(idCol).as("query_id"),
-      explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    indexed.filter(col("bucket").isin(bucketsOf(qExploded): _*))
-      .select(col(idCol).as("neighbor_id"), col("bucket"))
-      .join(broadcast(qExploded), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-  }
+      idCol: String = "vec_id"): DataFrame =
+    pairsOf(probe(model, queries, inBuckets(indexed, probeSet(model, queries, nProbe, embCol, idCol)),
+      nProbe, col(embCol), col(embCol), embCol, idCol))
 
-  /** Shared scoring tail of [[search]] and [[searchIndexed]] — their
-    * contract is identical results for the same model/probe set, so the
-    * bucket join + self-filter + cosine + multi-bucket dedup + top-k must
-    * live in exactly one place. `q` carries (query_id, qv, bucket) exploded
-    * per probe; `c` carries (neighbor_id, cv, bucket).
-    */
-  private def rankCandidates(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.cosine(col("qv"), col("cv")).as("sim"))
-      // a (query, neighbor) pair can match through several probed buckets
-      .dropDuplicates("query_id", "neighbor_id")
-    TopK.perQuery(scored, k)
-  }
+  private def pairsOf(probed: DataFrame): DataFrame =
+    probed.select("query_id", "neighbor_id").dropDuplicates("query_id", "neighbor_id")
 
-  /** Search over an ALREADY-ASSIGNED corpus: `indexed` carries the `bucket`
-    * column — in the intended layout, `assign(...)` written once via
-    * [[graft.ops.Bucketing.writePartitioned]] with `partitionCols =
-    * Seq("bucket")` and read back from disk. This is the "probed forever"
-    * half of the IVF story: the distinct probed buckets (≤ queries×nProbe,
-    * and ≤ k total — driver-bounded because the query side is the small
-    * side by contract, same bound as the broadcast below) are pushed as a
-    * static `bucket IN (...)` predicate, so the parquet scan PRUNES to
-    * exactly those partition directories at planning time instead of
-    * reading the whole index (asserted via `selectedPartitions` in
-    * IvfIndexSpec).
+  /** Search over an ALREADY-ASSIGNED corpus: `indexed` carries `bucket` —
+    * in the intended layout, [[assign]] written once partitioned by
+    * `bucket` ([[graft.ops.Bucketing.writePartitioned]]) and read back.
+    * The batch's [[probeSet]] becomes a static `bucket IN (...)` predicate,
+    * so the scan opens only the probed partition directories. Same rows
+    * as [[search]] for the same model and probe set.
     */
   def searchIndexed(
       model: Model,
@@ -184,20 +210,9 @@ object IvfIndex {
       k: Int,
       nProbe: Int = 4,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    // the probe-bucket argmin is evaluated twice over the query side (once
-    // for the driver-side distinct collect, once in the broadcast) — the
-    // query side is tiny by contract, and the alternative (checkpointing
-    // it) would leave storage blocks pinned past the call, run an eager
-    // job the caller may never need, and lose lineage recovery
-    val qExploded = queries.select(
-      col(idCol).as("query_id"), col(embCol).as("qv"),
-      explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    val c = indexed
-      .filter(col("bucket").isin(bucketsOf(qExploded): _*))
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("cv"), col("bucket"))
-    rankCandidates(c, broadcast(qExploded), k)
-  }
+      idCol: String = "vec_id"): DataFrame =
+    rank(probe(model, queries, inBuckets(indexed, probeSet(model, queries, nProbe, embCol, idCol)),
+      nProbe, col(embCol), col(embCol), embCol, idCol), probeCosine, k)
 
   /** Absorb a batch of NEW vectors into a persisted [[assign]]-layout
     * index — the embedding-side analogue of the dedup band-index append
@@ -272,8 +287,7 @@ object IvfIndex {
       .select(col(idCol), col("bucket"))
     val touched = bucketsOf(assigned)
     if (touched.isEmpty) return
-    val idx = spark.read.parquet(path)
-      .filter(col("bucket").isin(touched: _*))
+    val idx = inBuckets(spark.read.parquet(path), touched)
     val cols = idx.columns.toSeq
     try {
       StoreSwap.write(
@@ -373,18 +387,14 @@ object IvfIndex {
   /** ANN over the PERSISTED QUANTIZED index, with exact float rerank —
     * the full IVF-quantization story at scale:
     *   1. candidate generation scans only the probed `bucket=` partitions
-    *      of the int8 index (4× fewer bytes than the float index for the
-    *      same candidates);
+    *      of the int8 index (4× fewer bytes than the float index);
     *   2. candidates are scored with the ASYMMETRIC kernel — float query ×
-    *      int8 corpus in one codegen cosine loop (bytes widen to double in
-    *      the kernel; no dequantized array is ever materialized);
-    *   3. the per-query top `k · rerankFactor` shortlist — queries×k×factor
-    *      rows, tiny by contract — is re-scored EXACTLY against the float
-    *      corpus and re-ranked, which repairs quantization-induced rank
-    *      inversions near the cut.
-    * Pass the float-index DataFrame (with its `bucket` column) as `corpus`
-    * and the rerank fetch prunes to the same probed partitions; any
-    * (id, embedding) frame works at reduced pruning.
+    *      int8 corpus in one codegen cosine loop (no dequantized array);
+    *   3. the per-query top `k · rerankFactor` shortlist is re-scored
+    *      EXACTLY against the float corpus ([[rerank]]).
+    * Pass the float index (with its `bucket` column) as `corpus` and the
+    * rerank fetch prunes to the same probe set, collected once for both
+    * scans; any (id, embedding) frame works at reduced pruning.
     */
   def searchIndexedQuantized(
       model: Model,
@@ -396,24 +406,10 @@ object IvfIndex {
       rerankFactor: Int = 4,
       embCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
-    val shortlist = quantizedShortlist(
-      model, queries, indexedQ, k, nProbe, rerankFactor, embCol, idCol)
-    val probed = bucketsOf(
-      queries.select(explode(model.probeBuckets(col(embCol), nProbe)).as("bucket")))
-    // exact rerank: fetch float vectors for the shortlist only; when the
-    // rerank side is the bucket-partitioned float index, prune it to the
-    // probed partitions too (every shortlist candidate came from one)
-    val floats = (if (corpus.columns.contains("bucket"))
-        corpus.filter(col("bucket").isin(probed: _*))
-      else corpus)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("cv"))
-    val exact = shortlist
-      .join(floats, Seq("neighbor_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.cosine(col("qv"), col("cv")).as("sim"))
-    TopK.perQuery(exact, k)
+    val probed = probeSet(model, queries, nProbe, embCol, idCol)
+    val floats = if (corpus.columns.contains("bucket")) inBuckets(corpus, probed) else corpus
+    rerank(int8Rank(model, queries, inBuckets(indexedQ, probed), k, rerankFactor, nProbe,
+      embCol, idCol), queries, floats, k, embCol, idCol)
   }
 
   /** The int8-scored per-query SHORTLIST of [[searchIndexedQuantized]]
@@ -431,18 +427,17 @@ object IvfIndex {
       nProbe: Int = 4,
       rerankFactor: Int = 4,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      idCol: String = "vec_id"): DataFrame =
+    int8Rank(model, queries, inBuckets(indexedQ, probeSet(model, queries, nProbe, embCol, idCol)),
+      k, rerankFactor, nProbe, embCol, idCol).select("query_id", "neighbor_id")
+
+  /** The top `k · rerankFactor` per query of the int8 rows in `indexedQ`
+    * (pruned or not): the asymmetric kernel takes the tinyint `q8` as `c`.
+    */
+  private def int8Rank(model: Model, queries: DataFrame, indexedQ: DataFrame, k: Int,
+      rerankFactor: Int, nProbe: Int, embCol: String, idCol: String): DataFrame = {
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    val qExploded = queries.select(
-      col(idCol).as("query_id"), col(embCol).as("qv"),
-      explode(model.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    // the int8 shortlist stage IS rankCandidates (the asymmetric kernel
-    // accepts the tinyint array as `cv` directly) — reusing it keeps every
-    // search variant's join/filter/dedup/tie-break semantics in one place
-    val cand = indexedQ
-      .filter(col("bucket").isin(bucketsOf(qExploded): _*))
-      .select(col(idCol).as("neighbor_id"), col("q8").as("cv"), col("bucket"))
-    rankCandidates(cand, broadcast(qExploded), k * rerankFactor)
-      .select("query_id", "neighbor_id")
+    rank(probe(model, queries, indexedQ, nProbe, col(embCol), col("q8"), embCol, idCol),
+      probeCosine, k * rerankFactor)
   }
 }

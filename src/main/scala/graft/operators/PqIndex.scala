@@ -231,8 +231,8 @@ object PqIndex {
     *   the plan, returned as a local frame of the plan's schema; the plan
     *   is never built;
     *   - above it (or when the threshold is -1), the distributed plan:
-    *   the [[adcShortlistIndexed]] candidate join and top-k window, then
-    *   the id-keyed rerank join and the final window.
+    *   the [[adcRank]] probe join and top-k window over the pruned
+    *   codes, then [[IvfIndex.rerank]] over the pruned floats.
     */
   def searchIndexed(
       ivf: IvfIndex.Model,
@@ -250,8 +250,8 @@ object PqIndex {
     val batch = q.collect()
     // driver-bounded: ≤ queries × nProbe distinct buckets (and ≤ ivf k)
     val probed = batch.toSeq.flatMap(probes).distinct
-    val codes = inProbed(codesIndexed, probed).select(col(idCol), col("bucket"), col("codes"))
-    val floats = inProbed(floatIndexed, probed).select(col(idCol), col(embCol))
+    val codes = IvfIndex.inBuckets(codesIndexed, probed).select(col(idCol), col("bucket"), col("codes"))
+    val floats = IvfIndex.inBuckets(floatIndexed, probed).select(col(idCol), col(embCol))
     val scanBytes = codes.queryExecution.optimizedPlan.stats.sizeInBytes +
       floats.queryExecution.optimizedPlan.stats.sizeInBytes
     val threshold = shims.broadcastThreshold(queries.sparkSession)
@@ -264,24 +264,13 @@ object PqIndex {
         StructField("rank", IntegerType, nullable = false),
         StructField("sim", DoubleType, nullable = q.schema(1).nullable || floats.schema(1).nullable)))
       searchOnDriver(batch, codes, floats, k, k * rerankFactor, schema)
-    } else {
-      val qf = broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv")))
-      TopK.perQuery(
-        adcShortlistIndexed(ivf, pq, queries, codesIndexed, Some(probed),
-          k, nProbe, rerankFactor, embCol, idCol)
-          .join(floats.select(col(idCol).as("neighbor_id"), col(embCol).as("cv")), "neighbor_id")
-          .join(qf, "query_id")
-          .select(col("query_id"), col("neighbor_id"),
-            Vectors.cosine(col("qv"), col("cv")).as("sim")),
-        k)
-    }
+    } else
+      IvfIndex.rerank(adcRank(ivf, pq, queries, codes, k * rerankFactor, nProbe, embCol, idCol),
+        queries, floats, k, embCol, idCol)
   }
 
   /** The probe buckets of a collected [[searchIndexed]] query row. */
   private def probes(query: Row): Seq[Int] = Option(query.getSeq[Int](3)).getOrElse(Nil)
-
-  private def inProbed(index: DataFrame, probed: Seq[Int]): DataFrame =
-    index.filter(col("bucket").isin(probed: _*))
 
   /** [[searchIndexed]]'s small path, in plain Scala over `batch` (the
     * collected (id, embedding, ADC table, probe array) query rows) and the
@@ -393,39 +382,17 @@ object PqIndex {
       rerankFactor: Int = 8,
       embCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame =
-    adcShortlistIndexed(ivf, pq, queries, codesIndexed, None, k, nProbe, rerankFactor, embCol, idCol)
+    adcRank(ivf, pq, queries,
+      IvfIndex.inBuckets(codesIndexed, IvfIndex.probeSet(ivf, queries, nProbe, embCol, idCol)),
+      k * rerankFactor, nProbe, embCol, idCol).select("query_id", "neighbor_id")
 
-  /** [[adcShortlistIndexed]], given the batch's distinct probe buckets when
-    * the caller has them already; `None` collects them here.
+  /** The top `n` per query by ADC score of the probed `codes` rows (id,
+    * bucket, codes; pruned or not): the probe carries the ADC table as `q`.
     */
-  private def adcShortlistIndexed(
-      ivf: IvfIndex.Model,
-      pq: Model,
-      queries: DataFrame,
-      codesIndexed: DataFrame,
-      probed: Option[Seq[Int]],
-      k: Int,
-      nProbe: Int,
-      rerankFactor: Int,
-      embCol: String,
-      idCol: String): DataFrame = {
-    val qExploded = queries.select(
-      col(idCol).as("query_id"),
-      pq.adcTable(col(embCol)).as("tbl"),
-      explode(ivf.probeBuckets(col(embCol), nProbe)).as("bucket"))
-    // driver-bounded: ≤ queries × nProbe distinct buckets (and ≤ ivf k)
-    val buckets = probed.getOrElse(IvfIndex.bucketsOf(qExploded))
-    val c = inProbed(codesIndexed, buckets)
-      .select(col(idCol).as("neighbor_id"), col("bucket"), col("codes"))
-    TopK.perQuery(
-      c.join(broadcast(qExploded), Seq("bucket"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          pq.adcScore(col("tbl"), col("codes")).as("sim"))
-        .dropDuplicates("query_id", "neighbor_id"),
-      k * rerankFactor)
-      .select("query_id", "neighbor_id")
-  }
+  private def adcRank(ivf: IvfIndex.Model, pq: Model, queries: DataFrame, codes: DataFrame,
+      n: Int, nProbe: Int, embCol: String, idCol: String): DataFrame =
+    IvfIndex.rank(IvfIndex.probe(ivf, queries, codes, nProbe, pq.adcTable(col(embCol)),
+      col("codes"), embCol, idCol), pq.adcScore(col("q"), col("c")), n)
 
   /** IVFADC top-`k`: probe `nProbe` IVF cells per query, ADC-score their
     * codes, take the per-query `k · rerankFactor` shortlist, then rerank
@@ -441,29 +408,7 @@ object PqIndex {
       nProbe: Int = 4,
       rerankFactor: Int = 8,
       embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val c = assign(ivf, pq, corpus, embCol, idCol)
-      .select(col(idCol).as("neighbor_id"), col("bucket"), col("codes"))
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"),
-      pq.adcTable(col(embCol)).as("tbl"),
-      explode(ivf.probeBuckets(col(embCol), nProbe)).as("bucket")))
-    val shortlist = TopK.perQuery(
-      c.join(q, Seq("bucket"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          pq.adcScore(col("tbl"), col("codes")).as("sim"))
-        // a pair can meet through several probed buckets
-        .dropDuplicates("query_id", "neighbor_id"),
-      k * rerankFactor)
-      .select("query_id", "neighbor_id")
-    val qf = broadcast(queries.select(col(idCol).as("query_id"), col(embCol).as("qv")))
-    TopK.perQuery(
-      shortlist
-        .join(corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("cv")), "neighbor_id")
-        .join(qf, "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          Vectors.cosine(col("qv"), col("cv")).as("sim")),
-      k)
-  }
+      idCol: String = "vec_id"): DataFrame =
+    IvfIndex.rerank(adcRank(ivf, pq, queries, assign(ivf, pq, corpus, embCol, idCol),
+      k * rerankFactor, nProbe, embCol, idCol), queries, corpus, k, embCol, idCol)
 }

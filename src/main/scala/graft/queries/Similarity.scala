@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.operators.TopK
 import graft.ops.StoreSwap
 
 /** Similarity search over the `embeddings` table (`array<float>` column).
@@ -95,7 +96,7 @@ object Similarity {
       cand, graft.queries.Dedup.IncrementalBroadcastCeiling)(cand)
     val q = corpus.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val n = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    topKPerQuery(
+    TopK.perQuery(
       hinted.join(n, Seq("neighbor_id")).join(q, Seq("query_id"))
         .select(col("query_id"), col("neighbor_id"),
           Vectors.cosine(col("qv"), col("cv")).as("sim")),
@@ -104,10 +105,6 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Shared ranking tail of the kNN variants — see [[graft.operators.TopK]]. */
-  def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
-    graft.operators.TopK.perQuery(scored, k)
-
   /** Brute-force top-k neighbors for `queries` among `corpus` (self-matches
     * excluded). Output: (query_id, neighbor_id, rank, sim).
     */
@@ -115,7 +112,7 @@ object Similarity {
     val q = broadcast(queries.select(
       col("vec_id").as("query_id"), col("embedding").as("qv")))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    topKPerQuery(
+    TopK.perQuery(
       c.join(q, col("query_id") =!= col("neighbor_id"))
         .select(
           col("query_id"), col("neighbor_id"),
@@ -148,7 +145,7 @@ object Similarity {
       k: Int,
       bits: Int = 6,
       probeHamming: Int = 2): DataFrame =
-    topKPerQuery(
+    TopK.perQuery(
       lshJoin(queries, corpus, bits, probeHamming)
         .select(col("query_id"), col("neighbor_id"),
           Vectors.cosine(col("qv"), col("cv")).as("sim")),
@@ -715,8 +712,8 @@ object Similarity {
     // vector — 32× smaller than float, 8× smaller than q62's int8 — which
     // at 100 TB of embeddings is the difference between an in-memory
     // candidate sweep and an I/O-bound one. See [[graft.operators.PqIndex]]
-    // for the plan shape (codebooks are plan literals; encode/table/score
-    // are all built-in codegen HOFs).
+    // for the plan shape (the codebooks ride as one `Codebooks` argument of
+    // `PqEncode`/`AdcTable`; the ADC score is an unrolled `element_at` chain).
     // ORACLED since round 14 (dump-readback at the SHORTLIST boundary,
     // the q62 move one quantization tier down): the ADC-scored shortlist
     // dumps pid-scoped and BOTH engines replay the exact float rerank.

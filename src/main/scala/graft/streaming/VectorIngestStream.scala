@@ -67,9 +67,8 @@ object VectorIngestStream {
       batch: DataFrame,
       model: IvfIndex.Model,
       indexPath: String): DataFrame = {
-    val absorbed = spark.read.parquet(indexPath)
-      .filter(col("bucket").isin(IvfIndex.bucketsOf(IvfIndex.assign(model, batch)): _*))
-      .select(col("vec_id"))
+    val absorbed = IvfIndex.inBuckets(spark.read.parquet(indexPath),
+      IvfIndex.bucketsOf(IvfIndex.assign(model, batch))).select(col("vec_id"))
     batch.join(absorbed, Seq("vec_id"), "left_anti")
   }
 

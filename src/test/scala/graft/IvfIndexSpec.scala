@@ -86,11 +86,8 @@ class IvfIndexSpec extends SparkSpec {
     }
 
     val model = IvfIndex.fit(corpus, k = 10)
-    val path = "/tmp/graft_ivf_spec_index"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_ivf_spec").toString + "/idx"
     graft.ops.Bucketing.writePartitioned(IvfIndex.assign(model, corpus), path, Seq("bucket"))
     val bucketDirs = new java.io.File(path).listFiles
       .count(_.getName.startsWith("bucket="))

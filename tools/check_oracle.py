@@ -8,10 +8,16 @@ by name, and compares row counts, schemas (loosely), and values.
 Usage: check_oracle.py <sfDir> <outDir>
 """
 import json
+import os
 import sys
 
 import duckdb
 import pandas as pd
+
+# DuckDB's default memory limit is 80% of host RAM, which a recursive closure
+# (q143) can exhaust before spilling; cap it at half of RAM and spill to /tmp.
+MEMORY_LIMIT = f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2 >> 20}MB"
+SPILL_DIR = "/tmp/check_oracle_spill"
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -29,7 +35,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sf_dir: str, out_dir: str) -> int:
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT, "temp_directory": SPILL_DIR})
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
