@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.queries.Dedup
@@ -30,12 +30,7 @@ object BlowupMonitorStream {
       onGauge: (Long, DataFrame) => Unit,
       queryName: String = "blowup_monitor",
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          onGauge(id, Dedup.pairBlowupAudit(batch.toDF()))
-      }
-      .start()
+    MicroBatch.start(docs, queryName, trigger) { (b, id) =>
+      onGauge(id, Dedup.pairBlowupAudit(b))
+    }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ops.StoreSwap
 import graft.queries.Release
 
 /** Streaming ingestion into the BOUNDARY-pack manifest — the continuous
@@ -33,24 +34,10 @@ object BoundaryPackIngestStream {
       queryName: String = "boundary_pack_ingest",
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      tombstonePath: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // forget guard at the front door (the PackIngestStream clause)
-          val b = tombstonePath.fold(batch.toDF())(p =>
-            graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
-          if (tombstonePath.isEmpty || !b.isEmpty) {
-          if (!graft.ops.StoreSwap.committed(s, storeDir))
-            graft.ops.StoreSwap.write(Release.boundaryPack(b, budget), storeDir)
-          else Release.absorbIntoBoundaryPackStore(s, b, storeDir, budget)
-          }
-          ()
-        }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      tombstonePath: Option[String] = None): StreamingQuery =
+    MicroBatch.start(docs, queryName, trigger, checkpointDir, tombstonePath) { (b, _) =>
+      if (!StoreSwap.committed(b.sparkSession, storeDir))
+        StoreSwap.write(Release.boundaryPack(b, budget), storeDir)
+      else Release.absorbIntoBoundaryPackStore(b.sparkSession, b, storeDir, budget)
+    }
 }

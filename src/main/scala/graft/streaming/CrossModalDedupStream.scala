@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.StoreSwap
-import graft.pipeline.{CrossModal, Forget}
+import graft.pipeline.CrossModal
 
 /** Streaming CROSS-MODAL duplicate-family maintenance — the online form
   * of the q192 daily fold, completing the one store family without a
@@ -26,7 +26,7 @@ import graft.pipeline.{CrossModal, Forget}
   * family did my document join".
   *
   * Restart semantics (foreachBatch is at-least-once): the batch first
-  * narrows to its not-yet-absorbed REMAINDER via an anti join against
+  * narrows to its not-yet-absorbed [[MicroBatch.remainder]] against
   * the assignment store's doc ids — the assignment is swapped LAST in
   * the absorb (see [[CrossModal.absorbMerged]]), so it is the commit
   * witness: a pure replay degenerates to a skip; a crash mid-absorb
@@ -50,34 +50,22 @@ object CrossModalDedupStream {
       queryName: String = "crossmodal_dedup",
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      tombstonePath: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // forget guard first (plumbing, not caller discipline), then
-          // the replay witness: docs already in the assignment store are
-          // absorbed by definition (the assignment swaps last)
-          val guarded = tombstonePath.fold(batch.toDF())(p =>
-            Forget.filterForgotten(s, batch.toDF(), p))
-          val remainder = org.apache.spark.sql.graft.shims.snap(guarded
-            .join(CrossModal.readAssignment(s, path).select(col("doc_id")),
-              Seq("doc_id"), "left_anti"), "crossmodal.remainder")
-          if (!remainder.isEmpty) {
-            // ONE merge plan serves both effects: the batch's family
-            // rows (results) and the full updated assignment (store)
-            val merged = org.apache.spark.sql.graft.shims.snap(
-              CrossModal.incremental(s, remainder, path, src), "crossmodal.merged")
-            StoreSwap.write(
-              merged.join(broadcast(remainder.select(col("doc_id"))), Seq("doc_id"))
-                .select(col("component"), col("doc_id")),
-              s"$resultsDir/batch=$batchId")
-            CrossModal.absorbMerged(s, merged, remainder, path, src)
-          }
+      tombstonePath: Option[String] = None): StreamingQuery =
+    MicroBatch.start(docs, queryName, trigger, checkpointDir, tombstonePath) { (b, batchId) =>
+      val s = b.sparkSession
+      // the replay witness: docs already in the assignment store are
+      // absorbed by definition (the assignment swaps last)
+      MicroBatch.remainder(b, CrossModal.readAssignment(s, path), "doc_id", "crossmodal.remainder")
+        .foreach { remainder =>
+          // ONE merge plan serves both effects: the batch's family
+          // rows (results) and the full updated assignment (store)
+          val merged = org.apache.spark.sql.graft.shims.snap(
+            CrossModal.incremental(s, remainder, path, src), "crossmodal.merged")
+          StoreSwap.write(
+            merged.join(broadcast(remainder.select(col("doc_id"))), Seq("doc_id"))
+              .select(col("component"), col("doc_id")),
+            s"$resultsDir/batch=$batchId")
+          CrossModal.absorbMerged(s, merged, remainder, path, src)
         }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.queries.Curation
@@ -22,7 +22,7 @@ import graft.queries.Curation
   * multiplication, so the online gauge for a micro-batch equals the
   * batch gauge over the same rows doc-for-doc (StreamingSpec pins it).
   *
-  * `foreachBatch` because the gauge is a per-batch AGGREGATE (a
+  * A [[MicroBatch]] body because the gauge is a per-batch AGGREGATE (a
   * micro-batch is the "day" unit here): append-mode aggregation would
   * need a watermark over event time the gauge doesn't have. Each batch's
   * gauge rows land through `onGauge` tagged with the batch id — the
@@ -36,12 +36,7 @@ object DriftMonitorStream {
       onGauge: (Long, DataFrame) => Unit,
       queryName: String = "drift_monitor",
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          onGauge(id, Curation.driftMonitor(storedHistogram, batch.toDF()))
-      }
-      .start()
+    MicroBatch.start(docs, queryName, trigger) { (b, id) =>
+      onGauge(id, Curation.driftMonitor(storedHistogram, b))
+    }
 }

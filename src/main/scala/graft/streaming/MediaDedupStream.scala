@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -23,12 +23,12 @@ import graft.ops.StoreSwap
   * `incremental(B2, idx+B1)` — the MediaDedupStreamSpec twin-store pin.
   *
   * Restart semantics (foreachBatch is at-least-once): each micro-batch is
-  * first narrowed to its NOT-YET-ABSORBED remainder — an anti join of the
-  * batch's doc ids against the store's (one O(batch) equi-join; for video
-  * the absorbed-id witness is the vcounts artifact, written SECOND inside
-  * [[Multimodal.Modality.appendTo]], so its presence implies the band
-  * append committed) — and effects run remainder-only, ordered
-  * results-then-absorb:
+  * first narrowed to its NOT-YET-ABSORBED [[MicroBatch.remainder]] — an
+  * anti join of the batch's doc ids against the store's (one O(batch)
+  * equi-join; for video the absorbed-id witness is the vcounts artifact,
+  * written SECOND inside [[Multimodal.Modality.appendTo]], so its
+  * presence implies the band append committed) — and effects run
+  * remainder-only, ordered results-then-absorb:
   *   - a PURE replay (every doc already absorbed) yields an empty
   *     remainder and skips both effects — a committed absorb implies the
   *     results write, sequenced strictly before it, committed too;
@@ -65,84 +65,28 @@ object MediaDedupStream {
     if (m.frameGrained) Multimodal.readVcounts(spark, path).select(col("vid").as("doc_id"))
     else Multimodal.readBandStore(spark, path).select(col("doc_id")).distinct()
 
-  private def run(
-      media: DataFrame,
-      indexPath: String,
-      resultsDir: String,
-      m: Multimodal.Modality,
-      maxHamming: Int,
-      minOverlap: Double,
-      queryName: String,
-      checkpointDir: Option[String],
-      trigger: Trigger,
-      tombstonePath: Option[String]): StreamingQuery = {
-    val writer = media.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // forget guard at the stream's front door (plumbing, not caller
-          // discipline): tombstoned docs drop before the remainder is even
-          // computed, so forgotten media can never re-enter the index
-          val guarded = tombstonePath.fold(batch.toDF())(p =>
-            graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
-          // the not-yet-absorbed remainder, pinned once (snapped) so the
-          // probe and the absorb see the identical row set; the store side
-          // of the anti join stays un-broadcast — it is the unbounded
-          // side, the batch is the small one
-          val remainder = org.apache.spark.sql.graft.shims.snap(guarded
-            .join(absorbedIds(m, s, indexPath), Seq("doc_id"), "left_anti"),
-            "media.remainder")
-          if (!remainder.isEmpty) {
-            StoreSwap.write(m.incrementalPairs(s, remainder, indexPath, maxHamming, minOverlap),
-              s"$resultsDir/batch=$batchId")
-            m.appendTo(remainder, indexPath)
-          }
-        }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
-
-  /** Online q185: streamed images probe + absorb a persisted dHash index. */
-  def startImage(
-      media: DataFrame,
-      indexPath: String,
-      resultsDir: String,
-      maxHamming: Int = 8,
-      queryName: String = "media_dedup_image",
-      checkpointDir: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0),
-      tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, Multimodal.Image, maxHamming, 0.5, queryName,
-      checkpointDir, trigger, tombstonePath)
-
-  /** Online q186: streamed WAVs probe + absorb a persisted audio index. */
-  def startAudio(
-      media: DataFrame,
-      indexPath: String,
-      resultsDir: String,
-      maxHamming: Int = 6,
-      queryName: String = "media_dedup_audio",
-      checkpointDir: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0),
-      tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, Multimodal.Audio, maxHamming, 0.5, queryName,
-      checkpointDir, trigger, tombstonePath)
-
-  /** Online q187: streamed videos probe + absorb the frame index (bands +
-    * vcounts denominators).
+  /** Online q185/q186/q187: streamed `m` media probe + absorb its
+    * persisted index (at frame grain, bands + vcounts denominators).
+    * `maxHamming` defaults to the modality's query threshold (audio 6,
+    * image and video 8); `minOverlap` applies to video only.
     */
-  def startVideo(
+  def start(m: Multimodal.Modality)(
       media: DataFrame,
       indexPath: String,
       resultsDir: String,
-      maxHamming: Int = 8,
+      maxHamming: Int = if (m == Multimodal.Audio) 6 else 8,
       minOverlap: Double = 0.5,
-      queryName: String = "media_dedup_video",
+      queryName: String = s"media_dedup_${m.name}",
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery =
-    run(media, indexPath, resultsDir, Multimodal.Video, maxHamming, minOverlap, queryName,
-      checkpointDir, trigger, tombstonePath)
+    MicroBatch.start(media, queryName, trigger, checkpointDir, tombstonePath) { (b, batchId) =>
+      val s = b.sparkSession
+      MicroBatch.remainder(b, absorbedIds(m, s, indexPath), "doc_id", "media.remainder")
+        .foreach { remainder =>
+          StoreSwap.write(m.incrementalPairs(s, remainder, indexPath, maxHamming, minOverlap),
+            s"$resultsDir/batch=$batchId")
+          m.appendTo(remainder, indexPath)
+        }
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.queries.Curation
@@ -20,9 +20,9 @@ import graft.queries.Curation
   * stale, conflating intra-day self-similarity with corpus redundancy).
   * The gauge is the HASHED twin ([[Curation.hashedContentNovelty]] — the
   * representation the store actually persists at scale); it is a
-  * per-batch aggregate, so `foreachBatch` (the [[DriftMonitorStream]]
-  * shape), and the per-batch numbers equal the batch gauge over the same
-  * rows doc-for-doc (StreamingSpec pins it).
+  * per-batch aggregate, so a [[MicroBatch]] body, and the per-batch
+  * numbers equal the batch gauge over the same rows doc-for-doc
+  * (StreamingSpec pins it).
   */
 object NoveltyMonitorStream {
 
@@ -32,12 +32,7 @@ object NoveltyMonitorStream {
       onGauge: (Long, DataFrame) => Unit,
       queryName: String = "novelty_monitor",
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          onGauge(id, Curation.hashedContentNovelty(storedHashedWindows, batch.toDF()))
-      }
-      .start()
+    MicroBatch.start(docs, queryName, trigger) { (b, id) =>
+      onGauge(id, Curation.hashedContentNovelty(storedHashedWindows, b))
+    }
 }

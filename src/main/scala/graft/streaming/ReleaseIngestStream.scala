@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -67,14 +67,10 @@ object ReleaseIngestStream {
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) ingest(batch.toDF(), indexDir, releaseDir,
-          threshold, packTokens, shardTokens, tombstonePath)
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
+    // the guard stays in `ingest`, the batch entry point this body shares
+    MicroBatch.start(docs, queryName, trigger, checkpointDir) { (b, _) =>
+      ingest(b, indexDir, releaseDir, threshold, packTokens, shardTokens, tombstonePath)
+    }
   }
 
   /** One micro-batch absorbed — also the BATCH path a daily scheduler

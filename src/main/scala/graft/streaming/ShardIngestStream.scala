@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.ShardExport
+import graft.ops.{ShardExport, StoreSwap}
 
 /** Streaming ingestion INTO the training-shard layout — the continuous
   * form of the incremental export (q120): each micro-batch plays the role
@@ -11,19 +11,19 @@ import graft.ops.ShardExport
   * directories, so shards already published to training jobs stay
   * byte-stable while the corpus grows batch by batch.
   *
-  * `foreachBatch` is the right sink shape here (the ConvertStream
-  * precedent): the append is a BATCH operation with its own bounded
-  * aggregates over the existing layout (per-source max pack id, global
-  * max shard), and Structured Streaming's epoch guarantee makes batches
-  * sequential — so the read-maxima/append cycle never races itself.
-  * Restart semantics are the standard foreachBatch contract: with a
-  * checkpoint the stream resumes at the failed micro-batch, and a re-run
-  * of a HALF-written batch appends only what the failed attempt did not
-  * commit... which parquet cannot express transactionally — so the
-  * deployment contract is the same as every foreachBatch file sink:
-  * either pair it with a batch-id manifest check downstream, or accept
-  * at-least-once shard delivery on crash replay. The spec covers the
-  * normal path (two batches, published-shard stability, conservation).
+  * A [[MicroBatch]] body is the right sink shape here: the append is a
+  * BATCH operation with its own bounded aggregates over the existing layout
+  * (per-source max pack id, global max shard), and Structured Streaming's
+  * epoch guarantee makes batches sequential — so the read-maxima/append
+  * cycle never races itself. Restart semantics are the standard
+  * foreachBatch contract: with a checkpoint the stream resumes at the
+  * failed micro-batch, and a re-run of a HALF-written batch appends only
+  * what the failed attempt did not commit... which parquet cannot express
+  * transactionally — so the deployment contract is the same as every
+  * foreachBatch file sink: either pair it with a batch-id manifest check
+  * downstream, or accept at-least-once shard delivery on crash replay. The
+  * spec covers the normal path (two batches, published-shard stability,
+  * conservation).
   *
   * The FIRST batch bootstraps the layout via [[ShardExport.write]] (there
   * is no day-0 to append onto); every later batch appends.
@@ -41,25 +41,10 @@ object ShardIngestStream {
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None): StreamingQuery = {
     val epochDir = s"$outDir/epoch=$epoch"
-    val writer = docs.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // forget guard at the front door (the PackIngestStream clause)
-          val b = tombstonePath.fold(batch.toDF())(p =>
-            graft.pipeline.Forget.filterForgotten(s, batch.toDF(), p))
-          if (tombstonePath.isEmpty || !b.isEmpty) {
-            val bootstrapped = graft.ops.StoreSwap.committed(s, epochDir)
-            if (!bootstrapped)
-              ShardExport.write(b, outDir, epoch, packTokens, shardTokens)
-            else
-              ShardExport.append(s, b, epochDir, epoch, packTokens, shardTokens)
-          }
-          ()
-        }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
+    MicroBatch.start(docs, queryName, trigger, checkpointDir, tombstonePath) { (b, _) =>
+      if (!StoreSwap.committed(b.sparkSession, epochDir))
+        ShardExport.write(b, outDir, epoch, packTokens, shardTokens)
+      else ShardExport.append(b.sparkSession, b, epochDir, epoch, packTokens, shardTokens)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming TAKEDOWN applier — the continuous form of the store-level
@@ -41,18 +41,9 @@ object TakedownStream {
       queryName: String = "takedown_ingest",
       checkpointDir: Option[String] = None,
       tombstonePath: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery = {
-    val writer = takedownIds.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          ReleaseIngestStream.takedownIngest(
-            batch.sparkSession, batch.toDF(), releaseDir)
-          tombstonePath.foreach(p =>
-            graft.pipeline.Forget.appendTombstones(batch.toDF(), p))
-        }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
+    MicroBatch.start(takedownIds, queryName, trigger, checkpointDir) { (b, _) =>
+      ReleaseIngestStream.takedownIngest(b.sparkSession, b, releaseDir)
+      tombstonePath.foreach(p => graft.pipeline.Forget.appendTombstones(b, p))
+    }
 }

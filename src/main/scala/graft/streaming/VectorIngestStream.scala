@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -25,13 +25,13 @@ import graft.ops.StoreSwap
   * is a deliberate offline operation).
   *
   * Restart semantics (foreachBatch is at-least-once): each micro-batch
-  * narrows to its NOT-YET-ABSORBED remainder before any effect — and the
-  * witness probe is PARTITION-PRUNED, unlike the media streams' full-store
-  * id scan: assigning the batch under the frozen model names exactly the
-  * `bucket=` directories an earlier absorb of these rows would have
-  * written ([[IvfIndex.appendToIndex]] used the same deterministic
-  * assignment), so only those directories are read for the anti join.
-  * Effects run remainder-only, ordered results-then-absorb:
+  * narrows to its NOT-YET-ABSORBED [[MicroBatch.remainder]] before any
+  * effect — and the witness probe is PARTITION-PRUNED, unlike the media
+  * streams' full-store id scan: assigning the batch under the frozen model
+  * names exactly the `bucket=` directories an earlier absorb of these rows
+  * would have written ([[IvfIndex.appendToIndex]] used the same
+  * deterministic assignment), so only those directories are read for the
+  * anti join. Effects run remainder-only, ordered results-then-absorb:
   *   - a PURE replay yields an empty remainder and skips both effects;
   *   - a PARTIAL overlap (duplicate submission, crash mid-absorb) probes
   *     and absorbs only the genuinely-new vectors — already-absorbed
@@ -43,10 +43,9 @@ import graft.ops.StoreSwap
   *     value-equivalently, and a PARTIAL overlap can never erase rows the
   *     previous attempt already committed.
   *
-  * Forget guard is plumbing, not caller discipline (the round-14
-  * convention): pass `tombstonePath` and tombstoned vec_ids drop before
-  * the remainder is even computed, so a forgotten vector can never
-  * re-enter the index through this stream.
+  * Forget guard: pass `tombstonePath` and [[MicroBatch]] drops
+  * tombstoned vec_ids before the remainder is even computed, so a
+  * forgotten vector can never re-enter the index through this stream.
   *
   * Scale: each micro-batch shuffles only its own rows; the store is
   * touched via one partition-pruned witness scan plus the searchIndexed
@@ -56,21 +55,6 @@ import graft.ops.StoreSwap
   * snapshot).
   */
 object VectorIngestStream {
-
-  /** The not-yet-absorbed remainder of a batch: anti join against the
-    * store's vec_ids, scanning ONLY the batch's own assignment buckets
-    * (a committed absorb of these rows can live nowhere else — the
-    * frozen-model determinism argument in the scaladoc above).
-    */
-  private def remainderOf(
-      spark: SparkSession,
-      batch: DataFrame,
-      model: IvfIndex.Model,
-      indexPath: String): DataFrame = {
-    val absorbed = IvfIndex.inBuckets(spark.read.parquet(indexPath),
-      IvfIndex.bucketsOf(IvfIndex.assign(model, batch))).select(col("vec_id"))
-    batch.join(absorbed, Seq("vec_id"), "left_anti")
-  }
 
   /** `quantizedIndexPath` / `pqIndex`: the DERIVED vector artifacts (the
     * q62 int8 index; the q117 PQ code index) absorbed in LOCKSTEP with
@@ -96,57 +80,45 @@ object VectorIngestStream {
       trigger: Trigger = Trigger.ProcessingTime(0),
       tombstonePath: Option[String] = None,
       quantizedIndexPath: Option[String] = None,
-      pqIndex: Option[(graft.operators.PqIndex.Model, String)] = None): StreamingQuery = {
-    val writer = vectors.writeStream
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // forget guard at the front door: the ledger is doc_id-keyed
-          // (vec_id and doc_id share the id domain, TESTDATA.md), so the
-          // guard composes through a rename round-trip
-          val guarded = tombstonePath.fold(batch.toDF())(p =>
-            graft.pipeline.Forget
-              .filterForgotten(s, batch.toDF().withColumnRenamed("vec_id", "doc_id"), p)
-              .withColumnRenamed("doc_id", "vec_id"))
-          // pinned once so the probe and the absorb see the identical
-          // row set (the MediaDedupStream snap rule)
-          val remainder = org.apache.spark.sql.graft.shims.snap(
-            remainderOf(s, guarded, model, indexPath), "vector.remainder")
-          if (!remainder.isEmpty) {
-            // additive-idempotent results write: a PARTIAL-overlap replay
-            // (float append partially visible after a crash mid-job-commit)
-            // produces a remainder that is a strict subset of the batch —
-            // a plain Overwrite of batch=<id> would erase the
-            // already-committed rows for the absorbed portion. Instead,
-            // committed rows win (query_id-keyed): fresh probe rows join
-            // only for query ids the committed file does not cover, then
-            // write-aside → swap so the merge never reads-and-rewrites the
-            // same live directory.
-            val outDir = s"$resultsDir/batch=$batchId"
-            StoreSwap.rewrite(s, outDir) {
-              val fresh = IvfIndex
-                .searchIndexed(model, remainder, s.read.parquet(indexPath),
-                  k = k, nProbe = nProbe)
-              if (StoreSwap.committed(s, outDir)) {
-                val committed = s.read.parquet(outDir)
-                committed.unionByName(fresh.join(
-                  committed.select(col("query_id")).distinct(),
-                  Seq("query_id"), "left_anti"))
-              } else fresh
-            }
-            quantizedIndexPath.foreach { p =>
-              StoreSwap.write(IvfIndex.assignQuantized(model, remainder), p, append = true,
-                partitionBy = Seq("bucket"))
-            }
-            pqIndex.foreach { case (pq, p) =>
-              graft.operators.PqIndex.appendToIndex(model, pq, remainder, p)
-            }
-            IvfIndex.appendToIndex(model, remainder, indexPath)
+      pqIndex: Option[(graft.operators.PqIndex.Model, String)] = None): StreamingQuery =
+    MicroBatch.start(vectors, queryName, trigger, checkpointDir, tombstonePath, "vec_id") {
+      (b, batchId) =>
+        val s = b.sparkSession
+        // the witness scan reads ONLY the batch's own assignment buckets:
+        // a committed absorb of these rows can live nowhere else (the
+        // frozen-model determinism argument in the scaladoc above)
+        val absorbed = IvfIndex.inBuckets(s.read.parquet(indexPath),
+          IvfIndex.bucketsOf(IvfIndex.assign(model, b)))
+        MicroBatch.remainder(b, absorbed, "vec_id", "vector.remainder").foreach { remainder =>
+          // additive-idempotent results write: a PARTIAL-overlap replay
+          // (float append partially visible after a crash mid-job-commit)
+          // produces a remainder that is a strict subset of the batch —
+          // a plain Overwrite of batch=<id> would erase the
+          // already-committed rows for the absorbed portion. Instead,
+          // committed rows win (query_id-keyed): fresh probe rows join
+          // only for query ids the committed file does not cover, then
+          // write-aside → swap so the merge never reads-and-rewrites the
+          // same live directory.
+          val outDir = s"$resultsDir/batch=$batchId"
+          StoreSwap.rewrite(s, outDir) {
+            val fresh = IvfIndex
+              .searchIndexed(model, remainder, s.read.parquet(indexPath),
+                k = k, nProbe = nProbe)
+            if (StoreSwap.committed(s, outDir)) {
+              val committed = s.read.parquet(outDir)
+              committed.unionByName(fresh.join(
+                committed.select(col("query_id")).distinct(),
+                Seq("query_id"), "left_anti"))
+            } else fresh
           }
+          quantizedIndexPath.foreach { p =>
+            StoreSwap.write(IvfIndex.assignQuantized(model, remainder), p, append = true,
+              partitionBy = Seq("bucket"))
+          }
+          pqIndex.foreach { case (pq, p) =>
+            graft.operators.PqIndex.appendToIndex(model, pq, remainder, p)
+          }
+          IvfIndex.appendToIndex(model, remainder, indexPath)
         }
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+    }
 }

@@ -124,17 +124,15 @@ class ConvertJobSpec extends SparkSpec {
   test("multi-part sorted write stamps every part file footer") {
     import graft.ops.SortingColumnsStamp
     val out = s"$dir/out4/parts.parquet"
-    val df = spark.range(0, 10000).toDF("time")
+    // keep the range exchange at 4 partitions so the write emits 4 files;
+    // on a cloned session, so no conf change outlives this test
+    val s = org.apache.spark.sql.graft.shims.cloneSession(spark)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val df = s.range(0, 10000).toDF("time")
       .withColumn("v", col("time") * 2)
       .repartition(4)
-    // keep the range exchange at 4 partitions so the write emits 4 files
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val res = try ConvertJob.runOn(df, out, sortCol = "time")
-    finally {
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.unset("spark.sql.shuffle.partitions")
-    }
+    val res = ConvertJob.runOn(df, out, sortCol = "time")
     val parts = new java.io.File(out).listFiles
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     assert(parts.length > 1, "expected a multi-part sorted write")

@@ -25,7 +25,10 @@ class MediaDedupStreamSpec extends SparkSpec {
   private def mediaRows(media: DataFrame): Seq[(Long, Array[Byte])] =
     media.collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
 
-  test("image stream: micro-batches equal batch probes, twin-identical store, replay byte-stable") {
+  // audio and image share one start; the batch twin runs each at the
+  // stream's default threshold for that modality (q186: 6, q185: 8)
+  for ((m, maxHamming) <- Seq(Multimodal.Image -> 8, Multimodal.Audio -> 6))
+  test(s"${m.name} stream: micro-batches equal batch probes, twin-identical store, replay byte-stable") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     implicit val enc: org.apache.spark.sql.Encoder[(Long, Array[Byte])] =
@@ -34,28 +37,27 @@ class MediaDedupStreamSpec extends SparkSpec {
         org.apache.spark.sql.Encoders.BINARY)
 
     val docs = graft.queries.Tables(spark, dir, "documents")
-    val store = Multimodal.imagePayloads(
-      docs.filter(pmod(col("doc_id"), lit(5)).isin(1, 2, 3)))
-    val b1 = Multimodal.imagePayloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0))
-    val b2 = Multimodal.imagePayloads(docs.filter(pmod(col("doc_id"), lit(5)) === 4))
+    val store = m.payloads(docs.filter(pmod(col("doc_id"), lit(5)).isin(1, 2, 3)))
+    val b1 = m.payloads(docs.filter(pmod(col("doc_id"), lit(5)) === 0))
+    val b2 = m.payloads(docs.filter(pmod(col("doc_id"), lit(5)) === 4))
     val root = java.nio.file.Files.createTempDirectory("graft_media_stream").toString
     val live = s"$root/live"
     val twin = s"$root/twin"
     val results = s"$root/results"
-    Multimodal.Image.persist(store, live)
-    Multimodal.Image.persist(store, twin)
+    m.persist(store, live)
+    m.persist(store, twin)
 
     // the batch twin: sequential daily absorbs through the BATCH operators
-    val exp1 = pairSet(Multimodal.Image.incrementalPairs(spark, b1, twin, 8))
-    Multimodal.Image.appendTo(b1, twin)
-    val exp2 = pairSet(Multimodal.Image.incrementalPairs(spark, b2, twin, 8))
-    Multimodal.Image.appendTo(b2, twin)
+    val exp1 = pairSet(m.incrementalPairs(spark, b1, twin, maxHamming))
+    m.appendTo(b1, twin)
+    val exp2 = pairSet(m.incrementalPairs(spark, b2, twin, maxHamming))
+    m.appendTo(b2, twin)
     assert(exp1.nonEmpty && exp2.nonEmpty, "fixture must exercise store hits")
 
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = MediaDedupStream.startImage(
+    val q = MediaDedupStream.start(m)(
       input.toDF().toDF("doc_id", "payload"), live, results,
-      queryName = "media_dedup_image_t",
+      queryName = s"media_dedup_${m.name}_t",
       checkpointDir = Some(s"$root/ckpt"))
     input.addData(mediaRows(b1): _*)
     q.processAllAvailable()
@@ -78,9 +80,9 @@ class MediaDedupStreamSpec extends SparkSpec {
     val before = bandSet(live)
     val res1 = pairSet(spark.read.parquet(s"$results/batch=0"))
     val input2 = MemoryStream[(Long, Array[Byte])]
-    val q2 = MediaDedupStream.startImage(
+    val q2 = MediaDedupStream.start(m)(
       input2.toDF().toDF("doc_id", "payload"), live, results,
-      queryName = "media_dedup_image_replay_t",
+      queryName = s"media_dedup_${m.name}_replay_t",
       checkpointDir = Some(s"$root/ckpt2"))
     input2.addData(mediaRows(b1): _*)
     q2.processAllAvailable()
@@ -122,7 +124,7 @@ class MediaDedupStreamSpec extends SparkSpec {
     // mixed feed: the whole new batch plus one already-absorbed store doc
     val mixed = mediaRows(b1) ++ mediaRows(store.orderBy("doc_id").limit(1))
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = MediaDedupStream.startImage(
+    val q = MediaDedupStream.start(Multimodal.Image)(
       input.toDF().toDF("doc_id", "payload"), live, results,
       queryName = "media_dedup_image_overlap_t",
       checkpointDir = Some(s"$root/ckpt"))
@@ -165,7 +167,7 @@ class MediaDedupStreamSpec extends SparkSpec {
     Multimodal.Image.appendTo(keepOnly, twin)
 
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = MediaDedupStream.startImage(
+    val q = MediaDedupStream.start(Multimodal.Image)(
       input.toDF().toDF("doc_id", "payload"), live, results,
       queryName = "media_dedup_image_tomb_t",
       checkpointDir = Some(s"$root/ckpt"),
@@ -205,7 +207,7 @@ class MediaDedupStreamSpec extends SparkSpec {
     assert(exp1.nonEmpty, "fixture must exercise video store hits")
 
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = MediaDedupStream.startVideo(
+    val q = MediaDedupStream.start(Multimodal.Video)(
       input.toDF().toDF("doc_id", "payload"), live, results,
       queryName = "media_dedup_video_t",
       checkpointDir = Some(s"$root/ckpt"))
